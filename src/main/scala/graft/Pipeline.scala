@@ -218,6 +218,7 @@ object Pipeline {
       sharrOf(docs.filter(col("doc_id") % 2 =!= 0)), st0, "doc_id")
     val repDir = java.nio.file.Files.createTempDirectory("graft_pipe_rep").toString
     graft.dedup.RepIndex.write(st1, repDir)
+    graft.dedup.RepIndex.release(st1)
     val repState = graft.dedup.RepIndex.read(spark, repDir)
     val nDocs = repState.labels.count()
     val nReps = repState.sharr.select(col("doc_id")).count()
@@ -244,6 +245,7 @@ object Pipeline {
     // the stored state is materialized; release the stage's caches so
     // later pipeline stages don't run under its storage pressure
     repCaches.foreach(_.unpersist())
+    graft.dedup.RepIndex.release(delState)
     println(s"[pipeline] serving: MMR reranked $nRr rows; segmented index " +
       s"holds both waves ($nServed hits for 3 probes; delete/re-append " +
       s"round-tripped doc $target); rep index $nReps reps / $nDocs docs " +

@@ -153,11 +153,14 @@ object WorkloadScores {
       .join(best.select((unitCols ++ Seq("workload", "entry_idx")).map(col) :+ col("best"): _*),
         unitCols ++ Seq("workload", "entry_idx"), "left")
       .join(broadcast(medians), Seq("workload", "entry_idx"))
+      // try_divide: a zero best or median gives NULL (what the oracle's
+      // `x / 0.0` gives), not an ANSI DIVIDE_BY_ZERO
       .withColumn("norm",
         when(col("best").isNull, lit(null))
-          .when(col("higher_is_better"), col("best") / col("fleet_median"))
-          .otherwise(col("fleet_median") / col("best")))
-      // corrupted-data guard (F5): non-positive norms cannot enter log2
+          .when(col("higher_is_better"), try_divide(col("best"), col("fleet_median")))
+          .otherwise(try_divide(col("fleet_median"), col("best"))))
+      // corrupted-data guard (F5): non-positive or NULL norms cannot
+      // enter log2 — the component is dropped
       .withColumn("norm", when(col("norm") > 0, col("norm")))
 
     val present = col("norm").isNotNull

@@ -57,7 +57,7 @@ object Clusters {
     * again. Spark logs the WARN unconditionally for any local-checkpoint
     * release — it cannot see the invariant. Bench filters the rdd logger;
     * the WARN remains visible in normal sessions by design. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
@@ -265,7 +265,16 @@ object Clusters {
     * over all pairs would produce (gated as d16 against the full-rebuild
     * oracle verbatim). */
   def appendLabels(storedLabels: DataFrame, newPairs: DataFrame,
-                   colA: String = "id_a", colB: String = "id_b"): DataFrame = {
+                   colA: String = "id_a", colB: String = "id_b"): DataFrame =
+    appendLabelsWithFixpoint(storedLabels, newPairs, colA, colB)._1
+
+  /** [[appendLabels]] plus the fixpoint's own result frame, the one
+    * handle through which a caller that materializes the labels may
+    * release the fixpoint's final checkpoint (the labels' plan also holds
+    * `storedLabels` and `newPairs`, which the caller does not own). */
+  private[dedup] def appendLabelsWithFixpoint(storedLabels: DataFrame,
+      newPairs: DataFrame, colA: String = "id_a",
+      colB: String = "id_b"): (DataFrame, DataFrame) = {
     // roots label themselves (id = cluster_id); their star edge would be a
     // self-loop, which the LSS fallback drops — filter it out here and
     // recover untouched nodes (roots included) via the anti join below.
@@ -307,7 +316,7 @@ object Clusters {
       .join(fresh.select(col("id")), Seq("id"), "left_anti")
       .join(storedLabels.select(col("id")), Seq("id"), "left_anti")
       .withColumn("cluster_id", col("id"))
-    fresh.unionByName(untouched).unionByName(selfOnly)
+    (fresh.unionByName(untouched).unionByName(selfOnly), fresh)
   }
 
   /** Per-cluster BEST member under (score DESC, id ASC) — the stored

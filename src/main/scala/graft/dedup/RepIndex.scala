@@ -66,9 +66,37 @@ object RepIndex {
     * before every verification join; the normalized form stores each
     * array once and skips both. All frames are plain parquet-writable
     * ([[write]]/[[read]]); `bands` is written partitioned by (band,
-    * probe bucket) so a serving probe prunes to its own partitions. */
+    * probe bucket) so a serving probe prunes to its own partitions.
+    *
+    * MAINTAINED states ([[append]]/[[delete]] results) hold four
+    * checkpointed LEAVES: each op materializes what it returns (eager
+    * `localCheckpoint` — `persist` would keep the logical lineage, the
+    * reason [[Clusters]] checkpoints its fixpoint rounds), so the next op
+    * and every search plan over a constant-size tree whatever the
+    * history — the ops reference the prior state's frames several times
+    * each, and left lazy a k-op fold's plan grows exponentially in k
+    * (RepIndexSpec pins the bound). The blocks belong to whoever holds
+    * the state; [[release]] frees them. */
   final case class State(labels: DataFrame, bands: DataFrame, sharr: DataFrame,
                          marr: DataFrame)
+
+  /** The maintained state whose labels leaf is `labels`, the other three
+    * frames materialized the same way. */
+  private def leaves(labels: DataFrame, bands: DataFrame, sharr: DataFrame,
+                     marr: DataFrame): State =
+    State(labels, bands.localCheckpoint(true), sharr.localCheckpoint(true),
+      marr.localCheckpoint(true))
+
+  /** Frees the checkpoint blocks behind a state [[append]] or [[delete]]
+    * returned, once its holder is done with it (written out, or
+    * superseded by a later op's materialized result). Only bare
+    * checkpoint leaves are released: a [[build]]/[[read]] state's frames
+    * are plans over inputs the caller owns, and are left alone. */
+  def release(state: State): Unit =
+    Seq(state.labels, state.bands, state.sharr, state.marr)
+      .filter(_.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      .foreach(Clusters.releaseCheckpoint)
 
   /** Build the serving state from a finalized snapshot's shingle-array
     * frame (persist `sharr` — the pair detection and the rep band rows
@@ -103,7 +131,10 @@ object RepIndex {
     * Cost shape: one batch-sized signature pass + a band join against a
     * CLUSTER-sized index + a fixpoint over |stored-touched| + |new|
     * star/pair edges. Nothing proportional to the old corpus — and
-    * nothing proportional to its duplication density. */
+    * nothing proportional to its duplication density. The returned
+    * frames are checkpointed leaves ([[State]]): the op's plan size
+    * depends on its inputs, never on how many ops produced `state`, and
+    * `state` itself stays intact (its blocks remain the caller's). */
   def append(batchSharr: DataFrame, state: State, idCol: String,
              threshold: Double = 0.7,
              rowsPerBand: Int = MinHash.RowsPerBand): State = {
@@ -113,13 +144,19 @@ object RepIndex {
     val within = MinHash.nearDuplicatesFromArray(
         batchSharr, idCol, threshold, rowsPerBand)
       .select(col("id_a"), col("id_b"))
-    val touched = Clusters.appendLabels(state.labels,
-      vsReps.unionByName(within))
+    val (touched, fixpoint) = Clusters.appendLabelsWithFixpoint(
+      state.labels, vsReps.unionByName(within))
     // batch docs with no near-dup anywhere become their own clusters
     val novel = batchSharr.select(col(idCol).as("id"))
       .join(touched.select(col("id")), Seq("id"), "left_anti")
       .withColumn("cluster_id", col("id"))
-    val labels = touched.unionByName(novel)
+    // materialized HERE, before the five references below: unlike the
+    // fixpoint's rows, `touched` still carries the pair-detection lineage
+    val labels = touched.unionByName(novel).localCheckpoint(true)
+    // the fixpoint's final checkpoint is superseded by `labels` — release
+    // it through its own handle, never through `touched`, whose plan also
+    // holds the caller's `state.labels` blocks
+    Clusters.releaseCheckpoint(fixpoint)
     val repIds = labels.filter(col("id") === col("cluster_id"))
       .select(col("id").as(idCol))
     // surviving old reps keep their stored rows; retired reps (their
@@ -128,7 +165,7 @@ object RepIndex {
     // a later tombstone may promote them back); promoted/novel reps are
     // batch docs, so their rows come from the batch's arrays
     val newRepSharr = batchSharr.join(repIds, Seq(idCol), "left_semi")
-    State(labels,
+    leaves(labels,
       state.bands.join(repIds, Seq(idCol), "left_semi")
         .unionByName(MinHash.bandRows(
           MinHash.signaturesFromArray(newRepSharr, idCol), idCol, rowsPerBand)),
@@ -164,12 +201,15 @@ object RepIndex {
     * and every join against the tombstone set broadcasts) + a signature
     * pass over PROMOTED members only — nothing shuffled proportional to
     * the corpus or the index. Idempotent: re-deleting the same ids is a
-    * no-op. */
+    * no-op. Returns checkpointed leaves, as [[append]] does: the new
+    * cold store alone references the old one twice (directly and
+    * through the promoted members), which left lazy would double its
+    * plan on every delete. */
   def delete(tombstones: DataFrame, state: State, idCol: String,
              rowsPerBand: Int = MinHash.RowsPerBand): State = {
     val tId = tombstones.select(col(idCol))
     val (labels, promoted) = deleteDelta(tombstones, state, idCol)
-    State(labels,
+    leaves(labels,
       state.bands.join(tId, Seq(idCol), "left_anti")
         .unionByName(MinHash.bandRows(
           MinHash.signaturesFromArray(promoted, idCol), idCol, rowsPerBand)),
@@ -198,14 +238,14 @@ object RepIndex {
     // member leaves): the aggregate runs over touched clusters'
     // survivors only, and the tiny root map broadcasts back over the
     // label scan — untouched rows keep their root through the coalesce.
-    // (One left join, not a split-and-union: delete plans compose, and
-    // every extra reference to `labels` here multiplies the analyzed
-    // tree of chained lifecycles.)
     val newRoots = surv.join(touched, Seq("cluster_id"), "left_semi")
       .groupBy(col("cluster_id")).agg(min(col("id")).as("new_root"))
+    // materialized: the plan above references `state.labels` twice, and
+    // the rep ids, the promoted rows and both callers' writes read it
     val labels = surv.join(newRoots, Seq("cluster_id"), "left")
       .select(col("id"),
         coalesce(col("new_root"), col("cluster_id")).as("cluster_id"))
+      .localCheckpoint(true)
     val repIds = labels.filter(col("id") === col("cluster_id"))
       .select(col("id").as(idCol))
     // promoted reps were non-reps: their arrays come from the cold store

@@ -1455,6 +1455,7 @@ object TextQueries extends QueryPack {
           sharrOf(bucket >= 60 && bucket < 80), st0, "doc_id")
         val p = java.nio.file.Files.createTempDirectory("graft_replc").toString
         graft.dedup.RepIndex.write(st1, p)
+        graft.dedup.RepIndex.release(st1)
         repStatePath = p
         repStateKey = key
       }

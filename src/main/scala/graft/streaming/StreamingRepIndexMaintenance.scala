@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.dedup.{MinHash, RepIndex}
+import graft.dedup.{Clusters, MinHash, RepIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -137,28 +137,27 @@ object StreamingRepIndexMaintenance {
     // (no-op) batch never materializes them
     val sharrB = MinHash.hashedShingleArray(batch, idCol, textCol, n).persist(lvl)
     val caches = scala.collection.mutable.ArrayBuffer[DataFrame](sharrB)
+    var next: RepIndex.State = null // the append's leaves: released below
     try Segments.fold(dir, batchId, maxSegments) { seg =>
       val first = liveSegs(dir).isEmpty
       val prev =
         if (first) RepIndex.State(null, null, null, null)
         else {
-          // the five delta writes below are five actions: cache the two
+          // the delta writes below are separate actions: cache the two
           // prev frames they share so the live segments are scanned once,
-          // not once per write (marr is cold — never read by the fold)
+          // not once per write. The cold store is never read: the fold
+          // only carries it forward (marr ∪ this batch's additions), so
+          // folding over an EMPTY one leaves exactly the batch's cold
+          // delta in next.marr
           val st = readLatest(spark, dir, idCol)
           val p = RepIndex.State(st.labels.persist(lvl), st.bands,
-            st.sharr.persist(lvl), st.marr)
+            st.sharr.persist(lvl), st.sharr.limit(0))
           caches += p.labels += p.sharr
           p
         }
-      val next0 =
+      next =
         if (first) RepIndex.build(sharrB, idCol, threshold, rowsPerBand)
         else RepIndex.append(sharrB, prev, idCol, threshold, rowsPerBand)
-      // labels drive every downstream frame (rep ids, bands, arrays) and
-      // feed four actions — cache them once per batch
-      val next = RepIndex.State(next0.labels.persist(lvl), next0.bands,
-        next0.sharr, next0.marr)
-      caches += next.labels
       // labels delta: rows new or changed this batch (cluster minima only
       // decrease, so stale rows in older segments lose the min-merge)
       val labelsDelta =
@@ -174,25 +173,22 @@ object StreamingRepIndexMaintenance {
         .write.mode("overwrite").parquet(s"$seg/bands")
       next.sharr.join(newRepIds, Seq(idCol), "left_semi")
         .write.mode("overwrite").parquet(s"$seg/sharr")
-      // retired reps (their arrays feed the marr delta too — ONE
-      // anti-join plan serves both writes, ids projected for the
-      // tombstone file)
-      val retiredWithArrays =
-        if (first) sharrB.select(col(idCol), col("sharr")).limit(0)
-        else prev.sharr.select(col(idCol), col("sharr"))
+      // retired reps: old reps no longer in the rep store
+      val retired =
+        if (first) sharrB.select(col(idCol)).limit(0)
+        else prev.sharr.select(col(idCol))
           .join(next.sharr.select(col(idCol)), Seq(idCol), "left_anti")
-      retiredWithArrays.select(col(idCol))
-        .write.mode("overwrite").parquet(s"$seg/retired")
+      retired.write.mode("overwrite").parquet(s"$seg/retired")
       // cold member-array delta: the batch's non-rep arrays, plus the
       // arrays of reps retired THIS batch (moving from the hot rep store
       // to the cold store so a later delete can promote them)
-      val batchNonRep = sharrB.select(col(idCol), col("sharr"))
-        .join(next.sharr.select(col(idCol)), Seq(idCol), "left_anti")
-      batchNonRep.unionByName(retiredWithArrays)
-        .write.mode("overwrite").parquet(s"$seg/marr")
+      next.marr.write.mode("overwrite").parquet(s"$seg/marr")
     } { cmp =>
       writeFull(readLatest(spark, dir, idCol), idCol, cmp)
-    } finally caches.foreach(_.unpersist())
+    } finally {
+      caches.foreach(_.unpersist())
+      if (next != null) RepIndex.release(next)
+    }
   }
 
   /** Rewrite the RESOLVED state as one compacted segment (tombstones
@@ -235,8 +231,8 @@ object StreamingRepIndexMaintenance {
     val st0 = readLatest(spark, dir, idCol)
     val st = RepIndex.State(st0.labels.persist(lvl), st0.bands, st0.sharr,
       st0.marr)
-    val (labels0, promoted0) = RepIndex.deleteDelta(tombs, st, idCol)
-    val labels = labels0.persist(lvl)     // written + feeds the rep ids
+    // labels come back materialized (written + feed the rep ids)
+    val (labels, promoted0) = RepIndex.deleteDelta(tombs, st, idCol)
     val promoted = promoted0.persist(lvl) // two writes: bands + sharr
     try {
       val seg = s"$dir/del$batchId"
@@ -251,7 +247,10 @@ object StreamingRepIndexMaintenance {
       val live = prev.map(_.segments).getOrElse(Nil) :+ s"del$batchId"
       Segments.commit(dir, batchId, live)
       if (live.size > maxSegments) compactAt(spark, dir, idCol, batchId)
-    } finally { st.labels.unpersist(); labels.unpersist(); promoted.unpersist() }
+    } finally {
+      st.labels.unpersist(); promoted.unpersist()
+      Clusters.releaseCheckpoint(labels)
+    }
   }
 
   /** Compact the live segments into one resolved `cmp` segment NOW — the

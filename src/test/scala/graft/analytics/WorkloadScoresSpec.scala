@@ -64,6 +64,23 @@ class WorkloadScoresSpec extends SparkSpec {
     assert(math.abs((m("u3")) - (0.5)) < 1e-12)
   }
 
+  test("a lower-is-better best of 0.0 drops the component instead of dividing by zero") {
+    val e = WorkloadScores.entriesDf(spark, Seq(
+      ("wl", 0, "lat", 0.5, false, "ignore", 1e-4),
+      ("wl", 1, "thr", 0.5, true, "ignore", 1e-4)))
+    // lat median 10; u1's best latency 0.0 would make its norm 10 / 0.0
+    val s = scores(Seq(("u1", "lat", 0.0), ("u1", "thr", 10.0),
+      ("u2", "lat", 10.0), ("u2", "thr", 10.0),
+      ("u3", "lat", 20.0), ("u3", "thr", 10.0)))
+    val m = WorkloadScores.compute(s, e, Seq("unit"), sigFigRound = false)
+      .collect().map(r => r.getAs[String]("unit") ->
+        (r.getAs[Double]("score"), r.getAs[Long]("n_components"))).toMap
+    // u1 keeps only its at-median throughput component
+    assert(m("u1")._2 == 1L && math.abs(m("u1")._1 - 1.0) < 1e-12, m("u1").toString)
+    assert(m("u2")._2 == 2L && math.abs(m("u2")._1 - 1.0) < 1e-12)
+    assert(m("u3")._2 == 2L && math.abs(m("u3")._1 - math.sqrt(0.5)) < 1e-12)
+  }
+
   test("sig-fig rounding: 3 significant figures, integers at |x| >= 1000") {
     assert(WorkloadScores.roundSigFigs(2.0 - 1e-13) === 2.0)
     assert(WorkloadScores.roundSigFigs(1.5157165665103982) === 1.52)

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * one-shot build over the union; (3) the parquet round trip is
   * decision-identical; (4) the honest rep-mediated recall semantics: a
   * batch doc similar ONLY to a non-representative member is not linked
-  * (the documented cost of indexing one doc per cluster). */
+  * (the documented cost of indexing one doc per cluster); (5) every
+  * maintained state's plan stays constant-size over any number of
+  * appends and deletes. */
 class RepIndexSpec extends SparkSpec {
 
   private def sharrOf(rows: Seq[(Long, String)]): DataFrame = {
@@ -31,6 +33,12 @@ class RepIndexSpec extends SparkSpec {
 
   private def sharrOfState(st: RepIndex.State): Set[(Long, Seq[Long])] =
     st.sharr.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
+
+  private def marrOfState(st: RepIndex.State): Set[(Long, Seq[Long])] =
+    sharrOfState(st.copy(sharr = st.marr))
+
+  private def analyzedNodes(df: DataFrame): Int =
+    df.queryExecution.analyzed.collect { case n => n }.size
 
   private val groupA = "alpha beta gamma delta epsilon zeta eta theta"
   private val groupB = "one two three four five six seven eight nine"
@@ -145,6 +153,63 @@ class RepIndexSpec extends SparkSpec {
       9L -> 2L, 11L -> 11L))
     assert(sharrOfState(st3).map(_._1) == Set(1L, 2L, 11L))
     assert(st3.marr.collect().map(_.getLong(0)).toSet == Set(5L, 7L, 9L))
+  }
+
+  test("k alternating appends/deletes: constant-size plans, each state ≡ a fresh build") {
+    val sp = spark; import sp.implicits._
+    // group members share their text, so rep-mediated discovery sees every
+    // pair and a delete cannot split a cluster: a fresh build over the
+    // surviving docs is the exact oracle after every op
+    var live = Map(5L -> groupA, 7L -> groupA, 2L -> groupB, 9L -> groupB,
+      11L -> loner)
+    var st = RepIndex.build(sharrOf(live.toSeq), "doc_id")
+    val ops: Seq[Either[Seq[(Long, String)], Seq[Long]]] = Seq(
+      Left(Seq(1L -> groupA, 3L -> novelT)), // 1 takes A's rep slot from 5
+      Right(Seq(1L, 3L)),                    // 5 promoted back, {3} gone
+      Left(Seq(0L -> groupB, 6L -> groupA)), // 0 takes B's rep slot from 2
+      Right(Seq(0L, 5L)),                    // 2 and 6 promoted
+      Left(Seq(1L -> groupA, 3L -> novelT))) // deleted ids re-appended
+    val probe = sharrOf(Seq(100L -> groupA))
+    val MaxNodes = 4 // per frame, at every k
+    val searchNodes = ops.zipWithIndex.map { case (op, i) =>
+      st = op match {
+        case Left(batch) =>
+          live ++= batch
+          RepIndex.append(sharrOf(batch), st, "doc_id")
+        case Right(ids) =>
+          live --= ids
+          RepIndex.delete(ids.toDF("doc_id"), st, "doc_id")
+      }
+      val k = i + 1
+      Seq("labels" -> st.labels, "bands" -> st.bands, "sharr" -> st.sharr,
+          "marr" -> st.marr).foreach { case (name, df) =>
+        val n = analyzedNodes(df)
+        assert(n <= MaxNodes, s"op $k: $name plans over $n analyzed nodes")
+      }
+      val fresh = RepIndex.build(sharrOf(live.toSeq), "doc_id")
+      assert(labelMap(st) == labelMap(fresh), s"op $k: labels")
+      assert(bandRowsOf(st) == bandRowsOf(fresh), s"op $k: bands")
+      assert(sharrOfState(st) == sharrOfState(fresh), s"op $k: rep arrays")
+      assert(marrOfState(st) == marrOfState(fresh), s"op $k: cold store")
+      analyzedNodes(RepIndex.search(probe, st, "doc_id"))
+    }
+    // the search after the op plans over the same tree at every k
+    assert(searchNodes.distinct.size == 1, searchNodes.toString)
+  }
+
+  test("append leaves its input intact: a maintained input state still collects") {
+    val old = sharrOf(Seq(5L -> groupA, 7L -> groupA, 2L -> groupB, 9L -> groupB))
+    val st1 = RepIndex.append(sharrOf(Seq(1L -> groupA, 3L -> novelT)),
+      RepIndex.build(old, "doc_id"), "doc_id")
+    val want = (labelMap(st1), bandRowsOf(st1), sharrOfState(st1), marrOfState(st1))
+    // st1's frames are checkpointed leaves; the next append releases its
+    // own fixpoint checkpoint, never the blocks of the state it folded
+    val st2 = RepIndex.append(sharrOf(Seq(0L -> groupB)), st1, "doc_id")
+    assert(labelMap(st2)(9L) == 0L)
+    assert((labelMap(st1), bandRowsOf(st1), sharrOfState(st1),
+      marrOfState(st1)) == want)
+    RepIndex.release(st2)
+    assert(labelMap(st1) == want._1)
   }
 
   test("emptied index round-trips: delete every doc, write, read, search") {

@@ -176,20 +176,13 @@ class StreamingRepIndexSpec extends SparkSpec {
     val st4 = StreamingRepIndexMaintenance.readLatest(sp, dir, "doc_id")
     assert(repIds(st4) == Set(5L), repIds(st4))
     assert(labelMap(st4) == Map(5L -> 5L, 7L -> 5L), labelMap(st4))
-    // the streamed state equals the batch path over the same lifecycle.
-    // Materialize between steps (what production does via parquet) —
-    // delete/append reference the prior state's frames several times
-    // each, so a fully-lazy 5-step composition explodes the analyzed
-    // plan tree combinatorially
-    def mat(st: RepIndex.State): RepIndex.State =
-      RepIndex.State(st.labels.localCheckpoint(), st.bands.localCheckpoint(),
-        st.sharr.localCheckpoint(), st.marr.localCheckpoint())
+    // the streamed state equals the batch path over the same lifecycle
     val want = RepIndex.delete(Seq(0L).map(Tuple1(_)).toDF("doc_id"),
-      mat(RepIndex.append(sharrOf(Seq(Doc(0L, groupA))),
-        mat(RepIndex.delete(Seq(1L).map(Tuple1(_)).toDF("doc_id"),
-          mat(RepIndex.append(sharrOf(Seq(Doc(1L, groupA))),
-            mat(RepIndex.build(sharrOf(Seq(Doc(5L, groupA), Doc(7L, groupA))),
-              "doc_id")), "doc_id")), "doc_id")), "doc_id")), "doc_id")
+      RepIndex.append(sharrOf(Seq(Doc(0L, groupA))),
+        RepIndex.delete(Seq(1L).map(Tuple1(_)).toDF("doc_id"),
+          RepIndex.append(sharrOf(Seq(Doc(1L, groupA))),
+            RepIndex.build(sharrOf(Seq(Doc(5L, groupA), Doc(7L, groupA))),
+              "doc_id"), "doc_id"), "doc_id"), "doc_id"), "doc_id")
     assert(labelMap(st4) == labelMap(want))
     val gb = st4.bands.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val wb = want.bands.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
