@@ -124,7 +124,7 @@ object Bench {
       .config("spark.sql.analyzer.singlePassResolver.enabledTentatively", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Releasing a localCheckpoint'ed frontier (Clusters.releaseCheckpoint,
+    // Releasing a localCheckpoint'ed frontier (graft.ops.Checkpoint.release,
     // and resetState below) always logs RDD.unpersist's "was locally
     // checkpointed, its lineage has been truncated" WARN — hard-wired in
     // Spark for ANY local-checkpoint release, not a signal. Safe here by

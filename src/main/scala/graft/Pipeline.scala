@@ -177,8 +177,8 @@ object Pipeline {
 
     // round 11: DELETE mid-lifecycle — the transition no spec crossed
     // before: tombstone a doc the streamed index is actively serving,
-    // assert it vanishes from the served top-k (soft delete — lazy view,
-    // stored segments untouched), compact the tombstone away, re-append
+    // assert it vanishes from the served top-k (soft delete — stored
+    // segments untouched), compact the tombstone away, re-append
     // the same doc, and assert it serves again at its original spot
     // (delete + append ≡ rebuild bit-for-bit, so the round trip restores
     // the exact index)
@@ -193,12 +193,14 @@ object Pipeline {
     assert(goneN == 0, s"tombstoned doc $target still served")
     val cmpDir = java.nio.file.Files.createTempDirectory("graft_pipe_cmp").toString
     graft.text.Bm25.writeIndex(delIdx, cmpDir) // compaction makes it durable
+    graft.text.Bm25.release(delIdx)
     val reAdded = graft.text.Bm25.appendToIndex(
       docs.filter(col("doc_id") === target),
       graft.text.Bm25.readIndex(spark, cmpDir), "doc_id", "text")
     val backN = graft.text.Bm25.searchIndex(probe, reAdded, "doc_id", "text", k = 5)
       .filter(col("doc_id") === target).count()
     assert(backN == 1, s"re-appended doc $target did not return to the top-k")
+    graft.text.Bm25.release(reAdded)
 
     // round 10: representative-only serving — build the rep state over
     // one half, fold the other half incrementally, persist, search from

@@ -39,29 +39,6 @@ object Clusters {
     new java.util.concurrent.atomic.AtomicReference[Option[FixpointStats]](None)
   def lastRunStats: Option[FixpointStats] = lastStatsRef.get()
 
-  /** Release the block-manager storage behind a localCheckpoint'ed frame.
-    * `Dataset.unpersist` only talks to the SQL CacheManager, which knows
-    * nothing about checkpoint RDDs — without this, every fixpoint ROUND
-    * leaks one materialized copy of the frontier for the life of the
-    * session (judge r04: c1 ran 4-6× slower inside the 104-query suite
-    * than isolated — accumulated checkpoint blocks from 100+ prior
-    * queries squeezing the storage pool). At cluster scale the same leak
-    * is executor disk pressure. Non-blocking: eviction proceeds while the
-    * next round plans.
-    *
-    * SAFETY INVARIANT (why the `RDD ... was locally checkpointed, its
-    * lineage has been truncated` WARN this triggers is benign): callers
-    * release a checkpoint only AFTER the frame that supersedes it has
-    * itself materialized (the next round's `localCheckpoint(eager=true)` /
-    * convergence `count()`), so the released blocks can never be needed
-    * again. Spark logs the WARN unconditionally for any local-checkpoint
-    * release — it cannot see the invariant. Bench filters the rdd logger;
-    * the WARN remains visible in normal sessions by design. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** (id, cluster_id) for every node appearing in `pairs`; cluster_id is
     * the minimum id in the node's connected component. */
   def connectedComponents(pairs: DataFrame, colA: String = "id_a", colB: String = "id_b",
@@ -111,7 +88,7 @@ object Clusters {
           col("old"))
         .localCheckpoint(true)
       val changed = next.filter(col("cluster_id") =!= col("old")).count()
-      if (prevRound != null) releaseCheckpoint(prevRound)
+      if (prevRound != null) graft.ops.Checkpoint.release(prevRound)
       prevRound = next
       labels = next.drop("old")
       lastChanged = changed
@@ -120,7 +97,7 @@ object Clusters {
     }
     // the returned labels ride the LAST checkpoint (stays persisted, the
     // caller consumes it); the edge index is dead weight from here on
-    releaseCheckpoint(edges)
+    graft.ops.Checkpoint.release(edges)
     lastStatsRef.set(Some(FixpointStats("min-label", i, lastChanged)))
     // min-label propagation needs ~diameter rounds; a silently-unconverged
     // exit would keep multiple representatives of one cluster with no
@@ -129,7 +106,7 @@ object Clusters {
     if (!converged) {
       // the abandoned frontier's blocks must not outlive the failure
       // (the adaptive fallback would otherwise leak one frontier per run)
-      if (prevRound != null) releaseCheckpoint(prevRound)
+      if (prevRound != null) graft.ops.Checkpoint.release(prevRound)
       throw new IllegalStateException(
         s"connectedComponents did not converge after $maxIterations iterations " +
           s"($lastChanged labels still changing); raise maxIterations")
@@ -195,7 +172,7 @@ object Clusters {
       // the convergence counts just materialized both frames — the old
       // round's edge checkpoint is superseded; release it (same 2-frontier
       // storage bound as the min-label loop)
-      releaseCheckpoint(edges)
+      graft.ops.Checkpoint.release(edges)
       edges = small
       converged = !changed
       i += 1
@@ -233,7 +210,7 @@ object Clusters {
       }
     // both algorithms build exclusively on EAGER checkpoints seeded from
     // p, so p's blocks are dead as soon as the inner call returns
-    releaseCheckpoint(p)
+    graft.ops.Checkpoint.release(p)
     labels
   }
 

@@ -244,12 +244,17 @@ object MinHash {
     * [[hashedShingleArray]] frame — lets a caller pay the per-shingle md5
     * once and share it between the LSH pipeline and other consumers
     * (d12's recall harness derives its exact ground truth from the same
-    * arrays). */
+    * arrays). A caller that already holds the frame's [[bandRows]] (at
+    * the same `rowsPerBand`) hands them in as `precomputedBands`, so the
+    * signature kernel runs once, not once per consumer — the
+    * [[nearDuplicatesArraysAgainstBands]] `probeBandRows` convention. */
   def nearDuplicatesFromArray(sharr: DataFrame, idCol: String,
                               threshold: Double = 0.7,
-                              rowsPerBand: Int = RowsPerBand): DataFrame = {
+                              rowsPerBand: Int = RowsPerBand,
+                              precomputedBands: Option[DataFrame] = None): DataFrame = {
     val pairs = {
-      val bands = bandRows(signaturesFromArray(sharr, idCol), idCol, rowsPerBand)
+      val bands = precomputedBands.getOrElse(
+        bandRows(signaturesFromArray(sharr, idCol), idCol, rowsPerBand))
       val l = bands.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
       val r = bands.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
       l.join(r, Seq("band", "band_hash")).filter(col("id_a") < col("id_b"))

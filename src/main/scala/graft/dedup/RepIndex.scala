@@ -83,9 +83,10 @@ object RepIndex {
   /** The maintained state whose labels leaf is `labels`, the other three
     * frames materialized the same way. */
   private def leaves(labels: DataFrame, bands: DataFrame, sharr: DataFrame,
-                     marr: DataFrame): State =
-    State(labels, bands.localCheckpoint(true), sharr.localCheckpoint(true),
-      marr.localCheckpoint(true))
+                     marr: DataFrame): State = {
+    val Seq(b, s, m) = graft.ops.Checkpoint.leaves(bands, sharr, marr)
+    State(labels, b, s, m)
+  }
 
   /** Frees the checkpoint blocks behind a state [[append]] or [[delete]]
     * returned, once its holder is done with it (written out, or
@@ -93,10 +94,8 @@ object RepIndex {
     * checkpoint leaves are released: a [[build]]/[[read]] state's frames
     * are plans over inputs the caller owns, and are left alone. */
   def release(state: State): Unit =
-    Seq(state.labels, state.bands, state.sharr, state.marr)
-      .filter(_.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-      .foreach(Clusters.releaseCheckpoint)
+    graft.ops.Checkpoint.releaseLeaves(state.labels, state.bands, state.sharr,
+      state.marr)
 
   /** Build the serving state from a finalized snapshot's shingle-array
     * frame (persist `sharr` — the pair detection and the rep band rows
@@ -131,50 +130,60 @@ object RepIndex {
     * Cost shape: one batch-sized signature pass + a band join against a
     * CLUSTER-sized index + a fixpoint over |stored-touched| + |new|
     * star/pair edges. Nothing proportional to the old corpus — and
-    * nothing proportional to its duplication density. The returned
+    * nothing proportional to its duplication density. The batch's
+    * arrays, band rows and pairs are materialized once, shared by every
+    * consumer, and released before the op returns. The returned
     * frames are checkpointed leaves ([[State]]): the op's plan size
     * depends on its inputs, never on how many ops produced `state`, and
     * `state` itself stays intact (its blocks remain the caller's). */
   def append(batchSharr: DataFrame, state: State, idCol: String,
              threshold: Double = 0.7,
              rowsPerBand: Int = MinHash.RowsPerBand): State = {
+    // the batch is computed ONCE: its arrays and its band rows (one
+    // signature pass) are materialized here and shared by both pair
+    // detections and the promoted reps' index rows
+    val batch = batchSharr.select(col(idCol), col("sharr")).localCheckpoint(true)
+    val batchBands = MinHash.bandRows(MinHash.signaturesFromArray(batch, idCol),
+      idCol, rowsPerBand).localCheckpoint(true)
     val vsReps = MinHash.nearDuplicatesArraysAgainstBands(
-        batchSharr, state.bands, state.sharr, idCol, threshold, rowsPerBand)
+        batch, state.bands, state.sharr, idCol, threshold, rowsPerBand,
+        probeBandRows = Some(batchBands))
       .select(col("id_new").as("id_a"), col("id_old").as("id_b"))
     val within = MinHash.nearDuplicatesFromArray(
-        batchSharr, idCol, threshold, rowsPerBand)
+        batch, idCol, threshold, rowsPerBand, precomputedBands = Some(batchBands))
       .select(col("id_a"), col("id_b"))
+    // materialized: the fold reads the pairs twice (its edges and its
+    // self-loop singletons), and pair detection must run once
+    val pairs = vsReps.unionByName(within).localCheckpoint(true)
     val (touched, fixpoint) = Clusters.appendLabelsWithFixpoint(
-      state.labels, vsReps.unionByName(within))
+      state.labels, pairs)
     // batch docs with no near-dup anywhere become their own clusters
-    val novel = batchSharr.select(col(idCol).as("id"))
+    val novel = batch.select(col(idCol).as("id"))
       .join(touched.select(col("id")), Seq("id"), "left_anti")
       .withColumn("cluster_id", col("id"))
-    // materialized HERE, before the five references below: unlike the
-    // fixpoint's rows, `touched` still carries the pair-detection lineage
+    // materialized HERE, before the five references below
     val labels = touched.unionByName(novel).localCheckpoint(true)
     // the fixpoint's final checkpoint is superseded by `labels` — release
     // it through its own handle, never through `touched`, whose plan also
     // holds the caller's `state.labels` blocks
-    Clusters.releaseCheckpoint(fixpoint)
+    graft.ops.Checkpoint.release(fixpoint)
     val repIds = labels.filter(col("id") === col("cluster_id"))
       .select(col("id").as(idCol))
     // surviving old reps keep their stored rows; retired reps (their
     // cluster merged under a smaller minimum) drop out of the semi joins
     // and their arrays MOVE to the cold member store (delete support —
     // a later tombstone may promote them back); promoted/novel reps are
-    // batch docs, so their rows come from the batch's arrays
-    val newRepSharr = batchSharr.join(repIds, Seq(idCol), "left_semi")
-    leaves(labels,
+    // batch docs, so their rows come from the batch's arrays and bands
+    val next = leaves(labels,
       state.bands.join(repIds, Seq(idCol), "left_semi")
-        .unionByName(MinHash.bandRows(
-          MinHash.signaturesFromArray(newRepSharr, idCol), idCol, rowsPerBand)),
+        .unionByName(batchBands.join(repIds, Seq(idCol), "left_semi")),
       state.sharr.join(repIds, Seq(idCol), "left_semi")
-        .unionByName(newRepSharr.select(col(idCol), col("sharr"))),
+        .unionByName(batch.join(repIds, Seq(idCol), "left_semi")),
       state.marr
         .unionByName(state.sharr.join(repIds, Seq(idCol), "left_anti"))
-        .unionByName(batchSharr.join(repIds, Seq(idCol), "left_anti")
-          .select(col(idCol), col("sharr"))))
+        .unionByName(batch.join(repIds, Seq(idCol), "left_anti")))
+    Seq(batch, batchBands, pairs).foreach(graft.ops.Checkpoint.release)
+    next
   }
 
   /** TOMBSTONE deletes — the rep-index member of the r7 delete family

@@ -602,15 +602,23 @@ object Cosine {
     * `assign(old) ∪ assign(batch) ≡ assign(old ∪ batch)` under the same
     * centroids — x18_ivf_append hash-gates searches over the appended
     * index against a DuckDB replay that assigns the full corpus in one
-    * pass. Cost: one batch-sized map-side pass; nothing old-corpus-sized
-    * is read (batch ids must be disjoint from stored ids — the d10/c9
-    * batch contract). */
+    * pass. Cost: one batch-sized map-side pass plus one pass over the
+    * (id, cell) rows; no stored vector is read (batch ids must be
+    * disjoint from stored ids — the d10/c9 batch contract).
+    *
+    * The returned cells are MATERIALIZED, one eager `localCheckpoint`
+    * leaf (the Bm25/RepIndex fold rule): the next fold and every search
+    * read blocks instead of re-running this fold and the ones before it,
+    * so their plans are the same size whatever the history (IvfIndexSpec
+    * pins the bound). The leaf belongs to whoever holds it;
+    * `graft.ops.Checkpoint.releaseLeaves(cells)` frees it. */
   def ivfAppendCells(batch: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, storedCells: DataFrame,
                      cellCol: String): DataFrame =
     storedCells.select(col(idCol), col(cellCol))
       .unionByName(assignToCentroids(batch, idCol, vecCol, centroids, cellCol)
         .select(col(idCol), col("assigned_cell").as(cellCol)))
+      .localCheckpoint(true)
 
   /** TOMBSTONE deletes for the stored IVF index — the reference's
     * soft-delete algebra (tables.py:224-254) applied to the cell
@@ -620,11 +628,14 @@ object Cosine {
     * one-pass assignment had never seen them (assignment is per-row, no
     * global state; centroids stay the stored trained table, matching the
     * no-retrain append contract). Delete + [[ivfAppendCells]] re-indexes
-    * a changed vector. Ids absent are ignored (idempotent). */
+    * a changed vector. Ids absent are ignored (idempotent). Returns a
+    * materialized cells leaf, released by its holder, exactly as
+    * [[ivfAppendCells]] does. */
   def ivfDeleteCells(tombstones: DataFrame, storedCells: DataFrame,
                      idCol: String): DataFrame =
     storedCells.join(tombstones.select(col(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+        Seq(idCol), "left_anti")
+      .localCheckpoint(true)
 
   /** IVF TRAINING step: per-cell elementwise centroid — the DEFAULT path.
     * Plain `avg` keyed by (cell, dim): a combine-enabled HashAggregate

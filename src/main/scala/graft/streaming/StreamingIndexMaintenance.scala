@@ -199,10 +199,12 @@ object StreamingIndexMaintenance {
     * postings/doclen are disjoint per-document rows (plain union).
     * TOMBSTONE segments ([[deleteSink]]) carry only a `tombstones` id
     * file — each component's scan lists only the segments that hold it,
-    * and the union of live tombstones is folded through
-    * [[Bm25.deleteFromIndex]] (every deleted contribution recovered
-    * from the index itself, the r7 algebra), so the served index is
-    * rebuild-without-deleted exactly. */
+    * and the union of live tombstones is folded through the lazy r7
+    * delete algebra ([[Bm25.deleteIndexes]], the core of
+    * [[Bm25.deleteFromIndex]]: every deleted contribution recovered
+    * from the index itself), so the served index is
+    * rebuild-without-deleted exactly. The view is lazy — it owns no
+    * blocks, and each read plans over the live segments. */
   def readLatest(spark: SparkSession, dir: String): Bm25.Index = {
     val segs = liveSegments(dir).map(s => s"$dir/$s")
     require(segs.nonEmpty, s"no committed segments under $dir")
@@ -220,7 +222,7 @@ object StreamingIndexMaintenance {
           sum(col("total_len")).as("total_len")))
     val tombs = paths("tombstones")
     if (tombs.isEmpty) merged
-    else Bm25.deleteFromIndex(spark.read.parquet(tombs: _*), merged, "did")
+    else Bm25.deleteIndexes(spark.read.parquet(tombs: _*), merged, "did")
   }
 
   def prune(dir: String, keepManifests: Int = 2): Unit =

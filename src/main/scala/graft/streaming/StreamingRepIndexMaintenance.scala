@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.dedup.{Clusters, MinHash, RepIndex}
+import graft.dedup.{MinHash, RepIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,7 +249,7 @@ object StreamingRepIndexMaintenance {
       if (live.size > maxSegments) compactAt(spark, dir, idCol, batchId)
     } finally {
       st.labels.unpersist(); promoted.unpersist()
-      Clusters.releaseCheckpoint(labels)
+      graft.ops.Checkpoint.release(labels)
     }
   }
 

@@ -56,11 +56,16 @@ object Bm25 {
     * the INDEX, not the search: recomputing it per query batch would pay
     * a postings-sized aggregate at serving time.
     *
-    * CALLER-OWNED CACHE (the MinHash convention): [[buildIndex]] persists
-    * `postings` (MEMORY_AND_DISK) because doclen/dfreq/stats all derive
-    * from it; nothing unpersists it. Long-lived sessions doing repeated
-    * one-shot [[topK]] calls should build once via [[buildIndex]], search
-    * via [[searchIndex]], and `idx.postings.unpersist()` when done. */
+    * WHO OWNS THE BLOCKS: [[buildIndex]] persists `postings`
+    * (MEMORY_AND_DISK) because doclen/dfreq/stats all derive from it,
+    * and the caller unpersists it (the MinHash convention) — long-lived
+    * sessions doing repeated one-shot [[topK]] calls should build once
+    * via [[buildIndex]], search via [[searchIndex]], and
+    * `idx.postings.unpersist()` when done. A FOLD ([[appendToIndex]],
+    * [[deleteFromIndex]]) returns four checkpointed leaves instead: they
+    * belong to whoever holds the result and [[release]] frees them (the
+    * fold drops its own batch cache). [[readIndex]] and the lazy
+    * [[appendIndexes]] merge hold no blocks. */
   case class Index(postings: DataFrame, doclen: DataFrame, dfreq: DataFrame,
                    stats: DataFrame)
 
@@ -320,11 +325,21 @@ object Bm25 {
     * bit-for-bit — r4_bm25_increment hash-gates exactly that identity
     * against the full-rebuild DuckDB oracle, and Bm25IndexSpec pins it
     * through a parquet round trip. Cost: one batch-sized tokenize pass
-    * plus a dfreq merge keyed on the BATCH's terms; nothing old-corpus-
-    * sized is read. */
+    * plus one pass over the index components, whose merge is
+    * MATERIALIZED (eager `localCheckpoint` leaves, the RepIndex.State
+    * rule); the indexed corpus' text is never read. Every later search
+    * and fold then reads blocks instead of re-running this fold and the
+    * ones before it, so its plan is the same size whatever the history
+    * (Bm25IndexSpec pins the bound). The batch postings cache is
+    * released before the call returns; the leaves are the holder's
+    * ([[release]]). */
   def appendToIndex(batch: DataFrame, idx: Index, idCol: String,
-                    textCol: String): Index =
-    appendIndexes(buildIndex(batch, idCol, textCol), idx)
+                    textCol: String): Index = {
+    val b = buildIndex(batch, idCol, textCol)
+    val next = materialize(appendIndexes(b, idx))
+    b.postings.unpersist()
+    next
+  }
 
   /** TOMBSTONE deletes — the reference's soft-delete algebra
     * (tables.py:224-254: rows flip to inactive, they are never removed)
@@ -340,16 +355,25 @@ object Bm25 {
     * over the tombstoned index against the rebuild-without-deleted
     * oracle, and Bm25IndexSpec pins delete + re-append round trips.
     *
-    * The returned frames are LAZY views over the stored index — serve
-    * through them for soft delete (stored parquet untouched, the
-    * reference's status-flip semantics), or [[writeIndex]] them to
-    * compact the tombstones away. Ids absent from the index are ignored
-    * (idempotent re-delivery of a delete batch). Edge: deleting EVERY
-    * doc leaves stats (0, 0) where a fresh empty build has a null
+    * The returned frames are materialized leaves, as [[appendToIndex]]'s
+    * are, and the stored parquet stays untouched (the reference's
+    * status-flip semantics): serve from them for soft delete,
+    * [[writeIndex]] them to compact the tombstones away, and [[release]]
+    * them when done. A per-read serving view that must own no blocks
+    * (StreamingIndexMaintenance.readLatest) folds through the lazy
+    * [[deleteIndexes]] core instead. Ids absent from the index are
+    * ignored (idempotent re-delivery of a delete batch). Edge: deleting
+    * EVERY doc leaves stats (0, 0) where a fresh empty build has a null
     * total_len — scoring against an empty index returns no rows either
     * way. */
   def deleteFromIndex(tombstones: DataFrame, idx: Index,
-                      idCol: String): Index = {
+                      idCol: String): Index =
+    materialize(deleteIndexes(tombstones, idx, idCol))
+
+  /** The lazy algebra of [[deleteFromIndex]]: a plan over `idx` and the
+    * tombstones that holds no blocks. */
+  private[graft] def deleteIndexes(tombstones: DataFrame, idx: Index,
+                                   idCol: String): Index = {
     val t = tombstones.select(col(idCol).as("did")).distinct()
     val deadDf = idx.postings.join(t, "did")
       .groupBy(col("term")).agg(count(lit(1)).as("ddf"))
@@ -366,10 +390,10 @@ object Bm25 {
       dfreq, stats)
   }
 
-  /** [[appendToIndex]] with the batch side already indexed — lets a
-    * caller that needs to release the batch's postings cache hold the
-    * handle (`b.postings.unpersist()` once the merged index is
-    * materialized; the maintenance sink does exactly this). */
+  /** The lazy merge algebra of [[appendToIndex]], with the batch side
+    * already indexed: a plan over both inputs that holds no blocks of
+    * its own. State that is kept and folded again goes through
+    * [[appendToIndex]], which materializes it. */
   def appendIndexes(b: Index, idx: Index): Index =
     Index(
       idx.postings.unionByName(b.postings),
@@ -379,4 +403,20 @@ object Bm25 {
       idx.stats.unionByName(b.stats)
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("total_len")).as("total_len")))
+
+  /** A fold's result: every component an eager `localCheckpoint` leaf. */
+  private def materialize(idx: Index): Index = {
+    val Seq(p, d, f, s) = graft.ops.Checkpoint.leaves(idx.postings, idx.doclen,
+      idx.dfreq, idx.stats)
+    Index(p, d, f, s)
+  }
+
+  /** Frees the checkpoint blocks behind an index [[appendToIndex]] or
+    * [[deleteFromIndex]] returned, once its holder is done with it
+    * (written out, or superseded by a later fold's result). Frames that
+    * are not bare checkpoint leaves — a [[buildIndex]]/[[readIndex]]
+    * index — are left alone. */
+  def release(idx: Index): Unit =
+    graft.ops.Checkpoint.releaseLeaves(idx.postings, idx.doclen, idx.dfreq,
+      idx.stats)
 }

@@ -317,7 +317,9 @@ class PlanShapeSpec extends SparkSpec {
       graft.text.Bm25.buildIndex(docs, "doc_id", "text"), idxDir)
     val sp = spark; import sp.implicits._
     val tomb = Seq(1L, 2L).toDF("doc_id")
-    val deleted = graft.text.Bm25.deleteFromIndex(tomb,
+    // deleteFromIndex materializes exactly this plan into its leaves, so
+    // the lazy core is where the delete's scans are visible
+    val deleted = graft.text.Bm25.deleteIndexes(tomb,
       graft.text.Bm25.readIndex(sp, idxDir), "doc_id")
     val out = graft.text.Bm25.searchIndex(
       Seq((999L, "alpha beta gamma")).toDF("doc_id", "text"),

@@ -50,4 +50,21 @@ class LshBandKnobSpec extends SparkSpec {
     assert(at(1).size >= at(2).size && at(2).size >= 25,
       s"narrow bands under-recalled: ${at(1).size}/${at(2).size} of 30")
   }
+
+  test("precomputed band rows give exactly the plain call's pairs and Jaccard values") {
+    val sharr = MinHash.hashedShingleArray(corpus, "doc_id", "text", 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (r <- Seq(2, 4)) {
+      val plain = rows(MinHash.nearDuplicatesFromArray(sharr, "doc_id",
+        threshold = 0.5, rowsPerBand = r))
+      val bands = MinHash.bandRows(MinHash.signaturesFromArray(sharr, "doc_id"),
+        "doc_id", r).localCheckpoint(true)
+      val shared = rows(MinHash.nearDuplicatesFromArray(sharr, "doc_id",
+        threshold = 0.5, rowsPerBand = r, precomputedBands = Some(bands)))
+      graft.ops.Checkpoint.release(bands)
+      assert(plain.nonEmpty, s"r=$r: no pairs to compare")
+      assert(shared == plain, s"r=$r: precomputed bands diverged:\n$shared\nvs\n$plain")
+    }
+  }
 }

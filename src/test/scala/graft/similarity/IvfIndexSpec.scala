@@ -115,4 +115,53 @@ class IvfIndexSpec extends SparkSpec {
       "label", k = 5, nProbe = 3)
     assert(viaIndex.exceptAll(direct).isEmpty && direct.exceptAll(viaIndex).isEmpty)
   }
+
+  test("k alternating appends/deletes: one-leaf cells, == one-pass assignment at every k") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val cents = Cosine.cellCentroids(emb.select(col("label"),
+      Cosine.toDouble(col("embedding")).as("v")), "label", "v")
+    def assign(pred: org.apache.spark.sql.Column) =
+      Cosine.assignToCentroids(emb.filter(pred), "vec_id", "embedding", cents, "label")
+        .select(col("vec_id"), col("assigned_cell").as("label"))
+    val id = col("vec_id")
+    var live = id % 3 === 0
+    val dir = java.nio.file.Files.createTempDirectory("ivffold").toString
+    assign(live).write.mode("overwrite").parquet(s"$dir/cells")
+    var cells = spark.read.parquet(s"$dir/cells")
+    val ops: Seq[Either[org.apache.spark.sql.Column, org.apache.spark.sql.Column]] = Seq(
+      Left(id % 3 === 1),
+      Right(id % 2 === 0),
+      Left(id % 3 === 2),
+      Right(id % 5 === 0 || id === 100000L), // an absent id is ignored
+      Left(id % 2 === 0 && id % 3 =!= 2))   // deleted ids re-appended
+    val queries = emb.filter(id < 6)
+    val vectors = emb.select(col("vec_id"), col("embedding"))
+    def search(c: org.apache.spark.sql.DataFrame) =
+      Cosine.ivfSearchIndex(queries, vectors, c, cents, "vec_id", "embedding",
+        "label", k = 5, nProbe = 2)
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val MaxNodes = 4
+    val searchNodes = ops.zipWithIndex.map { case (op, i) =>
+      val next = op match {
+        case Left(batch) =>
+          live = live || batch
+          Cosine.ivfAppendCells(emb.filter(batch), "vec_id", "embedding",
+            cents, cells, "label")
+        case Right(tomb) =>
+          live = live && !tomb
+          Cosine.ivfDeleteCells(emb.filter(tomb).select(id), cells, "vec_id")
+      }
+      graft.ops.Checkpoint.releaseLeaves(cells) // superseded by `next`
+      cells = next
+      val k = i + 1
+      val n = cells.queryExecution.analyzed.collect { case p => p }.size
+      assert(n <= MaxNodes, s"op $k: cells plan over $n analyzed nodes")
+      assert(same(cells, assign(live)), s"op $k: cells")
+      assert(same(search(cells), search(assign(live))), s"op $k: search")
+      search(cells).queryExecution.analyzed.collect { case p => p }.size
+    }
+    assert(searchNodes.distinct.size == 1, searchNodes.toString)
+    graft.ops.Checkpoint.releaseLeaves(cells)
+  }
 }
