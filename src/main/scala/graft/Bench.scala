@@ -1,4 +1,6 @@
 package graft
+
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every `SparkEntry.queries` entry on
@@ -158,7 +160,7 @@ object Bench {
       if (sibling.isDirectory) sibling.getPath else sfDir
     }
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      ParquetOpen(spark, s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().count()
     } catch { case _: Throwable => () }
     // full between-query state reset: clearCache drops CacheManager

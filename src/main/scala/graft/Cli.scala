@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{CanonicalJson, HashDiff, Sync}
+import graft.ops.{CanonicalJson, HashDiff, ParquetOpen, Sync}
 import graft.schema.Schemas
 import graft.sinks.{DdlGen, JsonDump}
 import org.apache.spark.sql.SparkSession
@@ -50,8 +50,8 @@ object Cli {
 
     case "sync" :: src :: tgt :: table :: pks :: Nil =>
       val spark = session()
-      val r = Sync.sync(spark.read.parquet(s"$src/$table"),
-        spark.read.parquet(s"$tgt/$table"), pks.split(",").toSeq)
+      val r = Sync.sync(ParquetOpen(spark, s"$src/$table"),
+        ParquetOpen(spark, s"$tgt/$table"), pks.split(",").toSeq)
       println(s"sync $table: ${r.stats}")
       spark.stop()
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ingest.SeedTables
-import graft.ops.{CanonicalJson, HashDiff}
+import graft.ops.{CanonicalJson, HashDiff, ParquetOpen}
 import graft.schema.Schemas
 import graft.sinks.{DdlGen, Upsert}
 import org.apache.spark.sql.SparkSession
@@ -273,7 +273,7 @@ object Pipeline {
     graft.ops.Sharding.shardedWrite(survivors, "doc_id", outDir, nShards = 4)
     val manifest = graft.ops.Sharding.manifest(survivors, "doc_id", "text", 4)
       .collect()
-    val written = spark.read.parquet(outDir).count()
+    val written = ParquetOpen(spark, outDir).count()
     assert(written == nOut, s"shard write dropped rows: $nOut -> $written")
     assert(manifest.map(_.getLong(1)).sum == nOut)
     println(s"[pipeline] curation tail: $nIn batch docs -> $nOut kept, " +
@@ -364,7 +364,7 @@ object Pipeline {
     val meterDir = java.nio.file.Files.createTempDirectory("graft-pipeline-meter").toString
     val meterCounts = graft.ingest.Pull.pull(spark, new graft.ingest.MeterVendor,
       graft.ingest.Pull.parquetSink(meterDir))
-    val meterTiers = spark.read.parquet(s"$meterDir/storage_price")
+    val meterTiers = ParquetOpen(spark, s"$meterDir/storage_price")
       .select(explode(col("price_tiered"))).count()
     println(s"[pipeline] meter pull: ${meterCounts.size} record types, " +
       s"prices=${meterCounts("server_price")} storage_tiers=$meterTiers")
@@ -375,7 +375,7 @@ object Pipeline {
     val capDir = java.nio.file.Files.createTempDirectory("graft-pipeline-cap").toString
     val capCounts = graft.ingest.Pull.pull(spark, new graft.ingest.CapVendor,
       graft.ingest.Pull.parquetSink(capDir))
-    val capZero = spark.read.parquet(s"$capDir/server_price")
+    val capZero = ParquetOpen(spark, s"$capDir/server_price")
       .select(explode(col("price_tiered")).as("t"))
       .filter(col("t.price") === 0.0).count()
     println(s"[pipeline] cap pull: ${capCounts.size} record types, " +
@@ -398,7 +398,7 @@ object Pipeline {
     val catDir = java.nio.file.Files.createTempDirectory("graft-pipeline-catalog").toString
     val catCounts = graft.ingest.Pull.pull(spark, new graft.ingest.CatalogVendor,
       graft.ingest.Pull.parquetSink(catDir))
-    val catGpus = spark.read.parquet(s"$catDir/server")
+    val catGpus = ParquetOpen(spark, s"$catDir/server")
       .agg(sum(col("gpu_count"))).collect().head.getDouble(0)
     println(s"[pipeline] catalog pull: ${catCounts.size} record types, " +
       s"servers=${catCounts("server")} prices=${catCounts("server_price")} " +
@@ -408,7 +408,7 @@ object Pipeline {
       catGpus == 4.0)
 
     // recompute workload scores from the written benchmark_score table
-    val scores = spark.read.parquet(s"$dir/benchmark_score")
+    val scores = ParquetOpen(spark, s"$dir/benchmark_score")
       .filter(col("status") === "active")
       .select(concat_ws("/", col("vendor_id"), col("server_id")).as("unit_id"),
         col("benchmark_id"), col("score"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Test-harness table loader (TESTDATA.md): TPC-H-ish star schema plus
@@ -16,7 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetOpen(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
@@ -26,34 +27,24 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
   /** `events.parquet` stores TIMESTAMP(NANOS), which Spark 4 refuses by
-    * default. Read nanos as long (legacy conf, runtime-settable) and convert
+    * default. Read nanos as long (legacy conf, runtime-settable; it must
+    * stay set for the scan too, so it is set on the session) and convert
     * to a microsecond TimestampType column — the generator's values are
-    * µs-grained, so the conversion is lossless.
-    *
-    * The frame is MEMOIZED per (session, dir) (round 15): 14 query paths
-    * call this, and each un-memoized call re-ran the driver-side parquet
-    * schema inference plus the nanos probe before rebuilding an identical
-    * cast plan. The memo holds a logical plan only — no data is cached,
-    * so bench/oracle runs still compute everything from the parquet. */
-  private val eventsMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-  def events(spark: SparkSession, dir: String): DataFrame =
-    eventsMemo.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-      .computeIfAbsent(dir, { _ =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val df = apply(spark, dir, "events")
-        if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          // integer DIV: `/` on longs promotes to double and loses µs precision
-          df.withColumn("ts",
-            org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
-        else df
-      })
+    * µs-grained, so the conversion is lossless. The open is
+    * [[graft.ops.ParquetOpen]]'s, whose memo keys on the conf. */
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = apply(spark, dir, "events")
+    if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      // integer DIV: `/` on longs promotes to double and loses µs precision
+      df.withColumn("ts",
+        org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
+    else df
+  }
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spread(apply(spark, dir, "documents"))
+    spread(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spread(apply(spark, dir, "embeddings"))
+    spread(spark, dir, "embeddings")
 
   /** A small table arrives as ONE input split, so heavy per-row compute
     * downstream (shingling, per-shingle md5, dot products) runs in a single
@@ -62,9 +53,12 @@ object Tables {
     * defaultParallelism when it has fewer partitions; at 100 TB inputs have
     * thousands of row groups and this is a no-op (no shuffle). Row order is
     * never load-bearing here: every oracle-gated query ends in a total
-    * ORDER BY, and ordered dedup derives order from data columns. */
-  def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    * ORDER BY, and ordered dedup derives order from data columns. The
+    * split count is remembered with the table's schema, so a repeat open
+    * does not plan the scan. */
+  def spread(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val (df, splits) = ParquetOpen.withSplits(spark, s"$dir/$name.parquet")
+    val target = spark.sparkContext.defaultParallelism
+    if (splits < target) df.repartition(target) else df
   }
 }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -330,15 +331,15 @@ object RepIndex {
     // the partitioned layout appends (band, pbucket) after the data
     // columns and infers their types from directory names — restore the
     // canonical (id, band, band_hash) order and band's int type
-    val b0 = spark.read.parquet(s"$dir/bands")
+    val b0 = ParquetOpen(spark, s"$dir/bands")
     val idName = b0.columns.filterNot(Set("band", "band_hash", "pbucket")).head
-    val sharr = spark.read.parquet(s"$dir/sharr")
+    val sharr = ParquetOpen(spark, s"$dir/sharr")
     val marrPath = new org.apache.hadoop.fs.Path(s"$dir/marr")
     val marr =
       if (marrPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(marrPath)) spark.read.parquet(s"$dir/marr")
+          .exists(marrPath)) ParquetOpen(spark, s"$dir/marr")
       else sharr.limit(0)
-    State(spark.read.parquet(s"$dir/labels"),
+    State(ParquetOpen(spark, s"$dir/labels"),
       b0.select(col(idName), col("band").cast("int"), col("band_hash")),
       sharr, marr)
   }
@@ -375,7 +376,7 @@ object RepIndex {
                    rowsPerBand: Int = MinHash.RowsPerBand,
                    probeCollectCap: Int = ServingProbeRowCap): DataFrame = {
     val mod = storedProbeBuckets(dir)
-    val bands = spark.read.parquet(s"$dir/bands")
+    val bands = ParquetOpen(spark, s"$dir/bands")
     // torn-artifact guard: an in-place rewrite that crashed between the
     // bands write and the config rename leaves bands bucketed under a
     // DIFFERENT modulus than the config claims — the pruned equi-join
@@ -435,7 +436,7 @@ object RepIndex {
       // limit(cap+1) both detects the over-cap case and, under the cap,
       // IS the full row set (≤ cap rows exist, the limit returned all)
       val head = bandRowsDf.limit(probeCollectCap + 1).collect()
-      val sharr = spark.read.parquet(s"$dir/sharr")
+      val sharr = ParquetOpen(spark, s"$dir/sharr")
       def pruneTo(pairs: Array[(Int, Int)]): DataFrame = {
         val pred = pairs.map { case (b, p) =>
           col("band") === b && col("pbucket") === p
@@ -463,7 +464,7 @@ object RepIndex {
       }
     } else
       MinHash.nearDuplicatesArraysAgainstBands(querySharr, bands,
-        spark.read.parquet(s"$dir/sharr"), idCol, threshold, rowsPerBand,
+        ParquetOpen(spark, s"$dir/sharr"), idCol, threshold, rowsPerBand,
         probeBuckets = mod)
   }
 }

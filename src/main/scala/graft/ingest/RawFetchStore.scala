@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.{Files, Paths}
@@ -26,6 +27,6 @@ object RawFetchStore {
     if (!isFresh(dir, ttlMillis)) {
       fetch.write.mode("overwrite").parquet(dir)
     }
-    spark.read.parquet(dir)
+    ParquetOpen(spark, dir)
   }
 }

@@ -35,7 +35,7 @@ object PartitionSample {
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
       overlapped(dirs) { st =>
         val v = st.getPath.getName.drop(partCol.length + 1)
-        project(spark.read.parquet(st.getPath.toString)).limit(1).collect()
+        project(ParquetOpen(spark, st.getPath.toString)).limit(1).collect()
           .headOption.map(v -> _).toSeq
       }
     }
@@ -62,7 +62,7 @@ object PartitionSample {
       } yield (outer.getPath.getName.drop(outerCol.length + 1),
         inner.getPath.getName.drop(innerCol.length + 1), inner.getPath)
       overlapped(leaves) { case (ov, iv, path) =>
-        project(spark.read.parquet(path.toString)).limit(1).collect()
+        project(ParquetOpen(spark, path.toString)).limit(1).collect()
           .headOption.map(r => (ov, iv, r)).toSeq
       }
     }

@@ -62,7 +62,7 @@ object LifecycleQueries extends QueryPack {
       // arrives as one split at harness scale (see Tables.spread) — the
       // honest-force bench exposed p6 running its 150k from_json calls
       // in a single task (6.4 s; 0.7 s spread across cores)
-      val parsed = Tables.spread(Tables.orders(s, dir))
+      val parsed = Tables.spread(s, dir, "orders")
         .select(col("o_orderkey"), from_json(terms, schema, Map.empty[String, String]).as("terms"))
         .select(col("o_orderkey"),
           try_element_at(map_values(try_element_at(col("terms"), lit("OnDemand"))), lit(1))

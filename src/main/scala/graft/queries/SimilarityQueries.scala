@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.ParquetOpen
 import graft.similarity.Cosine
 import org.apache.spark.sql.functions._
 
@@ -893,7 +894,7 @@ object SimilarityQueries extends QueryPack {
     * pairs — the collect shape every stash reader shares (trained book,
     * residual book, coarse centroids; all k·dim-bounded). */
   private def readCellVecs(s: org.apache.spark.sql.SparkSession, path: String): Seq[(Long, Seq[Double])] =
-    s.read.parquet(path)
+    ParquetOpen(s, path)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (cell, rows) => (cell, rows.sortBy(_._2).map(_._3).toSeq) }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.dedup.{Clusters, MinHash, SimHash}
+import graft.ops.ParquetOpen
 import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 
@@ -1426,7 +1427,7 @@ object TextQueries extends QueryPack {
         pairs08Path = p
         pairs08Key = key
       }
-      s.read.parquet(pairs08Path)
+      ParquetOpen(s, pairs08Path)
     }
 
   /** Process-level memo of the d17/d19 serving lifecycle's shared first

@@ -1,5 +1,6 @@
 package graft.schema
 
+import graft.ops.ParquetOpen
 import graft.sinks.DdlGen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -132,7 +133,7 @@ object Migrations {
   def current(spark: SparkSession, dir: String): Option[String] = {
     val metaPath = s"$dir/_metadata"
     if (!exists(spark, metaPath)) None
-    else graft.ops.Sync.revisionOf(spark.read.parquet(metaPath))
+    else graft.ops.Sync.revisionOf(ParquetOpen(spark, metaPath))
   }
 
   /** Stamp the store's revision without migrating (alembic `stamp`). */
@@ -140,7 +141,7 @@ object Migrations {
     val metaPath = s"$dir/_metadata"
     val existing =
       if (exists(spark, metaPath))
-        spark.read.parquet(metaPath)
+        ParquetOpen(spark, metaPath)
           .filter(col("key") =!= graft.ops.Sync.RevisionKey)
       else Validate.conform(
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -179,7 +180,7 @@ object Migrations {
       m.changes.foreach { case (table, changes) =>
         val path = s"$dir/$table"
         if (exists(spark, path)) { // a store need not materialize every table
-          val migrated = changes.foldLeft(spark.read.parquet(path))((df, c) => c(df))
+          val migrated = changes.foldLeft(ParquetOpen(spark, path))((df, c) => c(df))
           writeSwapped(spark, migrated, path)
         }
       }

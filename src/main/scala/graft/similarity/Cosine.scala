@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -348,9 +349,9 @@ object Cosine {
                                   probeRadius: Int = 1): DataFrame = {
     val (nPlanes, dim, nTables) = srpIndexConfig(indexDir)
     decontaminateTail(train, idCol, threshold,
-      spark.read.parquet(s"$indexDir/bands")
+      ParquetOpen(spark, s"$indexDir/bands")
         .select(col("t"), col("b"), col(idCol).as("eval_id")),
-      spark.read.parquet(s"$indexDir/vecs")
+      ParquetOpen(spark, s"$indexDir/vecs")
         .select(col(idCol).as("eval_id"), col("tv"), col("tn")),
       nPlanes, dim, nTables, vecCol, probeRadius)
   }
@@ -481,7 +482,7 @@ object Cosine {
     * exactly what a later open will read. */
   private def centroidFp(spark: SparkSession, dir: String,
                          cellCol: String): Int = {
-    val r = spark.read.parquet(s"$dir/centroids")
+    val r = ParquetOpen(spark, s"$dir/centroids")
       .agg(coalesce(sum(pmod(xxhash64(col(cellCol), col("dim"),
         round(col("centroid") * 1000000, 0).cast("long")),
         lit(1000000000L))), lit(0L)))
@@ -554,7 +555,7 @@ object Cosine {
   def ivfSearchStored(spark: SparkSession, queries: DataFrame, dir: String,
                       idCol: String, vecCol: String, cellCol: String,
                       k: Int, nProbe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = ParquetOpen(spark, s"$dir/centroids")
     // torn-artifact guard: the commit sidecar fingerprints centroid
     // CONTENT + lists count, both re-derived from disk here; a crashed
     // in-place re-train mismatches whichever side it changed (see
@@ -563,7 +564,7 @@ object Cosine {
     if (graft.ops.ConfigFile.exists(dir, "ivf_commit")) {
       val want = graft.ops.ConfigFile.readInts(dir, "ivf_commit", 2)
       if (!validatedIvf.contains((dir, want))) {
-        val nl = (spark.read.parquet(s"$dir/lists").count() % 1000000000L).toInt
+        val nl = (ParquetOpen(spark, s"$dir/lists").count() % 1000000000L).toInt
         val fp = centroidFp(spark, dir, cellCol)
         require(nl == want.head && fp == want(1),
           s"stored IVF index at $dir does not match its commit sidecar " +
@@ -1072,7 +1073,7 @@ object Cosine {
                     dim: Int, dir: String): Unit = {
     val spark = corpus.sparkSession
     sq8Stats(corpus, vecCol).write.mode("overwrite").parquet(s"$dir/stats")
-    val statsDisk = spark.read.parquet(s"$dir/stats")
+    val statsDisk = ParquetOpen(spark, s"$dir/stats")
     sq8PackedCodes(corpus, statsDisk, idCol, vecCol, dim)
       .write.mode("overwrite").parquet(s"$dir/codes")
     writePrefixRows(corpus.select(col(idCol), col(vecCol)), idCol, dir)
@@ -1084,7 +1085,7 @@ object Cosine {
     * per-row json hash, mod 1e9) — derived from DISK, the centroidFp
     * recipe. */
   private def sq8StatsFp(spark: SparkSession, dir: String): Int =
-    (spark.read.parquet(s"$dir/stats")
+    (ParquetOpen(spark, s"$dir/stats")
       .agg(coalesce(sum(pmod(xxhash64(to_json(struct(col("*")))),
         lit(1000000000L))), lit(0L)))
       .head().getLong(0) % 1000000000L).toInt
@@ -1118,8 +1119,8 @@ object Cosine {
           s"(stats fp $fp vs ${cfg(2)}) — torn artifact: re-run writeSq8Index")
       validatedSq8.add((dir, cfg))
     }
-    val stats = spark.read.parquet(s"$dir/stats")
-    val codes = spark.read.parquet(s"$dir/codes")
+    val stats = ParquetOpen(spark, s"$dir/stats")
+    val codes = ParquetOpen(spark, s"$dir/codes")
     val q = queries.select(col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("qv"))
     val shortDf = sq8SearchCodes(queries, codes, stats, idCol, vecCol,
@@ -1131,7 +1132,7 @@ object Cosine {
       spark.sparkContext.parallelize(shortRows.toSeq, 1), shortDf.schema)
     val ids = shortRows.map(_.get(1)).distinct.toSeq
     val idLongs = ids.map(_.asInstanceOf[Number].longValue)
-    val stored = spark.read.parquet(s"$dir/vectors")
+    val stored = ParquetOpen(spark, s"$dir/vectors")
     val partitioned = stored.columns.contains("pbucket")
     val raw0 =
       if (partitioned) stored.select(col("pbucket"),
@@ -1249,7 +1250,7 @@ object Cosine {
   /** Content fingerprint of the written word store (order-free per-row
     * json hash, mod 1e9) — derived from DISK, the sq8StatsFp recipe. */
   private def bqCodesFp(spark: SparkSession, dir: String): Int =
-    (spark.read.parquet(s"$dir/codes")
+    (ParquetOpen(spark, s"$dir/codes")
       .agg(coalesce(sum(pmod(xxhash64(to_json(struct(col("*")))),
         lit(1000000000L))), lit(0L)))
       .head().getLong(0) % 1000000000L).toInt
@@ -1273,7 +1274,7 @@ object Cosine {
     val cfg = graft.ops.ConfigFile.readInts(dir, "bq_config", 4)
     val (dim, buckets) = (cfg.head, cfg(1))
     if (!validatedBq.contains((dir, cfg))) {
-      val nc = (spark.read.parquet(s"$dir/codes").count() % 1000000000L).toInt
+      val nc = (ParquetOpen(spark, s"$dir/codes").count() % 1000000000L).toInt
       val fp = bqCodesFp(spark, dir)
       require(nc == cfg(2) && fp == cfg(3),
         s"stored BQ index at $dir does not match its commit sidecar " +
@@ -1281,7 +1282,7 @@ object Cosine {
           "artifact: re-run writeBqIndex")
       validatedBq.add((dir, cfg))
     }
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = ParquetOpen(spark, s"$dir/codes")
       .select(col(idCol).as("neighbor_id"), col("bwords"))
     val shortDf = bqShortlist(queries, codes, idCol, vecCol, dim, kShort)
     val shortRows = shortDf.collect()
@@ -1741,7 +1742,7 @@ object Cosine {
 
   /** The stored rotation rows, ordered (i, j) — driver-sized (p×dim). */
   def readRotation(spark: SparkSession, dir: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$dir/rotation")
+    ParquetOpen(spark, s"$dir/rotation")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toSeq)
@@ -1749,7 +1750,7 @@ object Cosine {
   /** Content fingerprint of the written rotation parquet (order-free,
     * nano-scaled values — rotation entries live in [−1, 1]). */
   private[graft] def rotationFp(spark: SparkSession, dir: String): Int =
-    (spark.read.parquet(s"$dir/rotation")
+    (ParquetOpen(spark, s"$dir/rotation")
       .agg(coalesce(sum(pmod(xxhash64(col("i"), col("j"),
         round(col("x") * 1000000000L, 0).cast("long")),
         lit(1000000000L))), lit(0L)))
@@ -1806,7 +1807,7 @@ object Cosine {
         })
         if (r.isEmpty) None else Some(r)
       }
-    val stored = spark.read.parquet(s"$dir/vectors")
+    val stored = ParquetOpen(spark, s"$dir/vectors")
     val partitioned = stored.columns.contains("pbucket")
     // torn-artifact guard: a crashed in-place rebuild under a different p
     // leaves the stored prefix column at a width the config no longer
@@ -1861,7 +1862,7 @@ object Cosine {
   private def prunedRawVectors(spark: SparkSession, dir: String,
                                idCol: String, valueCol: String,
                                ids: Seq[Any], buckets: Int): (DataFrame, Boolean) = {
-    val stored = spark.read.parquet(s"$dir/vectors")
+    val stored = ParquetOpen(spark, s"$dir/vectors")
     val partitioned = stored.columns.contains("pbucket")
     val base =
       if (partitioned) stored.select(col("pbucket"),
@@ -2207,7 +2208,7 @@ object Cosine {
     writePqCentroids(spark, centroids, cellCol, dir)
     writePqTail(spark,
       pqCodesFromBook(corpus, idCol, vecCol,
-        spark.read.parquet(s"$dir/codebook"), nSub, subDim, nPlanes),
+        ParquetOpen(spark, s"$dir/codebook"), nSub, subDim, nPlanes),
       corpus, cells, idCol, vecCol, cellCol, dir, nSub, subDim, nPlanes,
       centroids.isDefined)
   }
@@ -2257,7 +2258,7 @@ object Cosine {
                              cellCentroids): Unit = {
     val spark = corpus.sparkSession
     writePqCentroids(spark, Some(centroids), cellCol, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = ParquetOpen(spark, s"$dir/centroids")
       .withColumnRenamed("cell", cellCol)
     val res = residualFrame(corpus, cells, cents, idCol, vecCol, cellCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2286,7 +2287,7 @@ object Cosine {
                                nPlanes: Int = 4): Unit = {
     val spark = corpus.sparkSession
     writePqCentroids(spark, Some(centroids), cellCol, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = ParquetOpen(spark, s"$dir/centroids")
       .withColumnRenamed("cell", cellCol)
     val res = residualFrame(corpus, cells, cents, idCol, vecCol, cellCol)
     writeResidualPqTail(spark, book, res, corpus, cells, idCol, vecCol,
@@ -2305,7 +2306,7 @@ object Cosine {
     book.write.mode("overwrite").parquet(s"$dir/codebook")
     writePqTail(spark,
       pqCodesFromBook(res, idCol, "resv",
-        spark.read.parquet(s"$dir/codebook"), nSub, subDim, nPlanes),
+        ParquetOpen(spark, s"$dir/codebook"), nSub, subDim, nPlanes),
       corpus, cells, idCol, vecCol, cellCol, dir, nSub, subDim, nPlanes,
       hasCentroids = true, residual = true)
   }
@@ -2410,7 +2411,7 @@ object Cosine {
     * of per-row hashes over (cell, dim, micro-centroid), mod 1e9) —
     * derived from DISK, the centroidFp recipe. */
   private def pqCodebookFp(spark: SparkSession, dir: String): Int =
-    (spark.read.parquet(s"$dir/codebook")
+    (ParquetOpen(spark, s"$dir/codebook")
       .agg(coalesce(sum(pmod(xxhash64(col("cell"), col("dim"),
         round(col("centroid") * 1000000, 0).cast("long")),
         lit(1000000000L))), lit(0L)))
@@ -2436,14 +2437,14 @@ object Cosine {
                           dir: String): (Int, Int, Int, Int, Boolean, Boolean) = {
     val cfg = graft.ops.ConfigFile.readIntsRange(dir, "pq_commit", 8, 9)
     if (!validatedPq.contains((dir, cfg))) {
-      val nc = (spark.read.parquet(s"$dir/codes").count() % 1000000000L).toInt
+      val nc = (ParquetOpen(spark, s"$dir/codes").count() % 1000000000L).toInt
       val fp = pqCodebookFp(spark, dir)
       require(nc == cfg(4) && fp == cfg(5),
         s"stored PQ index at $dir does not match its commit sidecar " +
           s"(codes $nc vs ${cfg(4)}, codebook fp $fp vs ${cfg(5)}) — " +
           "torn artifact: re-run writePqIndex")
       if (cfg(7) == 1) {
-        val ccols = spark.read.parquet(s"$dir/centroids").columns
+        val ccols = ParquetOpen(spark, s"$dir/centroids").columns
         // pre-normalization stores (written before the centroid column
         // was pinned to 'cell') fail here by DESIGN — accepting a
         // caller-named column would reintroduce the inference hazard
@@ -2475,19 +2476,12 @@ object Cosine {
     * way coercion casts (version-sensitive) and distinct "007"/"7"
     * directories merge. ONE body for every string-keyed stored layout
     * (IVF lists, PQ codes) so a future partition-typing fix cannot
-    * miss a path. Flat (empty-corpus) layouts read as-is. */
+    * miss a path. Flat (empty-corpus) layouts read as-is. One open:
+    * the remembered schema carries the pinned type. */
   private def pinnedStringPartitionRead(spark: SparkSession, path: String,
-                                        partCol: String): DataFrame = {
-    val inferred = spark.read.parquet(path)
-    if (inferred.columns.contains(partCol))
-      spark.read.schema(org.apache.spark.sql.types.StructType(
-          inferred.schema.map(f =>
-            if (f.name == partCol)
-              f.copy(dataType = org.apache.spark.sql.types.StringType)
-            else f)))
-        .parquet(path)
-    else inferred
-  }
+                                        partCol: String): DataFrame =
+    ParquetOpen.pinned(spark, path, partCol,
+      org.apache.spark.sql.types.StringType)
 
   /** Materialize a serving-sized probe frame ONCE on the driver and hand
     * back (re-parallelized frame, distinct pcell literals) — the
@@ -2517,7 +2511,7 @@ object Cosine {
                                   cellLits: Seq[String],
                                   nSub: Int, nPlanes: Int,
                                   residual: Boolean): DataFrame = {
-    val book = codebookToMap(spark.read.parquet(s"$dir/codebook"))
+    val book = codebookToMap(ParquetOpen(spark, s"$dir/codebook"))
     val c0 = pinnedStringPartitionRead(spark, s"$dir/codes", "pcell")
     val partitioned = c0.columns.contains("pcell")
     val pruned =
@@ -2531,7 +2525,7 @@ object Cosine {
     else
       pruned
         .join(broadcast(centroidVectors(
-          spark.read.parquet(s"$dir/centroids").withColumnRenamed("cell", cellCol),
+          ParquetOpen(spark, s"$dir/centroids").withColumnRenamed("cell", cellCol),
           cellCol, "cvec")), Seq(cellCol))
         .select(col(cellCol), col(idCol).as("neighbor_id"),
           zip_with(col("cvec"), adcRecon(nSub, nPlanes), (a, b) => a + b).as("rv"))
@@ -2612,7 +2606,7 @@ object Cosine {
         "(writePqIndex centroids=None) — multiprobe needs them: re-run " +
         "writePqIndex with centroids=Some(...), or probe own cells via " +
         "ivfAdcSearchStored")
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = ParquetOpen(spark, s"$dir/centroids")
       .withColumnRenamed("cell", cellCol)
     val (probes, cellLits) = collectProbeFrame(spark,
       ivfProbes(queries, cents, idCol, vecCol, cellCol, nProbe), cellCol)
@@ -2635,7 +2629,7 @@ object Cosine {
                    idCol: String, vecCol: String, k: Int,
                    kShort: Int = 20): DataFrame = {
     val (nSub, _, nPlanes, buckets, _, residual) = openPqIndex(spark, dir)
-    val book = codebookToMap(spark.read.parquet(s"$dir/codebook"))
+    val book = codebookToMap(ParquetOpen(spark, s"$dir/codebook"))
     val q = queries.select(col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("qv"))
     val coded = pinnedStringPartitionRead(spark, s"$dir/codes", "pcell")
@@ -2654,7 +2648,7 @@ object Cosine {
         // the pcell partition value IS the cell cast to string (writer
         // invariant), so the broadcast centroid join keys on it
         val cv = broadcast(centroidVectors(
-            spark.read.parquet(s"$dir/centroids"), "cell", "cvec")
+            ParquetOpen(spark, s"$dir/centroids"), "cell", "cvec")
           .select(col("cell").cast("string").as("pcell"), col("cvec")))
         coded.join(cv, Seq("pcell"))
           .select(col(idCol).as("neighbor_id"),

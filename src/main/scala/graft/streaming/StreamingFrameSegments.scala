@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -31,10 +32,10 @@ private[streaming] object FrameSegments {
       s => new java.io.File(s, "tombstones").exists())
     require(dataSegs.nonEmpty,
       s"store under $dir holds only tombstone segments — nothing to serve")
-    val frame = spark.read.parquet(dataSegs: _*)
+    val frame = ParquetOpen(spark, dataSegs: _*)
     if (tombSegs.isEmpty) frame
     else {
-      val tombs = spark.read.parquet(tombSegs.map(_ + "/tombstones"): _*)
+      val tombs = ParquetOpen(spark, tombSegs.map(_ + "/tombstones"): _*)
       frame.join(tombs, Seq(tombs.columns.head), "left_anti")
     }
   }

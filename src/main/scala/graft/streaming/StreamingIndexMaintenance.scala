@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.ParquetOpen
 import graft.text.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -213,16 +214,16 @@ object StreamingIndexMaintenance {
     require(paths("postings").nonEmpty,
       s"store under $dir holds only tombstone segments — nothing to serve")
     val merged = Bm25.Index(
-      spark.read.parquet(paths("postings"): _*),
-      spark.read.parquet(paths("doclen"): _*),
-      spark.read.parquet(paths("dfreq"): _*)
+      ParquetOpen(spark, paths("postings"): _*),
+      ParquetOpen(spark, paths("doclen"): _*),
+      ParquetOpen(spark, paths("dfreq"): _*)
         .groupBy(col("term")).agg(sum(col("df")).as("df")),
-      spark.read.parquet(paths("stats"): _*)
+      ParquetOpen(spark, paths("stats"): _*)
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("total_len")).as("total_len")))
     val tombs = paths("tombstones")
     if (tombs.isEmpty) merged
-    else Bm25.deleteIndexes(spark.read.parquet(tombs: _*), merged, "did")
+    else Bm25.deleteIndexes(ParquetOpen(spark, tombs: _*), merged, "did")
   }
 
   def prune(dir: String, keepManifests: Int = 2): Unit =

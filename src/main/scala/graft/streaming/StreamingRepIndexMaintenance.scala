@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.{MinHash, RepIndex}
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,14 +88,14 @@ object StreamingRepIndexMaintenance {
     val all = names.indices
 
     val baseIdx = isDel.lastIndexOf(true) match { case -1 => 0; case i => i }
-    val labels = spark.read
-      .parquet((baseIdx until names.size).map(i => s"${paths(i)}/labels"): _*)
+    val labels = ParquetOpen(spark,
+        (baseIdx until names.size).map(i => s"${paths(i)}/labels"): _*)
       .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
 
     def anti(f: DataFrame, ps: Seq[String]): DataFrame = {
       val ex = ps.filter(p => new java.io.File(p).exists())
       if (ex.isEmpty) f
-      else f.join(spark.read.parquet(ex: _*), Seq(idCol), "left_anti")
+      else f.join(ParquetOpen(spark, ex: _*), Seq(idCol), "left_anti")
     }
     def tombsAfter(i: Int): Seq[String] =
       ((i + 1) until names.size).flatMap(j =>
@@ -106,17 +107,17 @@ object StreamingRepIndexMaintenance {
     // delete segment's promoted rows take only LATER tombstones
     def indexRead(part: String): DataFrame = {
       val appends = all.filterNot(isDel).map(i => s"${paths(i)}/$part")
-      val base = anti(spark.read.parquet(appends: _*), allTombs)
+      val base = anti(ParquetOpen(spark, appends: _*), allTombs)
       all.filter(isDel).foldLeft(base) { (acc, i) =>
         acc.unionByName(
-          anti(spark.read.parquet(s"${paths(i)}/$part"), tombsAfter(i)))
+          anti(ParquetOpen(spark, s"${paths(i)}/$part"), tombsAfter(i)))
       }
     }
     val sharr = indexRead("sharr")
     val marrAdds = all.filterNot(isDel).map(i => s"${paths(i)}/marr")
       .filter(p => new java.io.File(p).exists())
     val marr0 = if (marrAdds.isEmpty) sharr.limit(0)
-                else spark.read.parquet(marrAdds: _*)
+                else ParquetOpen(spark, marrAdds: _*)
     val deleted = all.map(i => s"${paths(i)}/deleted")
     val marr = anti(marr0, deleted)
       .join(sharr.select(col(idCol)), Seq(idCol), "left_anti")

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,11 +155,11 @@ object Bm25 {
     * append/delete folds stay schema-stable). Serving probes that want
     * partition pruning go through [[searchStored]] instead. */
   def readIndex(spark: SparkSession, dir: String): Index = Index(
-    spark.read.parquet(s"$dir/postings").select(
+    ParquetOpen(spark, s"$dir/postings").select(
       col("did"), col("term"), col("tf")),
-    spark.read.parquet(s"$dir/doclen"),
-    spark.read.parquet(s"$dir/dfreq"),
-    spark.read.parquet(s"$dir/stats"))
+    ParquetOpen(spark, s"$dir/doclen"),
+    ParquetOpen(spark, s"$dir/dfreq"),
+    ParquetOpen(spark, s"$dir/stats"))
 
   /** Top-k search over a (possibly stored) index. Query docs may overlap
     * the corpus: self-hits (`qid == did`) are excluded. */
@@ -236,7 +237,7 @@ object Bm25 {
                    b: Double = 0.75,
                    minIdfMicro: Long = DefaultMinIdfMicro): DataFrame = {
     val mod = storedTermBuckets(dir)
-    val p0 = spark.read.parquet(s"$dir/postings")
+    val p0 = ParquetOpen(spark, s"$dir/postings")
     val partitioned = p0.columns.contains("tbucket")
     // torn-artifact guard: a crashed in-place rewrite can leave postings
     // bucketed under a DIFFERENT modulus than the config claims — the
@@ -273,8 +274,7 @@ object Bm25 {
     val buckets = qrows.map(_.getInt(2)).distinct.toSeq
     val postings =
       if (terms.isEmpty)
-        spark.read.parquet(s"$dir/postings")
-          .select(col("did"), col("term"), col("tf")).limit(0)
+        p0.select(col("did"), col("term"), col("tf")).limit(0)
       else if (partitioned)
         p0.filter(col("tbucket").isin(buckets: _*)
             && col("term").isin(terms: _*))
@@ -282,13 +282,13 @@ object Bm25 {
       else
         p0.filter(col("term").isin(terms: _*))
           .select(col("did"), col("term"), col("tf"))
-    val dfreq = spark.read.parquet(s"$dir/dfreq")
+    val dfreq = ParquetOpen(spark, s"$dir/dfreq")
     val dfreqF =
       if (terms.isEmpty) dfreq.limit(0)
       else dfreq.filter(col("term").isin(terms: _*))
     score(qterms,
-      Index(postings, spark.read.parquet(s"$dir/doclen"), dfreqF,
-        spark.read.parquet(s"$dir/stats")),
+      Index(postings, ParquetOpen(spark, s"$dir/doclen"), dfreqF,
+        ParquetOpen(spark, s"$dir/stats")),
       k, k1, b, minIdfMicro)
   }
 

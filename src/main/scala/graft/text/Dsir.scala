@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.ParquetOpen
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -120,7 +121,7 @@ object Dsir {
     * derived from DISK so it pins exactly what a later open reads. */
   private def frameFp(spark: org.apache.spark.sql.SparkSession,
                       path: String, cols: Seq[String]): Int =
-    (spark.read.parquet(path)
+    (ParquetOpen(spark, path)
       .agg(coalesce(sum(pmod(xxhash64(cols.map(col): _*),
         lit(1000000000L))), lit(0L)))
       .head().getLong(0) % 1000000000L).toInt
@@ -189,8 +190,8 @@ object Dsir {
       validatedModels.add((dir, cfg))
     }
     scoreTail(bucketTf(batch, idCol, textCol, buckets), idCol,
-      spark.read.parquet(s"$dir/tgt"), spark.read.parquet(s"$dir/raw"),
-      spark.read.parquet(s"$dir/tots"), buckets)
+      ParquetOpen(spark, s"$dir/tgt"), ParquetOpen(spark, s"$dir/raw"),
+      ParquetOpen(spark, s"$dir/tots"), buckets)
   }
 
   /** Deterministic Gumbel draw in integer micro units: u is a salted

@@ -262,10 +262,29 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("r4 append-index search: map-side partial aggs, no corpus cartesian") {
-    val plan = physical(SparkEntry.queries("r4_bm25_increment")(spark, dir))
+    import org.apache.spark.sql.functions._
     // the df merge and stats sums must combine map-side before their
-    // exchanges; the only nested-loop is the broadcast 1-row stats stamp
-    assert(plan.contains("partial_sum"), s"df/stats merge not partial:\n$plan")
+    // exchanges. appendToIndex materializes them inside the fold, so the
+    // plans to inspect are its lazy merge core's, Bm25.appendIndexes over
+    // r4's inputs: a stored index of the old split plus the new batch
+    val docs = Tables.documents(spark, dir)
+    val bucket = graft.text.TextAnalysis.splitBucket(col("doc_id"))
+    val idxDir = java.nio.file.Files.createTempDirectory("graft_r4_plan").toString
+    val old = graft.text.Bm25.buildIndex(docs.filter(bucket < 80), "doc_id", "text")
+    graft.text.Bm25.writeIndex(old, idxDir)
+    old.postings.unpersist()
+    val batch = graft.text.Bm25.buildIndex(docs.filter(bucket >= 80), "doc_id", "text")
+    try {
+      val merged = graft.text.Bm25.appendIndexes(batch,
+        graft.text.Bm25.readIndex(spark, idxDir))
+      for ((frame, sum) <- Seq(merged.dfreq -> "partial_sum(df",
+                               merged.stats -> "partial_sum(n_docs")) {
+        val plan = physical(frame)
+        assert(plan.contains(sum), s"df/stats merge not partial:\n$plan")
+      }
+    } finally batch.postings.unpersist()
+    // the only nested-loop is the broadcast 1-row stats stamp
+    val plan = physical(SparkEntry.queries("r4_bm25_increment")(spark, dir))
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
