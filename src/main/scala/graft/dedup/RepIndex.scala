@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.ops.ParquetOpen
+import graft.ops.{Artifact, ParquetOpen}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -289,32 +289,21 @@ object RepIndex {
     // persisted around the emptiness probe so the band lineage (a
     // signature pass + joins at corpus scale) is not evaluated twice
     val b = state.bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (b.isEmpty)
-        b.write.mode("overwrite").parquet(s"$dir/bands")
-      else
-        // clustered by the partition keys: one file per (band, pbucket)
-        // directory instead of one per task×directory (StoreWrite, §6)
-        graft.ops.StoreWrite.clusterByDirs(
-            b.withColumn("pbucket",
-              pmod(col("band_hash"), lit(MinHash.ProbeBuckets.toLong)).cast("int")),
-            col("band_hash"), col("band"), col("pbucket"))
-          .write.mode("overwrite").partitionBy("band", "pbucket")
-          .parquet(s"$dir/bands")
-    } finally b.unpersist()
+    try graft.ops.StoreWrite.partitioned(b, s"$dir/bands", col("band_hash"),
+      "band" -> col("band"),
+      "pbucket" -> pmod(col("band_hash"), lit(MinHash.ProbeBuckets.toLong)).cast("int"))
+    finally b.unpersist()
     state.sharr.write.mode("overwrite").parquet(s"$dir/sharr")
     state.marr.write.mode("overwrite").parquet(s"$dir/marr")
-    graft.ops.ConfigFile.writeAtomic(dir, "config", Seq(MinHash.ProbeBuckets))
+    Artifact.commit(state.labels.sparkSession, dir, Config, Seq(MinHash.ProbeBuckets))
   }
 
   /** The probe-bucket modulus a stored index was written under.
     * Artifacts persisted before the config sidecar existed were all
     * written under the then-constant [[MinHash.ProbeBuckets]] — absence
     * falls back to it rather than failing every pre-existing index. */
-  def storedProbeBuckets(dir: String): Int =
-    if (graft.ops.ConfigFile.exists(dir, "config"))
-      graft.ops.ConfigFile.readInts(dir, "config", 1).head
-    else MinHash.ProbeBuckets
+  private val Config = Artifact.Sidecar("config", 1 to 1,
+    orElse = Some(Seq(MinHash.ProbeBuckets)))
 
   /** Canonical in-memory state (pbucket is a storage detail — dropped so
     * maintenance unions stay schema-stable). Serving probes that want
@@ -358,11 +347,6 @@ object RepIndex {
     * side stays in-plan — so a batch-sized probe cannot blow the driver.
     * (Batch-scale analytical scans with no pruning need can still go
     * through [[read]] + [[search]].) */
-  // (dir, modulus) pairs whose torn-artifact check already passed — the
-  // guard is an index-open validation, not a per-probe cost
-  private val validatedBands =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
   /** Probe band rows above this count stop materializing on the driver:
     * the partitioned path falls back to collecting ONLY the distinct
     * (band, pbucket) pairs — bounded by index GEOMETRY (bandCount ×
@@ -375,33 +359,18 @@ object RepIndex {
                    idCol: String, threshold: Double = 0.7,
                    rowsPerBand: Int = MinHash.RowsPerBand,
                    probeCollectCap: Int = ServingProbeRowCap): DataFrame = {
-    val mod = storedProbeBuckets(dir)
     val bands = ParquetOpen(spark, s"$dir/bands")
     // torn-artifact guard: an in-place rewrite that crashed between the
     // bands write and the config rename leaves bands bucketed under a
     // DIFFERENT modulus than the config claims — the pruned equi-join
-    // would then silently drop cross-bucket collisions. Validate one row
-    // per (band, pbucket) LEAF directory (PartitionSample.firstRowsNested:
-    // ≤ bandCount × modulus independent limit(1) scans — a single
-    // unordered sample could land in a directory a PARTIAL rewrite
-    // already re-bucketed and wave the torn remainder through, the exact
-    // hazard the Bm25/prefix guards validate per-directory; a whole-store
-    // aggregate would pay a first-probe scan proportional to INDEX size).
-    // Paid ONCE per (dir, modulus) in this process, not per probe (a
-    // rewrite under a new modulus changes the config, so it re-validates
-    // under the new key)
-    if (bands.columns.contains("pbucket") && !validatedBands.contains((dir, mod))) {
-      graft.ops.PartitionSample.firstRowsNested(spark, s"$dir/bands",
-          "band", "pbucket")(
-          _.select(pmod(col("band_hash"), lit(mod.toLong)).cast("int")))
-        .foreach { case (band, pb, r) =>
-          require(pb.toInt == r.getInt(0),
-            s"stored bands at $dir: directory band=$band/pbucket=$pb holds " +
-              s"hashes bucketed as ${r.getInt(0)} under the config's " +
-              s"modulus $mod — torn artifact, rewrite it")
-        }
-      validatedBands.add((dir, mod))
-    }
+    // would then silently drop cross-bucket collisions. One row per
+    // (band, pbucket) LEAF directory ([[Artifact.guard]]), paid once per
+    // (dir, config) in this process, not per probe
+    val mod = Artifact.openWith(spark, dir, Config) { cfg =>
+      if (bands.columns.contains("pbucket"))
+        Artifact.guard(spark, s"$dir/bands", Seq("band", "pbucket"), "hashes bucketed as")(
+          pmod(col("band_hash"), lit(cfg.head.toLong)).cast("int"), _(1).toInt)
+    }._1.head
     // STATIC partition pruning: collect the probe's distinct
     // (band, pbucket) pairs — at most bandCount × min(mod, |probe
     // hashes|) ints, a handful for a point probe — and apply them as
@@ -435,7 +404,8 @@ object RepIndex {
         .select(col(idCol), col("band"), col("band_hash"))
       // limit(cap+1) both detects the over-cap case and, under the cap,
       // IS the full row set (≤ cap rows exist, the limit returned all)
-      val head = bandRowsDf.limit(probeCollectCap + 1).collect()
+      val (probeFrame, head) =
+        Artifact.collectOnce(spark, bandRowsDf.limit(probeCollectCap + 1))
       val sharr = ParquetOpen(spark, s"$dir/sharr")
       def pruneTo(pairs: Array[(Int, Int)]): DataFrame = {
         val pred = pairs.map { case (b, p) =>
@@ -444,8 +414,6 @@ object RepIndex {
         bands.filter(pred)
       }
       if (head.length <= probeCollectCap) {
-        val probeFrame = spark.createDataFrame(
-          spark.sparkContext.parallelize(head.toSeq, 1), bandRowsDf.schema)
         val pairs = head
           .map(r => (r.getInt(1),
             (((r.getLong(2) % mod) + mod) % mod).toInt)) // pmod, as written

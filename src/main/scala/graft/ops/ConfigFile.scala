@@ -1,12 +1,13 @@
 package graft.ops
 
-/** Tiny pinned-config sidecars for stored index artifacts (the SRP eval
-  * index, the rep-index band layout): one line of comma-separated ints
-  * whose values the artifact's probes MUST band/bucket under — a probe
-  * run under different constants silently misses collisions, so the
-  * config is the artifact's contract, written atomically (temp +
-  * ATOMIC_MOVE rename: a crash mid-write can never leave a torn config
-  * next to complete parquet) and parse-validated on read. */
+/** The file format of a stored index artifact's sidecar: one line of
+  * comma-separated non-negative ints — the values the artifact's probes
+  * MUST serve under (a modulus, a width, a geometry) and the content
+  * fingerprints that prove its stores are one release. Written
+  * atomically (temp + ATOMIC_MOVE rename: a crash mid-write can never
+  * leave a torn config next to complete parquet) and parse-validated on
+  * read. Program code reaches it only through [[Artifact]], which owns
+  * what the values mean: commit, validate-once open and retire. */
 object ConfigFile {
 
   def writeAtomic(dir: String, name: String, values: Seq[Int]): Unit = {

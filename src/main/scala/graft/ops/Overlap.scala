@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * Spark's scheduler happily runs several jobs at once inside one
   * application — actions are only sequential because driver code calls
   * them sequentially. Query harnesses that materialize several
-  * serving-sized probe frames (collect → re-parallelize, the
-  * collectProbeFrame recipe) pay each collect's full job latency
+  * serving-sized probe frames (collect → re-parallelize,
+  * [[Artifact.collectOnce]]) pay each collect's full job latency
   * back-to-back; submitted from a bounded pool, the latencies overlap
   * and the wall cost is ~the slowest one. Result order is preserved
   * (results are placed by input index), so downstream unions are

@@ -43,4 +43,19 @@ object StoreWrite {
     else rows.repartition(partCols :+
       pmod(xxhash64(saltCol), lit(fpd.toLong)).as("__salt"): _*)
   }
+
+  /** Overwrites `path` with `rows` partitioned by `parts` (directory
+    * column → key expression), clustered by [[clusterByDirs]]. Zero rows
+    * write unpartitioned instead: partitionBy writes no directories for
+    * zero rows and the read-back would fail schema inference, while the
+    * flat layout keeps the schema and readers degrade to an unpruned scan.
+    * A caller whose `rows` lineage is expensive persists it around this
+    * call (the emptiness probe and the write both evaluate it). */
+  def partitioned(rows: DataFrame, path: String, saltCol: Column,
+                  parts: (String, Column)*): Unit =
+    if (rows.isEmpty) rows.write.mode("overwrite").parquet(path)
+    else
+      clusterByDirs(parts.foldLeft(rows) { case (df, (c, key)) => df.withColumn(c, key) },
+          saltCol, parts.map(p => col(p._1)): _*)
+        .write.mode("overwrite").partitionBy(parts.map(_._1): _*).parquet(path)
 }

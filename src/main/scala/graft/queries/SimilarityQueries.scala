@@ -353,7 +353,7 @@ object SimilarityQueries extends QueryPack {
     //      0.42 (hash, x27) → 0.50 (trained, x27b) → 0.64 (residual) —
     //      the coarse centroids carry ~0.33 of the unit norm even on
     //      this isotropic corpus, so the codewords describe a genuinely
-    //      smaller spread (ResidualPqProbe decomposes it; SCALE.md).
+    //      smaller spread (decomposed in SCALE.md).
     "x27c_residual_pq_recall" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val queries = emb.filter(col("vec_id") < 10)

@@ -1,9 +1,10 @@
 package graft.similarity
 
-import graft.ops.ParquetOpen
+import graft.ops.{Artifact, ParquetOpen}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Embedding similarity search: brute-force cosine top-k as the baseline,
   * with a partition-pruned (IVF-style) variant as the scale path.
@@ -324,12 +325,14 @@ object Cosine {
       .write.mode("overwrite").parquet(s"$dir/vecs")
     // the config IS the artifact's commit point (bands/vecs are useless
     // without it): atomic rename, parse-validated on read
-    graft.ops.ConfigFile.writeAtomic(dir, "config", Seq(nPlanes, dim, nTables))
+    Artifact.commit(df.sparkSession, dir, SrpConfig, Seq(nPlanes, dim, nTables))
   }
+
+  private val SrpConfig = Artifact.Sidecar("config", 3 to 3)
 
   /** (nPlanes, dim, nTables) a stored SRP index was banded with. */
   def srpIndexConfig(dir: String): (Int, Int, Int) = {
-    val Seq(p, d, t) = graft.ops.ConfigFile.readInts(dir, "config", 3)
+    val Seq(p, d, t) = Artifact.pinned(dir, SrpConfig)
     (p, d, t)
   }
 
@@ -475,20 +478,21 @@ object Cosine {
     * EMPTY corpus writes the lists unpartitioned (partitionBy writes no
     * directories for zero rows — the RepIndex.write edge) and
     * [[ivfSearchStored]] degrades to the unpruned scan. */
-  /** Content fingerprint of the WRITTEN centroid parquet: order-free sum
-    * of per-row hashes over (cell, dim, micro-centroid), mod 1e9 —
-    * derived from DISK, never from the (possibly expensive or
-    * last-ulp-nondeterministic) training lineage, so it fingerprints
-    * exactly what a later open will read. */
-  private def centroidFp(spark: SparkSession, dir: String,
-                         cellCol: String): Int = {
-    val r = ParquetOpen(spark, s"$dir/centroids")
-      .agg(coalesce(sum(pmod(xxhash64(col(cellCol), col("dim"),
-        round(col("centroid") * 1000000, 0).cast("long")),
-        lit(1000000000L))), lit(0L)))
-      .head().getLong(0)
-    (r % 1000000000L).toInt
-  }
+  /** Content fingerprint of the WRITTEN centroid parquet over (cell,
+    * dim, micro-centroid) — derived from DISK, never from the (possibly
+    * expensive or last-ulp-nondeterministic) training lineage, so it
+    * fingerprints exactly what a later open will read. */
+  private def centroidCheck(dir: String, cellCol: String): Artifact.Check =
+    Artifact.fingerprinted("centroid fp", s"$dir/centroids", col(cellCol),
+      col("dim"), round(col("centroid") * 1000000, 0).cast("long"))
+
+  /** Sidecar-less (externally assembled) IVF layouts serve unchecked. */
+  private val IvfCommit = Artifact.Sidecar("ivf_commit", 2 to 2,
+    what = "stored IVF index", remedy = "torn artifact: re-run writeIvfIndex",
+    orElse = Some(Nil))
+
+  private def ivfChecks(dir: String, cellCol: String): Seq[Artifact.Check] =
+    Seq(Artifact.counted("lists", s"$dir/lists"), centroidCheck(dir, cellCol))
 
   def writeIvfIndex(vectors: DataFrame, cells: DataFrame,
                     centroids: DataFrame, idCol: String, vecCol: String,
@@ -511,23 +515,10 @@ object Cosine {
     val lists = vectors.select(col(idCol), col(vecCol))
       .join(cells.select(col(idCol), col(cellCol)), Seq(idCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nLists =
-      try {
-        if (lists.isEmpty)
-          lists.write.mode("overwrite").parquet(s"$dir/lists")
-        else
-          // clustered by the partition key: one file per pcell directory
-          // instead of one per task×directory (StoreWrite, guide §6)
-          graft.ops.StoreWrite.clusterByDirs(
-              lists.withColumn("pcell", col(cellCol).cast("string")),
-              col(idCol), col("pcell"))
-            .write.mode("overwrite").partitionBy("pcell")
-            .parquet(s"$dir/lists")
-        lists.count()
-      } finally lists.unpersist()
-    graft.ops.ConfigFile.writeAtomic(dir, "ivf_commit",
-      Seq((nLists % 1000000000L).toInt,
-        centroidFp(vectors.sparkSession, dir, cellCol)))
+    try graft.ops.StoreWrite.partitioned(lists, s"$dir/lists", col(idCol),
+      "pcell" -> col(cellCol).cast("string"))
+    finally lists.unpersist()
+    Artifact.commit(vectors.sparkSession, dir, IvfCommit, Nil, ivfChecks(dir, cellCol))
   }
 
   /** Serving search over the PERSISTED IVF layout: probe selection runs
@@ -544,47 +535,22 @@ object Cosine {
     * selected can never contribute (the probe join is inner on cell).
     * Point/serving probes only; batch-scale analytical probes go through
     * [[ivfSearchIndex]], whose plan never materializes the probe set. */
-  // (dir, sidecar-contents) pairs whose check already passed — an
-  // index-open validation, not a per-probe cost. Keyed by the sidecar
-  // VALUES, not the dir alone: a long-lived serving process that
-  // re-publishes into the same directory gets a fresh sidecar and
-  // therefore a fresh validation (the RepIndex (dir, modulus) pattern)
-  private val validatedIvf =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[Int])]()
-
   def ivfSearchStored(spark: SparkSession, queries: DataFrame, dir: String,
                       idCol: String, vecCol: String, cellCol: String,
                       k: Int, nProbe: Int): DataFrame = {
     val cents = ParquetOpen(spark, s"$dir/centroids")
     // torn-artifact guard: the commit sidecar fingerprints centroid
-    // CONTENT + lists count, both re-derived from disk here; a crashed
-    // in-place re-train mismatches whichever side it changed (see
-    // writeIvfIndex for the case analysis). Sidecar-less layouts
-    // (externally assembled) skip the check and serve as-is.
-    if (graft.ops.ConfigFile.exists(dir, "ivf_commit")) {
-      val want = graft.ops.ConfigFile.readInts(dir, "ivf_commit", 2)
-      if (!validatedIvf.contains((dir, want))) {
-        val nl = (ParquetOpen(spark, s"$dir/lists").count() % 1000000000L).toInt
-        val fp = centroidFp(spark, dir, cellCol)
-        require(nl == want.head && fp == want(1),
-          s"stored IVF index at $dir does not match its commit sidecar " +
-            s"(lists $nl vs ${want.head}, centroid fp $fp vs ${want(1)}) — " +
-            "torn artifact: re-run writeIvfIndex")
-        validatedIvf.add((dir, want))
-      }
-    }
-    val probesDf = ivfProbes(queries, cents, idCol, vecCol, cellCol, nProbe)
-      .withColumn("pcell_lit", col(cellCol).cast("string"))
-    val prows = probesDf.collect()
-    val probes = spark.createDataFrame(
-        spark.sparkContext.parallelize(prows.toSeq, 1), probesDf.schema)
-      .drop("pcell_lit")
-    val cellLits = prows.map(_.getString(probesDf.schema.length - 1))
-      .distinct.toSeq
+    // CONTENT + lists count, both re-derived from disk at the first open
+    // of these sidecar values; a crashed in-place re-train mismatches
+    // whichever side it changed (see writeIvfIndex for the case analysis)
+    Artifact.open(spark, dir, IvfCommit, _ => ivfChecks(dir, cellCol))
+    val (probes, cellLits) = collectCells(spark,
+      ivfProbes(queries, cents, idCol, vecCol, cellCol, nProbe), cellCol)
     // pcell is WRITTEN as a string directory key; pin it back to string
-    // on read (shared [[pinnedStringPartitionRead]] — the inference
-    // re-typing lesson, one body for every string-keyed layout)
-    val l0 = pinnedStringPartitionRead(spark, s"$dir/lists", "pcell")
+    // on read — inference would re-type "007" as int 7, after which
+    // string-literal filters ride whichever way coercion casts and
+    // distinct "007"/"7" directories merge (the PQ code tree too)
+    val l0 = ParquetOpen.pinned(spark, s"$dir/lists", "pcell", StringType)
     val partitioned = l0.columns.contains("pcell")
     val cands0 = (
       if (cellLits.isEmpty) l0.limit(0)
@@ -1062,7 +1028,7 @@ object Cosine {
     * compressed tier, dim bytes/vector), the raw vectors partitioned by
     * `pbucket = pmod(id, PrefixBuckets)` so the exact rerank prunes to
     * the shortlist's buckets (the writePrefixIndex stage-2 treatment),
-    * and a config sidecar written LAST pinning (dim, buckets, statsFp)
+    * and a config sidecar written LAST pinning (dim, buckets, stats fp)
     * — the fingerprint derived from the stats ON DISK, and the codes
     * quantized under those same disk stats, so codes and stats can
     * never commit from different releases (codes under foreign stats
@@ -1077,23 +1043,15 @@ object Cosine {
     sq8PackedCodes(corpus, statsDisk, idCol, vecCol, dim)
       .write.mode("overwrite").parquet(s"$dir/codes")
     writePrefixRows(corpus.select(col(idCol), col(vecCol)), idCol, dir)
-    graft.ops.ConfigFile.writeAtomic(dir, "sq8_config",
-      Seq(dim, PrefixBuckets, sq8StatsFp(spark, dir)))
+    Artifact.commit(spark, dir, Sq8Config, Seq(dim, PrefixBuckets), sq8Checks(dir))
   }
 
-  /** Content fingerprint of the written stats parquet (order-free
-    * per-row json hash, mod 1e9) — derived from DISK, the centroidFp
-    * recipe. */
-  private def sq8StatsFp(spark: SparkSession, dir: String): Int =
-    (ParquetOpen(spark, s"$dir/stats")
-      .agg(coalesce(sum(pmod(xxhash64(to_json(struct(col("*")))),
-        lit(1000000000L))), lit(0L)))
-      .head().getLong(0) % 1000000000L).toInt
+  private val Sq8Config = Artifact.Sidecar("sq8_config", 3 to 3, checksAt = 2,
+    what = "stored SQ8 index", remedy = "torn artifact: re-run writeSq8Index")
 
-  // (dir, sidecar-contents) pairs whose check already passed — re-keyed
-  // on every re-train (the validatedIvf pattern)
-  private val validatedSq8 =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[Int])]()
+  /** Content fingerprint of the written stats (per-row json hash). */
+  private def sq8Checks(dir: String): Seq[Artifact.Check] = Seq(
+    Artifact.fingerprinted("stats fp", s"$dir/stats", to_json(struct(col("*")))))
 
   /** [[sq8TopK]] over the persisted layout — value-identical (shared
     * [[sq8Rerank]] tail; sq8Stats is a min/max, so stored stats equal
@@ -1110,15 +1068,7 @@ object Cosine {
   def sq8TopKStored(spark: SparkSession, queries: DataFrame, dir: String,
                     idCol: String, vecCol: String, k: Int,
                     kShort: Int = 20): DataFrame = {
-    val cfg = graft.ops.ConfigFile.readInts(dir, "sq8_config", 3)
-    val (dim, buckets) = (cfg.head, cfg(1))
-    if (!validatedSq8.contains((dir, cfg))) {
-      val fp = sq8StatsFp(spark, dir)
-      require(fp == cfg(2),
-        s"stored SQ8 index at $dir does not match its commit sidecar " +
-          s"(stats fp $fp vs ${cfg(2)}) — torn artifact: re-run writeSq8Index")
-      validatedSq8.add((dir, cfg))
-    }
+    val Seq(dim, buckets, _) = Artifact.open(spark, dir, Sq8Config, _ => sq8Checks(dir))
     val stats = ParquetOpen(spark, s"$dir/stats")
     val codes = ParquetOpen(spark, s"$dir/codes")
     val q = queries.select(col(idCol).as("query_id"),
@@ -1127,28 +1077,10 @@ object Cosine {
         dim, kShort)
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("sq_sim"), col("qv"))
-    val shortRows = shortDf.collect()
-    val short = spark.createDataFrame(
-      spark.sparkContext.parallelize(shortRows.toSeq, 1), shortDf.schema)
+    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
     val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val idLongs = ids.map(_.asInstanceOf[Number].longValue)
-    val stored = ParquetOpen(spark, s"$dir/vectors")
-    val partitioned = stored.columns.contains("pbucket")
-    val raw0 =
-      if (partitioned) stored.select(col("pbucket"),
-        col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
-      else stored.select(col(idCol).as("neighbor_id"),
-        toDouble(col(vecCol)).as("cv"))
-    val raw =
-      if (ids.isEmpty) raw0.limit(0).drop("pbucket")
-      else if (partitioned) raw0.filter(
-        col("pbucket").isin(
-          idLongs.map(i => (((i % buckets) + buckets) % buckets).toInt)
-            .distinct: _*)
-          && col("neighbor_id").isin(ids: _*))
-        .drop("pbucket")
-      else raw0.filter(col("neighbor_id").isin(ids: _*))
-    sq8Rerank(short, raw, k)
+    sq8Rerank(short,
+      prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets).drop("pbucket"), k)
   }
 
   // ---- Binary quantization (1 bit/dim) ---------------------------------
@@ -1231,33 +1163,20 @@ object Cosine {
     * silently. Empty corpus writes vectors unpartitioned. */
   def writeBqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                    dim: Int, dir: String): Unit = {
-    val spark = corpus.sparkSession
-    val nCodes = {
-      val codes = corpus.select(col(idCol),
-          bqCodes(toDouble(col(vecCol)), dim).as("bwords"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        codes.write.mode("overwrite").parquet(s"$dir/codes")
-        codes.count()
-      } finally codes.unpersist()
-    }
+    corpus.select(col(idCol), bqCodes(toDouble(col(vecCol)), dim).as("bwords"))
+      .write.mode("overwrite").parquet(s"$dir/codes")
     writePrefixRows(corpus.select(col(idCol), col(vecCol)), idCol, dir)
-    graft.ops.ConfigFile.writeAtomic(dir, "bq_config",
-      Seq(dim, PrefixBuckets, (nCodes % 1000000000L).toInt,
-        bqCodesFp(spark, dir)))
+    Artifact.commit(corpus.sparkSession, dir, BqConfig, Seq(dim, PrefixBuckets),
+      bqChecks(dir))
   }
 
-  /** Content fingerprint of the written word store (order-free per-row
-    * json hash, mod 1e9) — derived from DISK, the sq8StatsFp recipe. */
-  private def bqCodesFp(spark: SparkSession, dir: String): Int =
-    (ParquetOpen(spark, s"$dir/codes")
-      .agg(coalesce(sum(pmod(xxhash64(to_json(struct(col("*")))),
-        lit(1000000000L))), lit(0L)))
-      .head().getLong(0) % 1000000000L).toInt
+  private val BqConfig = Artifact.Sidecar("bq_config", 4 to 4, checksAt = 2,
+    what = "stored BQ index", remedy = "torn artifact: re-run writeBqIndex")
 
-  // (dir, sidecar-contents) pairs whose check already passed
-  private val validatedBq =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[Int])]()
+  /** Count and per-row json-hash fingerprint of the written word store. */
+  private def bqChecks(dir: String): Seq[Artifact.Check] = Seq(
+    Artifact.counted("codes", s"$dir/codes"),
+    Artifact.fingerprinted("fp", s"$dir/codes", to_json(struct(col("*")))))
 
   /** [[bqTopK]] over the persisted layout — value-identical (shared
     * [[bqShortlist]]/[[sq8Rerank]] bodies; sign words are pure, so the
@@ -1271,25 +1190,13 @@ object Cosine {
   def bqTopKStored(spark: SparkSession, queries: DataFrame, dir: String,
                    idCol: String, vecCol: String, k: Int,
                    kShort: Int = 20): DataFrame = {
-    val cfg = graft.ops.ConfigFile.readInts(dir, "bq_config", 4)
-    val (dim, buckets) = (cfg.head, cfg(1))
-    if (!validatedBq.contains((dir, cfg))) {
-      val nc = (ParquetOpen(spark, s"$dir/codes").count() % 1000000000L).toInt
-      val fp = bqCodesFp(spark, dir)
-      require(nc == cfg(2) && fp == cfg(3),
-        s"stored BQ index at $dir does not match its commit sidecar " +
-          s"(codes $nc vs ${cfg(2)}, fp $fp vs ${cfg(3)}) — torn " +
-          "artifact: re-run writeBqIndex")
-      validatedBq.add((dir, cfg))
-    }
+    val Seq(dim, buckets, _, _) = Artifact.open(spark, dir, BqConfig, _ => bqChecks(dir))
     val codes = ParquetOpen(spark, s"$dir/codes")
       .select(col(idCol).as("neighbor_id"), col("bwords"))
     val shortDf = bqShortlist(queries, codes, idCol, vecCol, dim, kShort)
-    val shortRows = shortDf.collect()
-    val short = spark.createDataFrame(
-      spark.sparkContext.parallelize(shortRows.toSeq, 1), shortDf.schema)
+    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
     val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val (raw, _) = prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets)
+    val raw = prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets)
     bqRerank(short, raw.drop("pbucket"), k)
   }
 
@@ -1391,55 +1298,51 @@ object Cosine {
     * artifact rides ([[writePrefixIndex]], [[writeRotatedPrefixIndex]],
     * [[writeSq8Index]]'s and [[writePqIndex]]'s raw stores, the
     * streamed publishes): whatever row shape the caller selects,
-    * partitioned by `pbucket = pmod(id, PrefixBuckets)`, with the
-    * zero-row flat edge (partitionBy writes no directories for zero
-    * rows and the read-back would fail schema inference). */
+    * partitioned by `pbucket = pmod(id, PrefixBuckets)` (zero rows
+    * write flat, [[graft.ops.StoreWrite.partitioned]]). */
   private[graft] def writePrefixRows(rows: DataFrame, idCol: String,
-                                     dir: String): Unit = {
-    if (rows.isEmpty)
-      rows.write.mode("overwrite").parquet(s"$dir/vectors")
-    else
-      // clustered by the partition key: one file per pbucket directory
-      // instead of one per task×directory (StoreWrite, guide §6)
-      graft.ops.StoreWrite.clusterByDirs(
-          rows.withColumn("pbucket",
-            pmod(col(idCol), lit(PrefixBuckets.toLong)).cast("int")),
-          col(idCol), col("pbucket"))
-        .write.mode("overwrite").partitionBy("pbucket")
-        .parquet(s"$dir/vectors")
-  }
+                                     dir: String): Unit =
+    graft.ops.StoreWrite.partitioned(rows, s"$dir/vectors", col(idCol),
+      "pbucket" -> pmod(col(idCol), lit(PrefixBuckets.toLong)).cast("int"))
 
   def writePrefixIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                       p: Int, dir: String): Unit = {
+                       p: Int, dir: String): Unit =
+    commitPrefix(corpus.sparkSession, p, idCol, dir)(corpus.select(col(idCol),
+      slice(col(vecCol), 1, p).as("prefix"), col(vecCol).as("full")))
+
+  /** The unrotated prefix layout's write order, shared by the writer and
+    * the streamed publish: retire the rotated family, (id, prefix, full)
+    * `rows`, then the (p, buckets) sidecar. */
+  private[graft] def commitPrefix(spark: SparkSession, p: Int, idCol: String,
+                                  dir: String)(rows: DataFrame): Unit = {
     // a prefix dir holds AT MOST one sidecar family: rebuilding a
-    // previously-ROTATED dir with this unrotated writer must first
-    // retire the rotated sidecar + rotation store, or prefixTopKStored
-    // (which prefers prefix_rot_config) would rotate probes against the
-    // fresh RAW prefixes — silently garbage psim. Deleting the sidecar
-    // FIRST keeps every crash window loud: no sidecar at all reads as a
+    // previously-ROTATED dir unrotated must first retire the rotated
+    // sidecar + rotation store, or prefixTopKStored (which prefers
+    // prefix_rot_config) would rotate probes against the fresh RAW
+    // prefixes — silently garbage psim. Deleting the sidecar FIRST keeps
+    // every crash window loud: no sidecar at all reads as a
     // missing-config failure, never a mixed-family artifact.
-    dropPrefixFamily(corpus.sparkSession, dir, "prefix_rot_config",
-      dropRotation = true)
-    writePrefixRows(corpus.select(col(idCol),
-      slice(col(vecCol), 1, p).as("prefix"), col(vecCol).as("full")),
-      idCol, dir)
-    graft.ops.ConfigFile.writeAtomic(dir, "prefix_config",
-      Seq(p, PrefixBuckets))
+    Artifact.retire(dir, RotatedPrefixConfig)
+    val rotPath = new org.apache.hadoop.fs.Path(s"$dir/rotation")
+    val fs = rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(rotPath)) fs.delete(rotPath, true)
+    writePrefixRows(rows, idCol, dir)
+    Artifact.commit(spark, dir, PrefixConfig, Seq(p, PrefixBuckets))
   }
 
-  /** Retire the OTHER sidecar family before a prefix-layout rewrite —
-    * shared by both writers and the streamed publish. */
-  private[graft] def dropPrefixFamily(spark: SparkSession, dir: String,
-                                      sidecar: String,
-                                      dropRotation: Boolean): Unit = {
-    val cfgPath = java.nio.file.Paths.get(dir, sidecar)
-    java.nio.file.Files.deleteIfExists(cfgPath)
-    if (dropRotation) {
-      val rot = new org.apache.hadoop.fs.Path(s"$dir/rotation")
-      val fs = rot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rot)) fs.delete(rot, true)
-    }
-  }
+  /** (p, buckets) of an unrotated prefix layout. */
+  private val PrefixConfig = Artifact.Sidecar("prefix_config", 2 to 2)
+
+  /** (p, buckets, rotation fp) of a rotated prefix layout. */
+  private val RotatedPrefixConfig = Artifact.Sidecar("prefix_rot_config",
+    3 to 3, checksAt = 2, what = "stored rotation",
+    remedy = "torn artifact: re-run writeRotatedPrefixIndex")
+
+  /** Content fingerprint of the written rotation parquet (order-free,
+    * nano-scaled values — rotation entries live in [−1, 1]). */
+  private def rotationChecks(dir: String): Seq[Artifact.Check] = Seq(
+    Artifact.fingerprinted("rotation fp", s"$dir/rotation", col("i"), col("j"),
+      round(col("x") * 1000000000L, 0).cast("long")))
 
   /** Train the prefix ROTATION for non-MRL embeddings — the engine's
     * answer to x24's published 0.38-recall finding: synthetic (or any
@@ -1701,43 +1604,46 @@ object Cosine {
   private def writeRotatedPrefixIndexWith(corpus: DataFrame, idCol: String,
                                           vecCol: String,
                                           rotation: Seq[Seq[Double]], p: Int,
-                                          dir: String): Seq[Seq[Double]] = {
-    val spark = corpus.sparkSession
+                                          dir: String): Seq[Seq[Double]] =
+    commitRotatedPrefix(corpus.sparkSession, rotation, p, idCol, dir) { rot =>
+      val pref =
+        if (rot.isEmpty) slice(toDouble(col(vecCol)), 1, p)
+        else rotatedPrefix(toDouble(col(vecCol)), rot)
+      corpus.select(col(idCol), pref.as("prefix"), col(vecCol).as("full"))
+    }
+
+  /** The rotated prefix layout's write order, shared by the trainer and
+    * the streamed publish (which carries a PINNED rotation forward
+    * instead of retraining): retire the unrotated family, the rotation
+    * as (i, j, x) rows FIRST, `rows` built under the rotation AS WRITTEN
+    * second, the sidecar last — a crash between rows and sidecar leaves
+    * the NEW rotation under the OLD sidecar (fingerprint mismatch, loud),
+    * never new-basis rows under an old rotation that still matches its
+    * own stale sidecar. Returns the rotation as written. */
+  private[graft] def commitRotatedPrefix(spark: SparkSession,
+                                         rotation: Seq[Seq[Double]], p: Int,
+                                         idCol: String, dir: String)(
+      rows: Seq[Seq[Double]] => DataFrame): Seq[Seq[Double]] = {
+    import spark.implicits._
     // argument validation BEFORE any mutation: an oversized rotation
     // must be rejected while the previous store is still servable
     requireRotationBudget(rotation)
-    // retire the UNROTATED sidecar first (see writePrefixIndex — the
-    // same mixed-family hazard in the other direction)
-    dropPrefixFamily(spark, dir, "prefix_config", dropRotation = false)
-    writeRotationStore(spark, rotation, dir)
+    // the same mixed-family hazard in the other direction (commitPrefix)
+    Artifact.retire(dir, PrefixConfig)
+    rotation.zipWithIndex
+      .flatMap { case (row, i) => row.zipWithIndex.map { case (x, j) => (i, j, x) } }
+      .toDF("i", "j", "x")
+      .write.mode("overwrite").parquet(s"$dir/rotation")
     val rot = readRotation(spark, dir)
-    val pref =
-      if (rot.isEmpty) slice(toDouble(col(vecCol)), 1, p)
-      else rotatedPrefix(toDouble(col(vecCol)), rot)
-    writePrefixRows(corpus.select(col(idCol), pref.as("prefix"),
-      col(vecCol).as("full")), idCol, dir)
+    writePrefixRows(rows(rot), idCol, dir)
     // the sidecar pins the ACTUAL written width: leadingColumns caps the
     // rotation at dim rows, so a p > dim request would otherwise record
     // a width the width-guard must reject on a perfectly healthy
     // artifact (empty corpus keeps the requested p — zero rows, nothing
     // to contradict it)
-    graft.ops.ConfigFile.writeAtomic(dir, "prefix_rot_config",
-      Seq(if (rot.isEmpty) p else rot.size, PrefixBuckets,
-        rotationFp(spark, dir)))
+    Artifact.commit(spark, dir, RotatedPrefixConfig,
+      Seq(if (rot.isEmpty) p else rot.size, PrefixBuckets), rotationChecks(dir))
     rot
-  }
-
-  /** Persist a rotation as (i, j, x) rows — shared by the trainer and by
-    * the streamed store's publish step (which carries a PINNED rotation
-    * forward instead of retraining). */
-  private[graft] def writeRotationStore(spark: SparkSession,
-                                        rotation: Seq[Seq[Double]],
-                                        dir: String): Unit = {
-    import spark.implicits._
-    rotation.zipWithIndex
-      .flatMap { case (row, i) => row.zipWithIndex.map { case (x, j) => (i, j, x) } }
-      .toDF("i", "j", "x")
-      .write.mode("overwrite").parquet(s"$dir/rotation")
   }
 
   /** The stored rotation rows, ordered (i, j) — driver-sized (p×dim). */
@@ -1746,15 +1652,6 @@ object Cosine {
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toSeq)
-
-  /** Content fingerprint of the written rotation parquet (order-free,
-    * nano-scaled values — rotation entries live in [−1, 1]). */
-  private[graft] def rotationFp(spark: SparkSession, dir: String): Int =
-    (ParquetOpen(spark, s"$dir/rotation")
-      .agg(coalesce(sum(pmod(xxhash64(col("i"), col("j"),
-        round(col("x") * 1000000000L, 0).cast("long")),
-        lit(1000000000L))), lit(0L)))
-      .head().getLong(0) % 1000000000L).toInt
 
   /** [[prefixTopK]] over the persisted layout — value-identical, with
     * the stage-1 column-pruned scan and a stage-2 re-rank pruned by
@@ -1770,85 +1667,48 @@ object Cosine {
     * caller: a probe sliced at a different p would silently rank stage 1
     * under a different geometry. Point/serving probes only; batch
     * analytical scoring should use [[prefixTopK]] over the corpus. */
-  // (dir, p) pairs whose torn-artifact check already passed — an
-  // index-open validation, not a per-probe cost (the RepIndex /
-  // Bm25.searchStored convention)
-  private val validatedPrefix =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-  // (dir, sidecar) → validated rotation rows: the fingerprint check AND
-  // the p×dim driver collect both amortize to once per (dir, sidecar) —
-  // the rotation cannot change without the sidecar (and so the key)
-  // changing, and re-collecting it per probe would tax the serving hot
-  // path with a Spark job for an immutable value
-  private val validatedRotation =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int]), Seq[Seq[Double]]]()
-
   def prefixTopKStored(spark: SparkSession, queries: DataFrame, dir: String,
                        idCol: String, vecCol: String, k: Int,
                        kShort: Int = 20): DataFrame = {
     // a ROTATED layout carries its own sidecar (p, buckets, rotation fp)
     // + a rotation store the probe side must apply in stage 1; the
     // unrotated layout keeps the original 2-int sidecar
-    val rotated = graft.ops.ConfigFile.exists(dir, "prefix_rot_config")
-    val cfg =
-      if (rotated) graft.ops.ConfigFile.readInts(dir, "prefix_rot_config", 3)
-      else graft.ops.ConfigFile.readInts(dir, "prefix_config", 2)
-    val (p, buckets) = (cfg(0), cfg(1))
-    val rotation =
-      if (!rotated) None
-      else {
-        val r = validatedRotation.computeIfAbsent((dir, cfg), { _ =>
-          val fp = rotationFp(spark, dir)
-          require(fp == cfg(2),
-            s"stored rotation at $dir does not match its sidecar " +
-              s"(fp $fp vs ${cfg(2)}) — torn artifact: re-run " +
-              "writeRotatedPrefixIndex")
-          readRotation(spark, dir)
-        })
-        if (r.isEmpty) None else Some(r)
-      }
+    val rotated = Artifact.exists(dir, RotatedPrefixConfig)
     val stored = ParquetOpen(spark, s"$dir/vectors")
     val partitioned = stored.columns.contains("pbucket")
-    // torn-artifact guard: a crashed in-place rebuild under a different p
-    // leaves the stored prefix column at a width the config no longer
-    // describes — zip_with would then null-pad every stage-1 dot product
-    // and the shortlist silently degenerates. Validate one row per
-    // pbucket DIRECTORY (PartitionSample: ≤ bucket-count independent
-    // limit(1) scans — a single unordered sample could land in an
-    // already-rewritten directory and wave the torn remainder through,
-    // a whole-store aggregate would scan every row first-probe); the
-    // flat layout is the zero-row empty edge, where one limit(1) checks
-    // nothing and serves nothing. Paid once per (dir, p) per process.
-    if (!validatedPrefix.contains((dir, p))) {
-      val widths: Seq[(String, Int)] =
-        if (partitioned)
-          graft.ops.PartitionSample.firstRows(spark, s"$dir/vectors", "pbucket")(
-            _.select(size(col("prefix")))).map { case (v, r) => (v, r.getInt(0)) }
-        else
-          stored.select(size(col("prefix"))).limit(1).collect()
-            .map(r => ("flat", r.getInt(0))).toSeq
-      widths.foreach { case (pd, w) => require(w == p,
-        s"stored prefix at $dir (partition $pd) is $w dims but the " +
-          s"config claims $p — torn artifact") }
-      validatedPrefix.add((dir, p))
+    // once per (dir, sidecar): the rotation fingerprint, then the width
+    // guard — a crashed in-place rebuild under a different p leaves the
+    // stored prefix column at a width the config no longer describes, so
+    // zip_with would null-pad every stage-1 dot product and the
+    // shortlist silently degenerates; one row per pbucket directory
+    // ([[Artifact.guard]]; the flat layout is the zero-row empty edge,
+    // where one limit(1) checks nothing) — and the p×dim rotation
+    // collect, an immutable value no probe should pay a Spark job for
+    val (cfg, rotation) = Artifact.openWith(spark, dir,
+        if (rotated) RotatedPrefixConfig else PrefixConfig,
+        _ => if (rotated) rotationChecks(dir) else Nil) { cfg =>
+      Artifact.guard(spark, s"$dir/vectors",
+          if (partitioned) Seq("pbucket") else Nil, "prefixes of width")(
+        size(col("prefix")), _ => cfg.head)
+      if (rotated) Some(readRotation(spark, dir)).filter(_.nonEmpty) else None
     }
+    val (p, buckets) = (cfg(0), cfg(1))
     val cPref = stored.select(col(idCol).as("neighbor_id"),
       toDouble(col("prefix")).as("cp"))
     val shortDf = prefixShortlist(queries, cPref, idCol, vecCol, p, kShort,
       rotation)
-    val shortRows = shortDf.collect()
-    val short = spark.createDataFrame(
-      spark.sparkContext.parallelize(shortRows.toSeq, 1), shortDf.schema)
+    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
     val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val (full, _) = prunedRawVectors(spark, dir, idCol, "full", ids, buckets)
+    val full = prunedRawVectors(spark, dir, idCol, "full", ids, buckets)
     prefixRerank(short, queries, full, idCol, vecCol, k,
       if (partitioned) Some(buckets) else None)
   }
 
   /** The ONE pruned stage-2 raw-vector frame every stored two-stage
-    * search rides ([[prefixTopKStored]], [[pqTopKStored]] — the
-    * sq8Rerank/scoreTail convention applied to the rerank PRUNING, so
-    * the two stored forms cannot drift): reads `$dir/vectors`, projects
+    * search rides ([[prefixTopKStored]], [[sq8TopKStored]],
+    * [[bqTopKStored]], [[pqTopKStored]] — the sq8Rerank/scoreTail
+    * convention applied to the rerank PRUNING, so the stored forms
+    * cannot drift): reads `$dir/vectors`, projects
     * (pbucket?, neighbor_id, cv) from `valueCol`, and prunes to the
     * shortlist `ids` by LITERAL pbucket filters (partition pruning at
     * listing time) + a pushed In(id) (parquet row-group stats pruning).
@@ -1861,7 +1721,7 @@ object Cosine {
     * (empty-corpus) layout skips the partition filter. */
   private def prunedRawVectors(spark: SparkSession, dir: String,
                                idCol: String, valueCol: String,
-                               ids: Seq[Any], buckets: Int): (DataFrame, Boolean) = {
+                               ids: Seq[Any], buckets: Int): DataFrame = {
     val stored = ParquetOpen(spark, s"$dir/vectors")
     val partitioned = stored.columns.contains("pbucket")
     val base =
@@ -1869,16 +1729,14 @@ object Cosine {
         col(idCol).as("neighbor_id"), toDouble(col(valueCol)).as("cv"))
       else stored.select(col(idCol).as("neighbor_id"),
         toDouble(col(valueCol)).as("cv"))
-    val pruned =
-      if (ids.isEmpty) base.limit(0)
-      else if (partitioned) base.filter(
-        col("pbucket").isin(   // pmod, matching the written layout
-          ids.map(i => (((i.asInstanceOf[Number].longValue % buckets)
-              + buckets) % buckets).toInt)
-            .distinct: _*)
-          && col("neighbor_id").isin(ids: _*))
-      else base.filter(col("neighbor_id").isin(ids: _*))
-    (pruned, partitioned)
+    if (ids.isEmpty) base.limit(0)
+    else if (partitioned) base.filter(
+      col("pbucket").isin(   // pmod, matching the written layout
+        ids.map(i => (((i.asInstanceOf[Number].longValue % buckets)
+            + buckets) % buckets).toInt)
+          .distinct: _*)
+        && col("neighbor_id").isin(ids: _*))
+    else base.filter(col("neighbor_id").isin(ids: _*))
   }
 
   /** Product-quantization CODES (Jégou et al. 2011, "Product Quantization
@@ -2348,7 +2206,7 @@ object Cosine {
     * INFER which column is the key, and a caller's column literally
     * named 'dim'/'centroid' must not break it. A re-train WITHOUT
     * centroids retires a previous train's store first (the
-    * dropPrefixFamily treatment): the sidecar's presence flag goes to
+    * prefix-family retirement): the sidecar's presence flag goes to
     * 0, openPqIndex skips the centroid check, and a stale store left
     * behind would otherwise serve the OLD train's coarse geometry to
     * multiprobe silently. */
@@ -2379,88 +2237,57 @@ object Cosine {
     val codes = codesOf
       .join(cells.select(col(idCol), col(cellCol)), Seq(idCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCodes =
-      try {
-        if (codes.isEmpty)
-          codes.write.mode("overwrite").parquet(s"$dir/codes")
-        else
-          // clustered by the partition key: one file per pcell directory
-          // instead of one per task×directory (StoreWrite, guide §6)
-          graft.ops.StoreWrite.clusterByDirs(
-              codes.withColumn("pcell", col(cellCol).cast("string")),
-              col(idCol), col("pcell"))
-            .write.mode("overwrite").partitionBy("pcell")
-            .parquet(s"$dir/codes")
-        codes.count()
-      } finally codes.unpersist()
+    try graft.ops.StoreWrite.partitioned(codes, s"$dir/codes", col(idCol),
+      "pcell" -> col(cellCol).cast("string"))
+    finally codes.unpersist()
     writePrefixRows(corpus.select(col(idCol), col(vecCol)), idCol, dir)
-    // the presence FLAG is its own slot: a fingerprint of 0 is a legal
-    // value (empty centroid frame, 1-in-1e9 hash sum), so overloading 0
-    // as "no centroids" would silently skip the torn-centroid check
-    // slot 8 (residual) grew the format in place: readers accept the
-    // 8-field sidecars earlier writers left behind as residual=0
-    graft.ops.ConfigFile.writeAtomic(dir, "pq_commit",
+    Artifact.commit(spark, dir, PqCommit,
       Seq(nSub, subDim, nPlanes, PrefixBuckets,
-        (nCodes % 1000000000L).toInt, pqCodebookFp(spark, dir),
-        if (hasCentroids) centroidFp(spark, dir, "cell") else 0,
-        if (hasCentroids) 1 else 0,
-        if (residual) 1 else 0))
+        if (hasCentroids) 1 else 0, if (residual) 1 else 0),
+      pqChecks(dir, hasCentroids))
   }
 
-  /** Content fingerprint of the WRITTEN codebook parquet (order-free sum
-    * of per-row hashes over (cell, dim, micro-centroid), mod 1e9) —
-    * derived from DISK, the centroidFp recipe. */
-  private def pqCodebookFp(spark: SparkSession, dir: String): Int =
-    (ParquetOpen(spark, s"$dir/codebook")
-      .agg(coalesce(sum(pmod(xxhash64(col("cell"), col("dim"),
-        round(col("centroid") * 1000000, 0).cast("long")),
-        lit(1000000000L))), lit(0L)))
-      .head().getLong(0) % 1000000000L).toInt
+  /** (nSub, subDim, nPlanes, idBuckets, codes count, codebook fp,
+    * centroid fp, centroid flag, residual flag). The presence FLAG is its
+    * own slot: a fingerprint of 0 is a legal value (empty centroid frame,
+    * 1-in-1e9 hash sum), so overloading 0 as "no centroids" would
+    * silently skip the torn-centroid check. Slot 8 (residual) grew the
+    * format in place: 8-field sidecars read as residual=0. */
+  private val PqCommit = Artifact.Sidecar("pq_commit", 8 to 9, checksAt = 4,
+    what = "stored PQ index", remedy = "torn artifact: re-run writePqIndex")
 
-  // (dir, sidecar-contents) pairs whose check already passed — re-keyed
-  // on every re-train (the validatedIvf pattern)
-  private val validatedPq =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[Int])]()
+  /** Codes count and codebook fingerprint, then the centroid store's
+    * fingerprint under its WRITE-NORMALIZED 'cell' column — never
+    * inferred from "whichever column is neither dim nor centroid" (a
+    * store with extra columns would misvalidate) — or 0 without
+    * centroids. */
+  private def pqChecks(dir: String, hasCentroids: Boolean): Seq[Artifact.Check] = Seq(
+    Artifact.counted("codes", s"$dir/codes"),
+    Artifact.fingerprinted("codebook fp", s"$dir/codebook", col("cell"),
+      col("dim"), round(col("centroid") * 1000000, 0).cast("long")),
+    if (!hasCentroids) Artifact.Check("centroid fp", _ => 0)
+    else Artifact.Check("centroid fp", { s =>
+      val ccols = ParquetOpen(s, s"$dir/centroids").columns
+      // pre-normalization stores (written before the centroid column
+      // was pinned to 'cell') fail here by DESIGN — accepting a
+      // caller-named column would reintroduce the inference hazard
+      // the normalization closed; the one-time migration is a re-run
+      require(ccols.contains("cell"),
+        s"stored PQ centroids at $dir carry no 'cell' column (found " +
+          s"${ccols.mkString(", ")}) — either a torn/foreign artifact " +
+          "or a store written before centroid-column normalization: " +
+          "re-run writePqIndex once to migrate")
+      centroidCheck(dir, "cell").derive(s)
+    }))
 
   /** Open-time torn-artifact guard + config read for the stored PQ tier:
     * returns (nSub, subDim, nPlanes, idBuckets, hasCentroids, residual)
-    * after validating the codes count and codebook fingerprint against
-    * the sidecar, once per (dir, sidecar) in this process. The centroid
-    * store is validated under its WRITE-NORMALIZED 'cell' column —
-    * never inferred from "whichever column is neither dim nor centroid"
-    * (a store with extra columns would misvalidate; one with only
-    * dim/centroid would throw NoSuchElementException instead of the
-    * torn-artifact message). The residual slot arrived after the format
-    * shipped, so 8-field sidecars read as residual=0 (every pre-residual
-    * store codes raw vectors). */
+    * after validating [[pqChecks]] against the sidecar, once per (dir,
+    * sidecar) in this process. 8-field sidecars read as residual=0
+    * (every pre-residual store codes raw vectors). */
   private def openPqIndex(spark: SparkSession,
                           dir: String): (Int, Int, Int, Int, Boolean, Boolean) = {
-    val cfg = graft.ops.ConfigFile.readIntsRange(dir, "pq_commit", 8, 9)
-    if (!validatedPq.contains((dir, cfg))) {
-      val nc = (ParquetOpen(spark, s"$dir/codes").count() % 1000000000L).toInt
-      val fp = pqCodebookFp(spark, dir)
-      require(nc == cfg(4) && fp == cfg(5),
-        s"stored PQ index at $dir does not match its commit sidecar " +
-          s"(codes $nc vs ${cfg(4)}, codebook fp $fp vs ${cfg(5)}) — " +
-          "torn artifact: re-run writePqIndex")
-      if (cfg(7) == 1) {
-        val ccols = ParquetOpen(spark, s"$dir/centroids").columns
-        // pre-normalization stores (written before the centroid column
-        // was pinned to 'cell') fail here by DESIGN — accepting a
-        // caller-named column would reintroduce the inference hazard
-        // the normalization closed; the one-time migration is a re-run
-        require(ccols.contains("cell"),
-          s"stored PQ centroids at $dir carry no 'cell' column (found " +
-            s"${ccols.mkString(", ")}) — either a torn/foreign artifact " +
-            "or a store written before centroid-column normalization: " +
-            "re-run writePqIndex once to migrate")
-        val cfp = centroidFp(spark, dir, "cell")
-        require(cfp == cfg(6),
-          s"stored PQ centroids at $dir do not match the commit sidecar " +
-            s"(fp $cfp vs ${cfg(6)}) — torn artifact: re-run writePqIndex")
-      }
-      validatedPq.add((dir, cfg))
-    }
+    val cfg = Artifact.open(spark, dir, PqCommit, cfg => pqChecks(dir, cfg(7) == 1))
     val residual = cfg.lift(8).contains(1)
     require(!residual || cfg(7) == 1,
       s"stored PQ index at $dir claims residual codes but carries no " +
@@ -2470,32 +2297,14 @@ object Cosine {
     (cfg.head, cfg(1), cfg(2), cfg(3), cfg(7) == 1, residual)
   }
 
-  /** Read a partitioned store with `partCol` pinned back to STRING —
-    * bare reads re-type partition directory values by inference
-    * ("007" → int 7), after which string-literal filters ride whichever
-    * way coercion casts (version-sensitive) and distinct "007"/"7"
-    * directories merge. ONE body for every string-keyed stored layout
-    * (IVF lists, PQ codes) so a future partition-typing fix cannot
-    * miss a path. Flat (empty-corpus) layouts read as-is. One open:
-    * the remembered schema carries the pinned type. */
-  private def pinnedStringPartitionRead(spark: SparkSession, path: String,
-                                        partCol: String): DataFrame =
-    ParquetOpen.pinned(spark, path, partCol,
-      org.apache.spark.sql.types.StringType)
-
-  /** Materialize a serving-sized probe frame ONCE on the driver and hand
-    * back (re-parallelized frame, distinct pcell literals) — the
-    * collect-once recipe every cell-pruned stored search shares: the
-    * literal partition filters and the join side must come from the
-    * SAME materialized rows. The input must carry `cellCol`. */
-  private def collectProbeFrame(spark: SparkSession, probe: DataFrame,
-                                cellCol: String): (DataFrame, Seq[String]) = {
-    val withLit = probe.withColumn("pcell_lit", col(cellCol).cast("string"))
-    val rows = withLit.collect()
-    val frame = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), withLit.schema)
-      .drop("pcell_lit")
-    (frame, rows.map(_.getString(withLit.schema.length - 1)).distinct.toSeq)
+  /** [[Artifact.collectOnce]] for a cell-pruned stored search: the
+    * probe frame and its distinct cells as `pcell` literals (the
+    * writer's string cast). The input must carry `cellCol`. */
+  private def collectCells(spark: SparkSession, probe: DataFrame,
+                           cellCol: String): (DataFrame, Seq[String]) = {
+    val (frame, rows) = Artifact.collectOnce(spark,
+      probe.withColumn("pcell_lit", col(cellCol).cast("string")))
+    (frame.drop("pcell_lit"), rows.map(_.getAs[String]("pcell_lit")).distinct.toSeq)
   }
 
   /** Pruned, reconstructed ADC candidate frame over the stored code
@@ -2512,7 +2321,7 @@ object Cosine {
                                   nSub: Int, nPlanes: Int,
                                   residual: Boolean): DataFrame = {
     val book = codebookToMap(ParquetOpen(spark, s"$dir/codebook"))
-    val c0 = pinnedStringPartitionRead(spark, s"$dir/codes", "pcell")
+    val c0 = ParquetOpen.pinned(spark, s"$dir/codes", "pcell", StringType)
     val partitioned = c0.columns.contains("pcell")
     val pruned =
       (if (cellLits.isEmpty) c0.limit(0)
@@ -2546,7 +2355,7 @@ object Cosine {
                          dir: String, idCol: String, vecCol: String,
                          cellCol: String, k: Int): DataFrame = {
     val (nSub, _, nPlanes, _, _, residual) = openPqIndex(spark, dir)
-    val (q, cellLits) = collectProbeFrame(spark,
+    val (q, cellLits) = collectCells(spark,
       queries.select(col(cellCol), col(idCol).as("query_id"),
         toDouble(col(vecCol)).as("qv")), cellCol)
     adcScoreCells(broadcast(q),
@@ -2608,7 +2417,7 @@ object Cosine {
         "ivfAdcSearchStored")
     val cents = ParquetOpen(spark, s"$dir/centroids")
       .withColumnRenamed("cell", cellCol)
-    val (probes, cellLits) = collectProbeFrame(spark,
+    val (probes, cellLits) = collectCells(spark,
       ivfProbes(queries, cents, idCol, vecCol, cellCol, nProbe), cellCol)
     adcScoreCells(broadcast(probes),
       prunedAdcCandidates(spark, dir, idCol, cellCol, cellLits, nSub, nPlanes,
@@ -2632,7 +2441,7 @@ object Cosine {
     val book = codebookToMap(ParquetOpen(spark, s"$dir/codebook"))
     val q = queries.select(col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("qv"))
-    val coded = pinnedStringPartitionRead(spark, s"$dir/codes", "pcell")
+    val coded = ParquetOpen.pinned(spark, s"$dir/codes", "pcell", StringType)
       .crossJoin(broadcast(book))
     val c =
       if (!residual)
@@ -2661,11 +2470,9 @@ object Cosine {
     val shortDf = sims.withColumn("srank", row_number().over(ws))
       .filter(col("srank") <= kShort)
       .select(col("query_id"), col("neighbor_id"), col("adc_sim"), col("qv"))
-    val shortRows = shortDf.collect()
-    val short = spark.createDataFrame(
-      spark.sparkContext.parallelize(shortRows.toSeq, 1), shortDf.schema)
+    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
     val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val (raw, _) = prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets)
+    val raw = prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets)
     sq8Rerank(short, raw.drop("pbucket"), k, stage1Col = "adc_sim")
   }
 

@@ -414,36 +414,15 @@ object StreamingPrefixMaintenance {
     * artifact. `servingDir` must not be the segment store itself. */
   def publish(spark: SparkSession, dir: String, idCol: String, p: Int,
               servingDir: String, rotation: Seq[Seq[Double]] = Nil): Unit = {
-    // rotated publishes pin rotation.size as the sidecar width (the
-    // streamed prefixes were derived under that exact basis); `p` is
-    // the unrotated branch's width
-    // retire the OTHER sidecar family first (the writePrefixIndex /
-    // writeRotatedPrefixIndex contract): republishing unrotated onto a
-    // previously-rotated servingDir must not leave a stale
-    // prefix_rot_config + rotation store that would rotate probes
-    // against raw prefixes
-    if (rotation.isEmpty) {
-      graft.similarity.Cosine.dropPrefixFamily(spark, servingDir,
-        "prefix_rot_config", dropRotation = true)
-      graft.similarity.Cosine.writePrefixRows(
-        readLatest(spark, dir), idCol, servingDir)
-      graft.ops.ConfigFile.writeAtomic(servingDir, "prefix_config",
-        Seq(p, graft.similarity.Cosine.PrefixBuckets))
-    } else {
-      graft.similarity.Cosine.dropPrefixFamily(spark, servingDir,
-        "prefix_config", dropRotation = false)
-      // rotation store FIRST, rows second, sidecar last — the
-      // writeRotatedPrefixIndex crash ordering: a crash between rows
-      // and sidecar leaves the NEW rotation under the OLD sidecar
-      // (fingerprint mismatch, loud), never new-basis rows under an
-      // old rotation that still matches its own stale sidecar
-      graft.similarity.Cosine.writeRotationStore(spark, rotation, servingDir)
-      graft.similarity.Cosine.writePrefixRows(
-        readLatest(spark, dir), idCol, servingDir)
-      graft.ops.ConfigFile.writeAtomic(servingDir, "prefix_rot_config",
-        Seq(rotation.size, graft.similarity.Cosine.PrefixBuckets,
-          graft.similarity.Cosine.rotationFp(spark, servingDir)))
-    }
+    // the batch writers' commit order, including the retirement of the
+    // OTHER sidecar family; rotated publishes pin rotation.size as the
+    // width (the streamed prefixes were derived under that exact basis)
+    if (rotation.isEmpty)
+      graft.similarity.Cosine.commitPrefix(spark, p, idCol, servingDir)(
+        readLatest(spark, dir))
+    else
+      graft.similarity.Cosine.commitRotatedPrefix(spark, rotation, p, idCol,
+        servingDir)(_ => readLatest(spark, dir))
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.ops.ParquetOpen
+import graft.ops.{Artifact, ParquetOpen}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,23 +108,15 @@ object Bm25 {
     * layout behind a healthy-looking stat. The limit(1) probe is
     * marginal next to the full postings write that follows. */
   def writeIndex(idx: Index, dir: String): Unit = {
-    val empty = idx.postings.isEmpty
-    if (empty)
-      idx.postings.write.mode("overwrite").parquet(s"$dir/postings")
-    else
-      // clustered by the partition key so each tbucket directory gets one
-      // file per writer instead of one per task×directory (StoreWrite —
-      // guide §6 file sizing; measured 353 → 64 files on the sf0.01 tree)
-      graft.ops.StoreWrite.clusterByDirs(
-          idx.postings.withColumn("tbucket",
-            pmod(xxhash64(col("term")), lit(TermBuckets.toLong)).cast("int")),
-          col("did"), col("tbucket"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(s"$dir/postings")
+    // clustered by the partition key so each tbucket directory gets one
+    // file per writer (StoreWrite — guide §6 file sizing; measured
+    // 353 → 64 files on the sf0.01 tree)
+    graft.ops.StoreWrite.partitioned(idx.postings, s"$dir/postings", col("did"),
+      "tbucket" -> pmod(xxhash64(col("term")), lit(TermBuckets.toLong)).cast("int"))
     idx.doclen.write.mode("overwrite").parquet(s"$dir/doclen")
     idx.dfreq.write.mode("overwrite").parquet(s"$dir/dfreq")
     idx.stats.write.mode("overwrite").parquet(s"$dir/stats")
-    graft.ops.ConfigFile.writeAtomic(dir, "config", Seq(TermBuckets))
+    Artifact.commit(idx.postings.sparkSession, dir, Config, Seq(TermBuckets))
   }
 
   /** The pre-partitioning flat layout — for SEGMENT deltas
@@ -146,10 +138,7 @@ object Bm25 {
     * persisted before the partitioned layout existed have no config —
     * they are unpartitioned, [[searchStored]] detects that from the
     * schema and degrades to the unpruned (still In-filtered) scan. */
-  def storedTermBuckets(dir: String): Int =
-    if (graft.ops.ConfigFile.exists(dir, "config"))
-      graft.ops.ConfigFile.readInts(dir, "config", 1).head
-    else TermBuckets
+  private val Config = Artifact.Sidecar("config", 1 to 1, orElse = Some(Seq(TermBuckets)))
 
   /** Canonical in-memory index (tbucket is a storage detail — dropped so
     * append/delete folds stay schema-stable). Serving probes that want
@@ -207,12 +196,6 @@ object Bm25 {
         col("did").as("doc_id"), col("score_micro"))
   }
 
-  // (dir, modulus) pairs whose torn-artifact check already passed — the
-  // guard is an index-open validation, not a per-probe cost (the
-  // RepIndex.searchStored convention)
-  private val validatedPostings =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
   /** Serving search over the PERSISTED layout: the probe docs' distinct
     * terms become LITERAL filters on the postings scan — their
     * [[TermBuckets]] buckets prune the directory listing (static
@@ -236,40 +219,25 @@ object Bm25 {
                    idCol: String, textCol: String, k: Int, k1: Double = 1.2,
                    b: Double = 0.75,
                    minIdfMicro: Long = DefaultMinIdfMicro): DataFrame = {
-    val mod = storedTermBuckets(dir)
     val p0 = ParquetOpen(spark, s"$dir/postings")
     val partitioned = p0.columns.contains("tbucket")
     // torn-artifact guard: a crashed in-place rewrite can leave postings
     // bucketed under a DIFFERENT modulus than the config claims — the
-    // bucket filter would then silently prune real postings. Validate
-    // one row per tbucket DIRECTORY (PartitionSample: ≤ mod independent
-    // limit(1) scans — a single unordered sample could land in a
-    // directory the partial rewrite already re-bucketed and wave the
-    // torn remainder through, while a whole-store aggregate would pay a
-    // first-probe scan proportional to CORPUS size). Paid once per
-    // (dir, modulus).
-    if (partitioned && !validatedPostings.contains((dir, mod))) {
-      graft.ops.PartitionSample.firstRows(spark, s"$dir/postings", "tbucket")(
-          _.select(pmod(xxhash64(col("term")), lit(mod.toLong)).cast("int")))
-        .foreach { case (dirVal, r) =>
-          require(dirVal.toInt == r.getInt(0),
-            s"stored postings at $dir: directory tbucket=$dirVal holds " +
-              s"terms bucketed as ${r.getInt(0)} under the config's " +
-              s"modulus $mod — torn artifact")
-        }
-      validatedPostings.add((dir, mod))
-    }
+    // bucket filter would then silently prune real postings. One row per
+    // tbucket directory ([[Artifact.guard]]), paid once per (dir, config)
+    val mod = Artifact.openWith(spark, dir, Config) { cfg =>
+      if (partitioned)
+        Artifact.guard(spark, s"$dir/postings", Seq("tbucket"), "terms bucketed as")(
+          pmod(xxhash64(col("term")), lit(cfg.head.toLong)).cast("int"), _.head.toInt)
+    }._1.head
     val toks = filter(TextAnalysis.tokens(col(textCol)), t => t =!= "")
     val qtermsDf = queries
       .select(col(idCol).as("qid"), explode(array_distinct(toks)).as("term"),
         pmod(xxhash64(col("term")), lit(mod.toLong)).cast("int").as("tbucket"))
     // one driver job materializes the probe: the literal filters and the
-    // join side must come from the SAME term set (prefixTopKStored's
-    // collect-once pattern)
-    val qrows = qtermsDf.collect()
-    val qterms = spark.createDataFrame(
-        spark.sparkContext.parallelize(qrows.toSeq, 1), qtermsDf.schema)
-      .select(col("qid"), col("term"))
+    // join side must come from the SAME term set
+    val (probe, qrows) = Artifact.collectOnce(spark, qtermsDf)
+    val qterms = probe.select(col("qid"), col("term"))
     val terms = qrows.map(_.getString(1)).distinct.toSeq
     val buckets = qrows.map(_.getInt(2)).distinct.toSeq
     val postings =

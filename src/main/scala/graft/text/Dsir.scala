@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.ops.ParquetOpen
+import graft.ops.{Artifact, ParquetOpen}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -117,14 +117,15 @@ object Dsir {
       idCol, tgt, raw, tots, Buckets)
   }
 
-  /** Order-free content fingerprint of a written model frame, mod 1e9 —
-    * derived from DISK so it pins exactly what a later open reads. */
-  private def frameFp(spark: org.apache.spark.sql.SparkSession,
-                      path: String, cols: Seq[String]): Int =
-    (ParquetOpen(spark, path)
-      .agg(coalesce(sum(pmod(xxhash64(cols.map(col): _*),
-        lit(1000000000L))), lit(0L)))
-      .head().getLong(0) % 1000000000L).toInt
+  private val Config = Artifact.Sidecar("dsir_config", 4 to 4, checksAt = 1,
+    what = "stored DSIR model", remedy = "torn model: re-run writeModel")
+
+  /** Content fingerprints of the three model stores, read from DISK so
+    * they pin exactly what a later open reads. */
+  private def modelChecks(dir: String): Seq[Artifact.Check] = Seq(
+    Artifact.fingerprinted("tgt fp", s"$dir/tgt", col("b"), col("cnt_t")),
+    Artifact.fingerprinted("raw fp", s"$dir/raw", col("b"), col("cnt_r")),
+    Artifact.fingerprinted("tots fp", s"$dir/tots", col("tot_t"), col("tot_r")))
 
   /** Persist the trained DSIR model: the two bucket-count LM frames, the
     * 1-row totals, and a config sidecar written LAST (atomic rename)
@@ -155,17 +156,8 @@ object Dsir {
         .crossJoin(raw.agg(coalesce(sum(col("cnt_r")), lit(0L)).as("tot_r")))
         .write.mode("overwrite").parquet(s"$dir/tots")
     } finally tf.unpersist()
-    val sp = docs.sparkSession
-    graft.ops.ConfigFile.writeAtomic(dir, "dsir_config", Seq(Buckets,
-      frameFp(sp, s"$dir/tgt", Seq("b", "cnt_t")),
-      frameFp(sp, s"$dir/raw", Seq("b", "cnt_r")),
-      frameFp(sp, s"$dir/tots", Seq("tot_t", "tot_r"))))
+    Artifact.commit(docs.sparkSession, dir, Config, Seq(Buckets), modelChecks(dir))
   }
-
-  // (dir, sidecar-contents) pairs whose check already passed — re-keyed
-  // on every re-train (new sidecar values), the validatedIvf pattern
-  private val validatedModels =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[Int])]()
 
   /** Score a document batch against the STORED model — the serving form
     * of [[importance]] (shared [[scoreTail]], so the forms cannot
@@ -178,17 +170,7 @@ object Dsir {
   def importanceStored(spark: org.apache.spark.sql.SparkSession,
                        batch: DataFrame, idCol: String, textCol: String,
                        dir: String): DataFrame = {
-    val cfg = graft.ops.ConfigFile.readInts(dir, "dsir_config", 4)
-    val buckets = cfg.head
-    if (!validatedModels.contains((dir, cfg))) {
-      val got = Seq(frameFp(spark, s"$dir/tgt", Seq("b", "cnt_t")),
-        frameFp(spark, s"$dir/raw", Seq("b", "cnt_r")),
-        frameFp(spark, s"$dir/tots", Seq("tot_t", "tot_r")))
-      require(got == cfg.tail,
-        s"stored DSIR model at $dir does not match its commit sidecar " +
-          s"($got vs ${cfg.tail}) — torn model: re-run writeModel")
-      validatedModels.add((dir, cfg))
-    }
+    val buckets = Artifact.open(spark, dir, Config, _ => modelChecks(dir)).head
     scoreTail(bucketTf(batch, idCol, textCol, buckets), idCol,
       ParquetOpen(spark, s"$dir/tgt"), ParquetOpen(spark, s"$dir/raw"),
       ParquetOpen(spark, s"$dir/tots"), buckets)

@@ -1,14 +1,12 @@
 package graft.ops
 
 import java.nio.file.{Files, Path => JPath}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.dedup.{MinHash, RepIndex}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -22,31 +20,6 @@ class ParquetOpenSpec extends SparkSpec {
 
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graft_popen_$name").toString
-
-  /** Spark jobs `body` starts on this thread. The listener bus is
-    * asynchronous, so a marker job run afterwards fences the count: once
-    * its start has arrived, so has every earlier job's. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"popen-${System.nanoTime()}"
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$tag-fence") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(s"$tag-fence"), "fence job never reached the listener")
-      (out, groups.asScala.count(_ == tag))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)

@@ -61,7 +61,7 @@ class BqSpec extends SparkSpec {
     assert(stored.count() > 0)
     // torn-artifact guard: rewrite one code word after commit on a
     // store that has never been OPENED in this process (validation runs
-    // once per (dir, sidecar) — the validatedIvf pattern), then the
+    // once per (dir, sidecar) — Artifact.open), then the
     // first open must refuse via the content fingerprint
     val dir2 = java.nio.file.Files.createTempDirectory("graft_bq_t").toString
     Cosine.writeBqIndex(emb, "vec_id", "embedding", 64, dir2)

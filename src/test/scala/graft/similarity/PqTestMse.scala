@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ONE reconstruction-MSE measurement for stored PQ artifacts, shared by
-  * every spec/probe that grades a quantizer (TrainedPqSpec,
-  * ResidualPqSpec, TrainedPqProbe2): mean ||x − decode(codes(x))||² with
-  * the decode read from the store exactly as the serving paths read it —
-  * codebook map reshape, codeword concatenation, and (for a residual
-  * store) the cell centroid added back. Test-tree only; the serving
-  * decode it mirrors lives in Cosine's private adcRecon. */
+  * every spec that grades a quantizer (TrainedPqSpec, ResidualPqSpec):
+  * mean ||x − decode(codes(x))||² with the decode read from the store
+  * exactly as the serving paths read it — codebook map reshape, codeword
+  * concatenation, and (for a residual store) the cell centroid added
+  * back. Test-tree only; the serving decode it mirrors lives in Cosine's
+  * private adcRecon. */
 object PqTestMse {
 
   def reconMse(spark: SparkSession, emb: DataFrame, dir: String,

@@ -113,6 +113,32 @@ class Sq8PrefixSpec extends SparkSpec {
     assert(out.isEmpty)
   }
 
+  test("prefix stored: one pbucket directory at another width is a torn artifact") {
+    val emb = Tables.embeddings(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_prefix_w").toString
+    Cosine.writePrefixIndex(emb, "vec_id", "embedding", p = 16, tmp)
+    // a crashed in-place rebuild under p = 8: ONE directory already holds
+    // the new width while every other one and the sidecar still say 16
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val buckets = fs.listStatus(new org.apache.hadoop.fs.Path(s"$tmp/vectors"))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("pbucket="))
+    assert(buckets.length > 1, s"fixture too small: ${buckets.length} directories")
+    val victim = buckets.last.getPath
+    val narrow = java.nio.file.Files.createTempDirectory("graft_prefix_n").toString
+    spark.read.parquet(victim.toString)
+      .withColumn("prefix", slice(col("prefix"), 1, 8))
+      .write.mode("overwrite").parquet(s"$narrow/b")
+    assert(fs.delete(victim, true), "test setup: delete failed")
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$narrow/b"), victim),
+      "test setup: rename failed")
+    val e = intercept[IllegalArgumentException] {
+      Cosine.prefixTopKStored(spark, emb.filter(col("vec_id") < 3), tmp,
+        "vec_id", "embedding", k = 5).collect()
+    }
+    assert(e.getMessage.contains("torn artifact"), e.getMessage)
+  }
+
   test("stored SQ8: pruned serving == inline sq8TopK; rerank scan prunes; torn stats loud") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
