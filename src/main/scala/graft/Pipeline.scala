@@ -166,7 +166,7 @@ object Pipeline {
     val latest = graft.streaming.StreamingIndexMaintenance.readLatest(spark, idxDir)
     val served = graft.text.Bm25.searchIndex(docs.filter(col("doc_id") < 3),
       latest, "doc_id", "text", k = 5)
-    assert(graft.streaming.StreamingIndexMaintenance.latestMaxBatch(idxDir) == 1L)
+    assert(graft.streaming.Segments.highWater(idxDir) == 1L)
     // deterministic wave check: the INDEX must contain docs from both
     // waves (search-result parity would be data-dependent — the same
     // flakiness class the fusion assert above was relaxed for)

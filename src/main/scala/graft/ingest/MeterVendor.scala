@@ -102,26 +102,28 @@ class MeterVendor(
     * Chain validation is two eager jobs over every page, and a Pull hits
     * ~8 inventory surfaces that each start from this frame — so the check
     * is memoized per session (ADVICE r04): on a thousand-page pull the
-    * pages are parsed and walked once, not once per surface. Weak keys let
-    * a stopped session's entry be collected. */
-  private val validatedCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, DataFrame]())
+    * pages are parsed and walked once, not once per surface. The memo
+    * holds a flag, not the frame — a frame pins its session, so a weak
+    * session key with a frame value would never be collected — and the
+    * frame itself is a local relation, rebuilt per call without a job. */
+  private val validated = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  private[ingest] def validatedPages(spark: SparkSession): DataFrame =
-    validatedCache.synchronized {
-      Option(validatedCache.get(spark)).getOrElse {
-        val p = pages(spark)
+  private[ingest] def validatedPages(spark: SparkSession): DataFrame = {
+    val p = pages(spark)
+    validated.synchronized {
+      if (!validated.contains(spark)) {
         val links = p.select(col("next")).filter(col("next").isNotNull)
         val dangling = links.join(p.select(col("url")),
           links("next") === col("url"), "left_anti").count()
         val terminals = p.filter(col("next").isNull).count()
         require(dangling == 0 && terminals == 1,
           s"broken page chain: $dangling dangling links, $terminals terminal pages")
-        validatedCache.put(spark, p)
-        p
+        validated.add(spark)
       }
     }
+    p
+  }
 
   /** Every meter row across all pages (the reference's accumulated
     * `data += json['Items']`, as one explode). */

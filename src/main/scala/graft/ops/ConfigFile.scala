@@ -4,20 +4,17 @@ package graft.ops
   * comma-separated non-negative ints — the values the artifact's probes
   * MUST serve under (a modulus, a width, a geometry) and the content
   * fingerprints that prove its stores are one release. Written
-  * atomically (temp + ATOMIC_MOVE rename: a crash mid-write can never
-  * leave a torn config next to complete parquet) and parse-validated on
-  * read. Program code reaches it only through [[Artifact]], which owns
-  * what the values mean: commit, validate-once open and retire. */
+  * durably through [[Commit.atomic]] (temp, force, atomic rename,
+  * directory fsync: a crash mid-write can never leave a torn config next
+  * to complete parquet, and a finished write survives power loss) and
+  * parse-validated on read. Program code reaches it only through
+  * [[Artifact]], which owns what the values mean: commit, validate-once
+  * open and retire. */
 object ConfigFile {
 
-  def writeAtomic(dir: String, name: String, values: Seq[Int]): Unit = {
-    val tmp = java.nio.file.Paths.get(dir, s"$name.tmp")
-    java.nio.file.Files.write(tmp, values.mkString(",")
+  def writeAtomic(dir: String, name: String, values: Seq[Int]): Unit =
+    Commit.atomic(java.nio.file.Paths.get(dir, name), values.mkString(",")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, name),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
 
   def exists(dir: String, name: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, name))

@@ -29,28 +29,26 @@ private[queries] object GateArtifacts {
   private def sessionId(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
+  // the cleanup must never mask a BUILD failure, and a failed delete at
+  // exit is harmless: deleteQuietly swallows every error
+  private def discard(p: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+
+  // every memoized artifact dir lives until the JVM exits, then goes
+  sys.addShutdownHook(memos.values().forEach(discard(_)))
+
   private def memo(kind: String, s: SparkSession, dir: String)(
       build: String => Unit): String =
     memos.computeIfAbsent((kind, sessionId(s), dir), { _ =>
-      val p = java.nio.file.Files.createTempDirectory(s"graft_$kind")
+      val p = java.nio.file.Files.createTempDirectory(s"graft_$kind").toString
       try {
-        build(p.toString)
-        p.toString
+        build(p)
+        p
       } catch {
         case e: Throwable =>
           // a half-built artifact must not survive to be memoized or
           // mistaken for a servable layout by a later open
-          // the cleanup must never mask the BUILD failure: walk-stream
-          // iteration surfaces I/O errors as UncheckedIOException (not
-          // IOException), so swallow every non-fatal cleanup error and
-          // always rethrow the original
-          try {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(p)
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          } catch { case scala.util.control.NonFatal(_) => () }
+          discard(p)
           throw e
       }
     })

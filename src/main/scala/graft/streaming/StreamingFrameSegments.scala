@@ -4,18 +4,18 @@ import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Shared single-frame segment sink for index families whose stored form
-  * is ONE frame of per-document rows (LSH band index: (id, sharr, band,
-  * band_hash); IVF cell assignment: (id, cell)) — append IS union for
-  * these, so a micro-batch folds by writing one immutable `seg<batchId>`
-  * parquet directory and committing a [[Segments]] manifest: O(|batch|)
+/** The [[Segments]] store for index families whose stored form is ONE
+  * frame of per-document rows — LSH band rows, IVF cells, PQ / trained PQ
+  * / residual PQ codes, prefix rows, SQ8 codes and BQ words. Append IS
+  * union for these, so a micro-batch folds by writing one immutable
+  * `seg<batchId>` parquet directory and committing a manifest: O(|batch|)
   * bytes per batch, serving reads are a single multi-path scan, and
   * compaction (live segments > maxSegments) collapses to one `cmp`
-  * segment. The BM25 sink ([[StreamingIndexMaintenance]]) has its own
-  * four-component variant; this one covers the other two members of the
-  * append trio. Same crash/exactly-once story: manifest rename is the
-  * commit point, the high-water batch id skips re-delivery. */
-private[streaming] object FrameSegments {
+  * segment. Each family object below keeps only its row sink and its
+  * publish: every family reads through [[readLatest]] and deletes
+  * through [[deleteFold]]. Crash safety and exactly-once come from the
+  * [[Segments]] manifest. */
+object FrameSegments {
 
   /** The live frame: one multi-path scan of the DATA segments, minus the
     * union of live TOMBSTONE segments ([[deleteFold]]) — index rows here
@@ -25,8 +25,7 @@ private[streaming] object FrameSegments {
     * by existence; the anti-join keys on the tombstone frame's own
     * column, so no id-column name needs to thread through the read. */
   def readLatest(spark: SparkSession, dir: String): DataFrame = {
-    val segs = Segments.latest(dir).map(_.segments).getOrElse(Nil)
-      .map(s => s"$dir/$s")
+    val segs = Segments.live(dir).map(s => s"$dir/$s")
     require(segs.nonEmpty, s"no committed segments under $dir")
     val (tombSegs, dataSegs) = segs.partition(
       s => new java.io.File(s, "tombstones").exists())
@@ -51,17 +50,18 @@ private[streaming] object FrameSegments {
       readLatest(spark, dir).write.mode("overwrite").parquet(cmp)
     }
 
-  /** Fold a DELETE batch: the tombstone ids commit as their own segment
-    * (atomically visible, idempotent on re-delivery, resolved by the
-    * next compaction). Same contract as the BM25 delete segments: batch
-    * ids are monotone across data and delete folds, and a tombstoned id
-    * may be re-appended only after a compaction has resolved its
-    * tombstone (the live tombstone union applies to every live data
-    * segment, fresh rows included). */
-  def deleteFold(spark: SparkSession, dir: String, batchId: Long,
-                 maxSegments: Int, tombs: DataFrame, idCol: String): Unit =
+  /** Fold a DELETE batch, the streaming form of each family's batch
+    * delete (e.g. `MinHash.deleteFromSnapshotIndex`, `Cosine.ivfDeleteCells`):
+    * the tombstone ids commit as their own segment (atomically visible,
+    * idempotent on re-delivery, resolved by the next compaction). Same
+    * contract as the BM25 delete segments: batch ids are monotone across
+    * data and delete folds, and a tombstoned id may be re-appended only
+    * after a compaction has resolved its tombstone (the live tombstone
+    * union applies to every live data segment, fresh rows included). */
+  def deleteFold(spark: SparkSession, dir: String, idCol: String,
+                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
     Segments.fold(dir, batchId, maxSegments) { seg =>
-      tombs.select(org.apache.spark.sql.functions.col(idCol)).distinct()
+      tombs.select(col(idCol)).distinct()
         .write.mode("overwrite").parquet(s"$seg/tombstones")
     } { cmp =>
       readLatest(spark, dir).write.mode("overwrite").parquet(cmp)
@@ -74,8 +74,8 @@ private[streaming] object FrameSegments {
   * rows land as one immutable segment — index rows are per-document pure
   * functions, so the unioned segments equal `snapshotIndex` over
   * everything streamed, row-for-row (spec-pinned against the batch
-  * rebuild). Serve with
-  * `MinHash.nearDuplicatesAgainstIndex(batch, readLatest(spark, dir), …)`. */
+  * rebuild). Serve with `MinHash.nearDuplicatesAgainstIndex(batch,
+  * FrameSegments.readLatest(spark, dir), …)`. */
 object StreamingLshMaintenance {
   import graft.dedup.MinHash
 
@@ -92,21 +92,6 @@ object StreamingLshMaintenance {
       MinHash.snapshotIndex(sharr, idCol, rowsPerBand))
     finally sharr.unpersist()
   }
-
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of doc ids ([[FrameSegments.deleteFold]]) — the
-    * streaming form of [[MinHash.deleteFromSnapshotIndex]]. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
 }
 
 /** Streaming maintenance for the IVF cell assignment (the x18 append
@@ -115,8 +100,8 @@ object StreamingLshMaintenance {
   * the serving-time contract) and its (id, cell) rows land as one
   * immutable segment; unioned segments equal the one-pass assignment of
   * everything streamed under the same centroids (spec-pinned). Serve
-  * with `Cosine.ivfSearchIndex(queries, vectors, readLatest(spark, dir),
-  * centroids, …)`. */
+  * with `Cosine.ivfSearchIndex(queries, vectors,
+  * FrameSegments.readLatest(spark, dir), centroids, …)`. */
 object StreamingIvfMaintenance {
 
   def cellSink(spark: SparkSession, dir: String, idCol: String,
@@ -127,21 +112,6 @@ object StreamingIvfMaintenance {
         .assignToCentroids(batch, idCol, vecCol, centroids, cellCol)
         .select(col(idCol), col("assigned_cell").as(cellCol))
     }
-
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of vector ids ([[FrameSegments.deleteFold]]) —
-    * the streaming form of [[graft.similarity.Cosine.ivfDeleteCells]]. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
 
   /** PUBLISH the streamed store to the pruned serving tier: the live
     * cell assignment (segments ∪ minus tombstones) joined to its
@@ -156,21 +126,11 @@ object StreamingIvfMaintenance {
   def publish(spark: SparkSession, dir: String, vectors: DataFrame,
               centroids: DataFrame, idCol: String, vecCol: String,
               cellCol: String, servingDir: String): Unit =
-    graft.similarity.Cosine.writeIvfIndex(vectors, readLatest(spark, dir),
-      centroids, idCol, vecCol, cellCol, servingDir)
+    graft.similarity.Cosine.writeIvfIndex(vectors,
+      FrameSegments.readLatest(spark, dir), centroids, idCol, vecCol, cellCol,
+      servingDir)
 }
 
-/** Streaming maintenance for the SQ8 packed-code index (the x19/x21
-  * serving form driven from a stream): each micro-batch of finalized
-  * vectors is quantized map-side under the STORED per-dim range stats
-  * (no retraining — the stats are the artifact's contract, pinned at
-  * build like IVF's centroids above; out-of-range values saturate, the
-  * [[graft.similarity.Cosine.sq8CodeExpr]] clamp) and its (id, pcode)
-  * rows land as one immutable segment: per-document pure functions, so
-  * unioned segments equal the one-pass coding of everything streamed
-  * under the same stats (spec-pinned) and tombstone deletes are exact.
-  * Serve with `Cosine.sq8SearchCodes(queries, readLatest(spark, dir),
-  * stats, …)`. */
 /** Streaming maintenance for the PQ code store (the x26/x28 serving form
   * driven from a stream): each micro-batch of finalized vectors lands as
   * one immutable segment of (id, codes, cell) rows — codes are a pure
@@ -198,21 +158,6 @@ object StreamingPqMaintenance {
           .assignToCentroids(batch, idCol, vecCol, centroids, cellCol)
           .select(col(idCol), col("assigned_cell").as(cellCol)), Seq(idCol)))
 
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of vector ids ([[FrameSegments.deleteFold]]) —
-    * code rows are per-document pure, so the id anti-join is exact. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
-
   /** PUBLISH the streamed store into the full stored PQ tier: the live
     * ids (segments ∪ minus tombstones) select their vectors, and
     * [[graft.similarity.Cosine.writePqIndex]] lays out codebook +
@@ -227,7 +172,7 @@ object StreamingPqMaintenance {
               nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4,
               centroidFn: (DataFrame, String, String) => DataFrame =
                 graft.similarity.Cosine.cellCentroids): Unit = {
-    val live = readLatest(spark, dir)
+    val live = FrameSegments.readLatest(spark, dir)
     val corpus = vectors.join(live.select(col(idCol)), Seq(idCol), "left_semi")
     graft.similarity.Cosine.writePqIndex(corpus,
       live.select(col(idCol), col(cellCol)), idCol, vecCol, cellCol,
@@ -266,22 +211,6 @@ object StreamingTrainedPqMaintenance {
           .assignToCentroids(batch, idCol, vecCol, centroids, cellCol)
           .select(col(idCol), col("assigned_cell").as(cellCol)), Seq(idCol)))
 
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of vector ids ([[FrameSegments.deleteFold]]) —
-    * code rows are per-document pure given the pinned book, so the id
-    * anti-join is exact. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
-
   /** PUBLISH the streamed store into the full stored trained-PQ tier:
     * live ids select their vectors, the pinned `book` lands verbatim
     * (book first, codes second, sidecar last — the crash ordering lives
@@ -291,7 +220,7 @@ object StreamingTrainedPqMaintenance {
               book: DataFrame, centroids: DataFrame, idCol: String,
               vecCol: String, cellCol: String, servingDir: String,
               nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4): Unit = {
-    val live = readLatest(spark, dir)
+    val live = FrameSegments.readLatest(spark, dir)
     val corpus = vectors.join(live.select(col(idCol)), Seq(idCol), "left_semi")
     graft.similarity.Cosine.writeTrainedPqIndexWith(corpus,
       live.select(col(idCol), col(cellCol)), idCol, vecCol, cellCol,
@@ -328,22 +257,6 @@ object StreamingResidualPqMaintenance {
         .join(cells, Seq(idCol))
     })
 
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of vector ids ([[FrameSegments.deleteFold]]) —
-    * residual code rows are per-document pure given the pinned
-    * (book, centroids) pair, so the id anti-join is exact. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
-
   /** PUBLISH the streamed store into the full stored residual tier:
     * live ids select their vectors, the pinned (book, centroids) pair
     * lands verbatim (centroids first, book second, codes, sidecar last —
@@ -354,7 +267,7 @@ object StreamingResidualPqMaintenance {
               book: DataFrame, centroids: DataFrame, idCol: String,
               vecCol: String, cellCol: String, servingDir: String,
               nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4): Unit = {
-    val live = readLatest(spark, dir)
+    val live = FrameSegments.readLatest(spark, dir)
     val corpus = vectors.join(live.select(col(idCol)), Seq(idCol), "left_semi")
     graft.similarity.Cosine.writeResidualPqIndexWith(corpus,
       live.select(col(idCol), col(cellCol)), idCol, vecCol, cellCol,
@@ -367,8 +280,9 @@ object StreamingResidualPqMaintenance {
   * vectors lands as one immutable segment of (id, prefix, full) rows —
   * prefix computed map-side under the PINNED geometry (p, and optionally
   * the stored artifact's rotation: never retrained per batch, exactly
-  * the SQ8 stats contract above), so unioned segments equal the one-pass
-  * derivation of everything streamed and tombstone deletes are exact.
+  * the [[StreamingSq8Maintenance]] stats contract), so unioned segments
+  * equal the one-pass derivation of everything streamed and tombstone
+  * deletes are exact.
   * [[publish]] ships the live frame into the pruned serving layout
   * (`prefixTopKStored`'s pbucket partition tree + sidecar), carrying the
   * pinned rotation forward. */
@@ -390,21 +304,6 @@ object StreamingPrefixMaintenance {
       batch.select(col(idCol), prefixExpr(vecCol, p, rotation).as("prefix"),
         col(vecCol).as("full")))
 
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of vector ids ([[FrameSegments.deleteFold]]) —
-    * prefix rows are per-document pure, so the id anti-join is exact. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
-
   /** PUBLISH the streamed store into the pruned serving layout (the
     * StreamingIvfMaintenance.publish cadence contract): the live
     * (id, prefix, full) frame lands pbucket-partitioned with the
@@ -419,13 +318,24 @@ object StreamingPrefixMaintenance {
     // width (the streamed prefixes were derived under that exact basis)
     if (rotation.isEmpty)
       graft.similarity.Cosine.commitPrefix(spark, p, idCol, servingDir)(
-        readLatest(spark, dir))
+        FrameSegments.readLatest(spark, dir))
     else
       graft.similarity.Cosine.commitRotatedPrefix(spark, rotation, p, idCol,
-        servingDir)(_ => readLatest(spark, dir))
+        servingDir)(_ => FrameSegments.readLatest(spark, dir))
   }
 }
 
+/** Streaming maintenance for the SQ8 packed-code index (the x19/x21
+  * serving form driven from a stream): each micro-batch of finalized
+  * vectors is quantized map-side under the STORED per-dim range stats
+  * (no retraining — the stats are the artifact's contract, pinned at
+  * build like IVF's centroids above; out-of-range values saturate, the
+  * [[graft.similarity.Cosine.sq8CodeExpr]] clamp) and its (id, pcode)
+  * rows land as one immutable segment: per-document pure functions, so
+  * unioned segments equal the one-pass coding of everything streamed
+  * under the same stats (spec-pinned) and tombstone deletes are exact.
+  * Serve with `Cosine.sq8SearchCodes(queries,
+  * FrameSegments.readLatest(spark, dir), stats, …)`. */
 object StreamingSq8Maintenance {
 
   def codeSink(spark: SparkSession, dir: String, idCol: String,
@@ -433,21 +343,6 @@ object StreamingSq8Maintenance {
                maxSegments: Int = 8)(batch: DataFrame, batchId: Long): Unit =
     FrameSegments.fold(spark, dir, batchId, maxSegments)(
       graft.similarity.Cosine.sq8PackedCodes(batch, stats, idCol, vecCol, dim))
-
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  /** Tombstone a batch of vector ids ([[FrameSegments.deleteFold]]) —
-    * the streaming form of [[graft.similarity.Cosine.sq8DeleteCodes]]. */
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
 }
 
 /** Streaming maintenance for the BINARY-QUANTIZED tier (the x29 serving
@@ -468,19 +363,6 @@ object StreamingBqMaintenance {
         .bqCodes(graft.similarity.Cosine.toDouble(col(vecCol)), dim)
         .as("bwords")))
 
-  def readLatest(spark: SparkSession, dir: String): DataFrame =
-    FrameSegments.readLatest(spark, dir)
-
-  def deleteSink(spark: SparkSession, dir: String, idCol: String,
-                 maxSegments: Int = 8)(tombs: DataFrame, batchId: Long): Unit =
-    FrameSegments.deleteFold(spark, dir, batchId, maxSegments, tombs, idCol)
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
-
   /** PUBLISH the streamed store into the full stored BQ tier: live ids
     * select their vectors; codes are re-derived (pure function, no
     * pinned state — the spec pins published ≡ streamed word rows).
@@ -488,7 +370,7 @@ object StreamingBqMaintenance {
   def publish(spark: SparkSession, dir: String, vectors: DataFrame,
               idCol: String, vecCol: String, dim: Int,
               servingDir: String): Unit = {
-    val live = readLatest(spark, dir)
+    val live = FrameSegments.readLatest(spark, dir)
     val corpus = vectors.join(live.select(col(idCol)), Seq(idCol), "left_semi")
     graft.similarity.Cosine.writeBqIndex(corpus, idCol, vecCol, dim,
       servingDir)

@@ -5,22 +5,27 @@ import graft.text.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Manifest-committed SEGMENT directories — the shared storage layout of
-  * the streaming index-maintenance sinks ([[StreamingIndexMaintenance]],
-  * [[StreamingLshMaintenance]], [[StreamingIvfMaintenance]]).
+/** Manifest-committed SEGMENT directories — the one storage lifecycle of
+  * the ten streaming index stores: the eight single-frame families that
+  * ride [[FrameSegments]] (LSH, IVF, PQ, trained PQ, residual PQ, prefix,
+  * SQ8, BQ), the BM25 store ([[StreamingIndexMaintenance]]) and the
+  * RepIndex store ([[StreamingRepIndexMaintenance]]). Each family supplies
+  * only how a segment is written and how the live segments read back;
+  * the fold, compaction, high-water mark, live list and [[prune]] exist
+  * here once, and callers use them directly.
   *
   * Layout: `dir/seg<batchId>/…` (one immutable directory per folded
   * micro-batch), `dir/del<batchId>/…` (a delete batch's segment, where a
-  * sink distinguishes them), `dir/cmp<batchId>/…` (a compaction's merged
+  * store distinguishes them), `dir/cmp<batchId>/…` (a compaction's merged
   * segment), and `dir/manifest/m<seq>` — the COMMIT POINT. A manifest file lists
   * the live segment names plus the highest folded batch id; it is
-  * written to a temp name and renamed into place, so readers only ever
+  * committed through [[graft.ops.Commit.atomic]], so readers only ever
   * see fully-written manifests, and a crash mid-segment-write leaves an
   * unreferenced directory that [[prune]] sweeps — never a corrupt
   * serving index. Re-delivery of a crashed batch is detected from the
   * manifest's high-water mark (micro-batch ids are monotone), which
   * survives compaction retiring the batch's segment directory. */
-private[streaming] object Segments {
+object Segments {
   final case class Manifest(seq: Long, maxBatch: Long, segments: Seq[String])
 
   private def manifestDir(dir: String) = new java.io.File(dir, "manifest")
@@ -52,49 +57,23 @@ private[streaming] object Segments {
     files.iterator.flatMap(parse(_).iterator).nextOption()
   }
 
-  /** fsync a directory so a rename inside it is durable (the Lucene
-    * commit-point recipe). Directories cannot be OPENED for force() on
-    * every platform/filesystem (e.g. Windows) — there the call degrades
-    * to the pre-round-11 no-sync behavior, covered by [[latest]]'s
-    * torn-manifest fallback. But once the open SUCCEEDED, a force()
-    * failure is a real I/O error on a filesystem that claims to support
-    * the operation — swallowing it would make commit()'s durability
-    * claim silently false (enabling exactly the tombstone-resurrection
-    * hazard [[latest]]'s caveat warns about), so it propagates. */
-  private def fsyncDir(d: java.io.File): Unit = {
-    val ch =
-      try java.nio.channels.FileChannel.open(d.toPath,
-        java.nio.file.StandardOpenOption.READ)
-      catch {
-        // platform/filesystem cannot open a directory channel: fsync
-        // unsupported here, not an I/O fault
-        case _: java.io.IOException | _: UnsupportedOperationException => return
-      }
-    try ch.force(true) finally ch.close()
-  }
+  /** The high-water batch id: the newest folded batch, -1 for an empty
+    * store. A batch at or below it is a re-delivery. */
+  def highWater(dir: String): Long = latest(dir).fold(-1L)(_.maxBatch)
 
-  /** Rename-commit the next manifest: write `m<seq+1>.tmp`, force its
-    * bytes to disk, rename into place, then fsync the manifest directory
-    * — after commit returns, the commit point is durable, not merely
+  /** The live segment names, oldest first; empty for an empty store. */
+  def live(dir: String): Seq[String] = latest(dir).fold(Seq.empty[String])(_.segments)
+
+  /** Commit the next manifest through [[graft.ops.Commit.atomic]]: after
+    * commit returns, the commit point is durable, not merely
     * atomic-for-concurrent-readers. */
   def commit(dir: String, maxBatch: Long, segments: Seq[String]): Unit = {
     val md = manifestDir(dir)
     md.mkdirs()
-    val seq = latest(dir).map(_.seq + 1).getOrElse(0L)
-    val tmp = new java.io.File(md, s"m$seq.tmp")
-    val ch = java.nio.channels.FileChannel.open(tmp.toPath,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(
-        (maxBatch.toString +: segments).mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      ch.force(true) // bytes durable BEFORE the rename publishes them
-    } finally ch.close()
-    if (!tmp.renameTo(new java.io.File(md, s"m$seq")))
-      throw new java.io.IOException(s"manifest commit failed: $md/m$seq")
-    fsyncDir(md) // the rename itself durable
+    val seq = latest(dir).fold(0L)(_.seq + 1)
+    graft.ops.Commit.atomic(new java.io.File(md, s"m$seq").toPath,
+      (maxBatch.toString +: segments).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** GC segments and manifests no current reader can need: keep the
@@ -126,10 +105,6 @@ private[streaming] object Segments {
     if (parsed.isEmpty) return // nothing trustworthy to anchor deletion on
     val live: Set[String] = parsed.flatMap(_.segments).toSet
     val highWater = parsed.map(_.maxBatch).max
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
     manifests.dropRight(keepManifests).foreach(_.delete())
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter { f =>
@@ -140,24 +115,32 @@ private[streaming] object Segments {
         sweepable &&
           (if (f.getName.startsWith("cmp")) id < highWater else id <= highWater)
       }
-      .foreach(rm)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 
   /** The shared fold protocol (re-delivery skip → write one immutable
-    * segment → rename-commit → compact past `maxSegments`), implemented
-    * ONCE: the three sinks differ only in how a segment's contents are
-    * written and how the live set compacts, passed in as callbacks. */
-  def fold(dir: String, batchId: Long, maxSegments: Int)(
+    * segment `<kind><batchId>` → commit → [[compact]] past
+    * `maxSegments`), implemented ONCE: the stores differ only in how a
+    * segment's contents are written and how the live set compacts,
+    * passed in as callbacks. `kind` is `seg` for data and `del` for a
+    * store whose delete segments read differently (RepIndex). */
+  def fold(dir: String, batchId: Long, maxSegments: Int, kind: String = "seg")(
       writeSegment: String => Unit)(writeCompacted: String => Unit): Unit = {
-    val prev = latest(dir)
-    if (batchId <= prev.map(_.maxBatch).getOrElse(-1L)) return
-    writeSegment(s"$dir/seg$batchId")
-    val live = prev.map(_.segments).getOrElse(Nil) :+ s"seg$batchId"
-    commit(dir, batchId, live)
-    if (live.size > maxSegments) {
-      writeCompacted(s"$dir/cmp$batchId")
-      commit(dir, batchId, Seq(s"cmp$batchId"))
-    }
+    if (batchId <= highWater(dir)) return
+    val name = s"$kind$batchId"
+    writeSegment(s"$dir/$name")
+    val segs = live(dir) :+ name
+    commit(dir, batchId, segs)
+    if (segs.size > maxSegments) compact(dir, batchId)(writeCompacted)
+  }
+
+  /** Collapse the live segments into one: `writeCompacted` writes the
+    * resolved state to `cmp<batchId>`, which commits as the only live
+    * segment. Retired directories stay on disk for readers of the
+    * previous manifest until [[prune]]. */
+  def compact(dir: String, batchId: Long)(writeCompacted: String => Unit): Unit = {
+    writeCompacted(s"$dir/cmp$batchId")
+    commit(dir, batchId, Seq(s"cmp$batchId"))
   }
 }
 
@@ -189,12 +172,6 @@ private[streaming] object Segments {
   * through the r7 delete algebra, and compaction resolves them. */
 object StreamingIndexMaintenance {
 
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  def liveSegments(dir: String): Seq[String] =
-    Segments.latest(dir).map(_.segments).getOrElse(Nil)
-
   /** The live serving index: one multi-path scan per component across
     * all live segments; dfreq/stats re-aggregate (associative sums),
     * postings/doclen are disjoint per-document rows (plain union).
@@ -207,7 +184,7 @@ object StreamingIndexMaintenance {
     * rebuild-without-deleted exactly. The view is lazy — it owns no
     * blocks, and each read plans over the live segments. */
   def readLatest(spark: SparkSession, dir: String): Bm25.Index = {
-    val segs = liveSegments(dir).map(s => s"$dir/$s")
+    val segs = Segments.live(dir).map(s => s"$dir/$s")
     require(segs.nonEmpty, s"no committed segments under $dir")
     def paths(part: String) =
       segs.map(_ + "/" + part).filter(p => new java.io.File(p).exists())
@@ -226,9 +203,6 @@ object StreamingIndexMaintenance {
     else Bm25.deleteIndexes(ParquetOpen(spark, tombs: _*), merged, "did")
   }
 
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
-
   /** The foreachBatch function: index `batch` into segment
     * `seg<batchId>`, commit a manifest appending it, and compact when
     * live segments exceed `maxSegments`. Wire as
@@ -244,7 +218,7 @@ object StreamingIndexMaintenance {
       // merge every live segment into one compacted segment (tombstones
       // RESOLVED — readLatest applies them, and the compacted dir writes
       // none); retired directories stay on disk for readers of the
-      // previous manifest until [[prune]]
+      // previous manifest until [[Segments.prune]]
       Bm25.writeIndexPlain(readLatest(spark, dir), cmp)
     }
 

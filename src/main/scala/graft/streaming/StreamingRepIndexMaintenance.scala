@@ -46,22 +46,17 @@ import org.apache.spark.sql.functions._
   * (live segments > maxSegments, or the explicit [[compact]]) rewrites
   * the RESOLVED state as a single segment. A delete batch itself is a
   * SOFT delete — the tombstoned rows stay in older segment files until a
-  * compaction + [[prune]] rewrites them away, which is the caller's
-  * retention-policy call (the GDPR hard-delete step), not a per-batch
-  * cost. Crash safety and re-delivery idempotence come from the shared
-  * [[Segments]] manifest (rename-commit, high-water batch id).
+  * compaction + [[Segments.prune]] rewrites them away, which is the
+  * caller's retention-policy call (the GDPR hard-delete step), not a
+  * per-batch cost. Crash safety and re-delivery idempotence come from
+  * the shared [[Segments]] manifest (durable commit, high-water batch
+  * id).
   * StreamingRepIndexSpec pins the streamed state ≡ the batch
   * build/append/delete path (and through it the d17/d19 oracles),
   * re-delivery no-ops, rep retirement across waves, delete-time
   * promotion (including re-promotion of a RETIRED rep — the ordering
   * case above), and the o(state) delete write shape. */
 object StreamingRepIndexMaintenance {
-
-  def latestMaxBatch(dir: String): Long =
-    Segments.latest(dir).map(_.maxBatch).getOrElse(-1L)
-
-  private def liveSegs(dir: String): Seq[String] =
-    Segments.latest(dir).map(_.segments).getOrElse(Nil)
 
   /** The current serving state, merged-on-read from the live segments.
     *
@@ -81,7 +76,7 @@ object StreamingRepIndexMaintenance {
     * read as empty (existence-filtered paths). Lazy throughout: the
     * append fold never materializes marr. */
   def readLatest(spark: SparkSession, dir: String, idCol: String): RepIndex.State = {
-    val names = liveSegs(dir)
+    val names = Segments.live(dir)
     require(names.nonEmpty, s"no committed segments under $dir")
     val paths = names.map(n => s"$dir/$n")
     val isDel = names.map(_.startsWith("del"))
@@ -140,7 +135,7 @@ object StreamingRepIndexMaintenance {
     val caches = scala.collection.mutable.ArrayBuffer[DataFrame](sharrB)
     var next: RepIndex.State = null // the append's leaves: released below
     try Segments.fold(dir, batchId, maxSegments) { seg =>
-      val first = liveSegs(dir).isEmpty
+      val first = Segments.live(dir).isEmpty
       val prev =
         if (first) RepIndex.State(null, null, null, null)
         else {
@@ -226,17 +221,21 @@ object StreamingRepIndexMaintenance {
   def deleteSink(spark: SparkSession, dir: String, idCol: String,
                  rowsPerBand: Int = MinHash.RowsPerBand, maxSegments: Int = 8)(
                  tombs: DataFrame, batchId: Long): Unit = {
-    val prev = Segments.latest(dir)
-    if (batchId <= prev.map(_.maxBatch).getOrElse(-1L)) return // re-delivered
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val st0 = readLatest(spark, dir, idCol)
-    val st = RepIndex.State(st0.labels.persist(lvl), st0.bands, st0.sharr,
-      st0.marr)
-    // labels come back materialized (written + feed the rep ids)
-    val (labels, promoted0) = RepIndex.deleteDelta(tombs, st, idCol)
-    val promoted = promoted0.persist(lvl) // two writes: bands + sharr
-    try {
-      val seg = s"$dir/del$batchId"
+    // released once the fold, and the compaction it may trigger, is done;
+    // a re-delivered batch writes no segment and persists nothing
+    val caches = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    var labels: DataFrame = null // deleteDelta's checkpointed labels
+    try Segments.fold(dir, batchId, maxSegments, kind = "del") { seg =>
+      val st0 = readLatest(spark, dir, idCol)
+      val st = RepIndex.State(st0.labels.persist(lvl), st0.bands, st0.sharr,
+        st0.marr)
+      caches += st.labels
+      // labels come back materialized (written + feed the rep ids)
+      val (labels0, promoted0) = RepIndex.deleteDelta(tombs, st, idCol)
+      labels = labels0
+      val promoted = promoted0.persist(lvl) // two writes: bands + sharr
+      caches += promoted
       labels.write.mode("overwrite").parquet(s"$seg/labels")
       MinHash.bandRows(MinHash.signaturesFromArray(promoted, idCol), idCol,
           rowsPerBand)
@@ -245,34 +244,26 @@ object StreamingRepIndexMaintenance {
         .write.mode("overwrite").parquet(s"$seg/sharr")
       tombs.select(col(idCol)).distinct()
         .write.mode("overwrite").parquet(s"$seg/deleted")
-      val live = prev.map(_.segments).getOrElse(Nil) :+ s"del$batchId"
-      Segments.commit(dir, batchId, live)
-      if (live.size > maxSegments) compactAt(spark, dir, idCol, batchId)
+    } { cmp =>
+      writeFull(readLatest(spark, dir, idCol), idCol, cmp)
     } finally {
-      st.labels.unpersist(); promoted.unpersist()
-      graft.ops.Checkpoint.release(labels)
+      caches.foreach(_.unpersist())
+      if (labels != null) graft.ops.Checkpoint.release(labels)
     }
   }
 
   /** Compact the live segments into one resolved `cmp` segment NOW — the
     * explicit entry point for (a) the retention-policy hard-delete step
-    * (a delete batch is a soft delete until compaction + [[prune]]
-    * rewrite the tombstoned rows away) and (b) clearing a tombstone so
-    * its id may be re-appended (the segment-protocol contract). No-op if
-    * the store is already a single compacted segment. */
+    * (a delete batch is a soft delete until compaction +
+    * [[Segments.prune]] rewrite the tombstoned rows away) and (b)
+    * clearing a tombstone so its id may be re-appended (the
+    * segment-protocol contract). No-op if the store is already a single
+    * compacted segment. */
   def compact(spark: SparkSession, dir: String, idCol: String): Unit = {
     val m = Segments.latest(dir).getOrElse(
       throw new IllegalStateException(s"no committed segments under $dir"))
     if (m.segments != Seq(s"cmp${m.maxBatch}"))
-      compactAt(spark, dir, idCol, m.maxBatch)
+      Segments.compact(dir, m.maxBatch)(
+        writeFull(readLatest(spark, dir, idCol), idCol, _))
   }
-
-  private def compactAt(spark: SparkSession, dir: String, idCol: String,
-                        batchId: Long): Unit = {
-    writeFull(readLatest(spark, dir, idCol), idCol, s"$dir/cmp$batchId")
-    Segments.commit(dir, batchId, Seq(s"cmp$batchId"))
-  }
-
-  def prune(dir: String, keepManifests: Int = 2): Unit =
-    Segments.prune(dir, keepManifests)
 }

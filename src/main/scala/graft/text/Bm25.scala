@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   * oracle-gated by r1b/r2/r3; pass 0 for the unpruned reference scoring
   * (r1's gate configuration). What the knob controls is the JOIN
   * FAN-OUT, which grows with corpus × stopword/duplication density:
-  * on the stopword-planted stress corpus Bm25PruneBench counts the
-  * scored (query-term, posting) rows cut 36.4% (13.8M → 8.8M for 10
-  * probes over 50k docs) with top-1 unchanged; on corpora whose
+  * on the stopword-planted stress corpus (SCALE.md, round-9
+  * "Measurement CORRECTION") the scored (query-term, posting) rows are
+  * cut 36.4% (13.8M → 8.8M for 10 probes over 50k docs) with top-1
+  * unchanged; on corpora whose
   * hottest term sits below the cutoff the filter is a structural no-op
   * (the measurement is the deterministic row count — wall-clock at
   * this scale is host-drift-bound, the round-9 measurement lesson).
@@ -44,9 +45,10 @@ object Bm25 {
   /** Production idf-pruning cutoff in micro-nats: 0.2 nats, which under
     * the Lucene +1 idf form drops terms appearing in ≳82% of documents
     * — true stopwords, whose postings fan the candidate join out to
-    * ~|corpus| rows per query. Measured (Bm25PruneBench, SCALE.md):
-    * −36.4% scored join rows on the stopword-planted stress corpus,
-    * top-1 hits unchanged; a no-op where no term crosses the cutoff
+    * ~|corpus| rows per query. Measured (SCALE.md, round-9
+    * "Measurement CORRECTION"): −36.4% scored join rows on the
+    * stopword-planted stress corpus, top-1 hits unchanged; a no-op
+    * where no term crosses the cutoff
     * (the sf testdata vocabulary tops out at df 80.4%, so the r1b gate
     * is value-identical to r1 at sf0.01 — the pruning MECHANISM is
     * spec-gated by Bm25PruneSpec's planted stopword instead). */

@@ -275,6 +275,17 @@ class PullSpec extends SparkSpec {
     assert(e.getMessage.contains("broken page chain"))
   }
 
+  test("meter vendor validates its page chain once per session") {
+    val v = new MeterVendor()
+    val (_, first) = jobsOf(v.validatedPages(spark))
+    assert(first > 0, "the first call must walk the chain")
+    assert(jobsOf(v.validatedPages(spark))._2 == 0)
+    val other = spark.newSession()
+    assert(jobsOf(v.validatedPages(other))._2 > 0,
+      "a new session must validate again")
+    assert(jobsOf(v.validatedPages(other))._2 == 0)
+  }
+
   test("sku vendor refuses an incomplete page chain") {
     // drop the tail page: remaining pages still declare TotalCount=6 but
     // only 4 rows parse — the batch analogue of a dangling NextPageToken

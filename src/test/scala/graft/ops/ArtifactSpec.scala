@@ -1,10 +1,8 @@
 package graft.ops
 
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import graft.similarity.Cosine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -99,21 +97,8 @@ class ArtifactSpec extends SparkSpec {
   }
 
   test("no program source commits, reads or memoizes a sidecar outside Artifact") {
-    val root = java.nio.file.Paths.get("src", "main", "scala")
-    assert(Files.isDirectory(root), s"run from the repository root: no $root")
-    val helper = root.resolve(java.nio.file.Paths.get("graft", "ops", "Artifact.scala"))
-    val forks = """ConfigFile\.|newKeySet""".r
-    val stream = Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p != helper)
-        .flatMap { (p: JPath) =>
-          val text = new String(Files.readAllBytes(p), "UTF-8")
-          forks.findAllMatchIn(text).map { m =>
-            s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}"
-          }
-        }.toList
-      finally stream.close()
+    val offenders = SourceScan.offenders("""ConfigFile\.|newKeySet""".r,
+      "graft/ops/Artifact.scala")
     assert(offenders.isEmpty,
       s"stored-artifact lifecycle forked outside Artifact (use Artifact.commit/open): $offenders")
   }

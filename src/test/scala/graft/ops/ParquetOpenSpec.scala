@@ -1,10 +1,8 @@
 package graft.ops
 
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import graft.dedup.{MinHash, RepIndex}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
@@ -222,21 +220,8 @@ class ParquetOpenSpec extends SparkSpec {
   }
 
   test("no program source opens parquet except through ParquetOpen") {
-    val root = java.nio.file.Paths.get("src", "main", "scala")
-    assert(Files.isDirectory(root), s"run from the repository root: no $root")
-    val helper = root.resolve(java.nio.file.Paths.get("graft", "ops", "ParquetOpen.scala"))
-    val readParquet = """read\s*\.parquet\(""".r
-    val stream = Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p != helper)
-        .flatMap { (p: JPath) =>
-          val text = new String(Files.readAllBytes(p), "UTF-8")
-          readParquet.findAllMatchIn(text).map { m =>
-            s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}"
-          }
-        }.toList
-      finally stream.close()
+    val offenders = SourceScan.offenders("""read\s*\.parquet\(""".r,
+      "graft/ops/ParquetOpen.scala")
     assert(offenders.isEmpty,
       s"parquet opened outside ParquetOpen (use ParquetOpen(spark, path)): $offenders")
   }

@@ -39,14 +39,14 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       .outputMode("append").start()
     for (w <- Seq(wave1, wave2, wave3)) { mem.addData(w: _*); q.processAllAvailable() }
     q.stop()
-    assert(StreamingLshMaintenance.latestMaxBatch(dir) == 2L)
+    assert(Segments.highWater(dir) == 2L)
     // each segment holds only its batch (write volume pin)
     assert(sp.read.parquet(s"$dir/seg2").select("doc_id").distinct().count() == 1L)
     val all = (wave1 ++ wave2 ++ wave3).toDF()
     val batch = Seq(Doc(10L,
       "the quick brown fox jumps over the lazy dog near the river bank sometimes")).toDF()
     val got = MinHash.nearDuplicatesAgainstIndex(batch,
-        StreamingLshMaintenance.readLatest(sp, dir), "doc_id", "text",
+        FrameSegments.readLatest(sp, dir), "doc_id", "text",
         n = 2, threshold = 0.5)
       .orderBy("id_new", "id_old").collect().toSeq
     val want = MinHash.nearDuplicatesAgainst(batch, all, "doc_id", "text",
@@ -57,7 +57,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     assert(got.map(_.getLong(1)).toSet == Set(1L, 4L, 5L), got.toString)
     // re-delivery is a no-op
     sink((wave3: Seq[Doc]).toDF(), 2L)
-    assert(StreamingLshMaintenance.readLatest(sp, dir).count() ==
+    assert(FrameSegments.readLatest(sp, dir).count() ==
       MinHash.snapshotIndex(
         MinHash.hashedShingleArray(all, "doc_id", "text", 2), "doc_id").count())
   }
@@ -67,12 +67,12 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_slsh_del").toString
     val sink = StreamingLshMaintenance
       .indexSink(sp, dir, "doc_id", "text", maxSegments = 3) _
-    val del = StreamingLshMaintenance.deleteSink(sp, dir, "doc_id",
+    val del = FrameSegments.deleteFold(sp, dir, "doc_id",
       maxSegments = 3) _
     val probe = Seq(Doc(10L,
       "the quick brown fox jumps over the lazy dog near the river bank sometimes")).toDF()
     def hits(): Set[Long] = MinHash.nearDuplicatesAgainstIndex(probe,
-        StreamingLshMaintenance.readLatest(sp, dir), "doc_id", "text",
+        FrameSegments.readLatest(sp, dir), "doc_id", "text",
         n = 2, threshold = 0.5)
       .collect().map(_.getLong(1)).toSet
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L)
@@ -104,11 +104,11 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val sink = StreamingIvfMaintenance.cellSink(sp, dir, "vec_id", "embedding",
       cents, "label") _
     sink(emb.filter(col("vec_id") < 100), 0L)
-    assert(StreamingIvfMaintenance.readLatest(sp, dir)
+    assert(FrameSegments.readLatest(sp, dir)
       .filter(col("vec_id") === 7).count() == 1)
-    StreamingIvfMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 1L)
-    val live = StreamingIvfMaintenance.readLatest(sp, dir)
+    val live = FrameSegments.readLatest(sp, dir)
     assert(live.filter(col("vec_id") === 7).count() == 0)
     assert(live.count() == emb.filter(col("vec_id") < 100).count() - 1)
   }
@@ -127,8 +127,8 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    assert(StreamingSq8Maintenance.latestMaxBatch(dir) == 2L)
-    val got = StreamingSq8Maintenance.readLatest(sp, dir)
+    assert(Segments.highWater(dir) == 2L)
+    val got = FrameSegments.readLatest(sp, dir)
     val want = Cosine.sq8PackedCodes(emb, stats, "vec_id", "embedding", 64)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "streamed SQ8 codes != one-pass coding under the same stats")
@@ -141,9 +141,9 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val codes = got.select(explode(Cosine.sq8Unpack(col("pcode"), 64)).as("c"))
     assert(codes.filter(col("c") < 0 || col("c") > 255).isEmpty)
     // tombstone through the protocol: exact (per-doc-pure rows)
-    StreamingSq8Maintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(3L).map(Tuple1(_)).toDF("vec_id"), 3L)
-    val live = StreamingSq8Maintenance.readLatest(sp, dir)
+    val live = FrameSegments.readLatest(sp, dir)
     assert(live.filter(col("vec_id") === 3).count() == 0)
     assert(live.count() == emb.count() - 1)
     // the served quantized search ranks k rows per query from the
@@ -167,8 +167,8 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    assert(StreamingIvfMaintenance.latestMaxBatch(dir) == 2L)
-    val got = StreamingIvfMaintenance.readLatest(sp, dir)
+    assert(Segments.highWater(dir) == 2L)
+    val got = FrameSegments.readLatest(sp, dir)
     val want = Cosine.assignToCentroids(emb, "vec_id", "embedding", cents, "label")
       .select(col("vec_id"), col("assigned_cell").as("label"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
@@ -197,8 +197,8 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    assert(StreamingPqMaintenance.latestMaxBatch(dir) == 2L)
-    val got = StreamingPqMaintenance.readLatest(sp, dir)
+    assert(Segments.highWater(dir) == 2L)
+    val got = FrameSegments.readLatest(sp, dir)
     val want = Cosine.pqCodes(emb, "vec_id", "embedding")
       .join(Cosine.assignToCentroids(emb, "vec_id", "embedding", cents, "label")
         .select(col("vec_id"), col("assigned_cell").as("label")), Seq("vec_id"))
@@ -206,7 +206,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       "streamed PQ code rows != one-pass derivation")
     assert(Segments.latest(dir).get.segments == Seq("cmp2"))
     // tombstone, then publish into the FULL stored tier
-    StreamingPqMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
     val serving = java.nio.file.Files.createTempDirectory("graft_spq_s").toString
     StreamingPqMaintenance.publish(sp, dir, emb, cents,
@@ -256,7 +256,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    val got = StreamingTrainedPqMaintenance.readLatest(sp, dir)
+    val got = FrameSegments.readLatest(sp, dir)
     val want = Cosine.pqCodesFromBook(emb, "vec_id", "embedding", book)
       .join(cells, Seq("vec_id"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
@@ -265,7 +265,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // batch writeTrainedPqIndexWith over the live corpus with the SAME
     // book (streamed ≡ rebuild, the twin's whole point) — and the book
     // itself landed verbatim, never retrained on publish
-    StreamingTrainedPqMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
     val serving = java.nio.file.Files.createTempDirectory("graft_tpq_s").toString
     StreamingTrainedPqMaintenance.publish(sp, dir, emb, book, cents,
@@ -307,12 +307,12 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    val got = StreamingBqMaintenance.readLatest(sp, dir)
+    val got = FrameSegments.readLatest(sp, dir)
     val want = emb.select(col("vec_id"),
       Cosine.bqCodes(Cosine.toDouble(col("embedding")), 64).as("bwords"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "streamed BQ word rows != one-pass derivation")
-    StreamingBqMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
     val serving = java.nio.file.Files.createTempDirectory("graft_bqs_s").toString
     StreamingBqMaintenance.publish(sp, dir, emb, "vec_id", "embedding",
@@ -353,7 +353,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    val got = StreamingResidualPqMaintenance.readLatest(sp, dir)
+    val got = FrameSegments.readLatest(sp, dir)
     val wantCells = Cosine.assignToCentroids(emb, "vec_id", "embedding",
         cents, "label")
       .select(col("vec_id"), col("assigned_cell").as("label"))
@@ -367,7 +367,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // tombstone, publish, pin: published store == batch
     // writeResidualPqIndexWith over the live corpus with the SAME pair,
     // and both halves of the pair landed verbatim
-    StreamingResidualPqMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
     val serving = java.nio.file.Files.createTempDirectory("graft_rpq_s").toString
     StreamingResidualPqMaintenance.publish(sp, dir, emb, book, cents,
@@ -416,8 +416,8 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
     sink(emb.filter(col("vec_id") % 3 === 1), 1L)
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
-    assert(StreamingPrefixMaintenance.latestMaxBatch(dir) == 2L)
-    val got = StreamingPrefixMaintenance.readLatest(sp, dir)
+    assert(Segments.highWater(dir) == 2L)
+    val got = FrameSegments.readLatest(sp, dir)
     val want = emb.select(col("vec_id"),
       Cosine.rotatedPrefix(Cosine.toDouble(col("embedding")), rot).as("prefix"),
       col("embedding").as("full"))
@@ -428,7 +428,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     sink(emb.filter(col("vec_id") % 3 === 2), 2L)
     assert(Segments.latest(dir).get.segments == Seq("cmp2"))
     // tombstone, then PUBLISH into the pruned serving layout
-    StreamingPrefixMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
     val serving = java.nio.file.Files.createTempDirectory("graft_spref_s").toString
     StreamingPrefixMaintenance.publish(sp, dir, "vec_id", p = 16, serving,
@@ -456,7 +456,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       cents, "label") _
     sink(emb.filter(col("vec_id") % 2 === 0), 0L)
     sink(emb.filter(col("vec_id") % 2 === 1), 1L)
-    StreamingIvfMaintenance.deleteSink(sp, dir, "vec_id")(
+    FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 2L)
     val serving = java.nio.file.Files.createTempDirectory("graft_sivf_pub_s").toString
     StreamingIvfMaintenance.publish(sp, dir,
@@ -470,7 +470,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       "vec_id", "embedding", "label", k = 3, nProbe = 2)
     val live = Cosine.ivfSearchIndex(queries,
       emb.select(col("vec_id"), col("embedding")),
-      StreamingIvfMaintenance.readLatest(sp, dir), cents,
+      FrameSegments.readLatest(sp, dir), cents,
       "vec_id", "embedding", "label", k = 3, nProbe = 2)
     assert(pruned.collect().toSet == live.collect().toSet)
     assert(pruned.count() > 0)

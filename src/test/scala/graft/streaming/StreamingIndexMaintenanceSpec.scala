@@ -46,8 +46,8 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
       mem.addData(w: _*); q.processAllAvailable()
     }
     q.stop()
-    assert(StreamingIndexMaintenance.latestMaxBatch(dir) == 2L)
-    assert(StreamingIndexMaintenance.liveSegments(dir)
+    assert(Segments.highWater(dir) == 2L)
+    assert(Segments.live(dir)
       == Seq("seg0", "seg1", "seg2"))
     val all = (wave1 ++ wave2 ++ wave3).toDF()
     val probes = all.filter(col("doc_id") === 1)
@@ -88,13 +88,13 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     val sink = StreamingIndexMaintenance
       .indexSink(sp, dir, "doc_id", "text", maxSegments = 2) _
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L); sink(wave3.toDF(), 2L)
-    assert(StreamingIndexMaintenance.liveSegments(dir) == Seq("cmp2"),
-      StreamingIndexMaintenance.liveSegments(dir))
+    assert(Segments.live(dir) == Seq("cmp2"),
+      Segments.live(dir))
     // the high-water mark survives compaction retiring seg2
-    assert(StreamingIndexMaintenance.latestMaxBatch(dir) == 2L)
+    assert(Segments.highWater(dir) == 2L)
     // re-delivery of a compacted-away batch is still a no-op
     sink(wave3.toDF(), 2L)
-    assert(StreamingIndexMaintenance.liveSegments(dir) == Seq("cmp2"))
+    assert(Segments.live(dir) == Seq("cmp2"))
     val all = (wave1 ++ wave2 ++ wave3).toDF()
     val probes = all.filter(col("doc_id") === 1)
     val served = Bm25.searchIndex(probes,
@@ -125,14 +125,14 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     new java.io.File(s"$dir/vacuum").mkdirs()
     // keepManifests = 2: the pre-compaction manifest still references
     // seg0..seg2, so they survive; the crashed cmp1 does not
-    StreamingIndexMaintenance.prune(dir, keepManifests = 2)
+    Segments.prune(dir, keepManifests = 2)
     val kept2 = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(kept2.contains("seg0") && !kept2.contains("cmp1"), kept2)
     assert(kept2.contains("seg99"), kept2) // writer-race guard: above high-water
     assert(kept2.contains("vacuum"), kept2) // never touches foreign dirs
     new java.io.File(s"$dir/seg99").delete() // tidy the fixture
     // keepManifests = 1: only the compacted segment is live
-    StreamingIndexMaintenance.prune(dir, keepManifests = 1)
+    Segments.prune(dir, keepManifests = 1)
     val kept1 = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(!kept1.exists(_.startsWith("seg")), kept1)
     assert(kept1.contains("cmp2"), kept1)
@@ -154,13 +154,13 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     // high-water mark), while a stale below-high-water straggler goes
     Bm25.writeIndexPlain(Bm25.buildIndex(wave3.toDF(), "doc_id", "text"), s"$dir/seg2")
     new java.io.File(s"$dir/seg0_tmp").mkdirs() // non-matching: ignored
-    StreamingIndexMaintenance.prune(dir, keepManifests = 1)
+    Segments.prune(dir, keepManifests = 1)
     val names = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(names.contains("seg2"), s"prune raced the in-flight writer: $names")
     assert(names.contains("seg0") && names.contains("seg1"), names)
     // the in-flight batch now commits and serves
     sink(wave3.toDF(), 2L)
-    assert(StreamingIndexMaintenance.latestMaxBatch(dir) == 2L)
+    assert(Segments.highWater(dir) == 2L)
     assert(StreamingIndexMaintenance.readLatest(sp, dir)
       .stats.collect().head.getLong(0) == 5L)
     // an IN-FLIGHT COMPACTION's directory: fold commits maxBatch = 2
@@ -169,12 +169,12 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     // it becomes a sweepable crashed compaction only once a later batch
     // raises the mark
     new java.io.File(s"$dir/cmp2").mkdirs()
-    StreamingIndexMaintenance.prune(dir, keepManifests = 1)
+    Segments.prune(dir, keepManifests = 1)
     assert(new java.io.File(s"$dir/cmp2").exists(),
       "prune raced an in-flight compaction at the high-water mark")
     Segments.commit(dir, 3L,
       Segments.latest(dir).get.segments) // a later batch raises the mark
-    StreamingIndexMaintenance.prune(dir, keepManifests = 1)
+    Segments.prune(dir, keepManifests = 1)
     assert(!new java.io.File(s"$dir/cmp2").exists(),
       "crashed compaction below the mark was not swept")
     // a torn (empty) newest manifest must not brick reads or folds: the
@@ -184,7 +184,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     val seqs = md.listFiles().map(_.getName.drop(1).toLong)
     java.nio.file.Files.write(
       new java.io.File(md, s"m${seqs.max + 1}").toPath, Array.emptyByteArray)
-    assert(StreamingIndexMaintenance.latestMaxBatch(dir) == 3L)
+    assert(Segments.highWater(dir) == 3L)
     assert(StreamingIndexMaintenance.readLatest(sp, dir)
       .stats.collect().head.getLong(0) == 5L)
   }
@@ -244,8 +244,8 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
       .stats.collect().toSeq
     // crash-replay: batch 1 delivered again — must not double-count
     sink(wave2.toDF(), 1L)
-    assert(StreamingIndexMaintenance.latestMaxBatch(dir) == 1L)
-    assert(StreamingIndexMaintenance.liveSegments(dir) == Seq("seg0", "seg1"))
+    assert(Segments.highWater(dir) == 1L)
+    assert(Segments.live(dir) == Seq("seg0", "seg1"))
     val after = StreamingIndexMaintenance.readLatest(sp, dir)
       .stats.collect().toSeq
     assert(after == before, s"re-delivery changed the index: $after vs $before")

@@ -46,7 +46,7 @@ class StreamingRepIndexSpec extends SparkSpec {
       .outputMode("append").start()
     for (w <- Seq(wave1, wave2, wave3)) { mem.addData(w: _*); q.processAllAvailable() }
     q.stop()
-    assert(StreamingRepIndexMaintenance.latestMaxBatch(dir) == 2L)
+    assert(Segments.highWater(dir) == 2L)
     val got = StreamingRepIndexMaintenance.readLatest(sp, dir, "doc_id")
     // the batch path over the same waves
     def sharrOf(rows: Seq[Doc]) =
@@ -198,7 +198,7 @@ class StreamingRepIndexSpec extends SparkSpec {
       .sink(sp, dir, "doc_id", "text", maxSegments = 2) _
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L); sink(wave3.toDF(), 2L)
     assert(Segments.latest(dir).get.segments == Seq("cmp2"))
-    assert(StreamingRepIndexMaintenance.latestMaxBatch(dir) == 2L)
+    assert(Segments.highWater(dir) == 2L)
     val got = StreamingRepIndexMaintenance.readLatest(sp, dir, "doc_id")
     assert(repIds(got) == Set(0L, 2L, 3L))
     assert(labelMap(got)(9L) == 2L) // wave-1 node re-rooted by wave 3, resolved
