@@ -1403,65 +1403,17 @@ object TextQueries extends QueryPack {
          |      THEN 1 ELSE 0 END) AS BIGINT) AS multiplicity
          |  FROM perdoc p JOIN f USING (source))""".stripMargin
 
-  /** Process-level memo of the corpus's exact Jaccard-0.8 pair graph:
-    * SIX gated queries (d2/d5/d6/d14/d16/d18) derive from the SAME
-    * shingle-join pair set, and each was re-deriving it — the single
-    * most expensive shared stage in the bench suite. PARQUET-backed, not
-    * persist()-backed: the Verify/Bench harnesses clear every cache
-    * between queries (and would truncate the CC fixpoint's local
-    * checkpoints with it), so the memo writes the frame once per
-    * (session, dir) and each consumer re-reads the files — shallow
-    * plans, unkillable by cache resets. Every query's OUTPUT is
-    * unchanged: the memo is the same pure frame. */
-  @volatile private var pairs08Key: (Int, String) = null
-  @volatile private var pairs08Path: String = _
+  /** The corpus's exact Jaccard-0.8 pair graph, stored once per
+    * (session, dir) by [[GateArtifacts.pairs08Dir]]. */
   private def pairs08(s: org.apache.spark.sql.SparkSession,
                       dir: String): org.apache.spark.sql.DataFrame =
-    synchronized {
-      val key = (System.identityHashCode(s), dir)
-      if (pairs08Key != key) {
-        val p = java.nio.file.Files.createTempDirectory("graft_pairs08").toString
-        MinHash.exactJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-            n = 2, threshold = 0.8)
-          .write.mode("overwrite").parquet(p)
-        pairs08Path = p
-        pairs08Key = key
-      }
-      ParquetOpen(s, pairs08Path)
-    }
+    ParquetOpen(s, GateArtifacts.pairs08Dir(s, dir))
 
-  /** Process-level memo of the d17/d19 serving lifecycle's shared first
-    * two phases (rep-index state built over buckets <60, the 60-79 wave
-    * folded incrementally): the two queries replay the identical
-    * build+append before diverging (d17 searches, d19 deletes). Stored
-    * via [[graft.dedup.RepIndex.write]]/read once per (session, dir) —
-    * the production serving shape (probe a persisted state), immune to
-    * the harnesses' between-query cache resets, and the round trip is
-    * spec-pinned decision-identical. Gate semantics unchanged: each
-    * query's output is the same pure derivation of the same inputs. */
-  @volatile private var repStateKey: (Int, String) = null
-  @volatile private var repStatePath: String = _
+  /** d17/d19's shared rep-index state, stored once per (session, dir) by
+    * [[GateArtifacts.repLifecycleDir]]. */
   private def repLifecycle(s: org.apache.spark.sql.SparkSession,
                            dir: String): graft.dedup.RepIndex.State =
-    synchronized {
-      val key = (System.identityHashCode(s), dir)
-      if (repStateKey != key) {
-        val docs = Tables.documents(s, dir)
-        val bucket = TextAnalysis.splitBucket(col("doc_id"))
-        def sharrOf(pred: org.apache.spark.sql.Column) =
-          MinHash.hashedShingleArray(docs.filter(pred), "doc_id", "text", 2)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val st0 = graft.dedup.RepIndex.build(sharrOf(bucket < 60), "doc_id")
-        val st1 = graft.dedup.RepIndex.append(
-          sharrOf(bucket >= 60 && bucket < 80), st0, "doc_id")
-        val p = java.nio.file.Files.createTempDirectory("graft_replc").toString
-        graft.dedup.RepIndex.write(st1, p)
-        graft.dedup.RepIndex.release(st1)
-        repStatePath = p
-        repStateKey = key
-      }
-      graft.dedup.RepIndex.read(s, repStatePath)
-    }
+    graft.dedup.RepIndex.read(s, GateArtifacts.repLifecycleDir(s, dir))
 
   /** d10/d15 shared query tail: per new doc, its best snapshot match
     * and near-dup count (one window partitioned by the new doc id). */
