@@ -6,23 +6,32 @@ import graft.sinks.{DdlGen, JsonDump}
 import org.apache.spark.sql.SparkSession
 
 /** Command facade mirroring the reference CLI's surface (`cli.py`
-  * sub-apps: pull / sync / hash / dump / schemas), plus `sql` for ad-hoc
-  * queries over the harness tables. Usage:
+  * sub-apps: pull / sync / hash / dump / schemas / alembic / metadata),
+  * plus `fetch` for the DSv2 vendor source, `sql` for ad-hoc queries over
+  * the harness tables and `explain` for query plans. Usage:
   *
   *   runMain graft.Cli schemas [sqlite|postgres|derby] [--scd]
   *   runMain graft.Cli pull <outDir>
   *   runMain graft.Cli sync <sourceDir> <targetDir> <table> <pk[,pk...]>
   *   runMain graft.Cli hash <sfDir> <table> <pk[,pk...]>
+  *   runMain graft.Cli hashdb <sfDir> <table:pk[,pk][;table:pk...]> [excludeCsv]
+  *   runMain graft.Cli migrate up <dir> [rev] | current <dir> | stamp <dir> <rev> | sql <dialect>
   *   runMain graft.Cli dump <sfDir> <table> <pk[,pk...]> <outDir>
+  *   runMain graft.Cli fetch <region[,region...]>
+  *   runMain graft.Cli metadata set <jdbcUrl> [key=value ...] | get <jdbcUrl> [key]
   *   runMain graft.Cli sql <sfDir> "<query>"
+  *   runMain graft.Cli explain <sfDir> <name> [<name>...]
+  *
+  * `explain` prints `explain("formatted")` for the named
+  * `SparkEntry.queries`, to review plan shapes (broadcasts, pushed
+  * filters, partial aggregation, codegen spans) by hand; `PlanShapeSpec`
+  * pins the shapes that matter. Sessions run on `SPARK_GRAFT_CPUS` cores
+  * (see [[Harness]]).
   */
 object Cli {
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Harness.session(Harness.cpus)
     graft.plans.GraftExtensions.register(s)
     s
   }
@@ -160,9 +169,17 @@ object Cli {
       spark.sql(query).show(50, truncate = false)
       spark.stop()
 
+    case "explain" :: dir :: names if names.nonEmpty =>
+      val spark = session()
+      names.foreach { name =>
+        println(s"\n========== $name ==========")
+        SparkEntry.queries(name)(spark, dir).explain("formatted")
+      }
+      spark.stop()
+
     case other =>
       System.err.println(s"unknown command: ${other.mkString(" ")}")
-      System.err.println("commands: schemas | pull | sync | hash | hashdb | dump | sql | fetch | metadata")
+      System.err.println("commands: schemas | pull | sync | hash | hashdb | migrate | dump | fetch | metadata | sql | explain")
       sys.exit(2)
   }
 }

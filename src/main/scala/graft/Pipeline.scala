@@ -20,11 +20,20 @@ import java.sql.DriverManager
   */
 object Pipeline {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
+    // one per-run root with a subdir per stage output, removed even when
+    // a stage assert fails
+    val root = java.nio.file.Files.createTempDirectory("graft-pipeline")
+    def stageDir(name: String): String =
+      java.nio.file.Files.createDirectory(root.resolve(name)).toString
+    try run(spark, stageDir)
+    finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
 
+  private def run(spark: SparkSession, stageDir: String => String): Unit = {
     val url = "jdbc:derby:memory:graftdemo;create=true"
     val conn = DriverManager.getConnection(url)
     val tables = Seq("country", "compliance_framework")
@@ -99,20 +108,19 @@ object Pipeline {
     assert(total == 40 && inactive == 1 && us == "NORTH AMERICA" && scd == 3)
 
     vendorStage(spark, url)
-    pullStage(spark, url)
+    pullStage(spark, url, stageDir)
     streamingStage(spark)
     multimodalStage(spark)
-    curationTailStage(spark)
-    retrievalStage(spark)
+    curationTailStage(spark, stageDir)
+    retrievalStage(spark, stageDir)
     println("[pipeline] OK")
-    spark.stop()
   }
 
   /** Retrieval stage (round-8 continuation): the serving-side story —
     * hybrid BM25 + dense RRF fusion over the same corpus the curation
     * tail produced, plus the novelty gate a pipeline applies before
     * admitting a batch near an eval set. */
-  private def retrievalStage(spark: SparkSession): Unit = {
+  private def retrievalStage(spark: SparkSession, stageDir: String => String): Unit = {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir)
@@ -158,7 +166,7 @@ object Pipeline {
 
     // round 10: segmented streaming index maintenance — two waves fold
     // into a stored BM25 index; the served search must see BOTH
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_pipe_idx").toString
+    val idxDir = stageDir("idx")
     val sink = graft.streaming.StreamingIndexMaintenance
       .indexSink(spark, idxDir, "doc_id", "text") _
     sink(docs.filter(col("doc_id") % 2 === 0), 0L)
@@ -191,7 +199,7 @@ object Pipeline {
     val goneN = graft.text.Bm25.searchIndex(probe, delIdx, "doc_id", "text", k = 5)
       .filter(col("doc_id") === target).count()
     assert(goneN == 0, s"tombstoned doc $target still served")
-    val cmpDir = java.nio.file.Files.createTempDirectory("graft_pipe_cmp").toString
+    val cmpDir = stageDir("cmp")
     graft.text.Bm25.writeIndex(delIdx, cmpDir) // compaction makes it durable
     graft.text.Bm25.release(delIdx)
     val reAdded = graft.text.Bm25.appendToIndex(
@@ -218,7 +226,7 @@ object Pipeline {
       sharrOf(docs.filter(col("doc_id") % 2 === 0)), "doc_id")
     val st1 = graft.dedup.RepIndex.append(
       sharrOf(docs.filter(col("doc_id") % 2 =!= 0)), st0, "doc_id")
-    val repDir = java.nio.file.Files.createTempDirectory("graft_pipe_rep").toString
+    val repDir = stageDir("rep")
     graft.dedup.RepIndex.write(st1, repDir)
     graft.dedup.RepIndex.release(st1)
     val repState = graft.dedup.RepIndex.read(spark, repDir)
@@ -257,7 +265,7 @@ object Pipeline {
   /** Curation tail (round 8): paragraph dedup against a persisted block
     * index, then shard materialization with manifests — the last mile of
     * a training-data pipeline, driven end-to-end on real testdata. */
-  private def curationTailStage(spark: SparkSession): Unit = {
+  private def curationTailStage(spark: SparkSession, stageDir: String => String): Unit = {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val old = docs.filter(col("doc_id") % 3 =!= 0)
@@ -269,7 +277,7 @@ object Pipeline {
       .select(col("doc_id"), col("text_clean").as("text"))
     val nIn = batch.count(); val nOut = survivors.count()
     assert(nOut > 0 && nOut <= nIn, s"curation tail lost the corpus: $nIn -> $nOut")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val outDir = stageDir("shards")
     graft.ops.Sharding.shardedWrite(survivors, "doc_id", outDir, nShards = 4)
     val manifest = graft.ops.Sharding.manifest(survivors, "doc_id", "text", 4)
       .collect()
@@ -341,9 +349,10 @@ object Pipeline {
     * workload-score recompute over the freshly-written benchmark scores
     * (the reference's final pull step) and the `_metadata` release-info
     * upsert (K6, `cli.py:242-319`). */
-  private def pullStage(spark: SparkSession, url: String): Unit = {
+  private def pullStage(spark: SparkSession, url: String,
+                        stageDir: String => String): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-pull").toString
+    val dir = stageDir("pull")
     val counts = graft.ingest.Pull.pull(spark, new graft.ingest.DemoVendor,
       graft.ingest.Pull.parquetSink(dir))
     println(s"[pipeline] pull: ${counts.size} record types, " +
@@ -352,7 +361,7 @@ object Pipeline {
 
     // second concrete vendor: nested machine-type / SKU JSON payloads
     // (GCP-shaped) through the SAME orchestrator and sinks
-    val gridDir = java.nio.file.Files.createTempDirectory("graft-pipeline-grid").toString
+    val gridDir = stageDir("grid")
     val gridCounts = graft.ingest.Pull.pull(spark, new graft.ingest.GridVendor,
       graft.ingest.Pull.parquetSink(gridDir))
     println(s"[pipeline] grid pull: ${gridCounts.size} record types, " +
@@ -361,7 +370,7 @@ object Pipeline {
 
     // third concrete vendor: paginated retail-price meters with O2 tier
     // chains (Azure-shaped) through the SAME orchestrator and sinks
-    val meterDir = java.nio.file.Files.createTempDirectory("graft-pipeline-meter").toString
+    val meterDir = stageDir("meter")
     val meterCounts = graft.ingest.Pull.pull(spark, new graft.ingest.MeterVendor,
       graft.ingest.Pull.parquetSink(meterDir))
     val meterTiers = ParquetOpen(spark, s"$meterDir/storage_price")
@@ -372,7 +381,7 @@ object Pipeline {
 
     // fourth concrete vendor: SDK-typed server types with paired
     // hourly/monthly quotes → monthly-cap tiers (Hetzner-shaped)
-    val capDir = java.nio.file.Files.createTempDirectory("graft-pipeline-cap").toString
+    val capDir = stageDir("cap")
     val capCounts = graft.ingest.Pull.pull(spark, new graft.ingest.CapVendor,
       graft.ingest.Pull.parquetSink(capDir))
     val capZero = ParquetOpen(spark, s"$capDir/server_price")
@@ -384,7 +393,7 @@ object Pipeline {
 
     // fifth concrete vendor: per-zone price list with dynamic attribute
     // keys + separate storage-billing catalog (UpCloud-shaped)
-    val zonalDir = java.nio.file.Files.createTempDirectory("graft-pipeline-zonal").toString
+    val zonalDir = stageDir("zonal")
     val zonalCounts = graft.ingest.Pull.pull(spark, new graft.ingest.ZonalVendor,
       graft.ingest.Pull.parquetSink(zonalDir))
     println(s"[pipeline] zonal pull: ${zonalCounts.size} record types, " +
@@ -395,7 +404,7 @@ object Pipeline {
     // sixth concrete vendor: one commerce catalog with nested addon blobs,
     // GPU specs inferred from flavor names, computed storage keys
     // (OVH-shaped)
-    val catDir = java.nio.file.Files.createTempDirectory("graft-pipeline-catalog").toString
+    val catDir = stageDir("catalog")
     val catCounts = graft.ingest.Pull.pull(spark, new graft.ingest.CatalogVendor,
       graft.ingest.Pull.parquetSink(catDir))
     val catGpus = ParquetOpen(spark, s"$catDir/server")

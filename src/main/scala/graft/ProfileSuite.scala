@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query runtime profile (optimization-round measurement tool, guide
   * §1): for each named query — or every query — runs it twice under the
@@ -18,25 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileSuite {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt min 16
-    // same RAM-backed local-dir probe as Bench so profiles match the
-    // bench session's I/O shape (see Bench.scala)
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite)
-        Some(java.nio.file.Files.createTempDirectory(shm.toPath, "graft-local").toString)
-      else None
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-    val spark = localDir.fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.analyzer.singlePassResolver.enabledTentatively", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -83,12 +64,6 @@ object ProfileSuite {
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
 
-    def resetState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-
     println(f"${"query"}%-28s ${"wall"}%7s ${"wall2"}%7s ${"build"}%6s ${"plan"}%6s ${"exec"}%6s ${"jobs"}%5s ${"stg"}%5s ${"task"}%6s ${"tt_s"}%7s ${"shR_mb"}%7s ${"shW_mb"}%7s ${"in_mb"}%7s")
     sel.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -110,7 +85,7 @@ object ProfileSuite {
         val ph = df.queryExecution.tracker.phases
           .map { case (k, v) => s"$k=${v.endTimeMs - v.startTimeMs}" }
           .toSeq.sorted.mkString(",")
-        resetState()
+        Harness.reset(spark)
         ((t3 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, ph)
       }
       try {

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Local stand-in for the driver's t1 smoke: builds a bare session (no
   * graft-specific confs, like the driver would) and checks
-  * `SparkEntry.entry` returns rows. */
+  * `SparkEntry.entry` returns rows. The one entry point that does not go
+  * through [[Harness.session]], on purpose: it catches code that only
+  * works because the harness sets a session conf. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

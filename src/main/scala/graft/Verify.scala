@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // silence the HybridAnalyzer's tentative-resolver failure stacks
-      // (see Bench.scala) so the verify log stays readable
-      .config("spark.sql.analyzer.singlePassResolver.enabledTentatively", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=name1,name2 → dump just those (local iteration aid;
     // the driver never sets it, so its runs always cover every query)
@@ -30,13 +18,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that persist internally (MinHash shingles, c1's dedup
-      // stage) must not hold storage memory while the remaining ~100 run;
-      // localCheckpoint blocks (CC fixpoint frontiers) bypass the
-      // CacheManager, so sweep the BlockManager-level RDDs too
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // queries that persist or checkpoint internally (MinHash shingles,
+      // c1's dedup stage, CC fixpoint frontiers) must not hold storage
+      // memory while the remaining ~100 run
+      Harness.reset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

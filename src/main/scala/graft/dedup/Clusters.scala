@@ -22,25 +22,10 @@ import org.apache.spark.sql.functions._
   * reason GraphFrames checkpoints its CC iterations). */
 object Clusters {
 
-  /** Convergence metrics of the most recent fixpoint run in this JVM —
-    * (algorithm, iterations, rows still changing at exit). Exposed as a
-    * metric instead of a debug print: monitoring reads it after a run;
-    * a rising iteration count on stable data is the early signal of a
-    * growing graph diameter (time to switch to [[connectedComponentsLSS]]).
-    *
-    * COUNTING NOTE (since the round-14 seeded first round): min-label's
-    * `iterations` counts LOOP rounds only — the seed absorbs what used to
-    * be round 1, so a graph that formerly reported N reports N−1, and
-    * `maxIterations`/`switchAfter` now bound propagation DEPTH−1 (adaptive's
-    * switchAfter=8 tolerates depth-9 graphs). Kept this way deliberately:
-    * re-baselining the counter would silently shift every caller's bound. */
-  final case class FixpointStats(algorithm: String, iterations: Int, lastChanged: Long)
-  private val lastStatsRef =
-    new java.util.concurrent.atomic.AtomicReference[Option[FixpointStats]](None)
-  def lastRunStats: Option[FixpointStats] = lastStatsRef.get()
-
   /** (id, cluster_id) for every node appearing in `pairs`; cluster_id is
-    * the minimum id in the node's connected component. */
+    * the minimum id in the node's connected component. The seeded first
+    * round is not a loop round, so `maxIterations` bounds propagation
+    * depth − 1. */
   def connectedComponents(pairs: DataFrame, colA: String = "id_a", colB: String = "id_b",
                           maxIterations: Int = 50): DataFrame = {
     // materialized once; truncates the (possibly very expensive) pair-
@@ -98,7 +83,6 @@ object Clusters {
     // the returned labels ride the LAST checkpoint (stays persisted, the
     // caller consumes it); the edge index is dead weight from here on
     graft.ops.Checkpoint.release(edges)
-    lastStatsRef.set(Some(FixpointStats("min-label", i, lastChanged)))
     // min-label propagation needs ~diameter rounds; a silently-unconverged
     // exit would keep multiple representatives of one cluster with no
     // signal. Fail loudly — the caller can raise maxIterations (per-round
@@ -177,7 +161,6 @@ object Clusters {
       converged = !changed
       i += 1
     }
-    lastStatsRef.set(Some(FixpointStats("large-small-star", i, if (converged) 0L else -1L)))
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsLSS did not converge after $maxIterations rounds")

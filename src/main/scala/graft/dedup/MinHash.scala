@@ -143,15 +143,6 @@ object MinHash {
       .select(col(idCol), col("bh.band"), col("bh.band_hash"))
   }
 
-  /** Candidate pairs (id_a < id_b) sharing at least one LSH bucket. */
-  def candidatePairs(hashedShingles: DataFrame, idCol: String): DataFrame = {
-    val bands = bandRows(signatures(hashedShingles, idCol), idCol)
-    val l = bands.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val r = bands.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
-    l.join(r, Seq("band", "band_hash")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
-
   /** Exact Jaccard for given (id_a, id_b) pairs, DRIVEN FROM THE PAIRS:
     * pairs ⋈ a-shingles (on id_a) ⋈ b-shingles (on id_b, shingle). Work is
     * |pairs|·|shingles per doc|, never the full inverted-index self-join —

@@ -128,8 +128,6 @@ object VendorIngest {
   // ---- P5: unit conversions ------------------------------------------
   def gibToGb(c: Column): Column = c * Cols.GibToGb
   def mibToMb(c: Column): Column = c * Cols.MibToMb
-  def hourlyToMonthly(c: Column): Column = round(c * Cols.HoursPerMonth, 4)
-  def mbpsToGbps(c: Column): Column = c / 1000.0
 
   // ---- A5-adjacent: disk expansion -----------------------------------
   /** Disks declared `{SizeInGB, Count}` expand `Count` times

@@ -90,10 +90,6 @@ object Pull {
   def parquetSink(baseDir: String): Sink = (df, table, _) =>
     df.write.mode("overwrite").parquet(s"$baseDir/$table")
 
-  /** JDBC upsert sink factory. */
-  def jdbcSink(url: String, dialect: graft.sinks.DdlGen.Dialect): Sink =
-    (df, table, pks) => graft.sinks.Upsert.writeJdbc(df, url, table, pks, dialect)
-
   def pull(spark: SparkSession, vendor: VendorInventory, sink: Sink): Map[String, Long] =
     vendor.all(spark).map { case (table, raw) =>
       val (schema, pks) = Schemas.tables(table)

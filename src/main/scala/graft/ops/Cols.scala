@@ -13,13 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * arbitrary. Final results are cast back to double.
   */
 object Cols {
-  /** 2-decimal money column as exact decimal (prices in the test data are
-    * generated with 2 decimals; the reference rounds prices to 4 decimals,
-    * reference `tables.py:282`). */
-  def dec2(c: Column): Decimal2 = new Decimal2(c.cast(DecimalType(18, 2)))
-
-  final class Decimal2(val col: Column) extends AnyVal
-
   /** (1 - discount) as exact decimal. */
   def oneMinus(c: Column): Column = lit(1).cast(DecimalType(3, 2)) - c.cast(DecimalType(3, 2))
 

@@ -14,6 +14,4 @@ object Enums {
   val DdrGeneration = Seq("ddr3", "ddr4", "ddr5")
   val Category = Seq("processing", "memory", "storage", "network", "gpu")
   val MissingPolicy = Seq("ignore", "penalize", "require")
-
-  def isValid(domain: Seq[String], v: String): Boolean = v == null || domain.contains(v)
 }

@@ -2520,22 +2520,6 @@ object Cosine {
     semDedupFromPairs(corpus, idCol, vecCol, cellCol,
       srpPairs(corpus, idCol, vecCol, threshold, nPlanes, dim), centroidFn)
 
-  /** [[semDedupSrp]] with the SRP configuration DERIVED from the corpus
-    * size instead of pinned: nPlanes = [[autoPlanes]](count), nTables =
-    * [[autoTables]](nPlanes), pairs from [[srpPairsMulti]]. The count is
-    * one column-pruned scan (parquet answers it from footer metadata);
-    * everything downstream is identical to [[semDedupSrp]]. */
-  def semDedupSrpAuto(corpus: DataFrame, idCol: String, vecCol: String,
-                      cellCol: String, threshold: Double, dim: Int,
-                      targetOccupancy: Int = 128,
-                      centroidFn: (DataFrame, String, String) => DataFrame =
-                        cellCentroids): DataFrame = {
-    val p = autoPlanes(corpus.count(), targetOccupancy)
-    semDedupFromPairs(corpus, idCol, vecCol, cellCol,
-      srpPairsMulti(corpus, idCol, vecCol, threshold, p, dim, autoTables(p)),
-      centroidFn)
-  }
-
   /** Shared SemDeDup tail: centroid similarity (broadcast k·dim centroids),
     * connected components over the supplied candidate `pairs`, and the
     * least-central keep window. `pairs` only needs `id_a`/`id_b` columns —

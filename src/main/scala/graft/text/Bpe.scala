@@ -104,11 +104,6 @@ object Bpe {
   def train(docs: DataFrame, textCol: String, numMerges: Int): Seq[(String, String)] =
     trainFromHistogram(wordHistogram(docs, textCol), numMerges)
 
-  /** Byte-level distributed training: same vocabulary-sized histogram
-    * aggregation, merges learned over the GPT-2 byte alphabet. */
-  def trainBytes(docs: DataFrame, textCol: String, numMerges: Int): Seq[(String, String)] =
-    trainFromHistogram(wordHistogram(docs, textCol), numMerges, byteSyms)
-
   private def wordHistogram(docs: DataFrame, textCol: String): Seq[(String, Long)] =
     docs
       .select(explode(TextAnalysis.tokens(lower(col(textCol)))).as("w"))

@@ -23,12 +23,6 @@ object CorpusStats {
       round(median(TextAnalysis.tokenCount(t)), 4).as("median_tokens"))
   }
 
-  /** Per-language document counts using the marker-based language ID. */
-  def languageMix(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.groupBy(TextAnalysis.languageId(col(textCol)).as("lang_pred"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.tokenCount(col(textCol))).as("n_tokens"))
-
   /** Token-length histogram with fixed bucket width. */
   def lengthHistogram(docs: DataFrame, bucketWidth: Int, textCol: String = "text"): DataFrame =
     docs.groupBy((floor(TextAnalysis.tokenCount(col(textCol)) / bucketWidth) * bucketWidth)

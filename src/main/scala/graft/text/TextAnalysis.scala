@@ -56,11 +56,6 @@ object TextAnalysis {
     (length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") /
       greatest(length(text), lit(1)).cast("double")
 
-  /** Mean token length. */
-  def avgTokenLen(text: Column): Column =
-    (length(regexp_replace(text, "\\s+", "")).cast("double") /
-      greatest(tokenCount(text), lit(1)).cast("double"))
-
   /** Stopword ratio against the English marker list (a cheap fluency
     * signal). */
   def stopwordRatio(text: Column): Column =

@@ -8,19 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per JVM; small shuffle fan-out). */
+/** Shared local session for specs (one per JVM): the harness session at
+  * 4 cores, whatever `SPARK_GRAFT_CPUS` says — the specs' partition
+  * counts are calibrated to 4 shuffle partitions. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("4")
 }
 
 trait SparkSpec extends AnyFunSuite {
