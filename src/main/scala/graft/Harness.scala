@@ -52,9 +52,11 @@ object Harness {
       // fixture dir. Benign, but indistinguishable from a real crash in
       // the log; run the stable analyzer only.
       .config("spark.sql.analyzer.singlePassResolver.enabledTentatively", "false")
+      // applied as the context starts, so its own start-up INFO lines
+      // (SparkContext, ResourceUtils, BlockManager, ...) are not printed
+      .config("spark.log.level", "WARN")
     if (ramLocalDir) localDir().foreach(builder.config("spark.local.dir", _))
     val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Releasing a localCheckpoint'ed frontier (graft.ops.Checkpoint.release,
     // and [[reset]]) always logs RDD.unpersist's "was locally checkpointed,
     // its lineage has been truncated" WARN — hard-wired in Spark for ANY

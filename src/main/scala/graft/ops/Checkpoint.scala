@@ -26,8 +26,10 @@ object Checkpoint {
     * itself materialized (the next round's `localCheckpoint(eager=true)` /
     * convergence `count()`), so the released blocks can never be needed
     * again. Spark logs the WARN unconditionally for any local-checkpoint
-    * release — it cannot see the invariant. Bench filters the rdd logger;
-    * the WARN remains visible in normal sessions by design. */
+    * release — it cannot see the invariant. [[graft.Harness.session]]
+    * filters the rdd logger to ERROR for every entry point and the specs;
+    * the WARN remains visible in sessions built elsewhere (Smoke's bare
+    * session). */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case l: LogicalRDD => l.rdd

@@ -1,9 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -23,17 +23,31 @@ import org.apache.spark.sql.types._
   * Duplicate hashes keep ONE entry, resolved to the smallest value — a
   * deterministic policy, so even colliding inputs stay a function of the
   * set (unreachable with the unique-id md5 keys the in-repo callers
-  * use). */
-case class BottomKAgg(hash: Expression, value: Expression, k: Int,
+  * use).
+  *
+  * `prettyName`, the SQL name, fixes the inputs (`children`) and the
+  * output:
+  *  - `bottom_k_values`: (hash, value) in, the sampled values out;
+  *  - `bottom_k_state`: (hash, value) in, the serialized sample out
+  *    (binary (hash, value) pairs) — store one per day/shard/source:
+  *    incremental per-group quantile maintenance without re-reading old
+  *    data;
+  *  - `bottom_k_merge`: stored samples in, the sampled values of their
+  *    union out. Min-k of a union is exact (the k smallest of A ∪ B are
+  *    among the per-part k smallest), so merge(sample(A), sample(B)) ≡
+  *    sample(A ∪ B) — the merged quantile card equals the direct one
+  *    bit-for-bit. */
+case class BottomKAgg(children: Seq[Expression], k: Int,
+                      override val prettyName: String = "bottom_k_values",
                       mutableAggBufferOffset: Int = 0,
                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, java.lang.Long]]
-    with BinaryLike[Expression] {
+    extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, java.lang.Long]] {
 
   require(k >= 1, "k must be >= 1")
-
-  override def left: Expression = hash
-  override def right: Expression = value
+  require(Seq("bottom_k_values", "bottom_k_state", "bottom_k_merge").contains(prettyName),
+    s"not a bottom-k function: $prettyName")
+  require(children.size == (if (prettyName == "bottom_k_merge") 1 else 2),
+    s"$prettyName: wrong number of inputs")
 
   override def createAggregationBuffer(): java.util.TreeMap[java.lang.Long, java.lang.Long] =
     new java.util.TreeMap[java.lang.Long, java.lang.Long]()
@@ -53,10 +67,13 @@ case class BottomKAgg(hash: Expression, value: Expression, k: Int,
 
   override def update(buffer: java.util.TreeMap[java.lang.Long, java.lang.Long],
                       input: InternalRow): java.util.TreeMap[java.lang.Long, java.lang.Long] = {
-    val h = hash.eval(input)
-    val v = value.eval(input)
-    if (h != null && v != null)
-      add(buffer, h.asInstanceOf[Long], v.asInstanceOf[Long])
+    children.head.eval(input) match {
+      case null =>
+      case state: Array[Byte] => merge(buffer, deserialize(state))
+      case h: Long =>
+        val v = children(1).eval(input)
+        if (v != null) add(buffer, h, v.asInstanceOf[Long])
+    }
     buffer
   }
 
@@ -70,13 +87,15 @@ case class BottomKAgg(hash: Expression, value: Expression, k: Int,
     buffer
   }
 
-  override def eval(buffer: java.util.TreeMap[java.lang.Long, java.lang.Long]): Any = {
-    val out = new Array[Any](buffer.size)
-    val it = buffer.values().iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next().longValue(); i += 1 }
-    new GenericArrayData(out)
-  }
+  override def eval(buffer: java.util.TreeMap[java.lang.Long, java.lang.Long]): Any =
+    if (prettyName == "bottom_k_state") serialize(buffer)
+    else {
+      val out = new Array[Any](buffer.size)
+      val it = buffer.values().iterator()
+      var i = 0
+      while (it.hasNext) { out(i) = it.next().longValue(); i += 1 }
+      new GenericArrayData(out)
+    }
 
   override def serialize(buffer: java.util.TreeMap[java.lang.Long, java.lang.Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(buffer.size * 16)
@@ -94,121 +113,41 @@ case class BottomKAgg(hash: Expression, value: Expression, k: Int,
     out
   }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType =
+    if (prettyName == "bottom_k_state") BinaryType
+    else ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "bottom_k_values"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (hash.dataType, value.dataType) match {
-      case (LongType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (bigint hash, bigint value), got $other")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = children.map(_.dataType) match {
+    case Seq(LongType, LongType) | Seq(BinaryType) => TypeCheckResult.TypeCheckSuccess
+    case Seq(h, v) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (bigint hash, bigint value), got ${(h, v)}")
+    case Seq(other) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires binary sample state, got ${other.simpleString}")
+  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BottomKAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): BottomKAgg =
     copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): BottomKAgg =
-    copy(hash = newLeft, value = newRight)
-}
-
-/** The sample STATE as a storable value (binary (hash, value) pairs) —
-  * store one per day/shard/source, merge later with [[BottomKMergeAgg]]:
-  * incremental per-group quantile maintenance without re-reading old
-  * data (the [[KmvStateAgg]]/[[KmvMergeAgg]] pattern for quantiles). */
-case class BottomKStateAgg(hash: Expression, value: Expression, k: Int,
-                           mutableAggBufferOffset: Int = 0,
-                           inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, java.lang.Long]]
-    with BinaryLike[Expression] {
-  private val inner = BottomKAgg(hash, value, k)
-  override def left: Expression = hash
-  override def right: Expression = value
-  override def createAggregationBuffer() = inner.createAggregationBuffer()
-  override def update(b: java.util.TreeMap[java.lang.Long, java.lang.Long],
-                      in: InternalRow) = inner.update(b, in)
-  override def merge(b: java.util.TreeMap[java.lang.Long, java.lang.Long],
-                     o: java.util.TreeMap[java.lang.Long, java.lang.Long]) =
-    inner.merge(b, o)
-  override def eval(b: java.util.TreeMap[java.lang.Long, java.lang.Long]): Any =
-    serialize(b)
-  override def serialize(b: java.util.TreeMap[java.lang.Long, java.lang.Long]) =
-    inner.serialize(b)
-  override def deserialize(bytes: Array[Byte]) = inner.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "bottom_k_state"
-  override def checkInputDataTypes() = inner.checkInputDataTypes()
-  override def withNewMutableAggBufferOffset(o: Int): BottomKStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BottomKStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BottomKStateAgg =
-    copy(hash = l, value = r)
-}
-
-/** Union of STORED samples: min-k of a union is exact (the k smallest
-  * of A ∪ B are among the per-part k smallest), so
-  * merge(sample(A), sample(B)) ≡ sample(A ∪ B) — the merged quantile
-  * card equals the direct one bit-for-bit. */
-case class BottomKMergeAgg(child: Expression, k: Int,
-                           mutableAggBufferOffset: Int = 0,
-                           inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, java.lang.Long]]
-    with UnaryLike[Expression] {
-  private val inner = BottomKAgg(child, child, k) // only (de)serialize/merge used
-  override def createAggregationBuffer() = inner.createAggregationBuffer()
-  override def update(b: java.util.TreeMap[java.lang.Long, java.lang.Long],
-                      in: InternalRow) = child.eval(in) match {
-    case null => b
-    case bytes: Array[Byte] => inner.merge(b, inner.deserialize(bytes))
-  }
-  override def merge(b: java.util.TreeMap[java.lang.Long, java.lang.Long],
-                     o: java.util.TreeMap[java.lang.Long, java.lang.Long]) =
-    inner.merge(b, o)
-  override def eval(b: java.util.TreeMap[java.lang.Long, java.lang.Long]): Any =
-    inner.eval(b)
-  override def serialize(b: java.util.TreeMap[java.lang.Long, java.lang.Long]) =
-    inner.serialize(b)
-  override def deserialize(bytes: Array[Byte]) = inner.deserialize(bytes)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "bottom_k_merge"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires binary sample state, got ${other.simpleString}")
-    }
-  override def withNewMutableAggBufferOffset(o: Int): BottomKMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BottomKMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): BottomKMergeAgg =
-    copy(child = c)
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): BottomKAgg =
+    copy(children = newChildren)
 }
 
 object BottomKAgg {
   import org.apache.spark.sql.Column
 
+  private def agg(inputs: Seq[Column], k: Int, name: String): Column =
+    Exprs.toColumn(BottomKAgg(inputs.map(Exprs.toExpression), k, name).toAggregateExpression())
+
   /** Column API: per-group sampled values ordered by hash. */
   def bottomKValues(hash: Column, value: Column, k: Int): Column =
-    Exprs.toColumn(BottomKAgg(Exprs.toExpression(hash),
-      Exprs.toExpression(value), k).toAggregateExpression())
+    agg(Seq(hash, value), k, "bottom_k_values")
 
   /** Storable sample state (binary). */
   def bottomKState(hash: Column, value: Column, k: Int): Column =
-    Exprs.toColumn(BottomKStateAgg(Exprs.toExpression(hash),
-      Exprs.toExpression(value), k).toAggregateExpression())
+    agg(Seq(hash, value), k, "bottom_k_state")
 
   /** Sampled values over a union of stored states. */
-  def bottomKMerge(state: Column, k: Int): Column =
-    Exprs.toColumn(BottomKMergeAgg(Exprs.toExpression(state), k)
-      .toAggregateExpression())
+  def bottomKMerge(state: Column, k: Int): Column = agg(Seq(state), k, "bottom_k_merge")
 }

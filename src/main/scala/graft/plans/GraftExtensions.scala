@@ -4,12 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions wiring: registers the engine's SQL surface —
-  * `canonical_json(struct)` / `canonical_row_hash(struct)` (Python-parity
-  * serialization), `dot_product(a, b)` (codegen'd vector kernel),
-  * `simhash(token_hashes[, bits])` (one-pass fingerprint), and
-  * `kmv_distinct(h, k)` (bounded-state cardinality sketch aggregate) — so
-  * `spark.sql(...)` users get the same operators as the Column API.
+/** SparkSessionExtensions wiring: registers the engine's SQL surface so
+  * `spark.sql(...)` users get the same operators as the Column API —
+  *  - scalar: `canonical_json(struct)` / `canonical_row_hash(struct)`
+  *    (Python-parity serialization), `dot_product(a, b)` (codegen'd
+  *    vector kernel), `simhash(token_hashes[, bits])` (one-pass
+  *    fingerprint), `poly_fingerprints(token_hashes, w)` (rolling window
+  *    hashes) and `bloom_contains(state, hash)` (membership probe);
+  *  - bounded-state sketch aggregates, each with a storable state and a
+  *    merge of stored states: `kmv_distinct` / `kmv_state` / `kmv_merge`
+  *    (cardinality), `bottom_k_values` / `bottom_k_state` /
+  *    `bottom_k_merge` (per-group sample), `mg_summary` / `mg_merge`
+  *    (heavy hitters), `bloom_state` / `bloom_merge` (membership).
   *
   * Use at session build time
   * (`.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
@@ -35,112 +41,60 @@ object GraftExtensions {
       org.apache.spark.sql.catalyst.expressions.Cast(e,
         org.apache.spark.sql.types.BinaryType))
 
+  /** One registered function. `signature` gives the SQL name and heads the
+    * error for an argument list `build` does not match (`takes` says which
+    * it accepts); `build` gets the name, for the sketch aggregates whose
+    * input and output it fixes. Aggregates are built bare: the analyzer
+    * wraps them in AggregateExpression at the use site (as built-in
+    * sum/avg). */
+  private def fn(signature: String, takes: String, cls: Class[_])(
+      build: String => PartialFunction[Seq[Expression], Expression]) = {
+    val name = signature.takeWhile(_ != '(')
+    val builder = build(name)
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => builder.applyOrElse(args, (_: Seq[Expression]) =>
+        throw new IllegalArgumentException(s"$signature takes $takes")))
+  }
+
+  private val one = "exactly 1 argument"
+  private val two = "exactly 2 arguments"
+  private val three = "exactly 3 arguments"
+
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("canonical_json"),
-      new ExpressionInfo(classOf[CanonicalJsonExpr].getName, "canonical_json"),
-      (children: Seq[Expression]) => CanonicalJsonExpr(children.head)),
-    (FunctionIdentifier("canonical_row_hash"),
-      new ExpressionInfo(classOf[CanonicalJsonExpr].getName, "canonical_row_hash"),
-      (children: Seq[Expression]) => sha1Of(CanonicalJsonExpr(children.head))),
-    (FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProductExpr(children(0), children(1))),
-    (FunctionIdentifier("simhash"),
-      new ExpressionInfo(classOf[SimHashExpr].getName, "simhash"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr) => SimHashExpr(arr)
-        case Seq(arr, bits) => SimHashExpr(arr, litInt(bits, "simhash bits"))
-        case _ => throw new IllegalArgumentException(
-          "simhash(token_hashes[, bits]) takes 1 or 2 arguments")
-      }),
-    // aggregate: the registry takes the bare AggregateFunction; the
-    // analyzer wraps it in AggregateExpression at the use site (same as
-    // built-in sum/avg)
-    (FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_distinct"),
-      (children: Seq[Expression]) => children match {
-        case Seq(h, k) => KmvSketchAgg(h, litInt(k, "kmv_distinct k"))
-        case _ => throw new IllegalArgumentException(
-          "kmv_distinct(hash, k) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("bottom_k_values"),
-      new ExpressionInfo(classOf[BottomKAgg].getName, "bottom_k_values"),
-      (children: Seq[Expression]) => children match {
-        case Seq(h, v, k) => BottomKAgg(h, v, litInt(k, "bottom_k_values k"))
-        case _ => throw new IllegalArgumentException(
-          "bottom_k_values(hash, value, k) takes exactly 3 arguments")
-      }),
-    (FunctionIdentifier("bottom_k_state"),
-      new ExpressionInfo(classOf[BottomKStateAgg].getName, "bottom_k_state"),
-      (children: Seq[Expression]) => children match {
-        case Seq(h, v, k) => BottomKStateAgg(h, v, litInt(k, "bottom_k_state k"))
-        case _ => throw new IllegalArgumentException(
-          "bottom_k_state(hash, value, k) takes exactly 3 arguments")
-      }),
-    (FunctionIdentifier("bottom_k_merge"),
-      new ExpressionInfo(classOf[BottomKMergeAgg].getName, "bottom_k_merge"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, k) => BottomKMergeAgg(s, litInt(k, "bottom_k_merge k"))
-        case _ => throw new IllegalArgumentException(
-          "bottom_k_merge(state, k) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("kmv_state"),
-      new ExpressionInfo(classOf[KmvStateAgg].getName, "kmv_state"),
-      (children: Seq[Expression]) => children match {
-        case Seq(h, k) => KmvStateAgg(h, litInt(k, "kmv_state k"))
-        case _ => throw new IllegalArgumentException(
-          "kmv_state(hash, k) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("kmv_merge"),
-      new ExpressionInfo(classOf[KmvMergeAgg].getName, "kmv_merge"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, k) => KmvMergeAgg(s, litInt(k, "kmv_merge k"))
-        case _ => throw new IllegalArgumentException(
-          "kmv_merge(sketch, k) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("bloom_state"),
-      new ExpressionInfo(classOf[BloomStateAgg].getName, "bloom_state"),
-      (children: Seq[Expression]) => children match {
-        case Seq(h, m, j) => BloomStateAgg(h,
-          litInt(m, "bloom_state numBits"), litInt(j, "bloom_state numHashes"))
-        case _ => throw new IllegalArgumentException(
-          "bloom_state(hash, numBits, numHashes) takes exactly 3 arguments")
-      }),
-    (FunctionIdentifier("bloom_merge"),
-      new ExpressionInfo(classOf[BloomMergeAgg].getName, "bloom_merge"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s) => BloomMergeAgg(s)
-        case _ => throw new IllegalArgumentException(
-          "bloom_merge(state) takes exactly 1 argument")
-      }),
-    (FunctionIdentifier("poly_fingerprints"),
-      new ExpressionInfo(classOf[PolyFingerprintExpr].getName, "poly_fingerprints"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr, w) => PolyFingerprintExpr(arr, litInt(w, "poly_fingerprints w"))
-        case _ => throw new IllegalArgumentException(
-          "poly_fingerprints(token_hashes, w) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("mg_summary"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "mg_summary"),
-      (children: Seq[Expression]) => children match {
-        case Seq(h, k) => MisraGriesAgg(h, litInt(k, "mg_summary k"))
-        case _ => throw new IllegalArgumentException(
-          "mg_summary(hash, k) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("mg_merge"),
-      new ExpressionInfo(classOf[MgMergeAgg].getName, "mg_merge"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, k) => MgMergeAgg(s, litInt(k, "mg_merge k"))
-        case _ => throw new IllegalArgumentException(
-          "mg_merge(summary, k) takes exactly 2 arguments")
-      }),
-    (FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-      (children: Seq[Expression]) => children match {
-        case Seq(s, h) => BloomContains(s, h)
-        case _ => throw new IllegalArgumentException(
-          "bloom_contains(state, hash) takes exactly 2 arguments")
-      }))
+    fn("canonical_json(struct)", one, classOf[CanonicalJsonExpr]) { _ => {
+      case Seq(s) => CanonicalJsonExpr(s) } },
+    fn("canonical_row_hash(struct)", one, classOf[CanonicalJsonExpr]) { _ => {
+      case Seq(s) => sha1Of(CanonicalJsonExpr(s)) } },
+    fn("dot_product(a, b)", two, classOf[DotProductExpr]) { _ => {
+      case Seq(a, b) => DotProductExpr(a, b) } },
+    fn("simhash(token_hashes[, bits])", "1 or 2 arguments", classOf[SimHashExpr]) { n => {
+      case Seq(arr) => SimHashExpr(arr)
+      case Seq(arr, bits) => SimHashExpr(arr, litInt(bits, s"$n bits")) } },
+    fn("poly_fingerprints(token_hashes, w)", two, classOf[PolyFingerprintExpr]) { n => {
+      case Seq(arr, w) => PolyFingerprintExpr(arr, litInt(w, s"$n w")) } },
+    fn("bloom_contains(state, hash)", two, classOf[BloomContains]) { _ => {
+      case Seq(s, h) => BloomContains(s, h) } },
+    fn("kmv_distinct(hash, k)", two, classOf[KmvSketchAgg]) { n => {
+      case Seq(h, k) => KmvSketchAgg(h, litInt(k, s"$n k"), n) } },
+    fn("kmv_state(hash, k)", two, classOf[KmvSketchAgg]) { n => {
+      case Seq(h, k) => KmvSketchAgg(h, litInt(k, s"$n k"), n) } },
+    fn("kmv_merge(sketch, k)", two, classOf[KmvSketchAgg]) { n => {
+      case Seq(s, k) => KmvSketchAgg(s, litInt(k, s"$n k"), n) } },
+    fn("bottom_k_values(hash, value, k)", three, classOf[BottomKAgg]) { n => {
+      case Seq(h, v, k) => BottomKAgg(Seq(h, v), litInt(k, s"$n k"), n) } },
+    fn("bottom_k_state(hash, value, k)", three, classOf[BottomKAgg]) { n => {
+      case Seq(h, v, k) => BottomKAgg(Seq(h, v), litInt(k, s"$n k"), n) } },
+    fn("bottom_k_merge(state, k)", two, classOf[BottomKAgg]) { n => {
+      case Seq(s, k) => BottomKAgg(Seq(s), litInt(k, s"$n k"), n) } },
+    fn("mg_summary(hash, k)", two, classOf[MisraGriesAgg]) { n => {
+      case Seq(h, k) => MisraGriesAgg(h, litInt(k, s"$n k"), n) } },
+    fn("mg_merge(summary, k)", two, classOf[MisraGriesAgg]) { n => {
+      case Seq(s, k) => MisraGriesAgg(s, litInt(k, s"$n k"), n) } },
+    fn("bloom_state(hash, numBits, numHashes)", three, classOf[BloomSketchAgg]) { n => {
+      case Seq(h, m, j) =>
+        BloomSketchAgg(h, litInt(m, s"$n numBits"), litInt(j, s"$n numHashes"), n) } },
+    fn("bloom_merge(state)", one, classOf[BloomSketchAgg]) { n => {
+      case Seq(s) => BloomSketchAgg(s, 0, 0, n) } })
 
   private def litInt(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -29,50 +30,60 @@ import org.apache.spark.sql.types._
   * (`conv(substring(md5(x),1,15),16,10)`); domain [0, 2^60). Output: the
   * estimate as double — exact `|S|` while fewer than k distinct values
   * have been seen.
+  *
+  * `prettyName`, the SQL name, fixes the input and the output:
+  *  - `kmv_distinct`: hashes in, the estimate out;
+  *  - `kmv_state`: hashes in, the serialized state out (binary, ≤ 8k
+  *    bytes) — store one sketch per day/shard/source and union them
+  *    later, incremental data-card maintenance without re-touching old
+  *    data;
+  *  - `kmv_merge`: stored states in, the estimate over the union of
+  *    everything they saw out. Union of k-minimum sets is exact (the k
+  *    smallest of a union are among the per-part k smallest), so
+  *    merge(sketch(A), sketch(B)) ≡ sketch(A ∪ B) — bit-for-bit.
   */
 case class KmvSketchAgg(child: Expression, k: Int,
+                        override val prettyName: String = "kmv_distinct",
                         mutableAggBufferOffset: Int = 0,
                         inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
     with UnaryLike[Expression] {
 
   require(k >= 2, "k must be >= 2")
+  require(Seq("kmv_distinct", "kmv_state", "kmv_merge").contains(prettyName),
+    s"not a KMV function: $prettyName")
 
   private val twoPow60 = 1152921504606846976.0 // hash domain size as double
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
     new java.util.TreeSet[java.lang.Long]()
 
-  override def update(buffer: java.util.TreeSet[java.lang.Long],
-                      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      // only insert when it would make the k-minimum set smaller; TreeSet
-      // dedups, pollLast keeps the state bounded at k longs
-      if (buffer.size < k || h < buffer.last()) {
-        buffer.add(h)
-        if (buffer.size > k) buffer.pollLast()
-      }
+  // only insert when it would make the k-minimum set smaller; TreeSet
+  // dedups, pollLast keeps the state bounded at k longs
+  private def add(buffer: java.util.TreeSet[java.lang.Long], h: Long): Unit =
+    if (buffer.size < k || h < buffer.last()) {
+      buffer.add(h)
+      if (buffer.size > k) buffer.pollLast()
     }
-    buffer
-  }
+
+  override def update(buffer: java.util.TreeSet[java.lang.Long],
+                      input: InternalRow): java.util.TreeSet[java.lang.Long] =
+    child.eval(input) match {
+      case null => buffer
+      case state: Array[Byte] => merge(buffer, deserialize(state))
+      case h: Long => add(buffer, h); buffer
+    }
 
   override def merge(buffer: java.util.TreeSet[java.lang.Long],
                      other: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
     val it = other.iterator()
-    while (it.hasNext) {
-      val h = it.next()
-      if (buffer.size < k || h < buffer.last()) {
-        buffer.add(h)
-        if (buffer.size > k) buffer.pollLast()
-      }
-    }
+    while (it.hasNext) add(buffer, it.next())
     buffer
   }
 
   override def eval(buffer: java.util.TreeSet[java.lang.Long]): Any =
-    if (buffer.size < k) buffer.size.toDouble
+    if (prettyName == "kmv_state") serialize(buffer)
+    else if (buffer.size < k) buffer.size.toDouble
     else (k - 1).toDouble * twoPow60 / buffer.last().toDouble
 
   override def serialize(buffer: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
@@ -89,15 +100,16 @@ case class KmvSketchAgg(child: Expression, k: Int,
     out
   }
 
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = if (prettyName == "kmv_state") BinaryType else DoubleType
   override def nullable: Boolean = false
-  override def prettyName: String = "kmv_distinct"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    (child.dataType, prettyName == "kmv_merge") match {
+      case (LongType, false) | (BinaryType, true) => TypeCheckResult.TypeCheckSuccess
+      case (other, false) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires bigint (a 60-bit hash), got ${other.simpleString}")
+      case (other, true) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires binary sketch state, got ${other.simpleString}")
     }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
@@ -108,96 +120,19 @@ case class KmvSketchAgg(child: Expression, k: Int,
     copy(child = newChild)
 }
 
-/** The sketch STATE as a storable value: same k-minimum accumulation,
-  * but eval returns the serialized state (binary, ≤ 8k bytes) instead of
-  * the estimate. Store one sketch per day/shard/source, then union them
-  * later with [[KmvMergeAgg]] — incremental data-card maintenance
-  * without re-touching old data. */
-case class KmvStateAgg(child: Expression, k: Int,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-    with UnaryLike[Expression] {
-  private val inner = KmvSketchAgg(child, k)
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    inner.createAggregationBuffer()
-  override def update(b: java.util.TreeSet[java.lang.Long], in: InternalRow) =
-    inner.update(b, in)
-  override def merge(b: java.util.TreeSet[java.lang.Long],
-                     o: java.util.TreeSet[java.lang.Long]) = inner.merge(b, o)
-  override def eval(b: java.util.TreeSet[java.lang.Long]): Any = serialize(b)
-  override def serialize(b: java.util.TreeSet[java.lang.Long]): Array[Byte] =
-    inner.serialize(b)
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] =
-    inner.deserialize(bytes)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "kmv_state"
-  override def checkInputDataTypes() = inner.checkInputDataTypes()
-  override def withNewMutableAggBufferOffset(o: Int): KmvStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KmvStateAgg =
-    copy(child = c)
-}
-
-/** Union of STORED sketches: input is the binary state [[KmvStateAgg]]
-  * emits; output is the estimate over the union of everything those
-  * sketches saw. Union of k-minimum sets is exact (the k smallest of a
-  * union are among the per-part k smallest), so
-  * merge(sketch(A), sketch(B)) ≡ sketch(A ∪ B) — bit-for-bit. */
-case class KmvMergeAgg(child: Expression, k: Int,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-    with UnaryLike[Expression] {
-  private val inner = KmvSketchAgg(child, k)
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    inner.createAggregationBuffer()
-  override def update(b: java.util.TreeSet[java.lang.Long], in: InternalRow) = {
-    child.eval(in) match {
-      case null => b
-      case bytes: Array[Byte] => inner.merge(b, inner.deserialize(bytes))
-    }
-  }
-  override def merge(b: java.util.TreeSet[java.lang.Long],
-                     o: java.util.TreeSet[java.lang.Long]) = inner.merge(b, o)
-  override def eval(b: java.util.TreeSet[java.lang.Long]): Any = inner.eval(b)
-  override def serialize(b: java.util.TreeSet[java.lang.Long]): Array[Byte] =
-    inner.serialize(b)
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] =
-    inner.deserialize(bytes)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def prettyName: String = "kmv_merge"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires binary sketch state, got ${other.simpleString}")
-    }
-  override def withNewMutableAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KmvMergeAgg =
-    copy(child = c)
-}
-
 object KmvSketchAgg {
   import org.apache.spark.sql.Column
 
+  private def agg(c: Column, k: Int, name: String): Column =
+    Exprs.toColumn(KmvSketchAgg(Exprs.toExpression(c), k, name).toAggregateExpression())
+
   /** Column API: `kmvDistinct($"h", 256)` — aggregate usable anywhere a
     * built-in aggregate is (groupBy.agg, window, SQL via extensions). */
-  def kmvDistinct(c: Column, k: Int): Column =
-    Exprs.toColumn(KmvSketchAgg(Exprs.toExpression(c), k).toAggregateExpression())
+  def kmvDistinct(c: Column, k: Int): Column = agg(c, k, "kmv_distinct")
 
   /** Storable sketch state (binary). */
-  def kmvState(c: Column, k: Int): Column =
-    Exprs.toColumn(KmvStateAgg(Exprs.toExpression(c), k).toAggregateExpression())
+  def kmvState(c: Column, k: Int): Column = agg(c, k, "kmv_state")
 
   /** Estimate over a union of stored sketch states. */
-  def kmvMerge(c: Column, k: Int): Column =
-    Exprs.toColumn(KmvMergeAgg(Exprs.toExpression(c), k).toAggregateExpression())
+  def kmvMerge(c: Column, k: Int): Column = agg(c, k, "kmv_merge")
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Misra-Gries heavy-hitter summary as a native Catalyst aggregate
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * PROVEN superset of every item above the threshold (for T > n/(k+1)),
   * the composed result is exact and oracle-gatable, the same
   * exact-over-approximate composition as the Bloom prefilter
-  * ([[BloomStateAgg]]). The summary itself is also mergeable across
+  * ([[BloomSketchAgg]]). The summary itself is also mergeable across
   * shards/days (counter-wise sum, then subtract the (k+1)-th largest
   * counter — the PODS'12 rule — so stored per-shard summaries compose
   * without re-reading data).
@@ -34,35 +34,41 @@ import org.apache.spark.sql.types._
   * bytes. Gated results must therefore always go through the exact
   * confirm step; the raw summary is for diagnostics and candidate
   * routing only.
+  *
+  * `prettyName`, the SQL name, fixes the input: `mg_summary` reads 64-bit
+  * keys; `mg_merge` reads the summaries `mg_summary` emits (one row per
+  * shard/day) and unions them by that rule. Per-merge error adds at most
+  * the subtracted trim value, keeping the combined guarantee: any item
+  * above N_total/(k+1) survives the union.
   */
 case class MisraGriesAgg(child: Expression, k: Int,
+                         override val prettyName: String = "mg_summary",
                          mutableAggBufferOffset: Int = 0,
                          inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[java.util.HashMap[java.lang.Long, java.lang.Long]]
     with UnaryLike[Expression] {
 
   require(k >= 1, "k must be >= 1")
+  require(Seq("mg_summary", "mg_merge").contains(prettyName),
+    s"not a Misra-Gries function: $prettyName")
 
   private type Buf = java.util.HashMap[java.lang.Long, java.lang.Long]
 
   override def createAggregationBuffer(): Buf = new Buf()
 
   override def update(m: Buf, input: InternalRow): Buf = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = java.lang.Long.valueOf(v.asInstanceOf[Long])
-      val cur = m.get(h)
-      if (cur != null) m.put(h, cur + 1L)
-      else if (m.size < k) m.put(h, 1L)
-      else {
-        // decrement-all: removes one unit from k+1 distinct items (the
-        // arriving one included) — the source of the n/(k+1) error bound
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getValue == 1L) it.remove() else e.setValue(e.getValue - 1L)
+    child.eval(input) match {
+      case null =>
+      case summary: ArrayData =>
+        val other = new Buf()
+        var i = 0
+        while (i < summary.numElements()) {
+          val row = summary.getStruct(i, 2)
+          other.put(row.getLong(0), row.getLong(1))
+          i += 1
         }
-      }
+        merge(m, other)
+      case h: Long => MisraGriesAgg.offer(m, h, k)
     }
     m
   }
@@ -121,12 +127,17 @@ case class MisraGriesAgg(child: Expression, k: Int,
 
   override def dataType: DataType = MisraGriesAgg.resultType
   override def nullable: Boolean = false
-  override def prettyName: String = "mg_summary"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, prettyName) match {
+    case (LongType, "mg_summary") => TypeCheckResult.TypeCheckSuccess
+    case (ArrayType(StructType(Array(
+      StructField(_, LongType, _, _), StructField(_, LongType, _, _))), _), "mg_merge") =>
+      TypeCheckResult.TypeCheckSuccess
+    case (other, "mg_summary") => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires bigint (a 64-bit key/hash), got ${other.simpleString}")
+    case (other, _) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<struct<h:bigint,cnt_lb:bigint>> summaries, " +
+        s"got ${other.simpleString}")
   }
 
   override def withNewMutableAggBufferOffset(o: Int): MisraGriesAgg =
@@ -137,54 +148,6 @@ case class MisraGriesAgg(child: Expression, k: Int,
     copy(child = c)
 }
 
-/** Union of STORED summaries: input is the `array<struct<h, cnt_lb>>`
-  * [[MisraGriesAgg]] emits (one row per shard/day); counters sum
-  * per key, then the PODS'12 trim restores the k bound. Per-merge error
-  * adds at most the subtracted trim value, keeping the combined
-  * guarantee: any item above N_total/(k+1) survives the union. */
-case class MgMergeAgg(child: Expression, k: Int,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.HashMap[java.lang.Long, java.lang.Long]]
-    with UnaryLike[Expression] {
-  private val inner = MisraGriesAgg(child, k)
-  private type Buf = java.util.HashMap[java.lang.Long, java.lang.Long]
-  override def createAggregationBuffer(): Buf = inner.createAggregationBuffer()
-  override def update(m: Buf, input: InternalRow): Buf = child.eval(input) match {
-    case null => m
-    case arr: org.apache.spark.sql.catalyst.util.ArrayData =>
-      val other = new Buf()
-      var i = 0
-      while (i < arr.numElements()) {
-        val row = arr.getStruct(i, 2)
-        other.put(row.getLong(0), row.getLong(1))
-        i += 1
-      }
-      inner.merge(m, other)
-  }
-  override def merge(a: Buf, b: Buf): Buf = inner.merge(a, b)
-  override def eval(m: Buf): Any = inner.eval(m)
-  override def serialize(m: Buf): Array[Byte] = inner.serialize(m)
-  override def deserialize(bytes: Array[Byte]): Buf = inner.deserialize(bytes)
-  override def dataType: DataType = MisraGriesAgg.resultType
-  override def nullable: Boolean = false
-  override def prettyName: String = "mg_merge"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(
-      StructField(_, LongType, _, _), StructField(_, LongType, _, _))), _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<h:bigint,cnt_lb:bigint>> summaries, " +
-        s"got ${other.simpleString}")
-  }
-  override def withNewMutableAggBufferOffset(o: Int): MgMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MgMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): MgMergeAgg =
-    copy(child = c)
-}
-
 object MisraGriesAgg {
   import org.apache.spark.sql.Column
 
@@ -192,12 +155,33 @@ object MisraGriesAgg {
     StructField("h", LongType, nullable = false),
     StructField("cnt_lb", LongType, nullable = false))), containsNull = false)
 
+  /** The Misra-Gries step for one arriving key `h` against at most `k`
+    * counters — the batch aggregate and the streaming shards
+    * ([[graft.streaming.StreamingHeavyHitters]]) both count through it. */
+  def offer(m: java.util.Map[java.lang.Long, java.lang.Long], h: Long, k: Int): Unit = {
+    val key = java.lang.Long.valueOf(h)
+    val cur = m.get(key)
+    if (cur != null) m.put(key, cur + 1L)
+    else if (m.size < k) m.put(key, 1L)
+    else {
+      // decrement-all: removes one unit from k+1 distinct items (the
+      // arriving one included) — the source of the n/(k+1) error bound
+      val it = m.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getValue == 1L) it.remove() else e.setValue(e.getValue - 1L)
+      }
+    }
+  }
+
+  private def agg(c: Column, k: Int, name: String): Column =
+    Exprs.toColumn(MisraGriesAgg(Exprs.toExpression(c), k, name).toAggregateExpression())
+
   /** `mgSummary($"h", 256)` — heavy-hitter candidates over a 64-bit key
     * column; guaranteed superset of items with count > n/(k+1). */
-  def mgSummary(c: Column, k: Int): Column =
-    Exprs.toColumn(MisraGriesAgg(Exprs.toExpression(c), k).toAggregateExpression())
+  def mgSummary(c: Column, k: Int): Column = agg(c, k, "mg_summary")
 
-  /** Union of stored summaries at the same k. */
-  def mgMerge(c: Column, k: Int): Column =
-    Exprs.toColumn(MgMergeAgg(Exprs.toExpression(c), k).toAggregateExpression())
+  /** Union of stored summaries at the same k. No query calls it: it is
+    * the Column twin of the registered SQL function `mg_merge`. */
+  def mgMerge(c: Column, k: Int): Column = agg(c, k, "mg_merge")
 }

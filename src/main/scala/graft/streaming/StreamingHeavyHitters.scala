@@ -1,7 +1,10 @@
 package graft.streaming
 
+import graft.plans.MisraGriesAgg
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import scala.jdk.CollectionConverters._
 
 /** Streaming heavy hitters — the incremental counterpart of the batch
   * t17 operator: keys arrive on a stream and each micro-batch refreshes
@@ -13,9 +16,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * BY KEY, an item's entire mass lands in one shard, and the shard-local
   * guarantee implies the global one: any item with total count
   * > N_total/(k+1) ≥ N_shard/(k+1) survives its shard's summary. Reading
-  * the per-shard summaries back is the same union [[graft.plans.MgMergeAgg]]
-  * performs for stored batch summaries (counter-wise sum + trim) — or,
-  * for candidate routing, just the concatenation (still a superset).
+  * the per-shard summaries back is the same union `mg_merge`
+  * ([[graft.plans.MisraGriesAgg]]) performs for stored batch summaries
+  * (counter-wise sum + trim) — or, for candidate routing, just the
+  * concatenation (still a superset). Each shard counts through the batch
+  * aggregate's own update rule, [[graft.plans.MisraGriesAgg.offer]].
   *
   * Emission is `Update`-mode: each trigger re-emits the summaries of the
   * shards that changed; the memory/table sink keeps the latest row per
@@ -26,23 +31,6 @@ object StreamingHeavyHitters {
 
   case class ShardCounter(shard: Int, h: Long, cnt_lb: Long)
 
-  /** Per-shard MG update — same decrement-all rule as the batch
-    * [[graft.plans.MisraGriesAgg]], on a plain map. */
-  private[streaming] def mgUpdate(m: scala.collection.mutable.Map[Long, Long],
-                                  h: Long, k: Int): Unit = {
-    m.get(h) match {
-      case Some(c) => m.update(h, c + 1L)
-      case None if m.size < k => m.update(h, 1L)
-      case None =>
-        val dead = scala.collection.mutable.ArrayBuffer.empty[Long]
-        m.keysIterator.foreach { key =>
-          val nv = m(key) - 1L
-          if (nv == 0L) dead += key else m.update(key, nv)
-        }
-        dead.foreach(m.remove)
-    }
-  }
-
   /** `keys` → one refreshed summary row per (shard, surviving key) each
     * trigger. `k` counters per shard. */
   def summaries(keys: Dataset[Long], shards: Int, k: Int): Dataset[ShardCounter] = {
@@ -51,11 +39,12 @@ object StreamingHeavyHitters {
       .flatMapGroupsWithState[Map[Long, Long], ShardCounter](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (shard: Int, rows: Iterator[Long], state: GroupState[Map[Long, Long]]) =>
-          val m = scala.collection.mutable.Map.empty[Long, Long]
-          state.getOption.foreach(m ++= _)
-          rows.foreach(h => mgUpdate(m, h, k))
-          state.update(m.toMap)
-          m.iterator.map { case (h, c) => ShardCounter(shard, h, c) }
+          val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+          state.getOption.foreach(_.foreach { case (h, c) => m.put(h, c) })
+          rows.foreach(h => MisraGriesAgg.offer(m, h, k))
+          val summary = m.asScala.map { case (h, c) => (h.longValue, c.longValue) }.toMap
+          state.update(summary)
+          summary.iterator.map { case (h, c) => ShardCounter(shard, h, c) }
       }
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.plans.BloomSketchAgg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -151,7 +152,7 @@ object Decontaminate {
 
   /** Bloom-prefiltered variant of [[overlaps]]: the held-out split's
     * shingle hashes are absorbed into ONE m-bit Bloom state
-    * ([[graft.plans.BloomStateAgg]], combine-enabled aggregate → a few
+    * ([[graft.plans.BloomSketchAgg]], combine-enabled aggregate → a few
     * hundred KB), and the TRAIN side is pre-filtered map-side with
     * `bloom_contains` BEFORE its shuffle. The exact join that follows
     * sees only survivors (true matches + the fp rate), so shuffle
@@ -161,14 +162,8 @@ object Decontaminate {
     * has no false negatives, so this equals the unpruned [[overlaps]]
     * result row-for-row (and shares an exact oracle with it).
     *
-    * The state reaches the probe as a SCALAR SUBQUERY — evaluated once
-    * per execution and inlined as a constant, the same shape Spark's
-    * own runtime row-level filters use. It must NOT flow as a join
-    * column: reading a binary column out of an `UnsafeRow` copies it,
-    * so a broadcast-join'd state would memcpy the full filter for
-    * EVERY probed row (measured 8-13 s vs 0.05-0.9 s for the subquery
-    * form on a 1.7M-shingle probe at sf1 — the state copy, not the
-    * probe, was the whole cost).
+    * The state reaches the probe as a scalar subquery, never as a join
+    * column ([[graft.plans.BloomSketchAgg.prefilter]] says why).
     *
     * The two defenses are orthogonal and COMPOSE: the bloom probe is
     * per-row O(j) and immune to hot-shingle blowup on the filter side,
@@ -181,19 +176,16 @@ object Decontaminate {
     */
   def overlapsBloom(docs: DataFrame, idCol: String, textCol: String, n: Int,
                     trainPred: Column, testPred: Column,
-                    numBits: Int = 1 << 22, numHashes: Int = 7,
+                    numBits: Int = BloomSketchAgg.PrefilterBits,
+                    numHashes: Int = BloomSketchAgg.PrefilterHashes,
                     dfQuantile: Double = 1.0): DataFrame = {
-    import graft.plans.BloomSketchAgg.{bloomContains, bloomState}
     val shh = prunedByDf(
       shingleHashes(docs, idCol, textCol, n, trainPred, testPred), dfQuantile)
     val test = shh.filter(col("__is_test"))
       .select(col(idCol).as("__test_id"), col("shash"))
-    val filterRow = test.agg(bloomState(col("shash"), numBits, numHashes).as("__bloom"))
-    val stateScalar = graft.plans.Exprs.toColumn(
-      org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-        filterRow.queryExecution.analyzed))
-    val train = shh.filter(col("__is_train")).select(col(idCol), col("shash"))
-      .filter(bloomContains(stateScalar, col("shash")))
+    val train = BloomSketchAgg.prefilter(
+      shh.filter(col("__is_train")).select(col(idCol), col("shash")), test, "shash",
+      numBits, numHashes)
     train.join(test, "shash")
       .groupBy(col(idCol))
       .agg(countDistinct(col("shash")).as("n_shared_shingles"),

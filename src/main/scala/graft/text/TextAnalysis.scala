@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.plans.BloomSketchAgg
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -493,10 +494,9 @@ object TextAnalysis {
     * 100 TB configuration (Dolma runs its paragraph dedup exactly this
     * way, a bloom filter over seen-paragraph hashes): the stored index's
     * keys are folded into one mergeable bloom aggregate, delivered to the
-    * probe as a broadcast SCALAR (evaluated once — the c5 lesson: sketch
-    * state must never flow through per-row rows), and only
-    * bloom-POSITIVE batch keys reach the exact confirm join against the
-    * stored index. False positives are removed by the confirm, false
+    * probe as a scalar subquery ([[graft.plans.BloomSketchAgg.prefilter]]),
+    * and only bloom-POSITIVE batch keys reach the exact confirm join
+    * against the stored index. False positives are removed by the confirm, false
     * negatives don't exist, so the result is EXACTLY
     * [[blockDedupAgainst]] (hash keys) — c10 gates it against c9's own
     * oracle. At a realistic dup rate the confirm join's probe side is a
@@ -506,21 +506,17 @@ object TextAnalysis {
   def blockDedupAgainstBloom(newDocs: org.apache.spark.sql.DataFrame,
                              oldIndex: org.apache.spark.sql.DataFrame,
                              idCol: String, textCol: String, blockSize: Int,
-                             numBits: Int = 1 << 22,
-                             numHashes: Int = 7): org.apache.spark.sql.DataFrame = {
-    import graft.plans.BloomSketchAgg.{bloomContains, bloomState}
+                             numBits: Int = BloomSketchAgg.PrefilterBits,
+                             numHashes: Int = BloomSketchAgg.PrefilterHashes
+                            ): org.apache.spark.sql.DataFrame = {
     val b = chunkWindows(newDocs, idCol, textCol, blockSize, blockSize)
       .select(col(idCol), col("chunk_idx"), col("chunk"),
         xxhash64(col("chunk")).as("bkey"))
     val winners = b.groupBy(col("bkey"))
       .agg(min(struct(col(idCol), col("chunk_idx"))).as("w"))
     val oldKeys = oldIndex.select(col("bkey")).distinct()
-    val filterRow = oldKeys.agg(bloomState(col("bkey"), numBits, numHashes).as("__bloom"))
-    val stateScalar = graft.plans.Exprs.toColumn(
-      org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-        filterRow.queryExecution.analyzed))
-    val confirmed = b.select(col("bkey")).distinct()
-      .filter(bloomContains(stateScalar, col("bkey")))
+    val confirmed = BloomSketchAgg.prefilter(
+        b.select(col("bkey")).distinct(), oldKeys, "bkey", numBits, numHashes)
       .join(oldKeys, Seq("bkey"), "left_semi")
       .withColumn("seen_old", lit(true))
     b.join(winners, "bkey")

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class BloomSketchSpec extends SparkSpec {
@@ -95,5 +95,14 @@ class BloomSketchSpec extends SparkSpec {
       val h = r.getLong(0)
       assert(viaPlan(h) == BloomBits.contains(state, h))
     }
+  }
+
+  test("the Bloom prefilter is the only scalar subquery a program builds") {
+    // the c5 rule (sketch state reaches a probe as a runtime constant,
+    // never through a join column) is kept in BloomSketchAgg.prefilter
+    val offenders = SourceScan.offenders("""ScalarSubquery\(""".r,
+      "graft/plans/BloomSketchAgg.scala")
+    assert(offenders.isEmpty,
+      s"a scalar subquery built outside BloomSketchAgg.prefilter: $offenders")
   }
 }
