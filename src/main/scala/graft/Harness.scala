@@ -105,12 +105,8 @@ object Harness {
   private def localDir(): Option[String] =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
       val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) {
-        val d = java.nio.file.Files.createTempDirectory(shm.toPath, "graft-local")
-        sys.addShutdownHook {
-          org.apache.commons.io.FileUtils.deleteQuietly(d.toFile); ()
-        }
-        Some(d.toString)
-      } else None
+      if (shm.isDirectory && shm.canWrite)
+        Some(graft.ops.Checkpoint.tempDir("graft-local", Some(shm.toPath)).toString)
+      else None
     }
 }

@@ -1,13 +1,16 @@
 package graft
 
 import graft.ingest.SeedTables
-import graft.ops.{CanonicalJson, HashDiff, ParquetOpen}
+import graft.ops.{CanonicalJson, Checkpoint, HashDiff, ParquetOpen}
+import graft.ops.Checkpoint.Releasables._
 import graft.schema.Schemas
 import graft.sinks.{DdlGen, Upsert}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.sql.DriverManager
+
+import scala.util.Using
 
 /** End-to-end lifecycle demo main mirroring the reference's `pull` + `sync`
   * entry points (SURVEY §3.1-3.2) against embedded Derby:
@@ -20,16 +23,12 @@ import java.sql.DriverManager
   */
 object Pipeline {
   def main(args: Array[String]): Unit = {
-    val spark = Harness.session(Harness.cpus)
-    // one per-run root with a subdir per stage output, removed even when
-    // a stage assert fails
-    val root = java.nio.file.Files.createTempDirectory("graft-pipeline")
-    def stageDir(name: String): String =
-      java.nio.file.Files.createDirectory(root.resolve(name)).toString
-    try run(spark, stageDir)
-    finally {
-      spark.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    // one per-run root with a subdir per stage output, removed after the
+    // session stops, even when a stage assert fails
+    Using.resource(Checkpoint.tempDir("graft-pipeline")) { root =>
+      def stageDir(name: String): String =
+        java.nio.file.Files.createDirectory(root.resolve(name)).toString
+      Using.resource(Harness.session(Harness.cpus))(run(_, stageDir))
     }
   }
 
@@ -214,52 +213,46 @@ object Pipeline {
     // one half, fold the other half incrementally, persist, search from
     // the stored form; the index must hold at most one row-set per
     // cluster (reps only), never the raw corpus
-    val repCaches = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    def sharrOf(df: org.apache.spark.sql.DataFrame) = {
-      val f = graft.dedup.MinHash.hashedShingleArray(df, "doc_id", "text", 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      repCaches += f
-      f
-    }
-    val st0 = graft.dedup.RepIndex.build(
-      sharrOf(docs.filter(col("doc_id") % 2 === 0)), "doc_id")
-    val st1 = graft.dedup.RepIndex.append(
-      sharrOf(docs.filter(col("doc_id") % 2 =!= 0)), st0, "doc_id")
-    val repDir = stageDir("rep")
-    graft.dedup.RepIndex.write(st1, repDir)
-    graft.dedup.RepIndex.release(st1)
-    val repState = graft.dedup.RepIndex.read(spark, repDir)
-    val nDocs = repState.labels.count()
-    val nReps = repState.sharr.select(col("doc_id")).count()
-    assert(nDocs == docs.count(), s"rep labels cover $nDocs of ${docs.count()}")
-    assert(nReps <= nDocs, s"reps $nReps exceed corpus $nDocs")
-    val probeSharr = sharrOf(docs.filter(col("doc_id") < 3))
-    val repHits = graft.dedup.RepIndex.search(
-      probeSharr, repState, "doc_id").count()
-    // round 11: the pruned stored-search path must serve the same rows
-    // as the canonical read+search (pbucket is a pure function of
-    // band_hash — the partition columns only prune the scan)
-    val prunedHits = graft.dedup.RepIndex.searchStored(spark,
-      probeSharr, repDir, "doc_id").count()
-    assert(prunedHits == repHits,
-      s"pruned stored search served $prunedHits rows, canonical $repHits")
-    // round 11: rep-index delete over the stored form — tombstoning a
-    // rep re-roots its cluster and promotes from the cold member store
-    val tombRep = repState.sharr.select(col("doc_id"))
-      .orderBy(col("doc_id")).limit(1)
-    val delState = graft.dedup.RepIndex.delete(tombRep, repState, "doc_id")
-    val nAfterDel = delState.labels.count()
-    assert(nAfterDel == nDocs - 1,
-      s"delete left $nAfterDel labels, expected ${nDocs - 1}")
-    // the stored state is materialized; release the stage's caches so
-    // later pipeline stages don't run under its storage pressure
-    repCaches.foreach(_.unpersist())
-    graft.dedup.RepIndex.release(delState)
-    println(s"[pipeline] serving: MMR reranked $nRr rows; segmented index " +
-      s"holds both waves ($nServed hits for 3 probes; delete/re-append " +
-      s"round-tripped doc $target); rep index $nReps reps / $nDocs docs " +
-      s"($repHits rep hits, pruned search equal, delete re-rooted)")
+    // the stage's caches are released when it ends, so later pipeline
+    // stages don't run under its storage pressure
+    Using.Manager { use =>
+      def sharrOf(df: org.apache.spark.sql.DataFrame) =
+        use(graft.dedup.MinHash.hashedShingleArray(df, "doc_id", "text", 2)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val st0 = graft.dedup.RepIndex.build(
+        sharrOf(docs.filter(col("doc_id") % 2 === 0)), "doc_id")
+      val st1 = use(graft.dedup.RepIndex.append(
+        sharrOf(docs.filter(col("doc_id") % 2 =!= 0)), st0, "doc_id"))
+      val repDir = stageDir("rep")
+      graft.dedup.RepIndex.write(st1, repDir)
+      val repState = graft.dedup.RepIndex.read(spark, repDir)
+      val nDocs = repState.labels.count()
+      val nReps = repState.sharr.select(col("doc_id")).count()
+      assert(nDocs == docs.count(), s"rep labels cover $nDocs of ${docs.count()}")
+      assert(nReps <= nDocs, s"reps $nReps exceed corpus $nDocs")
+      val probeSharr = sharrOf(docs.filter(col("doc_id") < 3))
+      val repHits = graft.dedup.RepIndex.search(
+        probeSharr, repState, "doc_id").count()
+      // round 11: the pruned stored-search path must serve the same rows
+      // as the canonical read+search (pbucket is a pure function of
+      // band_hash — the partition columns only prune the scan)
+      val prunedHits = graft.dedup.RepIndex.searchStored(spark,
+        probeSharr, repDir, "doc_id").count()
+      assert(prunedHits == repHits,
+        s"pruned stored search served $prunedHits rows, canonical $repHits")
+      // round 11: rep-index delete over the stored form — tombstoning a
+      // rep re-roots its cluster and promotes from the cold member store
+      val tombRep = repState.sharr.select(col("doc_id"))
+        .orderBy(col("doc_id")).limit(1)
+      val delState = use(graft.dedup.RepIndex.delete(tombRep, repState, "doc_id"))
+      val nAfterDel = delState.labels.count()
+      assert(nAfterDel == nDocs - 1,
+        s"delete left $nAfterDel labels, expected ${nDocs - 1}")
+      println(s"[pipeline] serving: MMR reranked $nRr rows; segmented index " +
+        s"holds both waves ($nServed hits for 3 probes; delete/re-append " +
+        s"round-tripped doc $target); rep index $nReps reps / $nDocs docs " +
+        s"($repHits rep hits, pruned search equal, delete re-rooted)")
+    }.get
   }
 
   /** Curation tail (round 8): paragraph dedup against a persisted block

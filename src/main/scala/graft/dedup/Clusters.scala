@@ -1,5 +1,8 @@
 package graft.dedup
 
+import scala.util.Using
+
+import graft.ops.Checkpoint.Releasables._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -183,19 +186,16 @@ object Clusters {
   def connectedComponentsAdaptive(pairs: DataFrame,
                                   colA: String = "id_a", colB: String = "id_b",
                                   switchAfter: Int = 8,
-                                  maxIterations: Int = 50): DataFrame = {
-    val p = pairs.select(col(colA), col(colB)).localCheckpoint(true)
-    val labels =
+                                  maxIterations: Int = 50): DataFrame =
+    // both algorithms build exclusively on EAGER checkpoints seeded from
+    // p, so p's blocks are dead as soon as the inner call returns
+    Using.resource(pairs.select(col(colA), col(colB)).localCheckpoint(true)) { p =>
       try connectedComponents(p, colA, colB, switchAfter)
       catch {
         case _: IllegalStateException =>
           connectedComponentsLSS(p, colA, colB, maxIterations)
       }
-    // both algorithms build exclusively on EAGER checkpoints seeded from
-    // p, so p's blocks are dead as soon as the inner call returns
-    graft.ops.Checkpoint.release(p)
-    labels
-  }
+    }
 
   /** INCREMENTAL cluster-label maintenance — the connected-components
     * member of the append family (r4 = BM25 postings, x18 = IVF cells,

@@ -1,6 +1,9 @@
 package graft.dedup
 
+import scala.util.Using
+
 import graft.ops.{Artifact, ParquetOpen}
+import graft.ops.Checkpoint.Releasables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -133,59 +136,58 @@ object RepIndex {
     * star/pair edges. Nothing proportional to the old corpus — and
     * nothing proportional to its duplication density. The batch's
     * arrays, band rows and pairs are materialized once, shared by every
-    * consumer, and released before the op returns. The returned
+    * consumer, and released when the op returns. The returned
     * frames are checkpointed leaves ([[State]]): the op's plan size
     * depends on its inputs, never on how many ops produced `state`, and
     * `state` itself stays intact (its blocks remain the caller's). */
   def append(batchSharr: DataFrame, state: State, idCol: String,
              threshold: Double = 0.7,
-             rowsPerBand: Int = MinHash.RowsPerBand): State = {
-    // the batch is computed ONCE: its arrays and its band rows (one
-    // signature pass) are materialized here and shared by both pair
-    // detections and the promoted reps' index rows
-    val batch = batchSharr.select(col(idCol), col("sharr")).localCheckpoint(true)
-    val batchBands = MinHash.bandRows(MinHash.signaturesFromArray(batch, idCol),
-      idCol, rowsPerBand).localCheckpoint(true)
-    val vsReps = MinHash.nearDuplicatesArraysAgainstBands(
-        batch, state.bands, state.sharr, idCol, threshold, rowsPerBand,
-        probeBandRows = Some(batchBands))
-      .select(col("id_new").as("id_a"), col("id_old").as("id_b"))
-    val within = MinHash.nearDuplicatesFromArray(
-        batch, idCol, threshold, rowsPerBand, precomputedBands = Some(batchBands))
-      .select(col("id_a"), col("id_b"))
-    // materialized: the fold reads the pairs twice (its edges and its
-    // self-loop singletons), and pair detection must run once
-    val pairs = vsReps.unionByName(within).localCheckpoint(true)
-    val (touched, fixpoint) = Clusters.appendLabelsWithFixpoint(
-      state.labels, pairs)
-    // batch docs with no near-dup anywhere become their own clusters
-    val novel = batch.select(col(idCol).as("id"))
-      .join(touched.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("cluster_id", col("id"))
-    // materialized HERE, before the five references below
-    val labels = touched.unionByName(novel).localCheckpoint(true)
-    // the fixpoint's final checkpoint is superseded by `labels` — release
-    // it through its own handle, never through `touched`, whose plan also
-    // holds the caller's `state.labels` blocks
-    graft.ops.Checkpoint.release(fixpoint)
-    val repIds = labels.filter(col("id") === col("cluster_id"))
-      .select(col("id").as(idCol))
-    // surviving old reps keep their stored rows; retired reps (their
-    // cluster merged under a smaller minimum) drop out of the semi joins
-    // and their arrays MOVE to the cold member store (delete support —
-    // a later tombstone may promote them back); promoted/novel reps are
-    // batch docs, so their rows come from the batch's arrays and bands
-    val next = leaves(labels,
-      state.bands.join(repIds, Seq(idCol), "left_semi")
-        .unionByName(batchBands.join(repIds, Seq(idCol), "left_semi")),
-      state.sharr.join(repIds, Seq(idCol), "left_semi")
-        .unionByName(batch.join(repIds, Seq(idCol), "left_semi")),
-      state.marr
-        .unionByName(state.sharr.join(repIds, Seq(idCol), "left_anti"))
-        .unionByName(batch.join(repIds, Seq(idCol), "left_anti")))
-    Seq(batch, batchBands, pairs).foreach(graft.ops.Checkpoint.release)
-    next
-  }
+             rowsPerBand: Int = MinHash.RowsPerBand): State =
+    Using.Manager { use =>
+      // the batch is computed ONCE: its arrays and its band rows (one
+      // signature pass) are materialized here and shared by both pair
+      // detections and the promoted reps' index rows
+      val batch = use(batchSharr.select(col(idCol), col("sharr")).localCheckpoint(true))
+      val batchBands = use(MinHash.bandRows(MinHash.signaturesFromArray(batch, idCol),
+        idCol, rowsPerBand).localCheckpoint(true))
+      val vsReps = MinHash.nearDuplicatesArraysAgainstBands(
+          batch, state.bands, state.sharr, idCol, threshold, rowsPerBand,
+          probeBandRows = Some(batchBands))
+        .select(col("id_new").as("id_a"), col("id_old").as("id_b"))
+      val within = MinHash.nearDuplicatesFromArray(
+          batch, idCol, threshold, rowsPerBand, precomputedBands = Some(batchBands))
+        .select(col("id_a"), col("id_b"))
+      // materialized: the fold reads the pairs twice (its edges and its
+      // self-loop singletons), and pair detection must run once
+      val pairs = use(vsReps.unionByName(within).localCheckpoint(true))
+      val (touched, fixpoint) = Clusters.appendLabelsWithFixpoint(
+        state.labels, pairs)
+      // batch docs with no near-dup anywhere become their own clusters
+      val novel = batch.select(col(idCol).as("id"))
+        .join(touched.select(col("id")), Seq("id"), "left_anti")
+        .withColumn("cluster_id", col("id"))
+      // materialized HERE, before the five references below
+      val labels = touched.unionByName(novel).localCheckpoint(true)
+      // the fixpoint's final checkpoint is superseded by `labels` — release
+      // it through its own handle, never through `touched`, whose plan also
+      // holds the caller's `state.labels` blocks
+      graft.ops.Checkpoint.release(fixpoint)
+      val repIds = labels.filter(col("id") === col("cluster_id"))
+        .select(col("id").as(idCol))
+      // surviving old reps keep their stored rows; retired reps (their
+      // cluster merged under a smaller minimum) drop out of the semi joins
+      // and their arrays MOVE to the cold member store (delete support —
+      // a later tombstone may promote them back); promoted/novel reps are
+      // batch docs, so their rows come from the batch's arrays and bands
+      leaves(labels,
+        state.bands.join(repIds, Seq(idCol), "left_semi")
+          .unionByName(batchBands.join(repIds, Seq(idCol), "left_semi")),
+        state.sharr.join(repIds, Seq(idCol), "left_semi")
+          .unionByName(batch.join(repIds, Seq(idCol), "left_semi")),
+        state.marr
+          .unionByName(state.sharr.join(repIds, Seq(idCol), "left_anti"))
+          .unionByName(batch.join(repIds, Seq(idCol), "left_anti")))
+    }.get
 
   /** TOMBSTONE deletes — the rep-index member of the r7 delete family
     * (BM25 `Bm25.deleteFromIndex`, LSH `MinHash.deleteFromSnapshotIndex`,
@@ -286,13 +288,9 @@ object RepIndex {
     * [[searchStored]] degrades to the (trivially empty) unpruned join. */
   def write(state: State, dir: String): Unit = {
     state.labels.write.mode("overwrite").parquet(s"$dir/labels")
-    // persisted around the emptiness probe so the band lineage (a
-    // signature pass + joins at corpus scale) is not evaluated twice
-    val b = state.bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.StoreWrite.partitioned(b, s"$dir/bands", col("band_hash"),
+    graft.ops.StoreWrite.partitioned(state.bands, s"$dir/bands",
       "band" -> col("band"),
       "pbucket" -> pmod(col("band_hash"), lit(MinHash.ProbeBuckets.toLong)).cast("int"))
-    finally b.unpersist()
     state.sharr.write.mode("overwrite").parquet(s"$dir/sharr")
     state.marr.write.mode("overwrite").parquet(s"$dir/marr")
     Artifact.commit(state.labels.sparkSession, dir, Config, Seq(MinHash.ProbeBuckets))

@@ -1,12 +1,31 @@
 package graft.ops
 
+import java.nio.file.{Files, Path}
+
+import scala.util.Using.Releasable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Materialized state: fixpoint rounds (Clusters) and the leaves a
-  * maintained index fold returns (RepIndex, Bm25, IVF cells) are eager
-  * `localCheckpoint`s, and this is the one path that frees their
-  * blocks. */
+/** The one release path for call-scoped state: persisted frames, eager
+  * `localCheckpoint`s (fixpoint rounds in Clusters, the leaves a
+  * maintained index fold returns in RepIndex, Bm25 and the IVF cells)
+  * and temp dirs.
+  *
+  * THE RULE.
+  *  - A frame a call persists or checkpoints for its own work is
+  *    released when the call returns, on failure too: the call opens it
+  *    with `scala.util.Using.resource`, or registers it with a
+  *    `Using.Manager` when it holds several, and the [[Releasables]]
+  *    below do the releasing. No try/finally, no hand-kept cache list.
+  *  - A frame that a RETURNED LAZY RESULT reads (the query packs'
+  *    persists, `Bm25.buildIndex`'s postings, the MinHash internals, a
+  *    fold's checkpointed leaves) outlives the call: whoever holds the
+  *    result releases it (`Bm25.release`, `RepIndex.release`,
+  *    `unpersist`), and the runners' [[graft.Harness.reset]] clears what
+  *    is left between queries.
+  *  - A temp dir comes from [[tempDir]]: deleted at JVM exit, or earlier
+  *    when a `Using` scope releases it. */
 object Checkpoint {
 
   /** Release the block-manager storage behind a localCheckpoint'ed frame.
@@ -50,4 +69,37 @@ object Checkpoint {
   def releaseLeaves(dfs: DataFrame*): Unit =
     dfs.filter(_.queryExecution.analyzed.isInstanceOf[LogicalRDD])
       .foreach(release)
+
+  // every live temp dir, deleted by the one shutdown hook
+  private val exitDeleted = new java.util.concurrent.ConcurrentSkipListSet[Path]()
+  sys.addShutdownHook(exitDeleted.forEach(deleteDir(_)))
+
+  // a failed delete (at exit, or after a failed build) must never mask
+  // the error that got us here: deleteQuietly swallows every error
+  private def deleteDir(p: Path): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
+    exitDeleted.remove(p)
+  }
+
+  /** A fresh temp dir named `prefix…` under `parent` (the JVM's
+    * `java.io.tmpdir` by default), deleted at JVM exit unless a `Using`
+    * scope deletes it first. */
+  def tempDir(prefix: String, parent: Option[Path] = None): Path = {
+    val d = parent.fold(Files.createTempDirectory(prefix))(
+      Files.createTempDirectory(_, prefix))
+    exitDeleted.add(d)
+    d
+  }
+
+  /** `import graft.ops.Checkpoint.Releasables._` makes these resources
+    * of `Using`. */
+  object Releasables {
+    implicit val releaseFrame: Releasable[DataFrame] =
+      df => { df.unpersist(); releaseLeaves(df) }
+    implicit val releaseRepState: Releasable[graft.dedup.RepIndex.State] =
+      graft.dedup.RepIndex.release(_)
+    implicit val releaseBm25Index: Releasable[graft.text.Bm25.Index] =
+      graft.text.Bm25.release(_)
+    implicit val deleteTempDir: Releasable[Path] = deleteDir(_)
+  }
 }

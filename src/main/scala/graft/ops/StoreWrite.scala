@@ -16,46 +16,28 @@ import org.apache.spark.sql.functions._
   * listing walks the same tree. Clustered, each directory's rows land in
   * exactly one task, so the store carries one file per directory (64 for
   * the BM25 tree), and the write itself creates 5-15× fewer files.
-  *
-  * Scale knob: hash-clustering by the partition key alone serializes each
-  * directory into ONE write task — correct for the bucketed stores here
-  * (keys are xxhash64-derived, so directories are uniform), but a 100 TB
-  * store wants several writers (and files) per directory. `filesPerDir`
-  * (session conf `spark.graft.store.filesPerDir`, default 1) adds a salt
-  * derived from `saltCol` so each directory is written by up to that many
-  * tasks/files; set it to ~(directory bytes / desired file size) in
-  * production. The local default keeps the bench's stores one-file-per-dir,
-  * which is also the fastest shape at test scale. */
+  * Hash-clustering by the partition key alone serializes each directory
+  * into one write task — right for the bucketed stores here, whose keys
+  * are xxhash64-derived and so spread evenly over the directories. */
 object StoreWrite {
-  val FilesPerDirConf = "spark.graft.store.filesPerDir"
-
-  /** Cluster `rows` by the partition columns (plus a bounded salt when
-    * `filesPerDir > 1`) so the following `partitionBy` write emits
-    * `filesPerDir` files per directory instead of one per task×directory. */
-  def clusterByDirs(rows: DataFrame, saltCol: Column,
-                    partCols: Column*): DataFrame = {
-    val raw = rows.sparkSession.conf.get(FilesPerDirConf, "1")
-    val fpd = scala.util.Try(raw.trim.toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"$FilesPerDirConf must be an integer >= 1, got '$raw'"))
-    require(fpd >= 1, s"$FilesPerDirConf must be >= 1, got $fpd")
-    if (fpd == 1) rows.repartition(partCols: _*)
-    else rows.repartition(partCols :+
-      pmod(xxhash64(saltCol), lit(fpd.toLong)).as("__salt"): _*)
-  }
 
   /** Overwrites `path` with `rows` partitioned by `parts` (directory
-    * column → key expression), clustered by [[clusterByDirs]]. Zero rows
-    * write unpartitioned instead: partitionBy writes no directories for
-    * zero rows and the read-back would fail schema inference, while the
-    * flat layout keeps the schema and readers degrade to an unpruned scan.
-    * A caller whose `rows` lineage is expensive persists it around this
-    * call (the emptiness probe and the write both evaluate it). */
-  def partitioned(rows: DataFrame, path: String, saltCol: Column,
-                  parts: (String, Column)*): Unit =
-    if (rows.isEmpty) rows.write.mode("overwrite").parquet(path)
-    else
-      clusterByDirs(parts.foldLeft(rows) { case (df, (c, key)) => df.withColumn(c, key) },
-          saltCol, parts.map(p => col(p._1)): _*)
-        .write.mode("overwrite").partitionBy(parts.map(_._1): _*).parquet(path)
+    * column → key expression), clustered by the directory columns, in
+    * one pass over `rows`. Zero rows end up unpartitioned instead:
+    * partitionBy writes no directories for zero rows and the read-back
+    * would fail schema inference, so when the partitioned write left no
+    * directory the path is rewritten flat from `rows.limit(0)` (which
+    * evaluates nothing) — the flat layout keeps the schema and readers
+    * degrade to an unpruned scan. */
+  def partitioned(rows: DataFrame, path: String,
+                  parts: (String, Column)*): Unit = {
+    val dirCols = parts.map(_._1)
+    parts.foldLeft(rows) { case (df, (c, key)) => df.withColumn(c, key) }
+      .repartition(dirCols.map(col): _*)
+      .write.mode("overwrite").partitionBy(dirCols: _*).parquet(path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.listStatus(p).exists(_.isDirectory))
+      rows.limit(0).write.mode("overwrite").parquet(path)
+  }
 }

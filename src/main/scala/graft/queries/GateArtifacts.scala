@@ -1,6 +1,10 @@
 package graft.queries
 
+import scala.util.Using
+
 import graft.Tables
+import graft.ops.Checkpoint
+import graft.ops.Checkpoint.Releasables._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -29,28 +33,20 @@ private[queries] object GateArtifacts {
   private def sessionId(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
-  // the cleanup must never mask a BUILD failure, and a failed delete at
-  // exit is harmless: deleteQuietly swallows every error
-  private def discard(p: String): Unit =
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-
   // every memoized artifact dir lives until the JVM exits, then goes
-  sys.addShutdownHook(memos.values().forEach(discard(_)))
-
   private def memo(kind: String, s: SparkSession, dir: String)(
       build: String => Unit): String =
     memos.computeIfAbsent((kind, sessionId(s), dir), { _ =>
-      val p = java.nio.file.Files.createTempDirectory(s"graft_$kind").toString
-      try {
-        build(p)
-        p
-      } catch {
+      val p = Checkpoint.tempDir(s"graft_$kind")
+      try build(p.toString)
+      catch {
         case e: Throwable =>
           // a half-built artifact must not survive to be memoized or
           // mistaken for a servable layout by a later open
-          discard(p)
+          deleteTempDir.release(p)
           throw e
       }
+      p.toString
     })
 
   /** The corpus's exact Jaccard-0.8 pair graph: SIX gated queries
@@ -76,29 +72,28 @@ private[queries] object GateArtifacts {
     memo("replc", s, dir) { p =>
       val docs = Tables.documents(s, dir)
       val bucket = graft.text.TextAnalysis.splitBucket(col("doc_id"))
-      def sharrOf(pred: org.apache.spark.sql.Column) =
-        graft.dedup.MinHash.hashedShingleArray(docs.filter(pred), "doc_id",
-            "text", 2)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val st0 = graft.dedup.RepIndex.build(sharrOf(bucket < 60), "doc_id")
-      val st1 = graft.dedup.RepIndex.append(
-        sharrOf(bucket >= 60 && bucket < 80), st0, "doc_id")
-      graft.dedup.RepIndex.write(st1, p)
-      graft.dedup.RepIndex.release(st1)
+      Using.Manager { use =>
+        def sharrOf(pred: org.apache.spark.sql.Column) =
+          use(graft.dedup.MinHash.hashedShingleArray(docs.filter(pred),
+              "doc_id", "text", 2)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val st0 = graft.dedup.RepIndex.build(sharrOf(bucket < 60), "doc_id")
+        graft.dedup.RepIndex.write(use(graft.dedup.RepIndex.append(
+          sharrOf(bucket >= 60 && bucket < 80), st0, "doc_id")), p)
+      }.get
     }
 
   /** The full-corpus BM25 serving artifact (term-bucketed postings tree
     * + pinned modulus): r1/r7 search or tombstone it, r8 probes it
-    * pruned, r2/r3 read it for their lexical ranked lists. The
-    * buildIndex postings cache is released once the parquet write has
-    * materialized it (caller-owned-cache contract). */
+    * pruned, r2/r3 read it for their lexical ranked lists. */
   def bm25IndexDir(s: SparkSession, dir: String): String =
-    memo("bm25idx", s, dir) { p =>
-      val idx = graft.text.Bm25.buildIndex(Tables.documents(s, dir),
-        "doc_id", "text")
-      graft.text.Bm25.writeIndex(idx, p)
-      idx.postings.unpersist()
-    }
+    memo("bm25idx", s, dir)(writeBm25(Tables.documents(s, dir), _))
+
+  // the buildIndex postings cache lives only as long as the write
+  private def writeBm25(docs: org.apache.spark.sql.DataFrame, p: String): Unit = {
+    val idx = graft.text.Bm25.buildIndex(docs, "doc_id", "text")
+    Using.resource(idx.postings)(_ => graft.text.Bm25.writeIndex(idx, p))
+  }
 
   /** r4's OLD-SNAPSHOT index (t7 buckets < 80): the increment gate's
     * stored state — in production the prior snapshot's index is a
@@ -106,14 +101,8 @@ private[queries] object GateArtifacts {
     * rebuild (the r1/r7/r8 artifact argument applied to the append
     * gate; Bm25IndexSpec pins the parquet round trip score-identical). */
   def bm25OldIndexDir(s: SparkSession, dir: String): String =
-    memo("bm25old", s, dir) { p =>
-      val docs = Tables.documents(s, dir)
-      val idx = graft.text.Bm25.buildIndex(
-        docs.filter(graft.text.TextAnalysis.splitBucket(col("doc_id")) < 80),
-        "doc_id", "text")
-      graft.text.Bm25.writeIndex(idx, p)
-      idx.postings.unpersist()
-    }
+    memo("bm25old", s, dir)(writeBm25(Tables.documents(s, dir)
+      .filter(graft.text.TextAnalysis.splitBucket(col("doc_id")) < 80), _))
 
   /** c13b's persisted DSIR model — training once per (session, dir) is
     * exactly the production cadence the gate models. */
@@ -202,9 +191,8 @@ private[queries] object GateArtifacts {
   def residualPqIndexDir(s: SparkSession, dir: String): String =
     memo("pqridx", s, dir) { p =>
       val C = graft.similarity.Cosine
-      val emb = Tables.embeddings(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Using.resource(Tables.embeddings(s, dir)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { emb =>
         val init = emb.select(col("vec_id"), col("embedding"),
           pmod(xxhash64(col("vec_id")), lit(16)).as("icell"))
         val asg = C.lloydIterations(init, "vec_id", "embedding", "icell",
@@ -222,6 +210,6 @@ private[queries] object GateArtifacts {
           .select(col("vec_id"), col("assigned_cell").as("cell"))
         C.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "cell",
           cents, p, iters = 4, centroidFn = C.cellCentroidsSorted)
-      } finally emb.unpersist()
+      }
     }
 }

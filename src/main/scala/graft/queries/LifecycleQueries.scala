@@ -15,13 +15,7 @@ object LifecycleQueries extends QueryPack {
   // One dump dir per process, removed on JVM exit: k4 runs several times
   // per session (warmup + timed runs + Verify) and SaveMode.Overwrite
   // reuses the path — no temp-dir leak across invocations.
-  private lazy val k4Dir: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_k4")
-    sys.addShutdownHook {
-      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile); ()
-    }
-    p.toString
-  }
+  private lazy val k4Dir: String = graft.ops.Checkpoint.tempDir("graft_k4").toString
 
   val queries: Map[String, Q] = Map(
     // ---- K4: JSON dump round-trip — dump supplier partitioned by nation

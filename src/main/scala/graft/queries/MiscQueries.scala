@@ -17,10 +17,7 @@ object MiscQueries extends QueryPack {
   private val s4Cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def s4Fixture(s: org.apache.spark.sql.SparkSession, dir: String): String =
     s4Cache.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_s4")
-      sys.addShutdownHook {
-        org.apache.commons.io.FileUtils.deleteQuietly(root.toFile); ()
-      }
+      val root = graft.ops.Checkpoint.tempDir("graft_s4")
       Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .collect().foreach { r =>
           val k = r.get(0).toString.toLong

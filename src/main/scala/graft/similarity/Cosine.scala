@@ -1,6 +1,9 @@
 package graft.similarity
 
+import scala.util.Using
+
 import graft.ops.{Artifact, ParquetOpen}
+import graft.ops.Checkpoint.Releasables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -510,14 +513,9 @@ object Cosine {
     // A bare count can NOT catch the same-size re-train (new lists under
     // old counts) — the content fingerprint is what closes that hole.
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    // persisted around the emptiness probe so the join lineage is not
-    // evaluated twice (the RepIndex.write convention)
-    val lists = vectors.select(col(idCol), col(vecCol))
-      .join(cells.select(col(idCol), col(cellCol)), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.StoreWrite.partitioned(lists, s"$dir/lists", col(idCol),
-      "pcell" -> col(cellCol).cast("string"))
-    finally lists.unpersist()
+    graft.ops.StoreWrite.partitioned(vectors.select(col(idCol), col(vecCol))
+        .join(cells.select(col(idCol), col(cellCol)), Seq(idCol)),
+      s"$dir/lists", "pcell" -> col(cellCol).cast("string"))
     Artifact.commit(vectors.sparkSession, dir, IvfCommit, Nil, ivfChecks(dir, cellCol))
   }
 
@@ -1302,7 +1300,7 @@ object Cosine {
     * write flat, [[graft.ops.StoreWrite.partitioned]]). */
   private[graft] def writePrefixRows(rows: DataFrame, idCol: String,
                                      dir: String): Unit =
-    graft.ops.StoreWrite.partitioned(rows, s"$dir/vectors", col(idCol),
+    graft.ops.StoreWrite.partitioned(rows, s"$dir/vectors",
       "pbucket" -> pmod(col(idCol), lit(PrefixBuckets.toLong)).cast("int"))
 
   def writePrefixIndex(corpus: DataFrame, idCol: String, vecCol: String,
@@ -1499,12 +1497,12 @@ object Cosine {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall must be in (0, 1], got $targetRecall")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sample = corpus
-      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(sampleN)
-      .select(col(idCol), col(vecCol)).persist(lvl)
-    val exact = topK(sample, corpus, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id")).persist(lvl)
-    try {
+    Using.Manager { use =>
+      val sample = use(corpus
+        .orderBy(xxhash64(col(idCol)), col(idCol)).limit(sampleN)
+        .select(col(idCol), col(vecCol)).persist(lvl))
+      val exact = use(topK(sample, corpus, idCol, vecCol, k)
+        .select(col("query_id"), col("neighbor_id")).persist(lvl))
       val nExact = exact.count().toDouble
       val curve = Seq.newBuilder[(Int, Double)]
       var chosen = -1
@@ -1520,10 +1518,7 @@ object Cosine {
         if (r >= targetRecall) chosen = c
       }
       (if (chosen >= 0) chosen else candidates.last, curve.result())
-    } finally {
-      sample.unpersist()
-      exact.unpersist()
-    }
+    }.get
   }
 
   /** Derive the IVFADC probe width `nProbe` from a RECALL TARGET by
@@ -2118,15 +2113,14 @@ object Cosine {
     writePqCentroids(spark, Some(centroids), cellCol, dir)
     val cents = ParquetOpen(spark, s"$dir/centroids")
       .withColumnRenamed("cell", cellCol)
-    val res = residualFrame(corpus, cells, cents, idCol, vecCol, cellCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try
+    Using.resource(residualFrame(corpus, cells, cents, idCol, vecCol, cellCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { res =>
       writeResidualPqTail(spark,
         trainPqCodebook(res, idCol, "resv", nSub, subDim, nPlanes, iters,
           centroidFn),
         res, corpus, cells, idCol, vecCol, cellCol, dir, nSub, subDim,
         nPlanes)
-    finally res.unpersist()
+    }
   }
 
   /** [[writeResidualPqIndex]] with the residual codebook PINNED instead
@@ -2232,14 +2226,9 @@ object Cosine {
                           nSub: Int, subDim: Int, nPlanes: Int,
                           hasCentroids: Boolean,
                           residual: Boolean = false): Unit = {
-    // persisted around the emptiness probe so the code+cell join lineage
-    // is not evaluated twice (the writeIvfIndex convention)
-    val codes = codesOf
-      .join(cells.select(col(idCol), col(cellCol)), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.StoreWrite.partitioned(codes, s"$dir/codes", col(idCol),
-      "pcell" -> col(cellCol).cast("string"))
-    finally codes.unpersist()
+    graft.ops.StoreWrite.partitioned(
+      codesOf.join(cells.select(col(idCol), col(cellCol)), Seq(idCol)),
+      s"$dir/codes", "pcell" -> col(cellCol).cast("string"))
     writePrefixRows(corpus.select(col(idCol), col(vecCol)), idCol, dir)
     Artifact.commit(spark, dir, PqCommit,
       Seq(nSub, subDim, nPlanes, PrefixBuckets,

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.util.Using
+
+import graft.ops.Checkpoint.Releasables._
 import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -84,13 +87,13 @@ object StreamingLshMaintenance {
                 rowsPerBand: Int = MinHash.RowsPerBand, maxSegments: Int = 8)(
                 batch: DataFrame, batchId: Long): Unit = {
     // persisted because snapshotIndex consumes it twice (signatures +
-    // the sharr re-attach join); released per micro-batch — persist is
-    // lazy, so a re-delivered (no-op) batch never materializes it
-    val sharr = MinHash.hashedShingleArray(batch, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try FrameSegments.fold(spark, dir, batchId, maxSegments)(
-      MinHash.snapshotIndex(sharr, idCol, rowsPerBand))
-    finally sharr.unpersist()
+    // the sharr re-attach join) — persist is lazy, so a re-delivered
+    // (no-op) batch never materializes it
+    Using.resource(MinHash.hashedShingleArray(batch, idCol, textCol, n)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { sharr =>
+      FrameSegments.fold(spark, dir, batchId, maxSegments)(
+        MinHash.snapshotIndex(sharr, idCol, rowsPerBand))
+    }
   }
 }
 

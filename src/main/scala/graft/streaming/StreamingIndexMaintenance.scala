@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.util.Using
+
+import graft.ops.Checkpoint.Releasables._
 import graft.ops.ParquetOpen
 import graft.text.Bm25
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -212,8 +215,7 @@ object StreamingIndexMaintenance {
                 batch: DataFrame, batchId: Long): Unit =
     Segments.fold(dir, batchId, maxSegments) { seg =>
       val bIdx = Bm25.buildIndex(batch, idCol, textCol)
-      Bm25.writeIndexPlain(bIdx, seg)
-      bIdx.postings.unpersist() // buildIndex's caller-owned cache, per batch
+      Using.resource(bIdx.postings)(_ => Bm25.writeIndexPlain(bIdx, seg))
     } { cmp =>
       // merge every live segment into one compacted segment (tombstones
       // RESOLVED — readLatest applies them, and the compacted dir writes

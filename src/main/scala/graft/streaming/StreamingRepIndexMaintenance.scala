@@ -1,6 +1,9 @@
 package graft.streaming
 
+import scala.util.Using
+
 import graft.dedup.{MinHash, RepIndex}
+import graft.ops.Checkpoint.Releasables._
 import graft.ops.ParquetOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,62 +132,59 @@ object StreamingRepIndexMaintenance {
            rowsPerBand: Int = MinHash.RowsPerBand, maxSegments: Int = 8)(
            batch: DataFrame, batchId: Long): Unit = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // released per micro-batch; all persists are lazy, so a re-delivered
-    // (no-op) batch never materializes them
-    val sharrB = MinHash.hashedShingleArray(batch, idCol, textCol, n).persist(lvl)
-    val caches = scala.collection.mutable.ArrayBuffer[DataFrame](sharrB)
-    var next: RepIndex.State = null // the append's leaves: released below
-    try Segments.fold(dir, batchId, maxSegments) { seg =>
-      val first = Segments.live(dir).isEmpty
-      val prev =
-        if (first) RepIndex.State(null, null, null, null)
-        else {
-          // the delta writes below are separate actions: cache the two
-          // prev frames they share so the live segments are scanned once,
-          // not once per write. The cold store is never read: the fold
-          // only carries it forward (marr ∪ this batch's additions), so
-          // folding over an EMPTY one leaves exactly the batch's cold
-          // delta in next.marr
-          val st = readLatest(spark, dir, idCol)
-          val p = RepIndex.State(st.labels.persist(lvl), st.bands,
-            st.sharr.persist(lvl), st.sharr.limit(0))
-          caches += p.labels += p.sharr
-          p
-        }
-      next =
-        if (first) RepIndex.build(sharrB, idCol, threshold, rowsPerBand)
-        else RepIndex.append(sharrB, prev, idCol, threshold, rowsPerBand)
-      // labels delta: rows new or changed this batch (cluster minima only
-      // decrease, so stale rows in older segments lose the min-merge)
-      val labelsDelta =
-        if (first) next.labels
-        else next.labels.join(prev.labels, Seq("id", "cluster_id"), "left_anti")
-      labelsDelta.write.mode("overwrite").parquet(s"$seg/labels")
-      // index delta: the batch's new rep rows + retired rep ids
-      val newRepIds =
-        if (first) next.sharr.select(col(idCol))
-        else next.sharr.select(col(idCol))
-          .join(prev.sharr.select(col(idCol)), Seq(idCol), "left_anti")
-      next.bands.join(newRepIds, Seq(idCol), "left_semi")
-        .write.mode("overwrite").parquet(s"$seg/bands")
-      next.sharr.join(newRepIds, Seq(idCol), "left_semi")
-        .write.mode("overwrite").parquet(s"$seg/sharr")
-      // retired reps: old reps no longer in the rep store
-      val retired =
-        if (first) sharrB.select(col(idCol)).limit(0)
-        else prev.sharr.select(col(idCol))
-          .join(next.sharr.select(col(idCol)), Seq(idCol), "left_anti")
-      retired.write.mode("overwrite").parquet(s"$seg/retired")
-      // cold member-array delta: the batch's non-rep arrays, plus the
-      // arrays of reps retired THIS batch (moving from the hot rep store
-      // to the cold store so a later delete can promote them)
-      next.marr.write.mode("overwrite").parquet(s"$seg/marr")
-    } { cmp =>
-      writeFull(readLatest(spark, dir, idCol), idCol, cmp)
-    } finally {
-      caches.foreach(_.unpersist())
-      if (next != null) RepIndex.release(next)
-    }
+    // released per micro-batch, after the compaction the fold may
+    // trigger; all persists are lazy, so a re-delivered (no-op) batch
+    // never materializes them
+    Using.Manager { use =>
+      val sharrB = use(MinHash.hashedShingleArray(batch, idCol, textCol, n).persist(lvl))
+      Segments.fold(dir, batchId, maxSegments) { seg =>
+        val first = Segments.live(dir).isEmpty
+        val prev =
+          if (first) RepIndex.State(null, null, null, null)
+          else {
+            // the delta writes below are separate actions: cache the two
+            // prev frames they share so the live segments are scanned once,
+            // not once per write. The cold store is never read: the fold
+            // only carries it forward (marr ∪ this batch's additions), so
+            // folding over an EMPTY one leaves exactly the batch's cold
+            // delta in next.marr
+            val st = readLatest(spark, dir, idCol)
+            RepIndex.State(use(st.labels.persist(lvl)), st.bands,
+              use(st.sharr.persist(lvl)), st.sharr.limit(0))
+          }
+        // the append's leaves
+        val next = use(
+          if (first) RepIndex.build(sharrB, idCol, threshold, rowsPerBand)
+          else RepIndex.append(sharrB, prev, idCol, threshold, rowsPerBand))
+        // labels delta: rows new or changed this batch (cluster minima only
+        // decrease, so stale rows in older segments lose the min-merge)
+        val labelsDelta =
+          if (first) next.labels
+          else next.labels.join(prev.labels, Seq("id", "cluster_id"), "left_anti")
+        labelsDelta.write.mode("overwrite").parquet(s"$seg/labels")
+        // index delta: the batch's new rep rows + retired rep ids
+        val newRepIds =
+          if (first) next.sharr.select(col(idCol))
+          else next.sharr.select(col(idCol))
+            .join(prev.sharr.select(col(idCol)), Seq(idCol), "left_anti")
+        next.bands.join(newRepIds, Seq(idCol), "left_semi")
+          .write.mode("overwrite").parquet(s"$seg/bands")
+        next.sharr.join(newRepIds, Seq(idCol), "left_semi")
+          .write.mode("overwrite").parquet(s"$seg/sharr")
+        // retired reps: old reps no longer in the rep store
+        val retired =
+          if (first) sharrB.select(col(idCol)).limit(0)
+          else prev.sharr.select(col(idCol))
+            .join(next.sharr.select(col(idCol)), Seq(idCol), "left_anti")
+        retired.write.mode("overwrite").parquet(s"$seg/retired")
+        // cold member-array delta: the batch's non-rep arrays, plus the
+        // arrays of reps retired THIS batch (moving from the hot rep store
+        // to the cold store so a later delete can promote them)
+        next.marr.write.mode("overwrite").parquet(s"$seg/marr")
+      } { cmp =>
+        writeFull(readLatest(spark, dir, idCol), idCol, cmp)
+      }
+    }.get
   }
 
   /** Rewrite the RESOLVED state as one compacted segment (tombstones
@@ -224,32 +224,27 @@ object StreamingRepIndexMaintenance {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // released once the fold, and the compaction it may trigger, is done;
     // a re-delivered batch writes no segment and persists nothing
-    val caches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var labels: DataFrame = null // deleteDelta's checkpointed labels
-    try Segments.fold(dir, batchId, maxSegments, kind = "del") { seg =>
-      val st0 = readLatest(spark, dir, idCol)
-      val st = RepIndex.State(st0.labels.persist(lvl), st0.bands, st0.sharr,
-        st0.marr)
-      caches += st.labels
-      // labels come back materialized (written + feed the rep ids)
-      val (labels0, promoted0) = RepIndex.deleteDelta(tombs, st, idCol)
-      labels = labels0
-      val promoted = promoted0.persist(lvl) // two writes: bands + sharr
-      caches += promoted
-      labels.write.mode("overwrite").parquet(s"$seg/labels")
-      MinHash.bandRows(MinHash.signaturesFromArray(promoted, idCol), idCol,
-          rowsPerBand)
-        .write.mode("overwrite").parquet(s"$seg/bands")
-      promoted.select(col(idCol), col("sharr"))
-        .write.mode("overwrite").parquet(s"$seg/sharr")
-      tombs.select(col(idCol)).distinct()
-        .write.mode("overwrite").parquet(s"$seg/deleted")
-    } { cmp =>
-      writeFull(readLatest(spark, dir, idCol), idCol, cmp)
-    } finally {
-      caches.foreach(_.unpersist())
-      if (labels != null) graft.ops.Checkpoint.release(labels)
-    }
+    Using.Manager { use =>
+      Segments.fold(dir, batchId, maxSegments, kind = "del") { seg =>
+        val st0 = readLatest(spark, dir, idCol)
+        val st = RepIndex.State(use(st0.labels.persist(lvl)), st0.bands, st0.sharr,
+          st0.marr)
+        // labels come back materialized (written + feed the rep ids)
+        val (labels, promoted0) = RepIndex.deleteDelta(tombs, st, idCol)
+        use(labels)
+        val promoted = use(promoted0.persist(lvl)) // two writes: bands + sharr
+        labels.write.mode("overwrite").parquet(s"$seg/labels")
+        MinHash.bandRows(MinHash.signaturesFromArray(promoted, idCol), idCol,
+            rowsPerBand)
+          .write.mode("overwrite").parquet(s"$seg/bands")
+        promoted.select(col(idCol), col("sharr"))
+          .write.mode("overwrite").parquet(s"$seg/sharr")
+        tombs.select(col(idCol)).distinct()
+          .write.mode("overwrite").parquet(s"$seg/deleted")
+      } { cmp =>
+        writeFull(readLatest(spark, dir, idCol), idCol, cmp)
+      }
+    }.get
   }
 
   /** Compact the live segments into one resolved `cmp` segment NOW — the

@@ -1,6 +1,9 @@
 package graft.text
 
+import scala.util.Using
+
 import graft.ops.{Artifact, ParquetOpen}
+import graft.ops.Checkpoint.Releasables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,18 +60,11 @@ object Bm25 {
   /** The inverted index: postings (did, term, tf), doclen (did, dl),
     * dfreq (term, df), stats (one row: n_docs, total_len). df is part of
     * the INDEX, not the search: recomputing it per query batch would pay
-    * a postings-sized aggregate at serving time.
-    *
-    * WHO OWNS THE BLOCKS: [[buildIndex]] persists `postings`
-    * (MEMORY_AND_DISK) because doclen/dfreq/stats all derive from it,
-    * and the caller unpersists it (the MinHash convention) — long-lived
-    * sessions doing repeated one-shot [[topK]] calls should build once
-    * via [[buildIndex]], search via [[searchIndex]], and
-    * `idx.postings.unpersist()` when done. A FOLD ([[appendToIndex]],
-    * [[deleteFromIndex]]) returns four checkpointed leaves instead: they
-    * belong to whoever holds the result and [[release]] frees them (the
-    * fold drops its own batch cache). [[readIndex]] and the lazy
-    * [[appendIndexes]] merge hold no blocks. */
+    * a postings-sized aggregate at serving time. [[buildIndex]] persists
+    * `postings` (doclen/dfreq/stats all derive from it); a fold
+    * ([[appendToIndex]], [[deleteFromIndex]]) returns four checkpointed
+    * leaves; [[readIndex]] and the lazy [[appendIndexes]] merge hold no
+    * blocks. Who releases them: [[graft.ops.Checkpoint]]. */
   case class Index(postings: DataFrame, doclen: DataFrame, dfreq: DataFrame,
                    stats: DataFrame)
 
@@ -102,18 +98,17 @@ object Bm25 {
     * stats is 1 row). Edge: an EMPTY index (fresh empty build, or every
     * doc deleted) writes postings unpartitioned — partitionBy writes no
     * directories for zero rows and the read-back would fail schema
-    * inference (the RepIndex.write edge). Emptiness is probed from the
-    * POSTINGS frame itself (the IVF/SQ8 writers' convention), not from a
-    * derived stat: an Index assembled outside [[buildIndex]] can carry
-    * n_docs > 0 over zero postings rows (every doc tokenizing to
-    * nothing), and partitioning on zero rows would leave an unreadable
-    * layout behind a healthy-looking stat. The limit(1) probe is
-    * marginal next to the full postings write that follows. */
+    * inference ([[graft.ops.StoreWrite.partitioned]]). Emptiness is
+    * judged from the POSTINGS rows themselves, not from a derived stat:
+    * an Index assembled outside [[buildIndex]] can carry n_docs > 0 over
+    * zero postings rows (every doc tokenizing to nothing), and
+    * partitioning on zero rows would leave an unreadable layout behind a
+    * healthy-looking stat. */
   def writeIndex(idx: Index, dir: String): Unit = {
     // clustered by the partition key so each tbucket directory gets one
     // file per writer (StoreWrite — guide §6 file sizing; measured
     // 353 → 64 files on the sf0.01 tree)
-    graft.ops.StoreWrite.partitioned(idx.postings, s"$dir/postings", col("did"),
+    graft.ops.StoreWrite.partitioned(idx.postings, s"$dir/postings",
       "tbucket" -> pmod(xxhash64(col("term")), lit(TermBuckets.toLong)).cast("int"))
     idx.doclen.write.mode("overwrite").parquet(s"$dir/doclen")
     idx.dfreq.write.mode("overwrite").parquet(s"$dir/dfreq")
@@ -262,25 +257,11 @@ object Bm25 {
       k, k1, b, minIdfMicro)
   }
 
-  // one log per JVM from the 3rd one-shot call on: repeated topK calls
-  // each persist a fresh postings frame the caller cannot release (the
-  // caller-owned-cache contract above) — a long-lived serving session
-  // doing this in a loop accumulates caches until eviction pressure.
-  // Counted, not flagged, so single/dual ad-hoc calls stay silent.
-  private val topKCalls = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def topK(queries: DataFrame, corpus: DataFrame, idCol: String,
            textCol: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
-           minIdfMicro: Long = DefaultMinIdfMicro): DataFrame = {
-    if (topKCalls.incrementAndGet() == 3L)
-      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
-        "Bm25.topK called repeatedly in this JVM: each call persists a " +
-          "postings frame only the caller can release — long-lived " +
-          "sessions should buildIndex once, searchIndex per query, and " +
-          "unpersist idx.postings when done (see Bm25.Index scaladoc)")
+           minIdfMicro: Long = DefaultMinIdfMicro): DataFrame =
     searchIndex(queries, buildIndex(corpus, idCol, textCol), idCol, textCol,
       k, k1, b, minIdfMicro)
-  }
 
   /** INCREMENTAL index maintenance: fold a new document batch into a
     * (possibly parquet-stored) index without re-reading the indexed
@@ -300,15 +281,11 @@ object Bm25 {
     * rule); the indexed corpus' text is never read. Every later search
     * and fold then reads blocks instead of re-running this fold and the
     * ones before it, so its plan is the same size whatever the history
-    * (Bm25IndexSpec pins the bound). The batch postings cache is
-    * released before the call returns; the leaves are the holder's
-    * ([[release]]). */
+    * (Bm25IndexSpec pins the bound). */
   def appendToIndex(batch: DataFrame, idx: Index, idCol: String,
                     textCol: String): Index = {
     val b = buildIndex(batch, idCol, textCol)
-    val next = materialize(appendIndexes(b, idx))
-    b.postings.unpersist()
-    next
+    Using.resource(b.postings)(_ => materialize(appendIndexes(b, idx)))
   }
 
   /** TOMBSTONE deletes — the reference's soft-delete algebra

@@ -1,5 +1,8 @@
 package graft.text
 
+import scala.util.Using
+
+import graft.ops.Checkpoint.Releasables._
 import graft.plans.BloomSketchAgg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -20,11 +23,8 @@ object Decontaminate {
     *
     * One shingle pass, persisted: the df aggregate, the train side, and
     * the test side all reuse it (re-shingling a 100 TB corpus twice is a
-    * duplicate corpus pass). The shingle cache (`shh`) backs the RETURNED
-    * lazy frame, so its lifetime is the caller's: release it with
-    * `spark.catalog.clearCache()` (or `unpersist` via the catalog) once
-    * the result is consumed — the internal df aggregate is already
-    * released before this method returns. The df cutoff is derived IN-PLAN from the
+    * duplicate corpus pass); it backs the RETURNED lazy frame. The df
+    * cutoff is derived IN-PLAN from the
     * df distribution (q-quantile, exact percentile — per-group state is
     * one counts-map over the few distinct df values) and broadcast into
     * the filter, so no scalar ever round-trips through the driver. The
@@ -92,8 +92,7 @@ object Decontaminate {
   }
 
   /** Shared shingle pass: `(idCol, __is_train, __is_test, shash)`,
-    * persisted — the df aggregate and both join sides reuse it (the
-    * cache is caller-owned, see [[overlaps]] scaladoc). */
+    * persisted — the df aggregate and both join sides reuse it. */
   private def shingleHashes(docs: DataFrame, idCol: String, textCol: String,
                             n: Int, trainPred: Column,
                             testPred: Column): DataFrame =
@@ -132,21 +131,21 @@ object Decontaminate {
       // broadcast exchange each evaluate dfs independently otherwise
       // (same reason MinHash.exactJaccardPairsAdaptive persists its df
       // frame) — measured 3× the aggregation without it
-      val dfs = shh.groupBy(col("shash")).agg(count(lit(1)).as("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cut = dfs.agg(greatest(
-        round(expr(s"percentile(df, $dfQuantile)"), 4), lit(1.0)).as("cut"))
-      // materialize the hot set eagerly (it is tiny by construction —
-      // (1-q)·|distinct shingles| keys), which lets the df frame be
-      // released right here instead of leaking one cached aggregate per
-      // invocation into long-lived sessions (ADVICE r04): dfs is only
-      // needed to derive this set. The checkpoint also truncates the
-      // anti-join's build side to a LogicalRDD, so the broadcast
-      // exchange never re-plans the aggregation.
-      val hot = dfs.crossJoin(broadcast(cut))
-        .filter(col("df") > col("cut")).select(col("shash"))
-        .localCheckpoint(true)
-      dfs.unpersist(false)
+      val hot = Using.resource(shh.groupBy(col("shash"))
+          .agg(count(lit(1)).as("df"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { dfs =>
+        val cut = dfs.agg(greatest(
+          round(expr(s"percentile(df, $dfQuantile)"), 4), lit(1.0)).as("cut"))
+        // materialize the hot set eagerly (it is tiny by construction —
+        // (1-q)·|distinct shingles| keys), which lets the df frame be
+        // released on return (ADVICE r04): dfs is only needed to derive
+        // this set. The checkpoint also truncates the anti-join's build
+        // side to a LogicalRDD, so the broadcast exchange never re-plans
+        // the aggregation.
+        dfs.crossJoin(broadcast(cut))
+          .filter(col("df") > col("cut")).select(col("shash"))
+          .localCheckpoint(true)
+      }
       shh.join(broadcast(hot), Seq("shash"), "left_anti")
     }
 

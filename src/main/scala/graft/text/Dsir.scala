@@ -1,6 +1,9 @@
 package graft.text
 
+import scala.util.Using
+
 import graft.ops.{Artifact, ParquetOpen}
+import graft.ops.Checkpoint.Releasables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -142,11 +145,10 @@ object Dsir {
                  sourceCol: String, targetSource: String,
                  dir: String): Unit = {
     // persisted around the write-time actions (tgt, raw, tots lineages)
-    // so the corpus tokenize pass runs once — the RepIndex.write
-    // convention; the source rides through bucketTf (carry), no re-join
-    val tf = bucketTf(docs, idCol, textCol, Buckets, Seq(sourceCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // so the corpus tokenize pass runs once; the source rides through
+    // bucketTf (carry), no re-join
+    Using.resource(bucketTf(docs, idCol, textCol, Buckets, Seq(sourceCol))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { tf =>
       val isTarget = col(sourceCol) === targetSource
       val tgt = tf.filter(isTarget).groupBy(col("b")).agg(sum(col("tf")).as("cnt_t"))
       val raw = tf.filter(!isTarget).groupBy(col("b")).agg(sum(col("tf")).as("cnt_r"))
@@ -155,7 +157,7 @@ object Dsir {
       tgt.agg(coalesce(sum(col("cnt_t")), lit(0L)).as("tot_t"))
         .crossJoin(raw.agg(coalesce(sum(col("cnt_r")), lit(0L)).as("tot_r")))
         .write.mode("overwrite").parquet(s"$dir/tots")
-    } finally tf.unpersist()
+    }
     Artifact.commit(docs.sparkSession, dir, Config, Seq(Buckets), modelChecks(dir))
   }
 

@@ -136,7 +136,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("hive-style partitioned writes prune directories at read time") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val tmp = graft.TestDir("graft_part")
     val out = s"$tmp/docs"
     try {
       Tables.documents(spark, dir).write.partitionBy("lang").parquet(out)
@@ -269,7 +269,7 @@ class PlanShapeSpec extends SparkSpec {
     // r4's inputs: a stored index of the old split plus the new batch
     val docs = Tables.documents(spark, dir)
     val bucket = graft.text.TextAnalysis.splitBucket(col("doc_id"))
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_r4_plan").toString
+    val idxDir = graft.TestDir("graft_r4_plan")
     val old = graft.text.Bm25.buildIndex(docs.filter(bucket < 80), "doc_id", "text")
     graft.text.Bm25.writeIndex(old, idxDir)
     old.postings.unpersist()
@@ -331,7 +331,7 @@ class PlanShapeSpec extends SparkSpec {
     // index — a plan that reaches back to the corpus parquet would drag
     // 100 TB of text into every delete
     val docs = Tables.documents(spark, dir)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_r7_plan").toString
+    val idxDir = graft.TestDir("graft_r7_plan")
     graft.text.Bm25.writeIndex(
       graft.text.Bm25.buildIndex(docs, "doc_id", "text"), idxDir)
     val sp = spark; import sp.implicits._
@@ -364,7 +364,7 @@ class PlanShapeSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val sharr = graft.dedup.MinHash.hashedShingleArray(docs, "doc_id", "text", 2)
     val st = graft.dedup.RepIndex.build(sharr, "doc_id")
-    val repDir = java.nio.file.Files.createTempDirectory("graft_rep_dpp").toString
+    val repDir = graft.TestDir("graft_rep_dpp")
     graft.dedup.RepIndex.write(st, repDir)
     val probe = graft.dedup.MinHash.hashedShingleArray(
       docs.filter(col("doc_id") < 2), "doc_id", "text", 2)
@@ -394,7 +394,7 @@ class PlanShapeSpec extends SparkSpec {
     // dynamic partition pruning, which measurably degraded to
     // dynamicpruningexpression(true) at runtime — every bucket read.)
     val emb = Tables.embeddings(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prefix_plan").toString
+    val tmp = graft.TestDir("graft_prefix_plan")
     graft.similarity.Cosine.writePrefixIndex(emb, "vec_id", "embedding", 16, tmp)
     // stage-1 plan shape: the shortlist's own scan reads prefix, not full
     val s1 = formatted(spark.read.parquet(s"$tmp/vectors")
@@ -442,7 +442,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("segmented index read: N segments = ONE multi-path scan per component") {
     val sp = spark; import sp.implicits._
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_seg_plan").toString
+    val dir2 = graft.TestDir("graft_seg_plan")
     val sink = graft.streaming.StreamingIndexMaintenance
       .indexSink(sp, dir2, "doc_id", "text") _
     sink(Seq((1L, "quick brown fox"), (2L, "lazy dog")).toDF("doc_id", "text"), 0L)

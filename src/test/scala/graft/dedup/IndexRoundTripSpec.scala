@@ -26,7 +26,7 @@ class IndexRoundTripSpec extends SparkSpec {
       n = 2, threshold = 0.5).orderBy("id_new", "id_old").collect().toSeq
     assert(fresh.nonEmpty, "fixture must produce at least one cross-snapshot dup")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val dir = graft.TestDir("graft_idx")
     try {
       val sharr = MinHash.hashedShingleArray(old, "doc_id", "text", 2)
       MinHash.snapshotIndex(sharr, "doc_id").write.mode("overwrite").parquet(dir)
@@ -55,7 +55,7 @@ class IndexRoundTripSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog near the river bank forever"),
       (11L, "one more unrelated document talking about parquet files and pails"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_app").toString
+    val dir = graft.TestDir("graft_idx_app")
     try {
       MinHash.snapshotIndex(MinHash.hashedShingleArray(old, "doc_id", "text", 2),
         "doc_id").write.mode("overwrite").parquet(dir)
@@ -170,7 +170,7 @@ class IndexRoundTripSpec extends SparkSpec {
     val fresh = graft.similarity.Cosine.assignToCentroids(
       emb, "vec_id", "embedding", cents, "label").orderBy("vec_id").collect().toSeq
     assert(fresh.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = graft.TestDir("graft_ivf")
     try {
       cents.write.mode("overwrite").parquet(dir)
       val stored = spark.read.parquet(dir)

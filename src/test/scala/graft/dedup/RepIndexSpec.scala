@@ -86,7 +86,7 @@ class RepIndexSpec extends SparkSpec {
     val sp = spark
     val old = sharrOf(Seq(5L -> groupA, 7L -> groupA, 11L -> loner))
     val st0 = RepIndex.build(old, "doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_repidx").toString
+    val dir = graft.TestDir("graft_repidx")
     RepIndex.write(st0, dir)
     val back = RepIndex.read(sp, dir)
     assert(labelMap(back) == labelMap(st0))
@@ -218,7 +218,7 @@ class RepIndexSpec extends SparkSpec {
     val st1 = RepIndex.delete(Seq(5L, 7L).toDF("doc_id"), st0, "doc_id")
     // partitionBy writes no directories for zero rows — the empty state
     // must still round-trip (plain-layout fallback) and serve nothing
-    val dir = java.nio.file.Files.createTempDirectory("graft_repidx_e").toString
+    val dir = graft.TestDir("graft_repidx_e")
     RepIndex.write(st1, dir)
     val back = RepIndex.read(sp, dir)
     assert(back.labels.count() == 0 && back.bands.count() == 0
@@ -232,7 +232,7 @@ class RepIndexSpec extends SparkSpec {
     val sp = spark
     val st0 = RepIndex.build(sharrOf(Seq(5L -> groupA, 7L -> groupA,
       11L -> loner, 13L -> groupB, 17L -> groupB, 23L -> novelT)), "doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_reptorn").toString
+    val dir = graft.TestDir("graft_reptorn")
     RepIndex.write(st0, dir)
     // simulate a crashed in-place rewrite: ONE leaf directory lands under
     // a wrong pbucket while every other directory stays consistent — the
@@ -264,7 +264,7 @@ class RepIndexSpec extends SparkSpec {
     val sp = spark
     val st0 = RepIndex.build(sharrOf(Seq(5L -> groupA, 7L -> groupA,
       2L -> groupB, 9L -> groupB, 11L -> loner)), "doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_repidx_cap").toString
+    val dir = graft.TestDir("graft_repidx_cap")
     RepIndex.write(st0, dir)
     val probe = sharrOf(Seq(100L -> groupA, 101L -> groupB, 102L -> novelT))
     val point = RepIndex.searchStored(sp, probe, dir, "doc_id")

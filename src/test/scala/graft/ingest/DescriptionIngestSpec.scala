@@ -20,7 +20,7 @@ class DescriptionIngestSpec extends SparkSpec {
 
   test("ingest skips corrupt and incomplete outputs, decodes spaced paths") {
     val sp = spark; import sp.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-s4-spec")
+    val root = graft.TestDir.path("graft-s4-spec")
     try {
       write(root, "aws", "a1.medium", full)
       write(root, "azure", "Standard D2 v5", full) // space → %20 in input_file_name
@@ -42,7 +42,7 @@ class DescriptionIngestSpec extends SparkSpec {
 
   test("outputs without a matching server row are dropped by the join") {
     val sp = spark; import sp.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-s4-spec2")
+    val root = graft.TestDir.path("graft-s4-spec2")
     try {
       write(root, "aws", "known", full)
       write(root, "aws", "orphan", full)

@@ -3,12 +3,10 @@ package graft.ingest
 import graft.SparkSpec
 import graft.schema.Schemas
 
-import java.nio.file.Files
-
 class PullSpec extends SparkSpec {
 
   test("pull conforms, dedups and sinks every record type") {
-    val dir = Files.createTempDirectory("graft-pull").toString
+    val dir = graft.TestDir("graft-pull")
     val counts = Pull.pull(spark, new DemoVendor, Pull.parquetSink(dir))
     // every registry table except the orchestrator-owned _metadata
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
@@ -28,7 +26,7 @@ class PullSpec extends SparkSpec {
 
   test("grid vendor: nested machine-type and SKU JSON through the same contract") {
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-grid").toString
+    val dir = graft.TestDir("graft-pull-grid")
     val counts = Pull.pull(spark, new GridVendor, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
     // 5 distinct machine types across 3 zone payloads (n2-standard-4 dedups)
@@ -62,7 +60,7 @@ class PullSpec extends SparkSpec {
   test("meter vendor: paginated meters, capability pairs, tier chains") {
     import org.apache.spark.sql.functions.col
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-meter").toString
+    val dir = graft.TestDir("graft-pull-meter")
     val counts = Pull.pull(spark, new MeterVendor, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
     assert(counts("region") == 2 && counts("zone") == 6) // 3 AZs per region
@@ -104,7 +102,7 @@ class PullSpec extends SparkSpec {
   test("cap vendor: monthly-cap tiers, alias-resolved regions, cpu rule table") {
     import org.apache.spark.sql.functions.col
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-cap").toString
+    val dir = graft.TestDir("graft-pull-cap")
     val counts = Pull.pull(spark, new CapVendor, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
     assert(counts("region") == 2 && counts("zone") == 2 && counts("server") == 3)
@@ -135,7 +133,7 @@ class PullSpec extends SparkSpec {
   test("zonal vendor: dynamic-key pivot, gpu gating, storage catalog") {
     import org.apache.spark.sql.functions.col
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-zonal").toString
+    val dir = graft.TestDir("graft-pull-zonal")
     val v = new ZonalVendor
     val counts = Pull.pull(spark, v, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
@@ -190,7 +188,7 @@ class PullSpec extends SparkSpec {
   test("catalog vendor: addon filtering, name-rule gpus, computed storage keys") {
     import org.apache.spark.sql.functions.col
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-catalog").toString
+    val dir = graft.TestDir("graft-pull-catalog")
     val v = new CatalogVendor
     val counts = Pull.pull(spark, v, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
@@ -338,7 +336,7 @@ class PullSpec extends SparkSpec {
           .withColumn("currency", org.apache.spark.sql.functions.lit("USD"))
       }
     }
-    val dir = Files.createTempDirectory("graft-pull2").toString
+    val dir = graft.TestDir("graft-pull2")
     Pull.pull(spark, v, Pull.parquetSink(dir))
     val rows = spark.read.parquet(s"$dir/ipv4_price")
       .select("region_id", "price").collect()
@@ -348,7 +346,7 @@ class PullSpec extends SparkSpec {
 
   test("sku vendor: alias-resolved sku prices, availability annotation, gpu spec rules") {
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-sku").toString
+    val dir = graft.TestDir("graft-pull-sku")
     val v = new SkuVendor
     val counts = Pull.pull(spark, v, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")
@@ -445,7 +443,7 @@ class PullSpec extends SparkSpec {
 
   test("override vendor: field-level location overrides, fractional gpus, gated storage") {
     val sp = spark
-    val dir = Files.createTempDirectory("graft-pull-override").toString
+    val dir = graft.TestDir("graft-pull-override")
     val v = new OverrideVendor
     val counts = Pull.pull(spark, v, Pull.parquetSink(dir))
     assert(counts.keySet == Schemas.tables.keySet - "_metadata")

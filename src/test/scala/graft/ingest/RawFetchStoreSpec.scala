@@ -2,13 +2,11 @@ package graft.ingest
 
 import graft.SparkSpec
 
-import java.nio.file.Files
-
 class RawFetchStoreSpec extends SparkSpec {
 
   test("fetch runs once within TTL, re-runs after expiry") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("graft-cache").toString + "/raw"
+    val dir = graft.TestDir("graft-cache") + "/raw"
     var fetches = 0
     def fetch = { fetches += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
 

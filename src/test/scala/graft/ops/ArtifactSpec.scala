@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import graft.{SourceScan, SparkSpec}
 import graft.similarity.Cosine
 import org.apache.spark.sql.DataFrame
@@ -13,9 +11,6 @@ import org.apache.spark.sql.functions._
   * fails loudly, the open memo keeps one entry per (dir, sidecar), and
   * no program source forks the lifecycle. */
 class ArtifactSpec extends SparkSpec {
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_artifact_$name").toString
 
   /** (modulus, fingerprint of `t`): one pinned value, one check. */
   private val Table = Artifact.Sidecar("t_config", 2 to 2, checksAt = 1,
@@ -33,7 +28,7 @@ class ArtifactSpec extends SparkSpec {
     jobsOf(Artifact.open(spark, dir, Table, _ => checks(dir)))
 
   test("a repeat open of an unchanged artifact runs no check job") {
-    val dir = tmp("repeat")
+    val dir = graft.TestDir("graft_artifact_repeat")
     writeTable(dir, Seq(1L -> "a", 2L -> "b"))
     Artifact.commit(spark, dir, Table, Seq(7), checks(dir))
     val (values, first) = open(dir)
@@ -46,7 +41,7 @@ class ArtifactSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     val docs = Seq((1L, "alpha beta", "tgt"), (2L, "beta gamma", "raw"))
       .toDF("doc_id", "text", "source")
-    val model = tmp("dsir")
+    val model = graft.TestDir("graft_artifact_dsir")
     graft.text.Dsir.writeModel(docs, "doc_id", "text", "source", "tgt", model)
     val batch = docs.select(col("doc_id"), col("text"))
     val (_, dsirFirst) = jobsOf(
@@ -57,7 +52,7 @@ class ArtifactSpec extends SparkSpec {
   }
 
   test("a re-commit under new values checks again; a torn one fails loudly") {
-    val dir = tmp("recommit")
+    val dir = graft.TestDir("graft_artifact_recommit")
     writeTable(dir, Seq(1L -> "a"))
     Artifact.commit(spark, dir, Table, Seq(7), checks(dir))
     open(dir)
@@ -81,7 +76,7 @@ class ArtifactSpec extends SparkSpec {
       (i.toLong, Array.tabulate(16)(_ => (rnd(17) - 8) / 8.0f))
     }.toDF("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") < 3)
-    val dir = tmp("rot")
+    val dir = graft.TestDir("graft_artifact_rot")
     def serve(): Long =
       Cosine.prefixTopKStored(spark, queries, dir, "vec_id", "embedding", k = 3).count()
     Cosine.writeRotatedPrefixIndex(emb, "vec_id", "embedding", p = 8, dir)

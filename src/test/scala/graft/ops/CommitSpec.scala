@@ -13,15 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * forces a file anywhere else. */
 class CommitSpec extends AnyFunSuite {
 
-  private def tmpDir(name: String): Path =
-    Files.createTempDirectory(s"graft_commit_$name")
-
   private def text(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
 
   private def listing(d: Path): Seq[String] = d.toFile.list().toSeq.sorted
 
   test("an overwrite replaces the old bytes") {
-    val d = tmpDir("overwrite")
+    val d = graft.TestDir.path("graft_commit_overwrite")
     val f = d.resolve("c_config")
     Commit.atomic(f, "12,345,6789".getBytes(UTF_8))
     Commit.atomic(f, "1,2".getBytes(UTF_8))
@@ -29,7 +26,7 @@ class CommitSpec extends AnyFunSuite {
   }
 
   test("a stale temp file left by a crashed write is overwritten") {
-    val d = tmpDir("stale")
+    val d = graft.TestDir.path("graft_commit_stale")
     Files.write(d.resolve("m3.tmp"),
       "a torn manifest, longer than the commit that follows it".getBytes(UTF_8))
     Commit.atomic(d.resolve("m3"), "7\nseg7".getBytes(UTF_8))
@@ -38,7 +35,7 @@ class CommitSpec extends AnyFunSuite {
   }
 
   test("a successful commit leaves no temp file, for sidecars and manifests") {
-    val d = tmpDir("clean")
+    val d = graft.TestDir.path("graft_commit_clean")
     ConfigFile.writeAtomic(d.toString, "t_config", Seq(3, 14))
     ConfigFile.writeAtomic(d.toString, "t_config", Seq(3, 15))
     assert(listing(d) == Seq("t_config"))

@@ -9,7 +9,7 @@ class CompactSpec extends SparkSpec {
 
   test("compacted write hits the size-derived file count, rows intact") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = graft.TestDir("graft-compact")
     try {
       // source parquet gives the optimizer real size stats to derive from
       val src = s"$dir/src"
@@ -36,7 +36,7 @@ class CompactSpec extends SparkSpec {
 
   test("maxRecordsPerFile caps rows when the size estimate is off") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact2").toString
+    val dir = graft.TestDir("graft-compact2")
     try {
       val df = (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v")
       Compact.writeCompacted(df, s"$dir/out", targetBytes = 1L << 30,

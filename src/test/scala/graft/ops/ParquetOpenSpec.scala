@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import graft.{SourceScan, SparkSpec}
 import graft.dedup.{MinHash, RepIndex}
 import org.apache.hadoop.fs.Path
@@ -15,9 +13,6 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * does not keep a dropped session alive. The last case guards the
   * single path itself: no program source opens parquet any other way. */
 class ParquetOpenSpec extends SparkSpec {
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_popen_$name").toString
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -39,12 +34,12 @@ class ParquetOpenSpec extends SparkSpec {
 
   test("a repeat open runs no job and reads what a plain read reads") {
     val sp = spark; import sp.implicits._
-    val flat = s"${tmp("flat")}/t"
+    val flat = s"${graft.TestDir("graft_popen_flat")}/t"
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
       .repartition(3).write.parquet(flat)
     // partition values like "007" infer as int 7: the repeat open must
     // keep the inferred partition type and column order
-    val parted = s"${tmp("parted")}/t"
+    val parted = s"${graft.TestDir("graft_popen_parted")}/t"
     Seq((1L, "007", 5), (2L, "010", 6), (3L, "007", 7)).toDF("id", "p", "q")
       .write.partitionBy("p").parquet(parted)
     for (path <- Seq(flat, parted)) {
@@ -53,7 +48,7 @@ class ParquetOpenSpec extends SparkSpec {
     }
     assert(ParquetOpen(spark, parted).schema.map(_.name) == Seq("id", "q", "p"))
     // several paths open as one scan, remembered as one entry
-    val flat2 = s"${tmp("flat2")}/t"
+    val flat2 = s"${graft.TestDir("graft_popen_flat2")}/t"
     Seq((4L, "d")).toDF("id", "s").write.parquet(flat2)
     ParquetOpen(spark, flat, flat2)
     val (two, jobs) = jobsOf(ParquetOpen(spark, flat, flat2))
@@ -62,7 +57,7 @@ class ParquetOpenSpec extends SparkSpec {
 
   test("a pinned open keeps the pinned type and runs no job on repeat") {
     val sp = spark; import sp.implicits._
-    val parted = s"${tmp("pinned")}/t"
+    val parted = s"${graft.TestDir("graft_popen_pinned")}/t"
     Seq((1L, "007"), (2L, "010")).toDF("id", "p").write.partitionBy("p").parquet(parted)
     val first = ParquetOpen.pinned(spark, parted, "p", StringType)
     assert(first.schema("p").dataType == StringType)
@@ -76,7 +71,7 @@ class ParquetOpenSpec extends SparkSpec {
 
   test("an overwrite straight after an open is seen: flat and partitionBy layouts") {
     val sp = spark; import sp.implicits._
-    val flat = s"${tmp("owflat")}/t"
+    val flat = s"${graft.TestDir("graft_popen_owflat")}/t"
     Seq((1L, "a")).toDF("id", "s").write.parquet(flat)
     assert(ParquetOpen(spark, flat).schema.map(_.name) == Seq("id", "s"))
     Seq((1.5d, 2, true)).toDF("x", "y", "z").write.mode("overwrite").parquet(flat)
@@ -84,7 +79,7 @@ class ParquetOpenSpec extends SparkSpec {
     sameAsPlain(flat)
     assert(ParquetOpen(spark, flat).schema.map(_.name) == Seq("x", "y", "z"))
 
-    val parted = s"${tmp("owparted")}/t"
+    val parted = s"${graft.TestDir("graft_popen_owparted")}/t"
     Seq((1L, 3)).toDF("id", "p").write.partitionBy("p").parquet(parted)
     assert(ParquetOpen(spark, parted).schema("p").dataType != StringType)
     Seq((1L, "x")).toDF("id", "p").write.mode("overwrite").partitionBy("p")
@@ -104,7 +99,7 @@ class ParquetOpenSpec extends SparkSpec {
       Seq(5L -> "alpha beta gamma delta epsilon", 7L -> "alpha beta gamma delta epsilon",
         11L -> "one two three four five six").toDF("doc_id", "text"), "doc_id", "text", 2)
     val full = RepIndex.build(sharr, "doc_id")
-    val dir = tmp("repidx")
+    val dir = graft.TestDir("graft_popen_repidx")
     RepIndex.write(full, dir)
     assert(ParquetOpen(spark, s"$dir/bands").columns.contains("pbucket"))
     val fullBands = RepIndex.read(sp, dir).bands.count()
@@ -129,7 +124,7 @@ class ParquetOpenSpec extends SparkSpec {
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
     // the events layout: TIMESTAMP(NANOS), which Spark reads only as long
-    val file = s"${tmp("nanos")}/e.parquet"
+    val file = s"${graft.TestDir("graft_popen_nanos")}/e.parquet"
     val hconf = spark.sparkContext.hadoopConfiguration
     val schema = MessageTypeParser.parseMessageType(
       "message e { required int64 ts (TIMESTAMP(NANOS,true)); }")
@@ -163,7 +158,7 @@ class ParquetOpenSpec extends SparkSpec {
   }
 
   test("a missing path fails exactly as a plain read does") {
-    val missing = s"${tmp("missing")}/absent"
+    val missing = s"${graft.TestDir("graft_popen_missing")}/absent"
     val plain = intercept[AnalysisException](spark.read.parquet(missing))
     val ours = intercept[AnalysisException](ParquetOpen(spark, missing))
     assert(ours.getCondition == plain.getCondition)
@@ -174,7 +169,7 @@ class ParquetOpenSpec extends SparkSpec {
 
   test("withSplits reports the scan's split count under the current split confs") {
     val sp = spark; import sp.implicits._
-    val path = s"${tmp("splits")}/t"
+    val path = s"${graft.TestDir("graft_popen_splits")}/t"
     (1L to 4000L).map(i => (i, s"row-$i")).toDF("id", "s").repartition(4)
       .write.parquet(path)
     val key = "spark.sql.files.maxPartitionBytes"
@@ -206,7 +201,7 @@ class ParquetOpenSpec extends SparkSpec {
 
   test("an entry keyed by a dropped session is collected with the session") {
     val sp = spark; import sp.implicits._
-    val path = s"${tmp("weak")}/t"
+    val path = s"${graft.TestDir("graft_popen_weak")}/t"
     Seq(1L).toDF("id").write.parquet(path)
     val held = ParquetOpen.sessionsHeld
     val ref = openInDroppedSession(path)

@@ -32,7 +32,7 @@ class TopKPlanSpec extends SparkSpec {
 
   test("o3_global_topk plans as TakeOrderedAndProject, not a global-sort window") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-topk").toString
+    val dir = graft.TestDir("graft-topk")
     try {
       (1L to 500L).map(i => (i, (i * 37 % 499) * 1.0)).toDF("o_orderkey", "o_totalprice")
         .write.parquet(s"$dir/orders.parquet")
@@ -117,7 +117,7 @@ class JsonDumpSpec extends SparkSpec {
 
   test("dump writes partitioned json with self-contained records and schema file") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dump").toString
+    val dir = graft.TestDir("graft-dump")
     val df = Seq(("us", "NA", 1.5), ("de", "EU", 2.5)).toDF("id", "cont", "v")
     graft.sinks.JsonDump.dump(df, dir, "country", Seq("id"))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/country/_schema.json")))

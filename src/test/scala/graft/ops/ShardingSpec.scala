@@ -9,7 +9,7 @@ class ShardingSpec extends SparkSpec {
 
   test("sharded write round-trips: partition dirs, membership, manifest parity") {
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    val out = graft.TestDir("shards")
     Sharding.shardedWrite(docs, "doc_id", out, nShards = 4)
     // one partition directory per shard
     val subdirs = new java.io.File(out).listFiles().filter(_.isDirectory)

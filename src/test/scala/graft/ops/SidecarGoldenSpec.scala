@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   * an earlier build keeps opening under a later one. */
 class SidecarGoldenSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_golden_$name").toString
-
   private def sidecar(dir: String, name: String): String =
     new String(Files.readAllBytes(Paths.get(dir, name)), StandardCharsets.UTF_8)
 
@@ -51,43 +48,43 @@ class SidecarGoldenSpec extends SparkSpec {
   }
 
   test("text and dedup sidecars: BM25 and RepIndex config, DSIR model") {
-    val bm = tmp("bm25")
+    val bm = graft.TestDir("graft_golden_bm25")
     Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), bm)
     assert(sidecar(bm, "config") == s"${Bm25.TermBuckets}")
-    val rep = tmp("rep")
+    val rep = graft.TestDir("graft_golden_rep")
     RepIndex.write(RepIndex.build(MinHash.hashedShingleArray(
       docs.select(col("doc_id"), col("text")), "doc_id", "text", 2),
       "doc_id"), rep)
     assert(sidecar(rep, "config") == s"${MinHash.ProbeBuckets}")
-    val dsir = tmp("dsir")
+    val dsir = graft.TestDir("graft_golden_dsir")
     Dsir.writeModel(docs, "doc_id", "text", "source", "tgt", dsir)
     assert(sidecar(dsir, "dsir_config") == "4096,182760643,783989734,293308810")
   }
 
   test("vector sidecars: SRP, IVF, SQ8, BQ, prefix and rotated prefix") {
-    val srp = tmp("srp")
+    val srp = graft.TestDir("graft_golden_srp")
     Cosine.writeSrpIndex(vectors, "vec_id", "embedding", 4, 16, 2, srp)
     assert(sidecar(srp, "config") == "4,16,2")
-    val ivf = tmp("ivf")
+    val ivf = graft.TestDir("graft_golden_ivf")
     Cosine.writeIvfIndex(vectors.select(col("vec_id"), col("embedding")),
       cells, centroids, "vec_id", "embedding", "cell", ivf)
     assert(sidecar(ivf, "ivf_commit") == "12,973203558")
-    val sq8 = tmp("sq8")
+    val sq8 = graft.TestDir("graft_golden_sq8")
     Cosine.writeSq8Index(vectors, "vec_id", "embedding", 16, sq8)
     assert(sidecar(sq8, "sq8_config") == "16,16,16746651")
-    val bq = tmp("bq")
+    val bq = graft.TestDir("graft_golden_bq")
     Cosine.writeBqIndex(vectors, "vec_id", "embedding", 16, bq)
     assert(sidecar(bq, "bq_config") == "16,16,12,805307567")
-    val prefix = tmp("prefix")
+    val prefix = graft.TestDir("graft_golden_prefix")
     Cosine.writePrefixIndex(vectors, "vec_id", "embedding", 4, prefix)
     assert(sidecar(prefix, "prefix_config") == s"4,${Cosine.PrefixBuckets}")
     // the streamed publish pins an explicit rotation: four rows of
     // eighths, reproducible where a trained eigenbasis is not
     val rotation = Seq.tabulate(4, 16)((i, j) => ((i + 2 * j) % 5 - 2) / 8.0)
-    val seg = tmp("rot_seg")
+    val seg = graft.TestDir("graft_golden_rot_seg")
     StreamingPrefixMaintenance.rowSink(spark, seg, "vec_id", "embedding", 4,
       rotation)(vectors, 0L)
-    val rot = tmp("rot")
+    val rot = graft.TestDir("graft_golden_rot")
     StreamingPrefixMaintenance.publish(spark, seg, "vec_id", 4, rot, rotation)
     assert(sidecar(rot, "prefix_rot_config") == "4,16,640535701")
   }
@@ -97,13 +94,13 @@ class SidecarGoldenSpec extends SparkSpec {
       Cosine.writePqIndex(vectors, cells, "vec_id", "embedding", "cell", dir,
         nSub = 2, subDim = 8, nPlanes = 2,
         centroidFn = Cosine.cellCentroidsSorted, centroids = cents)
-    val withCents = tmp("pq_c")
+    val withCents = graft.TestDir("graft_golden_pq_c")
     pq(withCents, Some(centroids))
     assert(sidecar(withCents, "pq_commit") == "2,8,2,16,12,36319531,973203558,1,0")
-    val bare = tmp("pq")
+    val bare = graft.TestDir("graft_golden_pq")
     pq(bare, None)
     assert(sidecar(bare, "pq_commit") == "2,8,2,16,12,36319531,0,0,0")
-    val residual = tmp("pq_r")
+    val residual = graft.TestDir("graft_golden_pq_r")
     Cosine.writeResidualPqIndexWith(vectors, cells, "vec_id", "embedding",
       "cell", spark.read.parquet(s"$withCents/codebook"), centroids, residual,
       nSub = 2, subDim = 8, nPlanes = 2)

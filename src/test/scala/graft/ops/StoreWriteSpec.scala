@@ -3,11 +3,11 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** [[StoreWrite.clusterByDirs]] — the §6 output-file-sizing pass in front
-  * of every partitioned serving store. Pins the file-count contract (one
-  * parquet file per partition directory at the default `filesPerDir=1`;
-  * bounded fan-out when raised) and that the clustered write read back is
-  * row-identical to the unclustered frame. */
+/** [[StoreWrite.partitioned]] — the §6 output-file-sizing write behind
+  * every partitioned serving store. Pins the file-count contract (one
+  * parquet file per partition directory), that the clustered write read
+  * back is row-identical to the unclustered frame, that the write
+  * evaluates its rows once, and the zero-row flat layout. */
 class StoreWriteSpec extends SparkSpec {
 
   private def parquetFiles(dir: String): Seq[java.io.File] = {
@@ -20,7 +20,7 @@ class StoreWriteSpec extends SparkSpec {
   test("default: one file per partition directory, rows preserved") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val idx = graft.text.Bm25.buildIndex(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_swtest").toString
+    val dir = graft.TestDir("graft_swtest")
     try {
       graft.text.Bm25.writeIndex(idx, dir)
       val dirs = new java.io.File(s"$dir/postings").listFiles()
@@ -28,7 +28,7 @@ class StoreWriteSpec extends SparkSpec {
       val files = parquetFiles(s"$dir/postings").size
       assert(dirs > 0)
       assert(files == dirs, s"$files files for $dirs directories — " +
-        "clusterByDirs should leave exactly one file per directory")
+        "StoreWrite.partitioned should leave exactly one file per directory")
       val back = spark.read.parquet(s"$dir/postings")
         .select(col("did"), col("term"), col("tf"))
       assert(back.exceptAll(idx.postings).isEmpty &&
@@ -39,39 +39,26 @@ class StoreWriteSpec extends SparkSpec {
     }
   }
 
-  test("filesPerDir=4 bounds the fan-out per directory") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val idx = graft.text.Bm25.buildIndex(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_swtest4").toString
-    spark.conf.set(StoreWrite.FilesPerDirConf, "4")
-    try {
-      graft.text.Bm25.writeIndex(idx, dir)
-      val dirFiles = new java.io.File(s"$dir/postings").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("tbucket="))
-        .map(d => parquetFiles(d.getPath).size)
-      assert(dirFiles.nonEmpty)
-      assert(dirFiles.forall(n => n >= 1 && n <= 4),
-        s"per-dir file counts ${dirFiles.mkString(",")} exceed filesPerDir=4")
-    } finally {
-      spark.conf.unset(StoreWrite.FilesPerDirConf)
-      idx.postings.unpersist()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
+  test("a partitioned write evaluates its rows once; zero rows read back flat") {
+    val evals = spark.sparkContext.longAccumulator("storewrite_evals")
+    val seen = udf { (k: Long) => evals.add(1); k }
+    // the UDF gates a filter, so any second pass over the rows (an
+    // emptiness probe included) would evaluate it again
+    val rows = spark.range(0, 200, 1, 4).filter(seen(col("id")) >= 0)
+      .select(col("id").as("k"), (col("id") * 3).as("v"))
+    val dir = graft.TestDir("graft_swonce")
+    StoreWrite.partitioned(rows, s"$dir/t", "p" -> pmod(col("k"), lit(8L)))
+    assert(evals.value == 200,
+      s"the UDF ran ${evals.value} times for 200 rows: rows evaluated twice")
+    assert(spark.read.parquet(s"$dir/t").count() == 200)
 
-  test("invalid filesPerDir values fail loudly, naming the conf key") {
-    val sp = spark
-    import sp.implicits._
-    val rows = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    for (bad <- Seq("zero-ish", "0", "-3")) {
-      spark.conf.set(StoreWrite.FilesPerDirConf, bad)
-      try {
-        val e = intercept[IllegalArgumentException] {
-          StoreWrite.clusterByDirs(rows, col("k"), col("v")).count()
-        }
-        assert(e.getMessage.contains(StoreWrite.FilesPerDirConf),
-          s"error for '$bad' must name the conf key: ${e.getMessage}")
-      } finally spark.conf.unset(StoreWrite.FilesPerDirConf)
-    }
+    val none = rows.filter(col("v") < 0)
+    StoreWrite.partitioned(none, s"$dir/e", "p" -> pmod(col("k"), lit(8L)))
+    assert(!new java.io.File(s"$dir/e").listFiles().exists(_.isDirectory),
+      "zero rows must write the flat layout, not partition directories")
+    val back = spark.read.parquet(s"$dir/e")
+    assert(back.schema.map(f => f.name -> f.dataType) ==
+      none.schema.map(f => f.name -> f.dataType))
+    assert(back.count() == 0)
   }
 }

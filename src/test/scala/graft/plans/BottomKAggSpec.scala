@@ -51,7 +51,7 @@ class BottomKAggSpec extends SparkSpec {
       .agg(BottomKAgg.bottomKValues(col("h"), col("v"), 16).as("vs"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     // states per (g, shard) THROUGH A PARQUET ROUND TRIP, then merged
-    val dir = java.nio.file.Files.createTempDirectory("graft_bk_states").toString
+    val dir = graft.TestDir("graft_bk_states")
     df.groupBy(col("g"), col("shard"))
       .agg(BottomKAgg.bottomKState(col("h"), col("v"), 16).as("st"))
       .write.mode("overwrite").parquet(dir)

@@ -73,7 +73,7 @@ class KmvSketchSpec extends SparkSpec {
     val direct = df.agg(KmvSketchAgg.kmvDistinct(col("h"), 64)).head.getDouble(0)
     assert(merged == direct, s"merged=$merged direct=$direct")
     // and a sketch round-tripped through parquet still merges identically
-    val dir = java.nio.file.Files.createTempDirectory("kmv").toString + "/s"
+    val dir = graft.TestDir("kmv") + "/s"
     daily.write.parquet(dir)
     val reread = sp.read.parquet(dir)
       .agg(KmvSketchAgg.kmvMerge(col("sketch"), 64)).head.getDouble(0)

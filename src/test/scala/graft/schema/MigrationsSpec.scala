@@ -5,7 +5,6 @@ import graft.ops.Sync
 import graft.sinks.DdlGen
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** The alembic-analogue migration chain: a populated v1 store upgrades to
   * head with data preserved, untouched tables unread, the revision stamp
@@ -16,7 +15,7 @@ class MigrationsSpec extends SparkSpec {
     * benchmark has no category, benchmark_score no note. */
   private def v1Store(): String = {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("graft-mig").toString
+    val dir = graft.TestDir("graft-mig")
     Seq(("aws", "m5.large", 2, 0), ("aws", "p4d.24xlarge", 96, 8))
       .toDF("vendor_id", "server_id", "vcpus", "gpu_count")
       .write.parquet(s"$dir/server")
@@ -67,7 +66,7 @@ class MigrationsSpec extends SparkSpec {
 
   test("an unstamped store applies the whole chain; partial targets work") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("graft-mig-unstamped").toString
+    val dir = graft.TestDir("graft-mig-unstamped")
     Seq(("aws", "m5.large", 0)).toDF("vendor_id", "server_id", "gpu_count")
       .write.parquet(s"$dir/server")
     // upgrade only part-way: the stamp must land on the requested revision

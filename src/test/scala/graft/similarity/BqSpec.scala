@@ -50,7 +50,7 @@ class BqSpec extends SparkSpec {
       .select(col("query_id"), col("rank"), col("neighbor_id"))
     assert(full.collect().toSet == exact.collect().toSet,
       "corpus-covering BQ two-stage != exact topK")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bq").toString
+    val dir = graft.TestDir("graft_bq")
     Cosine.writeBqIndex(emb, "vec_id", "embedding", 64, dir)
     val inline = Cosine.bqTopK(queries, emb, "vec_id", "embedding",
       dim = 64, k = 5, kShort = 20)
@@ -63,7 +63,7 @@ class BqSpec extends SparkSpec {
     // store that has never been OPENED in this process (validation runs
     // once per (dir, sidecar) — Artifact.open), then the
     // first open must refuse via the content fingerprint
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_bq_t").toString
+    val dir2 = graft.TestDir("graft_bq_t")
     Cosine.writeBqIndex(emb, "vec_id", "embedding", 64, dir2)
     val codes = spark.read.parquet(s"$dir2/codes")
     codes.withColumn("bwords",
@@ -90,7 +90,7 @@ class BqSpec extends SparkSpec {
   test("empty corpus writes a readable store; searches return zero rows") {
     val sp = spark; import sp.implicits._
     val empty = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bq_e").toString
+    val dir = graft.TestDir("graft_bq_e")
     Cosine.writeBqIndex(empty, "vec_id", "embedding", 64, dir)
     val queries = Seq((1L, Seq.fill(64)(0.5))).toDF("vec_id", "embedding")
     assert(Cosine.bqTopKStored(sp, queries, dir,

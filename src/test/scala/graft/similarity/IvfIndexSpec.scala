@@ -19,7 +19,7 @@ class IvfIndexSpec extends SparkSpec {
       .select(col("vec_id"), col("assigned_cell").as("cell"))
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
     // persist both index halves, reload
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val dir = graft.TestDir("ivfidx")
     cents.write.mode("overwrite").parquet(s"$dir/centroids")
     assigned.write.mode("overwrite").parquet(s"$dir/corpus")
     val storedCents = spark.read.parquet(s"$dir/centroids")
@@ -49,7 +49,7 @@ class IvfIndexSpec extends SparkSpec {
     val batch = emb.filter(col("vec_id") % 2 =!= 0)
     val cents = Cosine.cellCentroids(old.select(col("label"),
       Cosine.toDouble(col("embedding")).as("v")), "label", "v")
-    val dir = java.nio.file.Files.createTempDirectory("ivfapp").toString
+    val dir = graft.TestDir("ivfapp")
     cents.write.mode("overwrite").parquet(s"$dir/centroids")
     Cosine.assignToCentroids(old, "vec_id", "embedding", cents, "label")
       .select(col("vec_id"), col("assigned_cell").as("label"))
@@ -125,7 +125,7 @@ class IvfIndexSpec extends SparkSpec {
         .select(col("vec_id"), col("assigned_cell").as("label"))
     val id = col("vec_id")
     var live = id % 3 === 0
-    val dir = java.nio.file.Files.createTempDirectory("ivffold").toString
+    val dir = graft.TestDir("ivffold")
     assign(live).write.mode("overwrite").parquet(s"$dir/cells")
     var cells = spark.read.parquet(s"$dir/cells")
     val ops: Seq[Either[org.apache.spark.sql.Column, org.apache.spark.sql.Column]] = Seq(

@@ -31,7 +31,7 @@ class IvfStoredSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val cents = Cosine.cellCentroidsSorted(emb, "label", "embedding")
     val cells = emb.select(col("vec_id"), col("label"))
-    val dir = java.nio.file.Files.createTempDirectory("ivfstored").toString
+    val dir = graft.TestDir("ivfstored")
     Cosine.writeIvfIndex(emb.select(col("vec_id"), col("embedding")), cells,
       cents, "vec_id", "embedding", "label", dir)
     val queries = emb.filter(col("vec_id") < 10)
@@ -48,7 +48,7 @@ class IvfStoredSpec extends SparkSpec {
   test("the lists scan prunes to the probed cells; probes ride a broadcast") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val cents = Cosine.cellCentroidsSorted(emb, "label", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfprune").toString
+    val dir = graft.TestDir("ivfprune")
     Cosine.writeIvfIndex(emb.select(col("vec_id"), col("embedding")),
       emb.select(col("vec_id"), col("label")), cents,
       "vec_id", "embedding", "label", dir)
@@ -88,7 +88,7 @@ class IvfStoredSpec extends SparkSpec {
       .withColumn("slabel", format_string("%03d", col("label")))
     val cents = Cosine.cellCentroidsSorted(emb, "slabel", "embedding")
     val cells = emb.select(col("vec_id"), col("slabel"))
-    val dir = java.nio.file.Files.createTempDirectory("ivfstrcell").toString
+    val dir = graft.TestDir("ivfstrcell")
     Cosine.writeIvfIndex(emb.select(col("vec_id"), col("embedding")), cells,
       cents, "vec_id", "embedding", "slabel", dir)
     // the on-disk layout must actually contain zero-padded directories —
@@ -110,7 +110,7 @@ class IvfStoredSpec extends SparkSpec {
   test("torn re-train fails loudly: changed centroids under a stale sidecar") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val cents = Cosine.cellCentroidsSorted(emb, "label", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivftorn").toString
+    val dir = graft.TestDir("ivftorn")
     Cosine.writeIvfIndex(emb.select(col("vec_id"), col("embedding")),
       emb.select(col("vec_id"), col("label")), cents,
       "vec_id", "embedding", "label", dir)
@@ -118,7 +118,7 @@ class IvfStoredSpec extends SparkSpec {
     // disk changes (all centroids shifted) while sidecar + lists stay
     val shifted = spark.read.parquet(s"$dir/centroids")
       .withColumn("centroid", col("centroid") + 1.0d)
-    val tmp = java.nio.file.Files.createTempDirectory("ivftorn_c").toString
+    val tmp = graft.TestDir("ivftorn_c")
     shifted.write.mode("overwrite").parquet(s"$tmp/centroids")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -138,7 +138,7 @@ class IvfStoredSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val none = emb.filter(lit(false))
     val cents = Cosine.cellCentroidsSorted(emb, "label", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivfempty").toString
+    val dir = graft.TestDir("ivfempty")
     Cosine.writeIvfIndex(none.select(col("vec_id"), col("embedding")),
       none.select(col("vec_id"), col("label")), cents,
       "vec_id", "embedding", "label", dir)

@@ -28,7 +28,7 @@ class PqStoredSpec extends SparkSpec {
 
   test("stored cell-pruned IVFADC == in-plan ivfAdcTopK, sims included") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("pqstored").toString
+    val dir = graft.TestDir("pqstored")
     writeFixture(dir)
     val queries = emb.filter(col("vec_id") < 10)
     val stored = Cosine.ivfAdcSearchStored(spark, queries, dir,
@@ -41,7 +41,7 @@ class PqStoredSpec extends SparkSpec {
 
   test("the codes scan prunes to the probed cells; rerank prunes raw vectors") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("pqprune").toString
+    val dir = graft.TestDir("pqprune")
     writeFixture(dir)
     val totalCells = new java.io.File(s"$dir/codes").listFiles()
       .count(_.getName.startsWith("pcell="))
@@ -80,7 +80,7 @@ class PqStoredSpec extends SparkSpec {
 
   test("multiprobe stored IVFADC == in-plan twin; probes prune the code tree") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("pqmulti").toString
+    val dir = graft.TestDir("pqmulti")
     writeFixture(dir)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
@@ -114,7 +114,7 @@ class PqStoredSpec extends SparkSpec {
     // string-schema read (no partition-type inference in the filter)
     val emb = graft.Tables.embeddings(spark, sfDir)
       .withColumn("slabel", format_string("%03d", col("label")))
-    val dir = java.nio.file.Files.createTempDirectory("pqstrcell").toString
+    val dir = graft.TestDir("pqstrcell")
     Cosine.writePqIndex(emb, emb.select(col("vec_id"), col("slabel")),
       "vec_id", "embedding", "slabel", dir,
       centroidFn = Cosine.cellCentroidsSorted)
@@ -132,11 +132,11 @@ class PqStoredSpec extends SparkSpec {
 
   test("torn re-train fails loudly: changed codebook under a stale sidecar") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("pqtorn").toString
+    val dir = graft.TestDir("pqtorn")
     writeFixture(dir)
     val shifted = spark.read.parquet(s"$dir/codebook")
       .withColumn("centroid", col("centroid") + 1.0d)
-    val tmp = java.nio.file.Files.createTempDirectory("pqtorn_c").toString
+    val tmp = graft.TestDir("pqtorn_c")
     shifted.write.mode("overwrite").parquet(s"$tmp/codebook")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -154,7 +154,7 @@ class PqStoredSpec extends SparkSpec {
   test("multiprobe refuses a store committed without centroids — even " +
       "when a stale centroids/ dir would otherwise be servable") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("pqnocent").toString
+    val dir = graft.TestDir("pqnocent")
     writeFixture(dir) // leaves a centroid-bearing train on disk
     assert(new java.io.File(s"$dir/centroids").exists(),
       "test setup: first train wrote no centroids")
@@ -182,7 +182,7 @@ class PqStoredSpec extends SparkSpec {
   test("empty corpus writes a readable layout and serves zero rows") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val none = emb.filter(lit(false))
-    val dir = java.nio.file.Files.createTempDirectory("pqempty").toString
+    val dir = graft.TestDir("pqempty")
     Cosine.writePqIndex(none, none.select(col("vec_id"), col("label")),
       "vec_id", "embedding", "label", dir,
       centroidFn = Cosine.cellCentroidsSorted)

@@ -64,7 +64,7 @@ class PrefixCalibrationSpec extends SparkSpec {
   test("calibrated store: sidecar pins the chosen width, serving == inline") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("prefcal").toString
+    val dir = graft.TestDir("prefcal")
     val (p, curve) = Cosine.writeRotatedPrefixIndexCalibrated(emb, "vec_id",
       "embedding", targetRecall = 0.5, dir)
     info(s"calibrated p=$p (curve $curve)")
@@ -84,7 +84,7 @@ class PrefixCalibrationSpec extends SparkSpec {
   test("empty corpus degrades to a readable empty layout at the narrowest width") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val none = emb.filter(lit(false))
-    val dir = java.nio.file.Files.createTempDirectory("prefcal_e").toString
+    val dir = graft.TestDir("prefcal_e")
     val (p, curve) = Cosine.writeRotatedPrefixIndexCalibrated(none, "vec_id",
       "embedding", targetRecall = 0.9, dir)
     assert(p == 8 && curve.isEmpty)

@@ -84,7 +84,7 @@ class PrefixRotationSpec extends SparkSpec {
   test("stored rotated layout == inline rotated search; torn rotation loud") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("prefrot").toString
+    val dir = graft.TestDir("prefrot")
     val rot = Cosine.writeRotatedPrefixIndex(emb, "vec_id", "embedding",
       p = 16, dir)
     val stored = Cosine.prefixTopKStored(spark, queries, dir,
@@ -96,11 +96,11 @@ class PrefixRotationSpec extends SparkSpec {
     // torn state: rotation changed under a stale sidecar — on a FRESH
     // artifact (validation memoizes per (dir, sidecar); the dir above
     // already validated clean, which is exactly the memo's contract)
-    val dir2 = java.nio.file.Files.createTempDirectory("prefrot2").toString
+    val dir2 = graft.TestDir("prefrot2")
     Cosine.writeRotatedPrefixIndex(emb, "vec_id", "embedding", p = 16, dir2)
     val shifted = spark.read.parquet(s"$dir2/rotation")
       .withColumn("x", col("x") * 0.5d)
-    val tmp = java.nio.file.Files.createTempDirectory("prefrot_c").toString
+    val tmp = graft.TestDir("prefrot_c")
     shifted.write.mode("overwrite").parquet(s"$tmp/rotation")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -121,7 +121,7 @@ class PrefixRotationSpec extends SparkSpec {
     // against the fresh RAW prefixes — silently garbage stage-1 scores
     val emb = graft.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("preffam").toString
+    val dir = graft.TestDir("preffam")
     Cosine.writeRotatedPrefixIndex(emb, "vec_id", "embedding", p = 16, dir)
     Cosine.writePrefixIndex(emb, "vec_id", "embedding", p = 16, dir)
     assert(!graft.ops.ConfigFile.exists(dir, "prefix_rot_config"),
@@ -142,7 +142,7 @@ class PrefixRotationSpec extends SparkSpec {
   test("empty corpus: rotated writer degrades to a readable unrotated layout") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val none = emb.filter(lit(false))
-    val dir = java.nio.file.Files.createTempDirectory("prefrot_e").toString
+    val dir = graft.TestDir("prefrot_e")
     val rot = Cosine.writeRotatedPrefixIndex(none, "vec_id", "embedding",
       p = 16, dir)
     assert(rot.isEmpty)

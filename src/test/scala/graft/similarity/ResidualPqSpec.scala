@@ -29,7 +29,7 @@ class ResidualPqSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (cents, cells) = coarse(emb)
-    val dir = java.nio.file.Files.createTempDirectory("graft_respq").toString
+    val dir = graft.TestDir("graft_respq")
     Cosine.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "label",
       cents, dir, iters = 2)
     val queries = emb.filter(col("vec_id") < 5)
@@ -61,7 +61,7 @@ class ResidualPqSpec extends SparkSpec {
   test("residual sidecar without centroids is LOUD; 8-field sidecars open as raw stores") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val (cents, cells) = coarse(emb)
-    val dir = java.nio.file.Files.createTempDirectory("graft_respq_g").toString
+    val dir = graft.TestDir("graft_respq_g")
     Cosine.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "label",
       cents, dir, iters = 1)
     val queries = emb.filter(col("vec_id") < 3)
@@ -78,7 +78,7 @@ class ResidualPqSpec extends SparkSpec {
     assert(e.getMessage.contains("residual"), e.getMessage)
     // back-compat: a HASH store whose sidecar predates slot 8 (8 fields)
     // still opens and serves, as residual=0
-    val rawDir = java.nio.file.Files.createTempDirectory("graft_respq_b").toString
+    val rawDir = graft.TestDir("graft_respq_b")
     Cosine.writePqIndex(emb, cells, "vec_id", "embedding", "label", rawDir)
     val full = Cosine.pqTopKStored(spark, queries, rawDir,
       "vec_id", "embedding", k = 3).collect().toSet
@@ -94,7 +94,7 @@ class ResidualPqSpec extends SparkSpec {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (cents, cells) = coarse(emb)
     val nCells = cents.select(col("label")).distinct().count().toInt
-    val dir = java.nio.file.Files.createTempDirectory("graft_respq_c").toString
+    val dir = graft.TestDir("graft_respq_c")
     Cosine.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "label",
       cents, dir, iters = 2)
     // ceiling first: probing every cell IS the full ADC scan, so the
@@ -140,8 +140,8 @@ class ResidualPqSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (cents, cells) = coarse(emb)
-    val rawDir = java.nio.file.Files.createTempDirectory("graft_respq_r").toString
-    val resDir = java.nio.file.Files.createTempDirectory("graft_respq_s").toString
+    val rawDir = graft.TestDir("graft_respq_r")
+    val resDir = graft.TestDir("graft_respq_s")
     Cosine.writeTrainedPqIndex(emb, cells, "vec_id", "embedding", "label",
       rawDir, iters = 2)
     Cosine.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "label",

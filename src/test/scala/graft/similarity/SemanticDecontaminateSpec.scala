@@ -99,7 +99,7 @@ class SemanticDecontaminateSpec extends SparkSpec {
     val bucket = graft.text.TextAnalysis.splitBucket(col("vec_id"))
     val evalSplit = emb.filter(bucket >= 90)
     val train = emb.filter(bucket < 90)
-    val dir = java.nio.file.Files.createTempDirectory("graft_srpidx").toString
+    val dir = graft.TestDir("graft_srpidx")
     Cosine.writeSrpIndex(evalSplit, "vec_id", "embedding",
       nPlanes = 3, dim = 64, nTables = 2, dir = dir)
     assert(Cosine.srpIndexConfig(dir) == ((3, 64, 2)))

@@ -94,7 +94,7 @@ class Sq8PrefixSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") < 5)
     val inline = Cosine.prefixTopK(q, emb, "vec_id", "embedding", p = 16, k = 5)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prefix").toString
+    val tmp = graft.TestDir("graft_prefix")
     Cosine.writePrefixIndex(emb, "vec_id", "embedding", p = 16, tmp)
     val stored = Cosine.prefixTopKStored(spark, q, tmp, "vec_id", "embedding", k = 5)
     assert(stored.collect().toSet == inline.collect().toSet)
@@ -105,7 +105,7 @@ class Sq8PrefixSpec extends SparkSpec {
 
   test("prefix stored: empty corpus writes a readable unpartitioned layout") {
     val emb = Tables.embeddings(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prefix_e").toString
+    val tmp = graft.TestDir("graft_prefix_e")
     Cosine.writePrefixIndex(emb.filter(col("vec_id") < 0), "vec_id",
       "embedding", p = 16, tmp)
     val out = Cosine.prefixTopKStored(spark, emb.filter(col("vec_id") < 3),
@@ -115,7 +115,7 @@ class Sq8PrefixSpec extends SparkSpec {
 
   test("prefix stored: one pbucket directory at another width is a torn artifact") {
     val emb = Tables.embeddings(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prefix_w").toString
+    val tmp = graft.TestDir("graft_prefix_w")
     Cosine.writePrefixIndex(emb, "vec_id", "embedding", p = 16, tmp)
     // a crashed in-place rebuild under p = 8: ONE directory already holds
     // the new width while every other one and the sidecar still say 16
@@ -125,7 +125,7 @@ class Sq8PrefixSpec extends SparkSpec {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("pbucket="))
     assert(buckets.length > 1, s"fixture too small: ${buckets.length} directories")
     val victim = buckets.last.getPath
-    val narrow = java.nio.file.Files.createTempDirectory("graft_prefix_n").toString
+    val narrow = graft.TestDir("graft_prefix_n")
     spark.read.parquet(victim.toString)
       .withColumn("prefix", slice(col("prefix"), 1, 8))
       .write.mode("overwrite").parquet(s"$narrow/b")
@@ -143,7 +143,7 @@ class Sq8PrefixSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val emb = graft.Tables.embeddings(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("sq8stored").toString
+    val tmp = graft.TestDir("sq8stored")
     Cosine.writeSq8Index(emb, "vec_id", "embedding", 64, tmp)
     val queries = emb.filter(col("vec_id") < 10)
     val stored = Cosine.sq8TopKStored(spark, queries, tmp, "vec_id",
@@ -179,10 +179,10 @@ class Sq8PrefixSpec extends SparkSpec {
     // validates once per (dir, sidecar), so the torn state must be
     // discovered at first open — which is exactly the crash-restart
     // shape a torn re-train leaves behind
-    val tornDir = java.nio.file.Files.createTempDirectory("sq8torn_a").toString
+    val tornDir = graft.TestDir("sq8torn_a")
     Cosine.writeSq8Index(emb, "vec_id", "embedding", 64, tornDir)
     val bumped = spark.read.parquet(s"$tornDir/stats")
-    val t2 = java.nio.file.Files.createTempDirectory("sq8torn").toString
+    val t2 = graft.TestDir("sq8torn")
     bumped.selectExpr("transform(vmins, x -> x - 1.0) AS vmins", "vmaxs")
       .write.mode("overwrite").parquet(s"$t2/stats")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(

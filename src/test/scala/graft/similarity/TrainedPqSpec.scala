@@ -22,8 +22,8 @@ class TrainedPqSpec extends SparkSpec {
   test("trained book keeps the pqCodebook schema/key space; codes in range; MSE strictly improves") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val cells = emb.select(col("vec_id"), col("label"))
-    val srpDir = java.nio.file.Files.createTempDirectory("pq_srp").toString
-    val trDir = java.nio.file.Files.createTempDirectory("pq_tr").toString
+    val srpDir = graft.TestDir("pq_srp")
+    val trDir = graft.TestDir("pq_tr")
     Cosine.writePqIndex(emb, cells, "vec_id", "embedding", "label", srpDir)
     Cosine.writeTrainedPqIndex(emb, cells, "vec_id", "embedding", "label",
       trDir, iters = 4)
@@ -54,8 +54,8 @@ class TrainedPqSpec extends SparkSpec {
   test("stored searches serve a trained artifact; more Lloyd rounds never raise MSE") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val cells = emb.select(col("vec_id"), col("label"))
-    val d1 = java.nio.file.Files.createTempDirectory("pq_t1").toString
-    val d4 = java.nio.file.Files.createTempDirectory("pq_t4").toString
+    val d1 = graft.TestDir("pq_t1")
+    val d4 = graft.TestDir("pq_t4")
     Cosine.writeTrainedPqIndex(emb, cells, "vec_id", "embedding", "label",
       d1, iters = 1)
     Cosine.writeTrainedPqIndex(emb, cells, "vec_id", "embedding", "label",
@@ -77,7 +77,7 @@ class TrainedPqSpec extends SparkSpec {
   test("empty corpus: trained writer degrades to a readable empty layout") {
     val emb = graft.Tables.embeddings(spark, sfDir)
     val none = emb.filter(lit(false))
-    val dir = java.nio.file.Files.createTempDirectory("pq_tempty").toString
+    val dir = graft.TestDir("pq_tempty")
     Cosine.writeTrainedPqIndex(none, none.select(col("vec_id"), col("label")),
       "vec_id", "embedding", "label", dir)
     assert(Cosine.pqTopKStored(spark, emb.filter(col("vec_id") < 3),

@@ -104,9 +104,9 @@ class PriceStreamSpec extends SparkSpec {
 
   test("file-source stream resumes exactly-once from its checkpoint") {
     val sp = spark; import sp.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-stream-src")
-    val chk = java.nio.file.Files.createTempDirectory("graft-stream-chk")
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-out")
+    val src = graft.TestDir.path("graft-stream-src")
+    val chk = graft.TestDir.path("graft-stream-chk")
+    val out = graft.TestDir.path("graft-stream-out")
     try {
       def runOnce(): Unit = {
         val q = sp.readStream.schema("key STRING, price DOUBLE")

@@ -74,7 +74,7 @@ class StreamingBlockDedupSpec extends SparkSpec {
     implicit val sc = sp.sqlContext
     // the memory sink can't recover a checkpoint — collect via foreachBatch,
     // same shape as the LSH restart test
-    val chk = java.nio.file.Files.createTempDirectory("sbd_chk")
+    val chk = graft.TestDir.path("sbd_chk")
     try {
       val mem = MemoryStream[StreamingDedup.Doc]
       var emitted = Vector.empty[(Long, Long, Boolean)]

@@ -22,10 +22,10 @@ class StreamingDecontaminateSpec extends SparkSpec {
     implicit val sc = sp.sqlContext
     val emb = graft.Tables.embeddings(sp, "/root/testdata/sf0.001")
     val bucket = graft.text.TextAnalysis.splitBucket(col("vec_id"))
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_sdec_idx").toString
+    val idxDir = graft.TestDir("graft_sdec_idx")
     Cosine.writeSrpIndex(emb.filter(bucket >= 90), "vec_id", "embedding",
       nPlanes = 3, dim = 64, nTables = 2, dir = idxDir)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sdec_out").toString
+    val outDir = graft.TestDir("graft_sdec_out")
 
     val train = emb.filter(bucket < 90)
       .select(col("vec_id"), col("embedding"))

@@ -162,7 +162,7 @@ class StreamingDedupSpec extends SparkSpec {
   test("LSH bucket state survives a checkpointed restart and matches batch truth") {
     val sp = spark; import sp.implicits._
     implicit val sc = sp.sqlContext
-    val chk = java.nio.file.Files.createTempDirectory("graft-lsh-chk")
+    val chk = graft.TestDir.path("graft-lsh-chk")
     try {
       val mem = MemoryStream[StreamingDedup.Doc]
       var emitted = Vector.empty[(Long, Long, Double)]

@@ -30,7 +30,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
   test("LSH: streamed segments == fresh full snapshot index, decisions included") {
     val sp = spark; import sp.implicits._
     implicit val sc = sp.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_slsh").toString
+    val dir = graft.TestDir("graft_slsh")
     val mem = MemoryStream[Doc]
     val sink = StreamingLshMaintenance.indexSink(sp, dir, "doc_id", "text") _
     val q = mem.toDS().writeStream
@@ -64,7 +64,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
 
   test("LSH delete segments: tombstones vanish on read, compaction resolves, re-append after") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_slsh_del").toString
+    val dir = graft.TestDir("graft_slsh_del")
     val sink = StreamingLshMaintenance
       .indexSink(sp, dir, "doc_id", "text", maxSegments = 3) _
     val del = FrameSegments.deleteFold(sp, dir, "doc_id",
@@ -100,7 +100,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(sp, "/root/testdata/sf0.001")
     val cents = Cosine.cellCentroids(emb.select(col("label"),
       Cosine.toDouble(col("embedding")).as("v")), "label", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sivf_del").toString
+    val dir = graft.TestDir("graft_sivf_del")
     val sink = StreamingIvfMaintenance.cellSink(sp, dir, "vec_id", "embedding",
       cents, "label") _
     sink(emb.filter(col("vec_id") < 100), 0L)
@@ -121,7 +121,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // saturate (the sq8CodeExpr clamp), never corrupt a packed word
     val stats = Cosine.sq8Stats(emb.filter(col("vec_id") % 5 =!= 4), "embedding")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssq8").toString
+    val dir = graft.TestDir("graft_ssq8")
     val sink = StreamingSq8Maintenance.codeSink(sp, dir, "vec_id", "embedding",
       stats, 64, maxSegments = 2) _
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
@@ -160,7 +160,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val cents = Cosine.cellCentroids(emb.select(col("label"),
       Cosine.toDouble(col("embedding")).as("v")), "label", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sivf").toString
+    val dir = graft.TestDir("graft_sivf")
     // maxSegments = 2 so the third wave trips compaction
     val sink = StreamingIvfMaintenance.cellSink(sp, dir, "vec_id", "embedding",
       cents, "label", maxSegments = 2) _
@@ -191,7 +191,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(sp, "/root/testdata/sf0.001")
     val cents = Cosine.cellCentroidsSorted(emb, "label", "embedding")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spq").toString
+    val dir = graft.TestDir("graft_spq")
     val sink = StreamingPqMaintenance.codeSink(sp, dir, "vec_id",
       "embedding", cents, "label", maxSegments = 2) _
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
@@ -208,7 +208,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // tombstone, then publish into the FULL stored tier
     FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_spq_s").toString
+    val serving = graft.TestDir("graft_spq_s")
     StreamingPqMaintenance.publish(sp, dir, emb, cents,
       "vec_id", "embedding", "label", serving,
       centroidFn = Cosine.cellCentroidsSorted)
@@ -241,7 +241,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the pinned book comes from a stored trained artifact (the
     // documented flow: batch re-train refreshes it, the sink pins it)
-    val trainDir = java.nio.file.Files.createTempDirectory("graft_tpq_t").toString
+    val trainDir = graft.TestDir("graft_tpq_t")
     val cells = Cosine.assignToCentroids(emb, "vec_id", "embedding",
         cents, "label")
       .select(col("vec_id"), col("assigned_cell").as("label"))
@@ -250,7 +250,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       centroids = Some(cents))
     val book = sp.read.parquet(s"$trainDir/codebook")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tpq").toString
+    val dir = graft.TestDir("graft_tpq")
     val sink = StreamingTrainedPqMaintenance.codeSink(sp, dir, "vec_id",
       "embedding", book, cents, "label", maxSegments = 2) _
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
@@ -267,7 +267,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // itself landed verbatim, never retrained on publish
     FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_tpq_s").toString
+    val serving = graft.TestDir("graft_tpq_s")
     StreamingTrainedPqMaintenance.publish(sp, dir, emb, book, cents,
       "vec_id", "embedding", "label", serving)
     val publishedBook = sp.read.parquet(s"$serving/codebook")
@@ -275,7 +275,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
         && book.exceptAll(publishedBook).isEmpty,
       "publish must carry the pinned book verbatim")
     val liveEmb = emb.filter(col("vec_id") =!= 7L)
-    val batchDir = java.nio.file.Files.createTempDirectory("graft_tpq_b").toString
+    val batchDir = graft.TestDir("graft_tpq_b")
     Cosine.writeTrainedPqIndexWith(liveEmb,
       cells.filter(col("vec_id") =!= 7L), "vec_id", "embedding", "label",
       book, batchDir, centroids = Some(cents))
@@ -301,7 +301,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
   test("BQ: parameter-free streamed sign words == one-pass coding; publish rebuilds the stored tier") {
     val sp = spark; import sp.implicits._
     val emb = graft.Tables.embeddings(sp, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bqs").toString
+    val dir = graft.TestDir("graft_bqs")
     val sink = StreamingBqMaintenance.codeSink(sp, dir, "vec_id",
       "embedding", dim = 64, maxSegments = 2) _
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
@@ -314,7 +314,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
       "streamed BQ word rows != one-pass derivation")
     FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_bqs_s").toString
+    val serving = graft.TestDir("graft_bqs_s")
     StreamingBqMaintenance.publish(sp, dir, emb, "vec_id", "embedding",
       64, serving)
     val queries = emb.filter(col("vec_id") < 3)
@@ -339,7 +339,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val cells = Cosine.assignToCentroids(emb, "vec_id", "embedding",
         cents0, "label")
       .select(col("vec_id"), col("assigned_cell").as("label"))
-    val trainDir = java.nio.file.Files.createTempDirectory("graft_rpq_t").toString
+    val trainDir = graft.TestDir("graft_rpq_t")
     Cosine.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "label",
       cents0, trainDir, iters = 2, centroidFn = Cosine.cellCentroidsSorted)
     val book = sp.read.parquet(s"$trainDir/codebook")
@@ -347,7 +347,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val cents = sp.read.parquet(s"$trainDir/centroids")
       .withColumnRenamed("cell", "label")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpq").toString
+    val dir = graft.TestDir("graft_rpq")
     val sink = StreamingResidualPqMaintenance.codeSink(sp, dir, "vec_id",
       "embedding", book, cents, "label", maxSegments = 2) _
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
@@ -369,7 +369,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // and both halves of the pair landed verbatim
     FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_rpq_s").toString
+    val serving = graft.TestDir("graft_rpq_s")
     StreamingResidualPqMaintenance.publish(sp, dir, emb, book, cents,
       "vec_id", "embedding", "label", serving)
     val pubBook = sp.read.parquet(s"$serving/codebook")
@@ -380,7 +380,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     assert(pubCents.exceptAll(cents).isEmpty && cents.exceptAll(pubCents).isEmpty,
       "publish must carry the pinned centroids verbatim")
     val liveEmb = emb.filter(col("vec_id") =!= 7L)
-    val batchDir = java.nio.file.Files.createTempDirectory("graft_rpq_b").toString
+    val batchDir = graft.TestDir("graft_rpq_b")
     Cosine.writeResidualPqIndexWith(liveEmb,
       wantCells.filter(col("vec_id") =!= 7L), "vec_id", "embedding", "label",
       book, cents, batchDir)
@@ -410,7 +410,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // retrains per batch (the SQ8 stats contract)
     val rot = Cosine.moment2Rotation(emb.filter(col("vec_id") % 5 =!= 4),
       "embedding", p = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_spref").toString
+    val dir = graft.TestDir("graft_spref")
     val sink = StreamingPrefixMaintenance.rowSink(sp, dir, "vec_id",
       "embedding", p = 16, rotation = rot, maxSegments = 2) _
     sink(emb.filter(col("vec_id") % 3 === 0), 0L)
@@ -430,7 +430,7 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     // tombstone, then PUBLISH into the pruned serving layout
     FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 3L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_spref_s").toString
+    val serving = graft.TestDir("graft_spref_s")
     StreamingPrefixMaintenance.publish(sp, dir, "vec_id", p = 16, serving,
       rotation = rot)
     assert(new java.io.File(s"$serving/vectors").listFiles()
@@ -451,14 +451,14 @@ class StreamingFrameSegmentsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(sp, "/root/testdata/sf0.001")
     val cents = Cosine.cellCentroidsSorted(emb, "label", "embedding")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sivf_pub").toString
+    val dir = graft.TestDir("graft_sivf_pub")
     val sink = StreamingIvfMaintenance.cellSink(sp, dir, "vec_id", "embedding",
       cents, "label") _
     sink(emb.filter(col("vec_id") % 2 === 0), 0L)
     sink(emb.filter(col("vec_id") % 2 === 1), 1L)
     FrameSegments.deleteFold(sp, dir, "vec_id")(
       Seq(7L).map(Tuple1(_)).toDF("vec_id"), 2L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_sivf_pub_s").toString
+    val serving = graft.TestDir("graft_sivf_pub_s")
     StreamingIvfMaintenance.publish(sp, dir,
       emb.select(col("vec_id"), col("embedding")), cents,
       "vec_id", "embedding", "label", serving)

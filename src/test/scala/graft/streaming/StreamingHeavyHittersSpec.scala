@@ -39,7 +39,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     // resumes from the committed offset and never re-reads batch 1.
     val sp = spark; import sp.implicits._
     implicit val sc = sp.sqlContext
-    val chk = java.nio.file.Files.createTempDirectory("graft-shh-chk")
+    val chk = graft.TestDir.path("graft-shh-chk")
     try {
       val mem = MemoryStream[Long]
       // foreachBatch sink: the memory sink rejects checkpoint recovery

@@ -35,7 +35,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
   test("streamed index after 3 micro-batches == batch rebuild, scores included") {
     val sp = spark; import sp.implicits._
     implicit val sc = sp.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx").toString
+    val dir = graft.TestDir("graft_sidx")
     val mem = MemoryStream[Doc]
     val sink = StreamingIndexMaintenance.indexSink(sp, dir, "doc_id", "text") _
     val q = mem.toDS().writeStream
@@ -64,7 +64,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
 
   test("batch k writes O(|batch k|) rows: a segment holds ONLY its batch") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_w").toString
+    val dir = graft.TestDir("graft_sidx_w")
     val sink = StreamingIndexMaintenance.indexSink(sp, dir, "doc_id", "text") _
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L); sink(wave3.toDF(), 2L)
     // the write-amplification pin: the versioned sink this replaced wrote
@@ -83,7 +83,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
 
   test("compaction collapses live segments to one, rebuild identity holds") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_c").toString
+    val dir = graft.TestDir("graft_sidx_c")
     // maxSegments = 2: the third append trips compaction
     val sink = StreamingIndexMaintenance
       .indexSink(sp, dir, "doc_id", "text", maxSegments = 2) _
@@ -109,7 +109,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
 
   test("prune sweeps retired + unreferenced segments, keeps the serving pair") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx3").toString
+    val dir = graft.TestDir("graft_sidx3")
     val sink = StreamingIndexMaintenance
       .indexSink(sp, dir, "doc_id", "text", maxSegments = 2) _
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L); sink(wave3.toDF(), 2L)
@@ -146,7 +146,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
 
   test("prune never races a mid-flight writer; torn manifests are skipped") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx4").toString
+    val dir = graft.TestDir("graft_sidx4")
     val sink = StreamingIndexMaintenance.indexSink(sp, dir, "doc_id", "text") _
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L)
     // a sink mid-flight on batch 2: seg2 written, manifest NOT yet
@@ -191,7 +191,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
 
   test("delete segments: gone on read, rebuild-exact, resolved by compaction, re-append after") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_del").toString
+    val dir = graft.TestDir("graft_sidx_del")
     val sink = StreamingIndexMaintenance
       .indexSink(sp, dir, "doc_id", "text", maxSegments = 3) _
     val del = StreamingIndexMaintenance
@@ -236,7 +236,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
 
   test("a re-delivered batch id is a no-op (restart idempotence)") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx2").toString
+    val dir = graft.TestDir("graft_sidx2")
     val sink = StreamingIndexMaintenance.indexSink(sp, dir, "doc_id", "text") _
     sink(wave1.toDF(), 0L)
     sink(wave2.toDF(), 1L)
@@ -256,7 +256,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     val docs = graft.Tables.documents(sp, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidx_pub").toString
+    val dir = graft.TestDir("graft_sidx_pub")
     val sink = StreamingIndexMaintenance.indexSink(sp, dir, "doc_id", "text") _
     sink(docs.filter(col("doc_id") % 3 === 0), 0L)
     sink(docs.filter(col("doc_id") % 3 === 1), 1L)
@@ -264,7 +264,7 @@ class StreamingIndexMaintenanceSpec extends SparkSpec {
     // a tombstone wave too: the published artifact must be the LIVE view
     StreamingIndexMaintenance.deleteSink(sp, dir, "doc_id")(
       Seq(3L, 6L).map(Tuple1(_)).toDF("doc_id"), 3L)
-    val serving = java.nio.file.Files.createTempDirectory("graft_sidx_pub_s").toString
+    val serving = graft.TestDir("graft_sidx_pub_s")
     StreamingIndexMaintenance.publish(sp, dir, serving)
     // the published artifact carries the partitioned serving layout
     assert(new java.io.File(s"$serving/postings").listFiles()

@@ -37,7 +37,7 @@ class StreamingRepIndexSpec extends SparkSpec {
   test("3 streamed waves == the batch build/append path, retirement included") {
     val sp = spark; import sp.implicits._
     implicit val sc = sp.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_srep").toString
+    val dir = graft.TestDir("graft_srep")
     val mem = MemoryStream[Doc]
     val sink = StreamingRepIndexMaintenance.sink(sp, dir, "doc_id", "text") _
     val q = mem.toDS().writeStream
@@ -145,7 +145,7 @@ class StreamingRepIndexSpec extends SparkSpec {
 
   test("delete re-promotes a RETIRED rep: older retirement tombstones spare newer promotion rows") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srep_p").toString
+    val dir = graft.TestDir("graft_srep_p")
     val sink = StreamingRepIndexMaintenance.sink(sp, dir, "doc_id", "text") _
     val del = StreamingRepIndexMaintenance.deleteSink(sp, dir, "doc_id") _
     def sharrOf(rows: Seq[Doc]) =
@@ -193,7 +193,7 @@ class StreamingRepIndexSpec extends SparkSpec {
 
   test("compaction resolves tombstones and keeps the state identical") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_srep_c").toString
+    val dir = graft.TestDir("graft_srep_c")
     val sink = StreamingRepIndexMaintenance
       .sink(sp, dir, "doc_id", "text", maxSegments = 2) _
     sink(wave1.toDF(), 0L); sink(wave2.toDF(), 1L); sink(wave3.toDF(), 2L)

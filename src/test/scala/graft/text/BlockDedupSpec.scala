@@ -46,7 +46,7 @@ class BlockDedupSpec extends SparkSpec {
       .withColumn("doc_id", col("doc_id") + 1000000L)
     val idx = TextAnalysis.blockIndex(old, "doc_id", "text", 20)
     // parquet round trip: decisions must be identical from the stored form
-    val dir = java.nio.file.Files.createTempDirectory("blockidx").toString
+    val dir = graft.TestDir("blockidx")
     idx.write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
     val incremental = TextAnalysis.blockDedupAgainst(batch, stored,

@@ -36,7 +36,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   private def storedIndex(docs: DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_st").toString
+    val dir = graft.TestDir("graft_bm25_st")
     val built = Bm25.buildIndex(docs, "doc_id", "text")
     Bm25.writeIndex(built, dir)
     built.postings.unpersist()
@@ -44,7 +44,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("search from a parquet round-tripped index == direct topK, scores included") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
+    val dir = graft.TestDir("graft_bm25_idx")
     Bm25.writeIndex(Bm25.buildIndex(corpus, "doc_id", "text"), dir)
     val stored = Bm25.searchIndex(corpus.filter(col("doc_id") === 1),
         Bm25.readIndex(spark, dir), "doc_id", "text", k = 5)
@@ -57,7 +57,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("appendToIndex on a parquet-stored index == full rebuild, scores included") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_app").toString
+    val dir = graft.TestDir("graft_bm25_app")
     // index the first half, store it, fold the second half in from the
     // stored form — the daily-batch workflow r4 gates
     Bm25.writeIndex(Bm25.buildIndex(corpus.filter(col("doc_id") <= 10),
@@ -79,7 +79,7 @@ class Bm25IndexSpec extends SparkSpec {
 
   test("deleteFromIndex == rebuild without the deleted docs, scores included") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_del").toString
+    val dir = graft.TestDir("graft_bm25_del")
     Bm25.writeIndex(Bm25.buildIndex(corpus, "doc_id", "text"), dir)
     // delete the two heaviest dog docs from the STORED form; 999 is
     // absent (idempotent-delete contract: ignored)
@@ -123,7 +123,7 @@ class Bm25IndexSpec extends SparkSpec {
 
   test("queries unseen at index time search the stored index") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_idx2").toString
+    val dir = graft.TestDir("graft_bm25_idx2")
     Bm25.writeIndex(Bm25.buildIndex(corpus, "doc_id", "text"), dir)
     val fresh = Seq((99L, "fox dog")).toDF("doc_id", "text")
     val out = Bm25.searchIndex(fresh, Bm25.readIndex(spark, dir),

@@ -29,7 +29,7 @@ class Bm25StoredSpec extends SparkSpec {
 
   test("stored pruned search == canonical read+search, scores included") {
     val docs = graft.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("bm25stored").toString
+    val dir = graft.TestDir("bm25stored")
     Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), dir)
     val queries = docs.filter(col("doc_id") < 10)
     val pruned = Bm25.searchStored(spark, queries, dir, "doc_id", "text", k = 5)
@@ -41,7 +41,7 @@ class Bm25StoredSpec extends SparkSpec {
 
   test("the postings scan prunes: literal tbucket filters, fewer partitions read") {
     val docs = graft.Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("bm25prune").toString
+    val dir = graft.TestDir("bm25prune")
     Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), dir)
     // one short probe doc built from REAL corpus terms (an absent term
     // set prunes every partition and AQE collapses the scan entirely):
@@ -71,7 +71,7 @@ class Bm25StoredSpec extends SparkSpec {
   test("pre-upgrade unpartitioned artifact: degrades to unpruned, same results") {
     val docs = graft.Tables.documents(spark, sfDir)
     val idx = Bm25.buildIndex(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25plain").toString
+    val dir = graft.TestDir("bm25plain")
     // the pre-round-12 layout: plain postings, no config sidecar
     idx.postings.write.mode("overwrite").parquet(s"$dir/postings")
     idx.doclen.write.mode("overwrite").parquet(s"$dir/doclen")
@@ -87,7 +87,7 @@ class Bm25StoredSpec extends SparkSpec {
   test("empty index round-trips and serves zero rows") {
     val docs = graft.Tables.documents(spark, sfDir)
     val empty = Bm25.buildIndex(docs.filter(lit(false)), "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25empty").toString
+    val dir = graft.TestDir("bm25empty")
     Bm25.writeIndex(empty, dir)
     val queries = docs.filter(col("doc_id") < 5)
     assert(Bm25.searchStored(spark, queries, dir, "doc_id", "text", k = 5)
@@ -99,7 +99,7 @@ class Bm25StoredSpec extends SparkSpec {
   test("torn config (modulus drift) fails loudly, never silently mis-prunes") {
     val sp = spark; import sp.implicits._
     val corpus = Seq((1L, "alpha beta"), (2L, "alpha gamma")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25torn").toString
+    val dir = graft.TestDir("bm25torn")
     Bm25.writeIndex(Bm25.buildIndex(corpus, "doc_id", "text"), dir)
     // pick a fake modulus under which at least the first sampled term's
     // bucket provably differs (xxhash64 is deterministic, so this is a

@@ -74,7 +74,7 @@ class DsirSpec extends SparkSpec {
   }
 
   test("stored model: importanceStored == importance, value-identical; modulus pinned") {
-    val dir = java.nio.file.Files.createTempDirectory("dsir_model").toString
+    val dir = graft.TestDir("dsir_model")
     Dsir.writeModel(corpus, "doc_id", "text", "source", "tgt", dir)
     assert(graft.ops.ConfigFile.readInts(dir, "dsir_config", 4).head
       == Dsir.Buckets)
@@ -87,13 +87,13 @@ class DsirSpec extends SparkSpec {
 
   test("torn model fails loudly: a store changed under a stale sidecar") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dsir_torn").toString
+    val dir = graft.TestDir("dsir_torn")
     Dsir.writeModel(corpus, "doc_id", "text", "source", "tgt", dir)
     // simulate a crash mid-re-train: the raw LM store changes while the
     // sidecar (and tgt/tots) stay from the previous release
     val bumped = spark.read.parquet(s"$dir/raw")
       .withColumn("cnt_r", col("cnt_r") + 1L)
-    val tmp = java.nio.file.Files.createTempDirectory("dsir_torn_r").toString
+    val tmp = graft.TestDir("dsir_torn_r")
     bumped.write.mode("overwrite").parquet(s"$tmp/raw")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -110,9 +110,9 @@ class DsirSpec extends SparkSpec {
   }
 
   test("streamed batches against the stored model == batch scoring of the union") {
-    val dir = java.nio.file.Files.createTempDirectory("dsir_model2").toString
+    val dir = graft.TestDir("dsir_model2")
     Dsir.writeModel(corpus, "doc_id", "text", "source", "tgt", dir)
-    val out = java.nio.file.Files.createTempDirectory("dsir_out").toString
+    val out = graft.TestDir("dsir_out")
     val rawPool = corpus.filter(col("source") =!= "tgt")
       .select(col("doc_id"), col("text"))
     val sink = graft.streaming.StreamingDsirScore.sink(spark, dir, out,

@@ -8,11 +8,23 @@ import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 
+def host_mem_limit():
+    """The smaller of 48 GiB and 80% of MemTotal (DuckDB's own default
+    share); 48 GiB where /proc/meminfo is unreadable. Half of MemTotal is
+    too little: d19's recursive-CTE oracle runs out of DuckDB memory at
+    7.8 GiB on a 15 GiB host, while its resident set stays near 2 GB."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48GiB"
+    return f"{min(48 * 1024, kb * 4 // 5 // 1024)}MiB"
+
 con = duckdb.connect()
 # Bound DuckDB so a heavy oracle (e.g. the within-cell all-pairs joins of
 # d8/x7/x8 on an sf1-scale corpus) spills to disk instead of OOM-killing
-# the host; overridable for bigger boxes.
-con.execute(f"SET memory_limit='{os.environ.get('GRAFT_DUCK_MEM', '48GB')}'")
+# the host; GRAFT_DUCK_MEM overrides it.
+con.execute(f"SET memory_limit='{os.environ.get('GRAFT_DUCK_MEM') or host_mem_limit()}'")
 con.execute("SET temp_directory='/tmp/graft_duck_spill'")
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
