@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MinHash + LSH near-duplicate detection over word-shingled documents —
@@ -28,7 +28,6 @@ object MinHash {
   val P = 1000003L
   val NumHashes = 16
   val RowsPerBand = 4
-  def numBands: Int = NumHashes / RowsPerBand
 
   /** Partition fan-out for the PERSISTED rep-index band layout
     * ([[graft.dedup.RepIndex.write]]): stored band rows carry
@@ -84,18 +83,11 @@ object MinHash {
     * pass, then a |groups|² self-join of a control-plane-sized frame.
     * The estimate is integer ppm (n_agree·62500), engine-exact. */
   def groupOverlapMatrix(docs: DataFrame, groupCol: String, textCol: String,
-                         n: Int, xxhashKeys: Boolean = false): DataFrame = {
+                         n: Int): DataFrame = {
     // persist: the |groups|-row signature frame feeds BOTH self-join
-    // sides — without it the corpus-sized shingle pass runs twice.
-    // xxhashKeys = the d9 production swap: the shingle key only has to
-    // be a stable hash, and xxhash64 is codegen'd while per-shingle md5
-    // dominates the scan at corpus scale; the md5 default stays the
-    // oracle-replayable gate configuration.
-    val sh = shingleRows(docs, groupCol, textCol, n)
-    val hashed =
-      if (xxhashKeys) sh.select(col(groupCol), xxhash64(col("shingle")).as("shash"))
-      else hashedShingleRows(sh, groupCol)
-    val sig = signatures(hashed, groupCol)
+    // sides — without it the corpus-sized shingle pass runs twice
+    val sig = signatures(hashedShingleRows(shingleRows(docs, groupCol, textCol, n),
+        groupCol), groupCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = sig.select(col(groupCol).as("source_a") +:
       (0 until NumHashes).map(i => col(s"h$i").as(s"a$i")): _*)
@@ -141,30 +133,6 @@ object MinHash {
     }
     sig.select(col(idCol), explode(array(bands: _*)).as("bh"))
       .select(col(idCol), col("bh.band"), col("bh.band_hash"))
-  }
-
-  /** Exact Jaccard for given (id_a, id_b) pairs, DRIVEN FROM THE PAIRS:
-    * pairs ⋈ a-shingles (on id_a) ⋈ b-shingles (on id_b, shingle). Work is
-    * |pairs|·|shingles per doc|, never the full inverted-index self-join —
-    * the self-join explodes quadratically on high-frequency shingles, which
-    * is exactly what LSH exists to avoid. Candidate pairs are small, so AQE
-    * broadcasts them. */
-  def verifyJaccard(pairs: DataFrame, hs: DataFrame, idCol: String): DataFrame =
-    verifyJaccard(pairs, hs, hs.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh")), idCol)
-
-  /** As above with a precomputed per-doc set-size frame (map-side
-    * `size(sharr)` when the caller holds the array form). */
-  def verifyJaccard(pairs: DataFrame, hs: DataFrame, sizes: DataFrame,
-                    idCol: String): DataFrame = {
-    val a = hs.select(col(idCol).as("id_a"), col("shash"))
-    val b = hs.select(col(idCol).as("id_b"), col("shash"))
-    val inter = pairs.join(a, "id_a").join(b, Seq("id_b", "shash"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
   }
 
   /** (id, sharr) rows: the document's distinct shingles as an array of
@@ -254,78 +222,6 @@ object MinHash {
     verifyJaccardArrays(pairs, sharr, idCol)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Pure-Scala twins of the Column-based shingle/signature/band kernels,
-    * for use where rows arrive one at a time (the streaming dedup state
-    * functions) — REQUIRED to be value-identical to the Column forms, so
-    * a streaming decision can be compared 1:1 against the batch pipeline
-    * (`DedupModulesSpec`'s kernel-parity tests pin this on real corpus
-    * data). */
-  object Scalar {
-    /** Whitespace tokens matching `split(trim(text), "\\s+")` EXACTLY:
-      * Spark's `trim` strips only the space character (0x20) — NOT tabs
-      * or newlines, unlike Java's `String.trim` — and Spark's `split`
-      * uses limit -1, KEEPING trailing empty tokens (a doc ending in a
-      * tab yields a trailing "" token). Both differences are invisible on
-      * clean text and real divergences on tab/newline-adjacent text (the
-      * adversarial parity sweep caught the Java-trim version producing
-      * one fewer shingle). */
-    def tokens(text: String): Array[String] = {
-      val t = text.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
-      t.split("\\s+", -1)
-    }
-
-    /** Distinct word n-grams with the <n-token partial-shingle edge case
-      * of [[TextAnalysis.shingles]]. */
-    def shingles(text: String, n: Int): Array[String] = {
-      val t = tokens(text)
-      (0 to math.max(t.length - n, 0)).iterator
-        .map(i => t.slice(i, i + n).mkString(" ")).toArray.distinct
-    }
-
-    /** First 15 md5 hex chars as a 60-bit long — the Column form's
-      * `conv(substring(md5(s), 1, 15), 16, 10)`, via the shared native
-      * kernel (digest bytes directly, no hex-string format/parse). */
-    def hashShingle(s: String): Long =
-      graft.plans.Md5Long60Expr.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s), 15)
-
-    def hashedShingles(text: String, n: Int): Array[Long] =
-      shingles(text, n).map(hashShingle)
-
-    /** Minhash signature: per hash function, min over shingles of
-      * (a·(shash mod ShingleMod) + b) mod P. */
-    def signature(shashes: Array[Long]): Array[Long] = {
-      val sig = Array.fill(NumHashes)(Long.MaxValue)
-      shashes.foreach { sh =>
-        val x = java.lang.Math.floorMod(sh, ShingleMod)
-        var i = 0
-        while (i < NumHashes) {
-          val h = (A(i) * x + B(i)) % P
-          if (h < sig(i)) sig(i) = h
-          i += 1
-        }
-      }
-      sig
-    }
-
-    /** (band, band_hash) keys: the same left-fold polynomial mix as
-      * [[bandRows]]. */
-    def bandKeys(sig: Array[Long]): Array[(Int, Long)] =
-      (0 until numBands).map { b =>
-        val mix = (1 until RowsPerBand).foldLeft(sig(b * RowsPerBand)) {
-          (acc, r) => (acc * MixMul + sig(b * RowsPerBand + r)) % MixMod
-        }
-        (b, mix)
-      }.toArray
-
-    /** Exact Jaccard of two distinct-element shingle arrays. */
-    def jaccard(a: Array[Long], b: Array[Long]): Double = {
-      val sa = a.toSet
-      val inter = b.count(sa.contains)
-      inter.toDouble / (a.length + b.length - inter)
-    }
   }
 
   /** Asymmetric LSH: near-duplicates of `newDocs` AGAINST `oldDocs` —
@@ -433,17 +329,6 @@ object MinHash {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       oldIndex, idCol, threshold, rowsPerBand)
 
-  /** [[nearDuplicatesAgainst]] from PREBUILT shingle-array frames for
-    * both sides — the shared-tokenize-pass entry point: c7/c11 derive
-    * one 2-gram array frame from their persisted token frame and split
-    * it into batch/snapshot slices, paying the per-shingle md5 once. */
-  def nearDuplicatesAgainstArrays(shNew: DataFrame, shOld: DataFrame,
-                                  idCol: String,
-                                  threshold: Double = 0.7,
-                                  rowsPerBand: Int = RowsPerBand): DataFrame =
-    nearDuplicatesArraysAgainstIndex(shNew,
-      snapshotIndex(shOld, idCol, rowsPerBand), idCol, threshold, rowsPerBand)
-
   /** [[nearDuplicatesAgainstIndex]] with the batch side already in
     * shingle-array form (callers should persist `shNew` — its band rows
     * and the verification join both consume it). */
@@ -530,57 +415,35 @@ object MinHash {
     * document-frequency pruning is the standard exact-ish variant that
     * keeps the inverted-index join linear-ish at corpus scale: without it,
     * one stop-shingle shared by f docs contributes f² join pairs. */
-  /** Document-frequency cutoff derived from the df DISTRIBUTION instead
-    * of a constant: the q-quantile of per-shingle df. A fixed `maxDf`
-    * is corpus-dependent — measured on a 10× duplicated corpus, df
-    * inflates 10× across the board and a constant cutoff starts pruning
-    * the very shingles that witness true near-dups (SCALE.md, round-3
-    * stress). One scalar aggregate (approx_percentile is a mergeable
-    * sketch, map-side combined); the single driver-side value then
-    * parameterizes [[exactJaccardPairs]] like any threshold. */
-  def dfQuantileCutoff(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, q: Double = 0.999): Int = {
-    import org.apache.spark.sql.functions._
-    val sh = hashedShingleRows(shingleRows(docs, idCol, textCol, n), idCol)
-    val row = sh.groupBy(col("shash")).agg(count(lit(1)).as("df"))
-      .agg(expr(s"approx_percentile(df, $q)")).head()
-    // zero shingles (empty corpus / all docs shorter than n) → NULL agg
-    if (row.isNullAt(0)) 1 else math.max(1L, row.getLong(0)).toInt
-  }
-
-  /** [[exactJaccardPairs]] with the df cutoff derived IN-PLAN from the
-    * quantile — the cutoff never touches the driver and the shingle
-    * frame + df aggregate are computed once and reused for both the
-    * quantile and the pruning (the standalone [[dfQuantileCutoff]] +
-    * fixed-cutoff combination scans the corpus twice). */
-  def exactJaccardPairsAdaptive(docs: DataFrame, idCol: String, textCol: String,
-                                n: Int, threshold: Double,
-                                dfQuantile: Double = 0.999): DataFrame = {
-    val sh0 = hashedShingleRows(shingleRows(docs, idCol, textCol, n), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfs = sh0.groupBy(col("shash")).agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cut = dfs.agg(coalesce(
-      expr(s"approx_percentile(df, $dfQuantile)"), lit(1L)).as("cut"))
-    // 1-row cutoff frame broadcast into the filter — no driver round-trip
-    val dfc = dfs.crossJoin(org.apache.spark.sql.functions.broadcast(cut))
-      .filter(col("df") <= greatest(col("cut"), lit(1L))).select(col("shash"))
-    val sh = sh0.join(dfc, "shash")
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val a = sh.select(col(idCol).as("id_a"), col("shash"))
-    val b = sh.select(col(idCol).as("id_b"), col("shash"))
-    val inter = a.join(b, "shash").filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+  def exactJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
+                        n: Int, threshold: Double, maxDf: Int = 20): DataFrame =
+    coShingledPairs(docs, idCol, textCol, n, maxDf)
       .withColumn("jaccard", col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
-  def exactJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int, threshold: Double, maxDf: Int = 20): DataFrame = {
+  /** Exact CONTAINMENT pairs: score = |A∩B| / min(|A|, |B|) — the subset
+    * detector Jaccard structurally misses (a short doc fully embedded in
+    * a long one has containment 1 but Jaccard ≈ |short|/|long|): quote
+    * farms, truncated mirrors, doc-in-doc boilerplate (Broder 1997
+    * defines both resemblance AND containment for exactly this reason).
+    * Same inverted-index shape and df guard as [[exactJaccardPairs]];
+    * at 100 TB the candidate stage swaps in the LSH bands as usual. */
+  def exactContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
+                            n: Int, threshold: Double, maxDf: Int = 20): DataFrame =
+    coShingledPairs(docs, idCol, textCol, n, maxDf)
+      .withColumn("containment",
+        col("inter").cast("double") / least(col("n_a"), col("n_b")))
+      .filter(col("containment") >= threshold)
+      .select(col("id_a"), col("id_b"),
+        round(col("containment"), 6).as("containment"))
+
+  /** The inverted-index join behind [[exactJaccardPairs]] and
+    * [[exactContainmentPairs]]: every co-shingled pair `id_a < id_b` with
+    * its shared-shingle count `inter` and the set sizes `n_a`, `n_b`, all
+    * over the shingles of document frequency ≤ `maxDf`. */
+  private def coShingledPairs(docs: DataFrame, idCol: String, textCol: String,
+                              n: Int, maxDf: Int): DataFrame = {
     val sh0 = hashedShingleRows(shingleRows(docs, idCol, textCol, n), idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // document frequency via aggregate + join-back: the aggregate combines
@@ -598,37 +461,5 @@ object MinHash {
     inter
       .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("jaccard", col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Exact CONTAINMENT pairs: score = |A∩B| / min(|A|, |B|) — the subset
-    * detector Jaccard structurally misses (a short doc fully embedded in
-    * a long one has containment 1 but Jaccard ≈ |short|/|long|): quote
-    * farms, truncated mirrors, doc-in-doc boilerplate (Broder 1997
-    * defines both resemblance AND containment for exactly this reason).
-    * Same inverted-index shape and df guard as [[exactJaccardPairs]];
-    * at 100 TB the candidate stage swaps in the LSH bands as usual. */
-  def exactContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int, threshold: Double, maxDf: Int = 20): DataFrame = {
-    val sh0 = hashedShingleRows(shingleRows(docs, idCol, textCol, n), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfc = sh0.groupBy(col("shash")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("shash"))
-    val sh = sh0.join(dfc, "shash")
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val a = sh.select(col(idCol).as("id_a"), col("shash"))
-    val b = sh.select(col(idCol).as("id_b"), col("shash"))
-    val inter = a.join(b, "shash").filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("containment",
-        col("inter").cast("double") / least(col("n_a"), col("n_b")))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("containment"), 6).as("containment"))
   }
 }

@@ -1,8 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for a training-data pipeline: image/audio/
   * video as opaque `binary` columns with typed metadata, processed by
@@ -22,37 +21,15 @@ import org.apache.spark.sql.types._
   *    column);
   *  - per-partition batched processing via `mapPartitions` on a typed
   *    Dataset (the JVM analogue of `mapInPandas`: one iterator per
-  *    partition, amortizing per-batch codec/model setup);
-  *  - byte-size-aware repartitioning so skewed binary sizes don't produce
-  *    straggler tasks.
+  *    partition, amortizing per-batch codec/model setup).
   */
 object Multimodal {
-
-  val metadataType: StructType = new StructType()
-    .add("format", StringType).add("width", IntegerType).add("height", IntegerType)
-    .add("sample_rate", IntegerType).add("duration_ms", LongType).add("n_frames", IntegerType)
-
-  val mediaSchema: StructType = new StructType()
-    .add("media_id", LongType, nullable = false)
-    .add("kind", StringType, nullable = false) // image | audio | video
-    .add("content", BinaryType)
-    .add("metadata", metadataType)
 
   case class MediaRow(media_id: Long, kind: String, content: Array[Byte])
   case class Feature(media_id: Long, kind: String, feature: Array[Float])
   case class Decoded(media_id: Long, kind: String, content: Array[Byte],
                      format: String, width: Int, height: Int,
                      sample_rate: Int, duration_ms: Long, n_frames: Int)
-
-  /** Balance partitions by cumulative payload bytes, not row count — with
-    * binary columns, row-count partitioning leaves straggler tasks holding
-    * the large blobs. Approximation: spread rows by size-bucket salt. */
-  def repartitionBySize(df: DataFrame, targetPartitions: Int): DataFrame =
-    df.withColumn("__size_bucket",
-        (length(col("content")).cast("double") / 65536.0).cast("int"))
-      .repartition(targetPartitions, col("__size_bucket"),
-        pmod(hash(col("media_id")), lit(targetPartitions)))
-      .drop("__size_bucket")
 
   // ------------------------------------------------------- real decoders
 
@@ -318,43 +295,10 @@ object Multimodal {
         (col("media_id") =!= col("rep_id")).as("is_dup"))
   }
 
-  /** STUB feature extraction for kinds without a JVM codec (none remain —
-    * image/audio/video all decode for real now); kept for shape tests:
-    * production replaces the body with a batched model forward pass; the
-    * deterministic fake keeps downstream similarity search testable. */
-  def featureStub(ds: Dataset[MediaRow], dim: Int = 8): Dataset[Feature] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { m =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-          .digest(if (m.content == null) Array.emptyByteArray else m.content)
-        Feature(m.media_id, m.kind,
-          Array.tabulate(dim)(i => ((md(i % md.length) & 0xff) / 255.0f) - 0.5f))
-      }
-    }
-  }
-
-  /** Previous all-stub decode, kept for shape tests and as the video-only
-    * fallback reference. */
-  def decodeStub(ds: Dataset[MediaRow]): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { m =>
-        val n = if (m.content == null) 0 else m.content.length
-        val h = math.abs(java.util.Arrays.hashCode(m.content))
-        Decoded(m.media_id, m.kind, m.content,
-          "fake/" + m.kind, 1 + h % 1920, 1 + h % 1080, 8000 + h % 40000,
-          n.toLong, 1 + h % 300)
-      }
-    }.toDF()
-      .select(col("media_id"), col("kind"), col("content"),
-        struct(col("format"), col("width"), col("height"),
-          col("sample_rate"), col("duration_ms"), col("n_frames")).as("metadata"))
-  }
-
   /** Frame sampling plan for video rows: explode to (media_id, frame_idx)
-    * every `everyN` frames — the real decode of each frame is the stub
-    * above; the fan-out and partitioning are the Spark-side work. */
+    * every `everyN` frames — the per-frame decode is
+    * [[videoFrameFeatures]]; the fan-out and partitioning are the
+    * Spark-side work. */
   def frameSamplePlan(decoded: DataFrame, everyN: Int): DataFrame =
     decoded.filter(col("kind") === "video" && col("metadata.n_frames") > 0)
       .select(col("media_id"),

@@ -19,11 +19,6 @@ object ConfigFile {
   def exists(dir: String, name: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, name))
 
-  /** Exactly `n` non-negative ints, or a loud failure naming the torn
-    * content — never a silent mis-parse. */
-  def readInts(dir: String, name: String, n: Int): Seq[Int] =
-    readIntsRange(dir, name, n, n)
-
   /** Between `nMin` and `nMax` non-negative ints — the back-compat read
     * for a sidecar format that GREW a trailing field (readers treat a
     * missing tail as its zero default; a length outside the window is

@@ -36,8 +36,9 @@ object Sync {
           "upgrade the database(s) before trying again")
     }
 
-  /** [[sync]] behind the revision fence: compares the two `_metadata`
-    * frames' `schema_revision` rows before any hashing happens. */
+  /** [[sync]] behind the revision fence (reference `cli.py:429-442`):
+    * compares the two `_metadata` frames' `schema_revision` rows before
+    * any hashing happens. */
   def syncGuarded(source: DataFrame, target: DataFrame, pks: Seq[String],
                   sourceMetadata: DataFrame, targetMetadata: DataFrame,
                   scdObservedAt: org.apache.spark.sql.Column = current_timestamp()): SyncResult = {

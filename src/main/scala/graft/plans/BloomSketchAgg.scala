@@ -69,19 +69,6 @@ object BloomBits {
     }
     true
   }
-
-  /** Cardinality estimate from the fill ratio: −(m/j)·ln(1 − X/m), the
-    * standard Bloom occupancy inversion (Swamidass & Baldi 2007). */
-  def estimate(state: Array[Byte]): Double = {
-    val bb = java.nio.ByteBuffer.wrap(state).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val numBits = bb.getInt(); val numHashes = bb.getInt()
-    var set = 0L
-    var i = HeaderBytes
-    while (i < state.length) { set += Integer.bitCount(state(i) & 0xff); i += 1 }
-    if (set >= numBits) Double.PositiveInfinity
-    else -(numBits.toDouble / numHashes) *
-      math.log1p(-(set.toDouble / numBits))
-  }
 }
 
 /** Bloom membership sketch as a native Catalyst aggregate: absorbs a

@@ -156,9 +156,8 @@ object MisraGriesAgg {
     StructField("cnt_lb", LongType, nullable = false))), containsNull = false)
 
   /** The Misra-Gries step for one arriving key `h` against at most `k`
-    * counters — the batch aggregate and the streaming shards
-    * ([[graft.streaming.StreamingHeavyHitters]]) both count through it. */
-  def offer(m: java.util.Map[java.lang.Long, java.lang.Long], h: Long, k: Int): Unit = {
+    * counters — the aggregate's update counts through it. */
+  private def offer(m: java.util.Map[java.lang.Long, java.lang.Long], h: Long, k: Int): Unit = {
     val key = java.lang.Long.valueOf(h)
     val cur = m.get(key)
     if (cur != null) m.put(key, cur + 1L)

@@ -932,9 +932,10 @@ object TextQueries extends QueryPack {
       val bucket = TextAnalysis.splitBucket(col("doc_id"))
       val sh2 = MinHash.hashedShingleArrayFromTokens(toksed, "doc_id", "toks", 2)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dupOfOld = MinHash.nearDuplicatesAgainstArrays(
-          sh2.filter(bucket >= 80), sh2.filter(bucket < 80), "doc_id",
-          threshold = 0.7)
+      val shOld = sh2.filter(bucket < 80)
+      val dupOfOld = MinHash.nearDuplicatesArraysAgainstBands(sh2.filter(bucket >= 80),
+          MinHash.bandRows(MinHash.signaturesFromArray(shOld, "doc_id"), "doc_id"),
+          shOld, "doc_id", threshold = 0.7)
         .select(col("id_new").as("doc_id")).distinct()
       mix.join(lp.select(col("doc_id"), col("xent")), "doc_id")
         .join(dupOfOld, Seq("doc_id"), "left_anti")
@@ -968,9 +969,10 @@ object TextQueries extends QueryPack {
       val bucket = TextAnalysis.splitBucket(col("doc_id"))
       val sh2 = MinHash.hashedShingleArrayFromTokens(toksed, "doc_id", "toks", 2)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dupOfOld = MinHash.nearDuplicatesAgainstArrays(
-          sh2.filter(bucket >= 80), sh2.filter(bucket < 80), "doc_id",
-          threshold = 0.7)
+      val shOld = sh2.filter(bucket < 80)
+      val dupOfOld = MinHash.nearDuplicatesArraysAgainstBands(sh2.filter(bucket >= 80),
+          MinHash.bandRows(MinHash.signaturesFromArray(shOld, "doc_id"), "doc_id"),
+          shOld, "doc_id", threshold = 0.7)
         .select(col("id_new").as("doc_id")).distinct()
         .withColumn("__dup", lit(1))
       val novelty = graft.text.Decontaminate.noveltyScoresFromTokens(toksed,

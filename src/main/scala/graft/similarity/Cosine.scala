@@ -213,17 +213,34 @@ object Cosine {
     * [[autoPlanes]]), so total cost tracks |train|, not |train|·|eval|.
     * Eval-side frames (bands + vectors) are eval-sized — the planner
     * broadcasts them from stats; no forced hint, so an oversized eval
-    * degrades to shuffled equi-joins instead of OOMing. */
+    * degrades to shuffled equi-joins instead of OOMing.
+    * The train side multiprobes ([[probeMasks]]): cost multiplies by the
+    * probe count, recall follows [[srpRecall]]. */
   def semanticDecontaminate(train: DataFrame, evalSplit: DataFrame,
                             idCol: String, vecCol: String, threshold: Double,
                             nPlanes: Int, dim: Int, nTables: Int,
-                            probeRadius: Int = 1): DataFrame =
-    decontaminateTail(train, idCol, threshold,
-      srpBands(evalSplit, idCol, vecCol, nPlanes, dim, nTables)
-        .select(col("t"), col("b"), col(idCol).as("eval_id")),
-      evalSplit.select(col(idCol).as("eval_id"), toDouble(col(vecCol)).as("tv"))
-        .withColumn("tn", normSq(col("tv"))),
-      nPlanes, dim, nTables, vecCol, probeRadius)
+                            probeRadius: Int = 1): DataFrame = {
+    val bandsE = srpBands(evalSplit, idCol, vecCol, nPlanes, dim, nTables)
+      .select(col("t"), col("b"), col(idCol).as("eval_id"))
+    val ve = evalSplit.select(col(idCol).as("eval_id"), toDouble(col(vecCol)).as("tv"))
+      .withColumn("tn", normSq(col("tv")))
+    val masks = probeMasks(nPlanes, probeRadius)
+    val bandsT = srpBands(train, idCol, vecCol, nPlanes, dim, nTables)
+      .select(col("t"),
+        explode(array(masks.map(m => col("b").bitwiseXOR(lit(m))): _*)).as("b"),
+        col(idCol).as("train_id"))
+    val cand = bandsT.join(bandsE, Seq("t", "b"))
+      .select(col("train_id"), col("eval_id")).distinct()
+    val vt = train.select(col(idCol).as("train_id"), toDouble(col(vecCol)).as("v"))
+      .withColumn("vn", normSq(col("v")))
+    val mx = cand.join(vt, "train_id").join(ve, "eval_id")
+      .select(col("train_id"),
+        round(cosine(col("v"), col("tv"), col("vn"), col("tn")), 6).as("sim"))
+      .groupBy(col("train_id")).agg(max(col("sim")).as("max_test_sim"))
+    train.select(col(idCol))
+      .join(mx.withColumnRenamed("train_id", idCol), Seq(idCol), "left")
+      .withColumn("kept", coalesce(col("max_test_sim") < threshold, lit(true)))
+  }
 
   /** All XOR masks of Hamming weight ≤ radius over nPlanes sign bits —
     * the MULTIPROBE bucket expansion (Lv et al. 2007, "Multi-Probe LSH")
@@ -274,92 +291,6 @@ object Cosine {
       s"targetRecall must be in (0, 1], got $targetRecall")
     (0 to nPlanes).find(r => srpRecall(sim, nPlanes, nTables, r) >= targetRecall)
       .getOrElse(nPlanes)
-  }
-
-  /** The shared candidate-join / exact-cosine / left-join-back tail of
-    * [[semanticDecontaminate]] and [[semanticDecontaminateStored]] — the
-    * two forms differ ONLY in where the eval-side bands and normed
-    * vectors come from (computed inline vs read from the artifact), so
-    * the kept/NULL semantics cannot drift between them. The train side
-    * multiprobes ([[probeMasks]]): cost multiplies by the probe count,
-    * recall follows [[srpRecall]]; the eval-side index is untouched by
-    * the radius, so a stored artifact serves any radius. */
-  private def decontaminateTail(train: DataFrame, idCol: String,
-                                threshold: Double, bandsE: DataFrame,
-                                ve: DataFrame, nPlanes: Int, dim: Int,
-                                nTables: Int, vecCol: String,
-                                probeRadius: Int): DataFrame = {
-    val masks = probeMasks(nPlanes, probeRadius)
-    val bandsT = srpBands(train, idCol, vecCol, nPlanes, dim, nTables)
-      .select(col("t"),
-        explode(array(masks.map(m => col("b").bitwiseXOR(lit(m))): _*)).as("b"),
-        col(idCol).as("train_id"))
-    val cand = bandsT.join(bandsE, Seq("t", "b"))
-      .select(col("train_id"), col("eval_id")).distinct()
-    val vt = train.select(col(idCol).as("train_id"), toDouble(col(vecCol)).as("v"))
-      .withColumn("vn", normSq(col("v")))
-    val mx = cand.join(vt, "train_id").join(ve, "eval_id")
-      .select(col("train_id"),
-        round(cosine(col("v"), col("tv"), col("vn"), col("tn")), 6).as("sim"))
-      .groupBy(col("train_id")).agg(max(col("sim")).as("max_test_sim"))
-    train.select(col(idCol))
-      .join(mx.withColumnRenamed("train_id", idCol), Seq(idCol), "left")
-      .withColumn("kept", coalesce(col("max_test_sim") < threshold, lit(true)))
-  }
-
-  /** Persist the SRP index of a STATIC reference split — the "band once,
-    * probe many" serving form of [[semanticDecontaminate]]: an eval
-    * suite is fixed per release, so its band rows and normed vectors are
-    * written once and every train batch probes the stored artifact
-    * instead of re-banding the eval side per run. Layout: `bands`
-    * (id, t, b), `vecs` (id, tv, tn), and a one-line `config` pinning
-    * (nPlanes, dim, nTables) so probes ALWAYS band with the index's own
-    * hyperplanes — a probe banded under a different config would
-    * silently miss every collision. The eval side is small by
-    * construction (the planner broadcasts both frames from stats), so
-    * no partition pruning is needed here — that machinery belongs on
-    * corpus-scale stores (RepIndex). */
-  def writeSrpIndex(df: DataFrame, idCol: String, vecCol: String,
-                    nPlanes: Int, dim: Int, nTables: Int, dir: String): Unit = {
-    srpBands(df, idCol, vecCol, nPlanes, dim, nTables)
-      .write.mode("overwrite").parquet(s"$dir/bands")
-    df.select(col(idCol), toDouble(col(vecCol)).as("tv"))
-      .withColumn("tn", normSq(col("tv")))
-      .write.mode("overwrite").parquet(s"$dir/vecs")
-    // the config IS the artifact's commit point (bands/vecs are useless
-    // without it): atomic rename, parse-validated on read
-    Artifact.commit(df.sparkSession, dir, SrpConfig, Seq(nPlanes, dim, nTables))
-  }
-
-  private val SrpConfig = Artifact.Sidecar("config", 3 to 3)
-
-  /** (nPlanes, dim, nTables) a stored SRP index was banded with. */
-  def srpIndexConfig(dir: String): (Int, Int, Int) = {
-    val Seq(p, d, t) = Artifact.pinned(dir, SrpConfig)
-    (p, d, t)
-  }
-
-  /** [[semanticDecontaminate]] against a STORED eval index: bands the
-    * train side under the index's own config (read from the artifact —
-    * never caller-supplied, so probe and index cannot drift), candidate-
-    * joins the stored band rows, exact-cosines candidates against the
-    * stored normed vectors, and left-joins the per-train max back.
-    * Value-identical to the inline form over the same eval split and
-    * config (spec-pinned): banding is a pure function of (vector,
-    * config), and the stored `tn` is the same normSq fold. Stateless
-    * per train doc — which is what makes the STREAMING twin exact: each
-    * batch's decisions depend only on that batch and the fixed index. */
-  def semanticDecontaminateStored(spark: SparkSession, train: DataFrame,
-                                  indexDir: String, idCol: String,
-                                  vecCol: String, threshold: Double,
-                                  probeRadius: Int = 1): DataFrame = {
-    val (nPlanes, dim, nTables) = srpIndexConfig(indexDir)
-    decontaminateTail(train, idCol, threshold,
-      ParquetOpen(spark, s"$indexDir/bands")
-        .select(col("t"), col("b"), col(idCol).as("eval_id")),
-      ParquetOpen(spark, s"$indexDir/vecs")
-        .select(col(idCol).as("eval_id"), col("tv"), col("tn")),
-      nPlanes, dim, nTables, vecCol, probeRadius)
   }
 
   /** IVF-style approximate top-k SEARCH: each query probes only its own
@@ -451,8 +382,8 @@ object Cosine {
       .select(col(cellCol), col("query_id"), col("qv"), col("qn"))
   }
 
-  /** The ONE candidate-scoring tail every IVF search form rides (the
-    * decontaminateTail convention — shared forms cannot drift):
+  /** The ONE candidate-scoring tail every IVF search form rides (shared,
+    * so the forms cannot drift):
     * cell-key equi-join of probes against (cell, neighbor_id, nv)
     * candidates, exact cosine, per-query top-k. */
   private def ivfScore(probes: DataFrame, cands: DataFrame, cellCol: String,
@@ -735,40 +666,6 @@ object Cosine {
     out.orderBy(col(idCol))
   }
 
-  /** [[lloydIterations]] that runs until ASSIGNMENTS FIX-POINT (no vector
-    * changes cell — the standard Lloyd stopping rule; with discrete
-    * assignments, "centroid movement < ε" and "no reassignment" coincide
-    * at ε→0) or `maxIters`, whichever first. Returns the final assignment
-    * frame and the number of rounds actually run. Each round adds one
-    * id-keyed count over the (checkpointed, lineage-free) assignment
-    * frame — the convergence probe costs one small job, not a corpus
-    * re-read, because the probe scans the materialized checkpoint. */
-  def lloydConverge(corpus: DataFrame, idCol: String, vecCol: String,
-                    cellCol: String, maxIters: Int,
-                    centroidFn: (DataFrame, String, String) => DataFrame =
-                      cellCentroids): (DataFrame, Int) = {
-    require(maxIters >= 1, "need at least one Lloyd iteration")
-    val base = corpus.select(col(idCol), toDouble(col(vecCol)).as("v"))
-    var cur = corpus.select(col(idCol), toDouble(col(vecCol)).as("v"),
-      col(cellCol).as("cell"))
-    var out: DataFrame = null
-    var rounds = 0
-    var moved = -1L
-    while (rounds < maxIters && moved != 0L) {
-      val cents = centroidFn(cur.select(col("cell"), col("v")), "cell", "v")
-      out = assignToCentroids(base.withColumnRenamed("v", "emb"), idCol, "emb",
-        cents, "cell")
-      val next = out.select(col(idCol), col("assigned_cell").as("cell"))
-        .join(base, Seq(idCol)).localCheckpoint()
-      moved = next.select(col(idCol), col("cell"))
-        .join(cur.select(col(idCol), col("cell").as("cell_prev")), Seq(idCol))
-        .filter(col("cell") =!= col("cell_prev")).count()
-      cur = next
-      rounds += 1
-    }
-    (out.orderBy(col(idCol)), rounds)
-  }
-
   /** Per-dimension embedding data card: n, mean, population stddev, min,
     * max for every vector dimension — the drift/quality check an
     * embedding pipeline runs per shard before indexing (a shifted mean or
@@ -886,12 +783,6 @@ object Cosine {
         lit(255.0)), lit(0.0)).cast("int"))
   }
 
-  /** Per-vector SQ8 codes (array<int> of dim entries in [0, 255]); the
-    * packed serving form is [[sq8Pack]]. */
-  def sq8Codes(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
-    corpus.crossJoin(broadcast(sq8Stats(corpus, vecCol)))
-      .select(col(idCol), sq8CodeExpr(toDouble(col(vecCol))).as("codes"))
-
   /** Quantizes `df` to PACKED codes under a GIVEN stats row — the
     * serving/maintenance form: an index's stats are pinned at build (the
     * artifact's contract, like the SRP index's hyperplanes), appended
@@ -1002,9 +893,9 @@ object Cosine {
   }
 
   /** The ONE exact-rerank tail every quantized two-stage form rides
-    * ([[sq8TopK]], [[sq8TopKStored]], [[pqTopKStored]] — the
-    * decontaminateTail convention): broadcast shortlist against the raw
-    * (neighbor_id, cv) vectors, exact cosine, per-query top-k.
+    * ([[sq8TopK]], [[sq8TopKStored]], [[pqTopKStored]]): broadcast
+    * shortlist against the raw (neighbor_id, cv) vectors, exact cosine,
+    * per-query top-k.
     * `stage1Col` names the quantized-space score the shortlist ranked
     * on, carried through to the output. */
   private def sq8Rerank(short: DataFrame, raw: DataFrame, k: Int,
@@ -1416,7 +1307,7 @@ object Cosine {
   /** The p·dim literal-node gate, standalone so WRITERS can reject an
     * oversized rotation BEFORE mutating a store ([[rotatedPrefix]] fires
     * it at expression-build time, but by then
-    * writeRotatedPrefixIndexWith has already retired the old sidecar —
+    * the rotated-prefix writer has already retired the old sidecar —
     * a predictable argument error must fail with zero writes). */
   private def requireRotationBudget(rotation: Seq[Seq[Double]]): Unit = {
     val nodes = rotation.iterator.map(_.size.toLong).sum
@@ -1444,110 +1335,6 @@ object Cosine {
       queries, full, idCol, vecCol, k, None)
   }
 
-  /** Derive the prefix width `p` from a RECALL TARGET by measurement —
-    * the `radiusFor` convention applied to the one tier whose recall is
-    * NOT analytically derivable: prefix recall decays with corpus
-    * DENSITY at fixed p (x24b: 0.52 at sf0.01 → 0.28 at sf0.1, same
-    * p=16), so any static p = f(target) formula would silently lie as
-    * the corpus grows. Instead, measure: rank a deterministic
-    * `sampleN`-query sample (smallest xxhash64(id) — stable under
-    * re-partitioning), compute brute-force truth ONCE for the sample,
-    * then walk `candidates` ascending running the real two-stage search
-    * under `rotation.take(p)` until the sampled recall@k meets
-    * `targetRecall`. Cost is sample-bounded: one exact topK plus one
-    * prefix search per candidate tried, each with a `sampleN`-row
-    * broadcast side — no corpus×corpus stage at any width.
-    *
-    * Returns (chosen p, the measured (p, recall) curve over the widths
-    * tried). When NO candidate meets the target the widest one returns
-    * with its achieved recall in the curve — the caller reads the curve
-    * and either accepts, widens candidates, or moves to the SQ8 tier
-    * (recall 1.0 at 1 B/dim; past the density crossover that is the
-    * right answer, not a wider prefix). */
-  def calibratePrefixWidth(corpus: DataFrame, idCol: String, vecCol: String,
-                           rotation: Seq[Seq[Double]], targetRecall: Double,
-                           k: Int = 5, kShort: Int = 20,
-                           candidates: Seq[Int] = Seq(8, 16, 32, 64),
-                           sampleN: Int = 32): (Int, Seq[(Int, Double)]) = {
-    require(rotation.nonEmpty, "calibratePrefixWidth needs a trained rotation")
-    val widths = candidates.filter(_ <= rotation.size).distinct.sorted
-    require(widths.nonEmpty,
-      s"no candidate width fits the ${rotation.size}-row rotation")
-    calibrateWalk(corpus, idCol, vecCol, k, sampleN, widths, targetRecall) {
-      (sample, p) =>
-        prefixTopKRotated(sample, corpus, idCol, vecCol,
-          rotation.take(p), k, kShort)
-    }
-  }
-
-  /** The shared measure-until-target walker behind every recall
-    * calibrator ([[calibratePrefixWidth]], [[calibrateNProbe]]): exact
-    * truth ONCE for a deterministic `sampleN`-query sample (smallest
-    * xxhash64(id) — stable under re-partitioning), then the candidate
-    * knob values ascending through `search` (must return (query_id,
-    * neighbor_id) rows) until the sampled recall@k meets the target.
-    * Cost is sample-bounded: one exact topK plus one search per
-    * candidate tried. When no candidate reaches the target, the widest
-    * returns with the honest curve — the caller reads it and escalates
-    * (a wider candidate set, or the next tier up). */
-  private def calibrateWalk(corpus: DataFrame, idCol: String, vecCol: String,
-                            k: Int, sampleN: Int, candidates: Seq[Int],
-                            targetRecall: Double)(
-                            search: (DataFrame, Int) => DataFrame): (Int, Seq[(Int, Double)]) = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall must be in (0, 1], got $targetRecall")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    Using.Manager { use =>
-      val sample = use(corpus
-        .orderBy(xxhash64(col(idCol)), col(idCol)).limit(sampleN)
-        .select(col(idCol), col(vecCol)).persist(lvl))
-      val exact = use(topK(sample, corpus, idCol, vecCol, k)
-        .select(col("query_id"), col("neighbor_id")).persist(lvl))
-      val nExact = exact.count().toDouble
-      val curve = Seq.newBuilder[(Int, Double)]
-      var chosen = -1
-      val it = candidates.iterator
-      while (it.hasNext && chosen < 0) {
-        val c = it.next()
-        val approx = search(sample, c)
-          .select(col("query_id"), col("neighbor_id"))
-        val overlap = exact
-          .join(approx, Seq("query_id", "neighbor_id"), "left_semi").count()
-        val r = if (nExact == 0) 1.0 else overlap / nExact
-        curve += ((c, r))
-        if (r >= targetRecall) chosen = c
-      }
-      (if (chosen >= 0) chosen else candidates.last, curve.result())
-    }.get
-  }
-
-  /** Derive the IVFADC probe width `nProbe` from a RECALL TARGET by
-    * measurement against a STORED index — the [[calibratePrefixWidth]]
-    * convention applied to the knob x28b/x28c price: the curve's shape
-    * is corpus- and construction-dependent (label cells vs k-means
-    * cells vs residual codes all bend it differently), so a pipeline
-    * derives the knob from its target instead of hand-reading the gate
-    * curves. Walks `candidates` ascending through the real
-    * [[ivfAdcMultiprobeStored]] serving path. NOTE the reachable
-    * ceiling: with every cell probed, recall equals the store's
-    * QUANTIZATION ceiling (the x27-family row), never 1.0 — a curve
-    * that plateaus below the target is the signal to raise `kShort`
-    * on [[pqTopKStored]]'s rerank path or move tiers, not to probe
-    * wider. Returns (chosen nProbe, the measured curve). */
-  def calibrateNProbe(spark: SparkSession, dir: String, corpus: DataFrame,
-                      idCol: String, vecCol: String, cellCol: String,
-                      targetRecall: Double, k: Int = 5,
-                      candidates: Seq[Int] = Seq(1, 2, 4, 8),
-                      sampleN: Int = 32): (Int, Seq[(Int, Double)]) = {
-    val widths = candidates.distinct.sorted
-    require(widths.nonEmpty, "calibrateNProbe needs candidate widths")
-    calibrateWalk(corpus, idCol, vecCol, k, sampleN, widths, targetRecall) {
-      (sample, np) =>
-        ivfAdcMultiprobeStored(spark, sample, dir, idCol, vecCol, cellCol,
-          k, nProbe = np)
-    }
-  }
-
   /** The ROTATED stored Matryoshka layout: same vectors table as
     * [[writePrefixIndex]] (pbucket-partitioned; stage-1 column pruning +
     * pruned rerank both carry over) except `prefix` holds the ROTATED
@@ -1562,45 +1349,8 @@ object Cosine {
   def writeRotatedPrefixIndex(corpus: DataFrame, idCol: String,
                               vecCol: String, p: Int,
                               dir: String): Seq[Seq[Double]] =
-    writeRotatedPrefixIndexWith(corpus, idCol, vecCol,
-      moment2Rotation(corpus, vecCol, p), p, dir)
-
-  /** [[writeRotatedPrefixIndex]] with the width DERIVED from a recall
-    * target ([[calibratePrefixWidth]]) instead of hand-picked: trains
-    * ONE rotation at the widest candidate (prefix rotations nest — the
-    * p-row rotation IS the first p rows of the wider one, so the
-    * calibrated width reuses the trained basis, no retrain), measures
-    * the width, writes the store under `rotation.take(p)`. Returns the
-    * chosen width and the measured curve; callers log the curve — a
-    * curve that never reaches the target is the signal to serve this
-    * corpus from the SQ8 tier instead. */
-  def writeRotatedPrefixIndexCalibrated(corpus: DataFrame, idCol: String,
-                                        vecCol: String, targetRecall: Double,
-                                        dir: String,
-                                        candidates: Seq[Int] = Seq(8, 16, 32, 64),
-                                        k: Int = 5, kShort: Int = 20,
-                                        sampleN: Int = 32): (Int, Seq[(Int, Double)]) = {
-    val widths = candidates.distinct.sorted
-    require(widths.nonEmpty, "calibration needs candidate widths")
-    val fullRot = moment2Rotation(corpus, vecCol, widths.last)
-    if (fullRot.isEmpty) {
-      // empty corpus: nothing to measure — degrade exactly like the
-      // fixed-width writer (readable empty layout, requested p pinned)
-      writeRotatedPrefixIndexWith(corpus, idCol, vecCol, Nil, widths.head, dir)
-      (widths.head, Nil)
-    } else {
-      val (p, curve) = calibratePrefixWidth(corpus, idCol, vecCol, fullRot,
-        targetRecall, k, kShort, widths, sampleN)
-      writeRotatedPrefixIndexWith(corpus, idCol, vecCol, fullRot.take(p), p, dir)
-      (p, curve)
-    }
-  }
-
-  private def writeRotatedPrefixIndexWith(corpus: DataFrame, idCol: String,
-                                          vecCol: String,
-                                          rotation: Seq[Seq[Double]], p: Int,
-                                          dir: String): Seq[Seq[Double]] =
-    commitRotatedPrefix(corpus.sparkSession, rotation, p, idCol, dir) { rot =>
+    commitRotatedPrefix(corpus.sparkSession, moment2Rotation(corpus, vecCol, p),
+        p, idCol, dir) { rot =>
       val pref =
         if (rot.isEmpty) slice(toDouble(col(vecCol)), 1, p)
         else rotatedPrefix(toDouble(col(vecCol)), rot)
@@ -2493,21 +2243,6 @@ object Cosine {
                  cellCentroids): DataFrame =
     semDedupFromPairs(corpus, idCol, vecCol, cellCol,
       cellPairs(corpus, idCol, vecCol, cellCol, threshold), centroidFn)
-
-  /** [[semDedup]] with SRP-bucketed candidate pairs ([[srpPairs]]) — the
-    * scaladoc'd "at 100 TB swap in SRP buckets" configuration as a tested
-    * entry point, not a comment. Candidate generation buckets on sign-bit
-    * projections (no coarse cell required for PAIRS); the centroid that
-    * scores diversity still comes from `cellCol`, so only the pair stage
-    * changes and the downstream shape (CC → keep window) is identical.
-    * `SemDedupSpec` pins the two paths decision-identical on a corpus
-    * whose cells ARE its SRP buckets. */
-  def semDedupSrp(corpus: DataFrame, idCol: String, vecCol: String, cellCol: String,
-                  threshold: Double, nPlanes: Int, dim: Int,
-                  centroidFn: (DataFrame, String, String) => DataFrame =
-                    cellCentroids): DataFrame =
-    semDedupFromPairs(corpus, idCol, vecCol, cellCol,
-      srpPairs(corpus, idCol, vecCol, threshold, nPlanes, dim), centroidFn)
 
   /** Shared SemDeDup tail: centroid similarity (broadcast k·dim centroids),
     * connected components over the supplied candidate `pairs`, and the

@@ -1,24 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming extension (SURVEY §2.12): the reference is
   * batch-only, but its spot-price history rows (source-timestamped,
-  * `vendors/_aws.py:166-174, 1102-1104`) are a natural streaming source,
-  * and its SCD/upsert semantics map to CDC merges. This module provides:
-  *
-  *  - watermarked dedup of late duplicate observations (PK dedup within
-  *    the watermark — the streaming analogue of A11 keep-first);
-  *  - tumbling-window price statistics with late-data tolerance;
-  *  - price-CHANGE detection via typed per-key state
-  *    (flatMapGroupsWithState) — emit only rows whose price moved;
-  *  - a foreachBatch SCD merge that reuses the batch Upsert/Dedup ops.
+  * `vendors/_aws.py:166-174, 1102-1104`) are a natural streaming source.
+  * This module provides price-CHANGE detection via typed per-key state
+  * (flatMapGroupsWithState) — emit only rows whose price moved — which
+  * Pipeline's streaming stage drives.
   *
   * Scale: state is partitioned by key across executors (RocksDB-backed
-  * state store in production); watermarks bound state size; all operators
-  * here are the standard streaming-safe ones.
+  * state store in production).
   */
 object PriceStream {
 
@@ -26,23 +19,6 @@ object PriceStream {
   case class PriceObs(key: String, ts: java.sql.Timestamp, price: Double)
   case class PriceChange(key: String, ts: java.sql.Timestamp,
                          price: Double, prevPrice: Option[Double])
-
-  /** Drop duplicate observations of the same (key, ts) arriving within the
-    * watermark — late duplicates beyond it age out of state. */
-  def dedupedObservations(stream: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    stream.withWatermark("ts", watermark).dropDuplicates(Seq("key", "ts"))
-
-  /** Tumbling-window min/avg/max per key with late-data tolerance. */
-  def windowedStats(stream: DataFrame, watermark: String = "10 minutes",
-                    windowLen: String = "5 minutes"): DataFrame =
-    stream.withWatermark("ts", watermark)
-      .groupBy(col("key"), window(col("ts"), windowLen))
-      .agg(min(col("price")).as("min_price"),
-        avg(col("price")).as("avg_price"),
-        max(col("price")).as("max_price"),
-        count(lit(1)).as("n_obs"))
-      .select(col("key"), col("window.start").as("window_start"),
-        col("min_price"), col("avg_price"), col("max_price"), col("n_obs"))
 
   /** Emit only price CHANGES per key (first observation always emits).
     * Typed state: last seen price per key; processing-time timeout can be
@@ -67,53 +43,4 @@ object PriceStream {
           out.iterator
       }
   }
-
-  /** Stream-static enrichment: join each micro-batch to a static dimension
-    * frame (server/region attributes). The static side is broadcast per
-    * batch — the streaming analogue of the batch dimension joins. */
-  def enriched(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim), Seq(key), "left")
-
-  /** Session windows over the stream: observations of one key separated by
-    * less than `gap` merge into one session (the streaming counterpart of
-    * the batch sessionize window w2, but computed incrementally —
-    * `session_window` merges state as late rows arrive, watermark bounds
-    * it). */
-  def sessionized(stream: DataFrame, watermark: String = "10 minutes",
-                  gap: String = "5 minutes"): DataFrame =
-    stream.withWatermark("ts", watermark)
-      .groupBy(col("key"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_obs"), min(col("price")).as("min_price"),
-        max(col("price")).as("max_price"))
-      .select(col("key"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_obs"), col("min_price"), col("max_price"))
-
-  /** Stream-stream interval join: each price observation picks up the
-    * availability events for the same key within `tolerance` BEFORE it.
-    * Both sides are watermarked so the join state is bounded — Spark keeps
-    * only rows young enough to still find a match; without the time-range
-    * condition a stream-stream join would buffer forever. */
-  def withRecentEvents(prices: DataFrame, events: DataFrame,
-                       watermark: String = "10 minutes",
-                       tolerance: String = "5 minutes"): DataFrame = {
-    val p = prices.withWatermark("ts", watermark)
-    val e = events.select(col("key").as("e_key"), col("ets"), col("status"))
-      .withWatermark("ets", watermark)
-    p.join(e, col("key") === col("e_key") &&
-      col("ets") >= col("ts") - expr(s"INTERVAL $tolerance") &&
-      col("ets") <= col("ts"))
-      .select(col("key"), col("ts"), col("price"), col("ets"), col("status"))
-  }
-
-  /** CDC merge per micro-batch: dedup keep-last inside the batch, then hand
-    * to any batch writer (JDBC upsert, parquet MERGE, ...). Reuses the
-    * batch ops — the foreachBatch bridge the reference's SCD flips map to. */
-  def scdMergeWriter(stream: DataFrame, keys: Seq[String], orderCol: String)(
-      write: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        write(graft.ops.Dedup.keepLast(batch, keys, Seq(col(orderCol))))
-      }
 }

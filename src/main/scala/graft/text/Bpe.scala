@@ -25,46 +25,14 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  // ---- byte-level alphabet (GPT-2, Radford et al. 2019 `bytes_to_unicode`):
-  // every UTF-8 byte maps to a PRINTABLE unicode char — visible bytes
-  // ('!'..'~', '¡'..'¬', '®'..'ÿ') map to themselves, the rest to 256+n —
-  // so the base vocabulary is exactly 256 symbols, every string round-trips
-  // losslessly, and unseen unicode can never produce an unknown token.
-  private[text] val byteToChar: Array[Char] = {
-    val visible = (('!' to '~') ++ ('¡' to '¬') ++ ('®' to 'ÿ')).map(_.toInt).toSet
-    val out = new Array[Char](256)
-    var n = 0
-    (0 until 256).foreach { b =>
-      if (visible(b)) out(b) = b.toChar
-      else { out(b) = (256 + n).toChar; n += 1 }
-    }
-    out
-  }
-  private val charToByte: Map[Char, Byte] =
-    byteToChar.zipWithIndex.map { case (c, b) => c -> b.toByte }.toMap
-
-  /** A word as its byte-level symbol sequence (UTF-8 bytes through the
-    * GPT-2 alphabet) — the base split for byte-level training/encoding. */
-  def byteSyms(word: String): Vector[String] =
-    word.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map(b => byteToChar(b & 0xff).toString).toVector
-
-  /** Lossless inverse of byte-level tokens: concatenate, map each char
-    * back to its byte, decode UTF-8. Total for any merge table, because
-    * merges only ever concatenate alphabet symbols. */
-  def decodeByteTokens(tokens: Seq[String]): String =
-    new String(tokens.flatMap(_.map(charToByte)).toArray,
-      java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Learn `numMerges` merges from a (word, count) histogram. `split`
-    * chooses the base alphabet: per-character (default, the t20 gate's
-    * oracle-replayable form) or [[byteSyms]] for GPT-2-style byte-level. */
-  def trainFromHistogram(hist: Seq[(String, Long)], numMerges: Int,
-                         split: String => Vector[String] =
-                           _.map(_.toString).toVector): Seq[(String, String)] = {
+  /** Learn `numMerges` merges from a (word, count) histogram, over a
+    * per-character base alphabet (the t20 gate's oracle-replayable
+    * form). */
+  def trainFromHistogram(hist: Seq[(String, Long)],
+                         numMerges: Int): Seq[(String, String)] = {
     var vocab: Map[Vector[String], Long] =
       hist.filter(_._1.nonEmpty)
-        .groupMapReduce(s => split(s._1))(_._2)(_ + _)
+        .groupMapReduce(_._1.map(_.toString).toVector)(_._2)(_ + _)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (merges.length < numMerges && !done) {
@@ -113,19 +81,8 @@ object Bpe {
 
   /** Greedy BPE encode of one word under the learned ranks: repeatedly
     * merge the adjacent pair with the LOWEST rank until none applies. */
-  def encodeWord(word: String, ranks: Map[(String, String), Int]): Vector[String] =
-    encodeSyms(word.map(_.toString).toVector, ranks)
-
-  /** Byte-level greedy encode: same merge loop over [[byteSyms]]. Any
-    * unicode input tokenizes (to at worst its mapped bytes) and
-    * [[decodeByteTokens]] round-trips it exactly — `BpeSpec` pins the
-    * round trip on arbitrary unicode. */
-  def encodeWordBytes(word: String, ranks: Map[(String, String), Int]): Vector[String] =
-    encodeSyms(byteSyms(word), ranks)
-
-  private def encodeSyms(start: Vector[String],
-                         ranks: Map[(String, String), Int]): Vector[String] = {
-    var syms = start
+  def encodeWord(word: String, ranks: Map[(String, String), Int]): Vector[String] = {
+    var syms = word.map(_.toString).toVector
     var changed = true
     while (changed && syms.length > 1) {
       var bestRank = Int.MaxValue; var bestAt = -1

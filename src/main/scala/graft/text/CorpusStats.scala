@@ -1,13 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-level statistics for a training-data pipeline: one aggregation
   * pass producing the numbers a data card needs — document/token volumes,
-  * dedup rate, language mix, length distribution. Exact aggregates where
-  * the oracle checks them; `approxDistinctTokens` is the HLL path for the
-  * scales where exact distinct is a shuffle too far. */
+  * dedup rate, language mix, length distribution, all exact, so the
+  * oracle checks them. */
 object CorpusStats {
 
   /** Single-row exact summary of a document corpus. */
@@ -28,12 +27,4 @@ object CorpusStats {
     docs.groupBy((floor(TextAnalysis.tokenCount(col(textCol)) / bucketWidth) * bucketWidth)
         .cast("long").as("bucket_start"))
       .agg(count(lit(1)).as("n_docs"))
-
-  /** HLL distinct tokens — the 100 TB variant of vocabulary size (no
-    * exact-distinct shuffle of every token). Not oracle-gated: approximate
-    * by design. */
-  def approxDistinctTokens(docs: DataFrame, textCol: String = "text",
-                           rsd: Double = 0.01): DataFrame =
-    docs.select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-      .agg(approx_count_distinct(col("tok"), rsd).as("approx_vocab"))
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 /** Benchmark decontamination (C3): flag training documents that share any
   * word n-gram with a held-out split, with document-frequency pruning on
   * the shingle index — the same stop-shingle defense d2's Jaccard uses
-  * ([[graft.dedup.MinHash.exactJaccardPairsAdaptive]]). Without it, one
+  * (the `maxDf` prune of [[graft.dedup.MinHash.exactJaccardPairs]]), with
+  * the cutoff derived from the df distribution. Without it, one
   * boilerplate n-gram (license header, nav bar) present in f_train train
   * docs and f_test test docs contributes f_train·f_test join rows before
   * the groupBy; with license-header duplication at corpus scale that
@@ -128,9 +129,8 @@ object Decontaminate {
       // dfQuantile — its size is (1-q)·|distinct shingles| by
       // construction.
       // persisted: the quantile's broadcast exchange and the hot-set's
-      // broadcast exchange each evaluate dfs independently otherwise
-      // (same reason MinHash.exactJaccardPairsAdaptive persists its df
-      // frame) — measured 3× the aggregation without it
+      // broadcast exchange each evaluate dfs independently otherwise —
+      // measured 3× the aggregation without it
       val hot = Using.resource(shh.groupBy(col("shash"))
           .agg(count(lit(1)).as("df"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) { dfs =>

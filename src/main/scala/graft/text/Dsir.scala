@@ -168,7 +168,7 @@ object Dsir {
     * the sidecar's content fingerprints (torn-model guard, once per
     * (dir, sidecar)). Per-doc scores are pure functions of (doc, fixed
     * model), so scoring any partition of a corpus equals scoring the
-    * union — the property the streaming scorer rides. */
+    * union. */
   def importanceStored(spark: org.apache.spark.sql.SparkSession,
                        batch: DataFrame, idCol: String, textCol: String,
                        dir: String): DataFrame = {

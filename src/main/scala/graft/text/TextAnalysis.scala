@@ -147,11 +147,10 @@ object TextAnalysis {
     * recovers through the hub.
     *
     * The cutoff is `max(capFloor, q-quantile of group frequency)` — the
-    * same df-distribution-derived form as
-    * [[graft.dedup.MinHash.exactJaccardPairsAdaptive]] (a fixed cutoff
-    * is corpus-dependent; see SCALE.md round-3), computed in-plan as a
-    * mergeable sketch and broadcast as one row. `f` must have columns
-    * (idCol, wfp). */
+    * same df-distribution-derived form as [[Decontaminate]]'s shingle
+    * prune (a fixed cutoff is corpus-dependent; see SCALE.md round-3),
+    * computed in-plan as a mergeable sketch and broadcast as one row.
+    * `f` must have columns (idCol, wfp). */
   def winnowCollisionPairs(f: org.apache.spark.sql.DataFrame, idCol: String,
                            capFloor: Int = 32,
                            q: Double = 0.999): org.apache.spark.sql.DataFrame = {

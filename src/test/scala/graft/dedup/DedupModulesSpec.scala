@@ -49,39 +49,6 @@ class MinHashSpec extends SparkSpec {
     assert(exact.length == 1 && exact.head.getLong(0) == 1L)
   }
 
-  test("quantile df cutoff recovers pairs a fixed cutoff loses on duplicated corpora") {
-    val sp = spark; import sp.implicits._
-    // 8 distinct docs, each duplicated 5x with a unique tag (the 10x-
-    // duplication stress shape): every shingle's df is ~5, so a fixed
-    // maxDf=3 prunes everything and finds no near-dups
-    val docs = (for {
-      d <- 0 until 8
-      c <- 0 until 5
-    } yield (d * 100L + c,
-      s"alpha$d beta$d gamma$d delta$d epsilon$d zeta$d eta$d theta$d tag${d}_$c"))
-      .toDF("doc_id", "text")
-    val fixed = graft.dedup.MinHash.exactJaccardPairs(
-      docs, "doc_id", "text", n = 2, threshold = 0.7, maxDf = 3)
-    assert(fixed.count() == 0, "fixed cutoff should (wrongly) prune all shingles")
-    val cut = graft.dedup.MinHash.dfQuantileCutoff(docs, "doc_id", "text", n = 2)
-    assert(cut >= 5, s"quantile cutoff should clear the duplication factor: $cut")
-    val adaptive = graft.dedup.MinHash.exactJaccardPairs(
-      docs, "doc_id", "text", n = 2, threshold = 0.7, maxDf = cut)
-    // every doc pairs with its 4 co-copies: 8 groups x C(5,2)
-    assert(adaptive.count() == 8 * 10, s"got ${adaptive.count()}")
-    // the one-pass in-plan variant gives the same pairs without the
-    // second corpus scan (cutoff stays distributed, never a driver value)
-    val onePass = graft.dedup.MinHash.exactJaccardPairsAdaptive(
-      docs, "doc_id", "text", n = 2, threshold = 0.7)
-    assert(onePass.orderBy("id_a", "id_b").collect().toSeq ==
-      adaptive.orderBy("id_a", "id_b").collect().toSeq)
-    // empty corpus: cutoff floors at 1 instead of NPE-ing
-    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(graft.dedup.MinHash.dfQuantileCutoff(empty, "doc_id", "text", 2) == 1)
-    assert(graft.dedup.MinHash.exactJaccardPairsAdaptive(
-      empty, "doc_id", "text", 2, 0.7).count() == 0)
-  }
-
   test("cross-snapshot dedup flags only new-vs-old pairs") {
     val sp = spark; import sp.implicits._
     // old snapshot: 1 and 2 are near-dups OF EACH OTHER (must NOT appear);
@@ -154,13 +121,6 @@ class MinHashSpec extends SparkSpec {
     assert(agreeC <= 2, s"disjoint sources agreeing $agreeC/16")
     // matrix covers each unordered pair exactly once
     assert(out.keySet == Set(("srcA", "srcB"), ("srcA", "srcC"), ("srcB", "srcC")))
-    // the xxhash64 production keying preserves the structure: identical
-    // sources still agree 16/16, disjoint ones still near 0
-    val xx = MinHash.groupOverlapMatrix(docs, "source", "text", n = 2,
-        xxhashKeys = true)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(xx(("srcA", "srcB")) == 16L)
-    assert(xx(("srcA", "srcC")) <= 2L)
   }
 
   test("containment catches the embedded-subset pair that Jaccard misses") {
@@ -234,58 +194,6 @@ class MinHashSpec extends SparkSpec {
     // no cross-group or unique-doc pairs
     assert(pairs.size == 200 &&
       !pairs.exists { case (a, b) => (a < 2000) != (b < 2000) })
-  }
-
-  test("pure-Scala kernels match the Column kernels on adversarial synthetic text") {
-    val sp = spark; import sp.implicits._
-    val next = seededInts(41L)
-    // unicode beyond ASCII, repeated/mixed whitespace, empties, 1-token
-    // docs — the tokenizer/md5 edge cases the real corpus never exercises
-    val pieces = Array("fox", "δοκιμή", "試験", "naïve", "x", "", "  ",
-      "\tword\t", "a-b.c", "émoji🙂", "ZWNJ‌join")
-    val docs = (0 until 60).map { i =>
-      val text = (0 until next(12)).map(_ => pieces(next(pieces.length)))
-        .mkString(if (i % 3 == 0) "  " else " ")
-      (i.toLong, text)
-    }
-    val df = docs.toDF("doc_id", "text")
-    val colShingles = MinHash.hashedShingleArray(df, "doc_id", "text", 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-    docs.foreach { case (id, text) =>
-      val sh = MinHash.Scalar.hashedShingles(text, 2)
-      assert(sh.sorted.toSeq == colShingles(id).sorted.toSeq,
-        s"shingles diverge for doc $id: '$text'")
-    }
-  }
-
-  test("pure-Scala kernels are value-identical to the Column kernels on real docs") {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => r.getLong(0) -> r.getString(1))
-    assert(docs.length > 10)
-    val docsDf = {
-      val sp = spark; import sp.implicits._
-      docs.toSeq.toDF("doc_id", "text")
-    }
-    val colShingles = MinHash.hashedShingleArray(docsDf, "doc_id", "text", 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-    val colSig = MinHash.signaturesFromArray(
-      MinHash.hashedShingleArray(docsDf, "doc_id", "text", 2), "doc_id")
-      .collect().map(r => r.getLong(0) ->
-        (1 to MinHash.NumHashes).map(i => r.getLong(i)).toArray).toMap
-    val colBands = MinHash.bandRows(MinHash.signaturesFromArray(
-        MinHash.hashedShingleArray(docsDf, "doc_id", "text", 2), "doc_id"), "doc_id")
-      .collect().groupBy(_.getLong(0))
-      .map { case (id, rows) =>
-        id -> rows.map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq }
-    docs.foreach { case (id, text) =>
-      val sh = MinHash.Scalar.hashedShingles(text, 2)
-      assert(sh.sorted.toSeq == colShingles(id).sorted.toSeq, s"shingles diverge for $id")
-      val sig = MinHash.Scalar.signature(sh)
-      assert(sig.toSeq == colSig(id).toSeq, s"signature diverges for $id")
-      assert(MinHash.Scalar.bandKeys(sig).toSeq == colBands(id), s"bands diverge for $id")
-    }
   }
 }
 

@@ -13,30 +13,6 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.MediaRow(3L, "audio", "fake-wav".getBytes)).toDS()
   }
 
-  test("decode stub emits full metadata struct per row, deterministically") {
-    val out = Multimodal.decodeStub(media)
-    val actual = out.schema("metadata").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fields.map(f => (f.name, f.dataType)).toSeq
-    assert(actual == Multimodal.metadataType.fields.map(f => (f.name, f.dataType)).toSeq)
-    val m1 = out.filter(col("media_id") === 1).select("metadata.format").collect().head.getString(0)
-    assert(m1 == "fake/image")
-    // deterministic across runs
-    val again = Multimodal.decodeStub(media)
-      .filter(col("media_id") === 1).select("metadata.width").collect().head.getInt(0)
-    val first = out.filter(col("media_id") === 1).select("metadata.width").collect().head.getInt(0)
-    assert(first == again)
-  }
-
-  test("feature stub produces fixed-dim vectors consumable by cosine topK") {
-    val sp = spark
-    val feats = Multimodal.featureStub(media, dim = 8).toDF()
-    assert(feats.select(size(col("feature"))).collect().forall(_.getInt(0) == 8))
-    val knn = graft.similarity.Cosine.topK(
-      feats.filter(col("media_id") === 1), feats, "media_id", "feature", k = 2)
-    assert(knn.count() == 2)
-  }
-
   // ---- real-codec coverage: payloads below are genuine PNG/JPEG/BMP/WAV
   //      bytes generated in-test (ImageIO writers and a hand-built RIFF)
 
@@ -210,19 +186,16 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("frame sample plan explodes videos only, stepped by everyN") {
-    val decoded = Multimodal.decodeStub(media)
+    val sp = spark; import sp.implicits._
+    val rows = media.collect().toSeq :+ Multimodal.MediaRow(4L, "video",
+      Avi.encodeMjpeg((0 until 25).map(i => frameOf(16, 16, i)), fps = 5))
+    val decoded = Multimodal.decode(rows.toDS())
     val frames = Multimodal.frameSamplePlan(decoded, everyN = 10)
     val kinds = frames.join(decoded.select("media_id", "kind"), "media_id")
       .select("kind").distinct().collect().map(_.getString(0))
     assert(kinds.toSeq == Seq("video"))
-    assert(frames.count() > 0)
-  }
-
-  test("size-aware repartition keeps all rows") {
-    val df = Multimodal.decodeStub(media)
-    val rep = Multimodal.repartitionBySize(df, 2)
-    assert(rep.count() == 3)
-    assert(rep.rdd.getNumPartitions == 2)
+    assert(frames.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq ==
+      Seq((4L, 0), (4L, 10), (4L, 20)))
   }
 
   test("perceptual fingerprint: resize-invariant, color-separating, drops undecodables") {

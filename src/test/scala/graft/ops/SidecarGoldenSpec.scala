@@ -61,10 +61,7 @@ class SidecarGoldenSpec extends SparkSpec {
     assert(sidecar(dsir, "dsir_config") == "4096,182760643,783989734,293308810")
   }
 
-  test("vector sidecars: SRP, IVF, SQ8, BQ, prefix and rotated prefix") {
-    val srp = graft.TestDir("graft_golden_srp")
-    Cosine.writeSrpIndex(vectors, "vec_id", "embedding", 4, 16, 2, srp)
-    assert(sidecar(srp, "config") == "4,16,2")
+  test("vector sidecars: IVF, SQ8, BQ, prefix and rotated prefix") {
     val ivf = graft.TestDir("graft_golden_ivf")
     Cosine.writeIvfIndex(vectors.select(col("vec_id"), col("embedding")),
       cells, centroids, "vec_id", "embedding", "cell", ivf)

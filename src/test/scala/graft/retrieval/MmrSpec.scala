@@ -39,60 +39,4 @@ class MmrSpec extends SparkSpec {
     assert(out.map(_.getLong(2)).toSet == Set(101L, 102L, 103L))
     assert(out.map(_.getInt(1)).sorted.toSeq == Seq(1, 2, 3))
   }
-
-  test("single-task kernel == dataframe loop on real embeddings (r6's shape)") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    // r6's candidate construction: 5 queries, each against 30 corpus
-    // vectors, dense qsim in micro units + the raw vector
-    val q = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"),
-        graft.similarity.Cosine.toDouble(col("embedding")).as("qv"))
-    val c = emb.filter(col("vec_id") >= 5 && col("vec_id") < 35)
-      .select(col("vec_id").as("doc_id"),
-        graft.similarity.Cosine.toDouble(col("embedding")).as("v"))
-    val candReal = c.crossJoin(q)
-      .select(col("query_id"), col("doc_id"), col("v"),
-        round(graft.similarity.Cosine.cosine(col("qv"), col("v"),
-          graft.similarity.Cosine.normSq(col("qv")),
-          graft.similarity.Cosine.normSq(col("v"))) * 1000000, 0)
-          .cast("long").as("qsim_micro"))
-      .persist()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-    for (lam <- Seq(0, 7, 10); k <- Seq(1, 4)) {
-      val loop = rows(Mmr.rerank(candReal, k = k, lambdaTenths = lam))
-      val local = rows(Mmr.rerankLocal(candReal, k = k, lambdaTenths = lam))
-      assert(local == loop, s"kernel diverged at lambda=$lam k=$k:\n" +
-        s"${local.toSeq.sorted.take(8)}\nvs\n${loop.toSeq.sorted.take(8)}")
-      assert(loop.size == 5 * k)
-    }
-    candReal.unpersist()
-  }
-
-  test("single-task kernel matches the fixture pins too") {
-    val got = Mmr.rerankLocal(cand, k = 3, lambdaTenths = 7)
-      .orderBy(col("mmr_rank")).collect()
-    assert(got.map(_.getLong(2)).toSeq == Seq(101L, 103L, 102L), got.toSeq)
-  }
-
-  test("kernel handles null qsim / zero-norm vectors like the dataframe loop") {
-    val sp = spark; import sp.implicits._
-    // a zero-norm candidate reaches MMR with NULL qsim (cosine's nullif
-    // semantics upstream); the loop sorts its null scores last — the
-    // kernel must agree, not crash its encoder on a non-nullable Long
-    val c = Seq(
-      (1L, 101L, Option(990000L), Seq(1.0, 0.01, 0.0)),
-      (1L, 102L, Option(980000L), Seq(1.0, 0.02, 0.0)),
-      (1L, 103L, Option.empty[Long], Seq(0.0, 0.0, 0.0)))
-      .toDF("query_id", "doc_id", "qsim_micro", "v")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-    val loop = rows(Mmr.rerank(c, k = 3, lambdaTenths = 7))
-    val local = rows(Mmr.rerankLocal(c, k = 3, lambdaTenths = 7))
-    assert(local == loop, s"$local vs $loop")
-    // the null-scored candidate ranks LAST in both forms
-    assert(loop.find(_._3 == 103L).get._2 == 3, loop.toString)
-  }
 }

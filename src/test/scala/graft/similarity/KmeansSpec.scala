@@ -65,23 +65,6 @@ class KmeansSpec extends SparkSpec {
     }
   }
 
-  test("lloydConverge stops at the fix point and reports the round count") {
-    val (df, rounds) = Cosine.lloydConverge(clustered, "vec_id", "embedding",
-      "label", maxIters = 20)
-    // 3 planted clusters with one bad seed each converge in far fewer
-    // than 20 rounds; the fix-point probe must cut the loop short
-    assert(rounds >= 2 && rounds < 20, s"unexpected round count $rounds")
-    val out = df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    (0 until 3).foreach { c =>
-      assert((0 until 8).map(m => out(c * 100L + m)).distinct.size == 1)
-    }
-    // converged assignments equal the deep fixed-iteration run
-    val fixed = Cosine.lloydIterations(clustered, "vec_id", "embedding",
-        "label", iters = rounds)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(out == fixed)
-  }
-
   test("an already-converged init is a fixed point") {
     val sp = spark; import sp.implicits._
     val clean = clustered.withColumn("label",

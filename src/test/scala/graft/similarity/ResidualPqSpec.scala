@@ -89,53 +89,6 @@ class ResidualPqSpec extends SparkSpec {
     assert(legacy == full, "8-field sidecar must serve identically")
   }
 
-  test("calibrateNProbe: chosen knob meets its target; all-cells probe == the quantization ceiling; unreachable target returns the widest honestly") {
-    val emb = graft.Tables.embeddings(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (cents, cells) = coarse(emb)
-    val nCells = cents.select(col("label")).distinct().count().toInt
-    val dir = graft.TestDir("graft_respq_c")
-    Cosine.writeResidualPqIndex(emb, cells, "vec_id", "embedding", "label",
-      cents, dir, iters = 2)
-    // ceiling first: probing every cell IS the full ADC scan, so the
-    // measured recall at nProbe = nCells must equal the recall of the
-    // unprobed all-codes scan over the same sample — the x27-family row
-    val sample = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(16)
-      .select(col("vec_id"), col("embedding"))
-    val exact = Cosine.topK(sample, emb, "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("neighbor_id"))
-    def recallOf(approx: org.apache.spark.sql.DataFrame): Double =
-      exact.join(approx.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"), "left_semi").count().toDouble /
-        exact.count()
-    val allCells = recallOf(Cosine.ivfAdcMultiprobeStored(spark, sample, dir,
-      "vec_id", "embedding", "label", k = 5, nProbe = nCells))
-    val (_, fullCurve) = Cosine.calibrateNProbe(spark, dir, emb,
-      "vec_id", "embedding", "label", targetRecall = 1.0,
-      candidates = Seq(nCells), sampleN = 16)
-    assert(fullCurve == Seq((nCells, allCells)),
-      s"all-cells calibration ${fullCurve} != measured ceiling $allCells")
-    // a reachable target stops at a knob that meets it; the curve only
-    // walked as far as needed
-    val modest = (allCells / 2).max(0.01)
-    val (np, curve) = Cosine.calibrateNProbe(spark, dir, emb,
-      "vec_id", "embedding", "label", targetRecall = modest,
-      candidates = Seq(1, 2, nCells), sampleN = 16)
-    assert(curve.toMap.apply(np) >= modest,
-      s"chosen nProbe=$np misses target $modest ($curve)")
-    assert(curve.map(_._1) == Seq(1, 2, nCells).takeWhile(_ <= np), curve.toString)
-    // an unreachable 1.0 target (the store is lossy) returns the widest
-    // candidate with the honest curve for the caller to judge
-    if (allCells < 1.0) {
-      val (pW, curveW) = Cosine.calibrateNProbe(spark, dir, emb,
-        "vec_id", "embedding", "label", targetRecall = 1.0,
-        candidates = Seq(1, nCells), sampleN = 16)
-      assert(pW == nCells, curveW.toString)
-      assert(curveW.forall(_._2 < 1.0), curveW.toString)
-    }
-    emb.unpersist()
-  }
-
   test("residual coding strictly reduces reconstruction error at equal bits") {
     val emb = graft.Tables.embeddings(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -71,8 +71,9 @@ class SemDedupSpec extends SparkSpec {
       df.collect().map(_.toSeq).toSet
     val viaCells = rows(Cosine.semDedup(
       relabeled, "vec_id", "embedding", "label", 0.4))
-    val viaSrp = rows(Cosine.semDedupSrp(
-      relabeled, "vec_id", "embedding", "label", 0.4, nPlanes = 4, dim = 64))
+    val viaSrp = rows(Cosine.semDedupFromPairs(
+      relabeled, "vec_id", "embedding", "label",
+      Cosine.srpPairs(relabeled, "vec_id", "embedding", 0.4, nPlanes = 4, dim = 64)))
     assert(viaCells.nonEmpty && viaCells == viaSrp)
     // non-vacuity: real multi-member clusters participated (a corpus with
     // only singletons would make the parity trivially true)

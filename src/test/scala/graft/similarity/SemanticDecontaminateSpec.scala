@@ -93,30 +93,6 @@ class SemanticDecontaminateSpec extends SparkSpec {
     assert(recall >= 0.5, s"recall $recall (${flagged.size}/${truth.size})")
   }
 
-  test("stored eval index reproduces the inline form row-for-row on real embeddings") {
-    import org.apache.spark.sql.functions._
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val bucket = graft.text.TextAnalysis.splitBucket(col("vec_id"))
-    val evalSplit = emb.filter(bucket >= 90)
-    val train = emb.filter(bucket < 90)
-    val dir = graft.TestDir("graft_srpidx")
-    Cosine.writeSrpIndex(evalSplit, "vec_id", "embedding",
-      nPlanes = 3, dim = 64, nTables = 2, dir = dir)
-    assert(Cosine.srpIndexConfig(dir) == ((3, 64, 2)))
-    val stored = Cosine.semanticDecontaminateStored(spark, train, dir,
-        "vec_id", "embedding", threshold = 0.34)
-      .collect().map(r => (r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getBoolean(2))).toSet
-    val inline = Cosine.semanticDecontaminate(train, evalSplit,
-        "vec_id", "embedding", threshold = 0.34, nPlanes = 3, dim = 64,
-        nTables = 2)
-      .collect().map(r => (r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getBoolean(2))).toSet
-    assert(stored == inline)
-    assert(stored.nonEmpty && stored.exists(!_._3) && stored.exists(_._3),
-      "fixture vacuous: need both keep outcomes") // both outcomes live
-  }
-
   test("non-null max equals the exact cosine of the colliding pair") {
     val sp = spark; import sp.implicits._
     val dim = 4

@@ -35,11 +35,14 @@ class Sq8PrefixSpec extends SparkSpec {
 
   test("sq8 codes: constant dims code 0; range extremes land on 0/255") {
     val sp = spark; import sp.implicits._
+    // packed codes hold whole 8-byte words: five constant dims pad to 8
     val df = Seq(
-      (1L, Array(0.5f, 1.0f, -2.0f)),
-      (2L, Array(0.5f, 2.0f, 4.0f)),
-      (3L, Array(0.5f, 3.0f, 1.0f))).toDF("vec_id", "embedding")
-    val codes = Cosine.sq8Codes(df, "vec_id", "embedding")
+      (1L, Array(0.5f, 1.0f, -2.0f) ++ Array.fill(5)(0.0f)),
+      (2L, Array(0.5f, 2.0f, 4.0f) ++ Array.fill(5)(0.0f)),
+      (3L, Array(0.5f, 3.0f, 1.0f) ++ Array.fill(5)(0.0f))).toDF("vec_id", "embedding")
+    val codes = Cosine.sq8PackedCodes(df, Cosine.sq8Stats(df, "embedding"),
+        "vec_id", "embedding", dim = 8)
+      .select(col("vec_id"), Cosine.sq8Unpack(col("pcode"), 8))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     // dim 1 is constant (span 0): codes 0 everywhere, reconstructs vmin
     assert(codes.values.forall(_.head == 0), codes.toString)
@@ -99,7 +102,7 @@ class Sq8PrefixSpec extends SparkSpec {
     val stored = Cosine.prefixTopKStored(spark, q, tmp, "vec_id", "embedding", k = 5)
     assert(stored.collect().toSet == inline.collect().toSet)
     // the config sidecar pins (p, buckets)
-    assert(graft.ops.ConfigFile.readInts(tmp, "prefix_config", 2) ==
+    assert(graft.ops.ConfigFile.readIntsRange(tmp, "prefix_config", 2, 2) ==
       Seq(16, Cosine.PrefixBuckets))
   }
 

@@ -60,44 +60,6 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("byte-level: arbitrary unicode round-trips losslessly under any merges") {
-    val next = seededInts(41L)
-    // byte-level merges learned over a corpus that includes multi-byte
-    // unicode — merges may land inside UTF-8 sequences, round trip must hold
-    val uHist = Seq("löw" -> 5L, "lößer" -> 2L, "日本語テスト" -> 4L,
-      "naïve" -> 3L, "🙂🙃" -> 2L)
-    val merges = Bpe.trainFromHistogram(uHist, 12, Bpe.byteSyms)
-    val ranks = merges.zipWithIndex.toMap
-    // planted fixtures plus random unicode (BMP letters, CJK, emoji via
-    // surrogate PAIRS — no unpaired surrogates, which UTF-8 can't carry)
-    val pool = "aöß日本語テéñ中"
-    val words = uHist.map(_._1) ++ (1 to 300).map { _ =>
-      val base = (0 until (1 + next(8))).map(_ => pool(next(pool.length))).mkString
-      if (next(3) == 0) base + new String(Character.toChars(0x1F600 + next(60)))
-      else base
-    }
-    words.foreach { w =>
-      val toks = Bpe.encodeWordBytes(w, ranks)
-      assert(toks.nonEmpty || w.isEmpty)
-      assert(Bpe.decodeByteTokens(toks) == w, s"round trip failed on '$w'")
-    }
-    // and with an EMPTY merge table every word still tokenizes (no unknowns)
-    words.foreach { w =>
-      assert(Bpe.decodeByteTokens(Bpe.encodeWordBytes(w, Map.empty)) == w)
-    }
-  }
-
-  test("byte-level alphabet is a 256-symbol bijection of printable chars") {
-    val alpha = Bpe.byteToChar
-    assert(alpha.length == 256)
-    assert(alpha.distinct.length == 256, "two bytes share a symbol")
-    // every symbol is printable (that's the point of the GPT-2 map: no
-    // control chars or whitespace survive into token strings)
-    assert(alpha.forall(c => !Character.isWhitespace(c) && !Character.isISOControl(c)))
-    // visible bytes map to themselves
-    assert(('!' to '~').forall(c => alpha(c.toInt) == c))
-  }
-
   test("distributed training equals local training on the same histogram") {
     val sp = spark; import sp.implicits._
     val docs = (hist.flatMap { case (w, c) => Seq.fill(c.toInt)(w) })
