@@ -63,6 +63,20 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("salted count equals plain count on random skewed data") {
+    val sp = spark; import sp.implicits._
+    forAll(Gen.listOfN(60, Gen.oneOf("hot", "hot", "hot", "x", "y")), n = 5) { keys =>
+      if (keys.nonEmpty) {
+        val df = keys.map(Tuple1(_)).toDF("k")
+        val plain = df.groupBy("k").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val salted = SkewJoin.saltedCount(df, "k", salts = 4).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(plain == salted)
+      }
+    }
+  }
+
   test("bottom-k sample equals the union of per-split samples, any split") {
     // the mergeability law shard-merge relies on:
     // minK(A ∪ B) == minK(minK(A) ∪ minK(B))

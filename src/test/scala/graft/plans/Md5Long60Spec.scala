@@ -49,7 +49,7 @@ class Md5Long60Spec extends SparkSpec {
     }
   }
 
-  test("scalar kernel == Column kernel") {
+  test("scalar kernel == Column kernel (the streaming parity contract)") {
     for (s <- Seq("", "two words", "tab\tsep", "的是")) {
       val viaScalar = Md5Long60Expr.hash(
         org.apache.spark.unsafe.types.UTF8String.fromString(s), 15)
