@@ -344,7 +344,6 @@ object Pipeline {
     * upsert (K6, `cli.py:242-319`). */
   private def pullStage(spark: SparkSession, url: String,
                         stageDir: String => String): Unit = {
-    import spark.implicits._
     val dir = stageDir("pull")
     val counts = graft.ingest.Pull.pull(spark, new graft.ingest.DemoVendor,
       graft.ingest.Pull.parquetSink(dir))

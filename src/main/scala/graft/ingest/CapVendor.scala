@@ -201,7 +201,6 @@ class CapVendor extends VendorInventory {
   }
 
   def inventoryStoragePrices(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     withVendor(locationRows(spark).select(col("region_id"))
       .withColumn("storage_id", lit("volume"))
       .withColumn("unit", lit("gb_month"))
@@ -223,7 +222,6 @@ class CapVendor extends VendorInventory {
   }
 
   def inventoryIpv4Prices(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     withVendor(locationRows(spark).select(col("region_id"))
       .withColumn("price", lit(0.0008))
       .withColumn("unit", lit("hour")).withColumn("currency", lit("EUR")))

@@ -249,7 +249,6 @@ class GridVendor extends VendorInventory {
   }
 
   def inventoryIpv4Prices(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val regions = inventoryRegions(spark).select(col("region_id"))
     withVendor(regions.withColumn("price", lit(0.004))
       .withColumn("unit", lit("hour")).withColumn("currency", lit("USD")))

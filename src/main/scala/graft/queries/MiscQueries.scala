@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ingest.SeedTables
-import graft.schema.{Schemas, Validate}
+import graft.schema.Validate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

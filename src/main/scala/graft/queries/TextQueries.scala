@@ -913,33 +913,10 @@ object TextQueries extends QueryPack {
     //      multiplicity ≥ 1 (c6). What a pipeline materializes before
     //      tokenization: kept docs with their sampling weights.
     "c7_curation_v2" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // ONE tokenize pass (the t28 lesson): id, source, token array —
-      // persisted, feeding the LM, mixture, and dup gates, so the corpus
-      // is scanned and split once instead of once per sub-chain
-      val toksed = docs.select(col("doc_id"), col("source"),
-          TextAnalysis.tokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val lp = TextAnalysis.unigramLogProbFromTokens(toksed, "doc_id", "toks")
-      val mix = TextAnalysis.mixtureWeightsFromCounts(
-        toksed.select(col("doc_id"), col("source"),
-          size(col("toks")).as("n_tokens")), "doc_id", "source")
-      // exact in-plan percentile over the rounded scores: both engines
-      // interpolate between the same order statistics, and a keep set
-      // {xent <= thr} cannot straddle consecutive order stats, so ulp
-      // drift in the interpolation cannot flip a row
-      val thr = lp.agg(expr("percentile(xent, 0.9)").as("thr"))
-      val bucket = TextAnalysis.splitBucket(col("doc_id"))
-      val sh2 = MinHash.hashedShingleArrayFromTokens(toksed, "doc_id", "toks", 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val shOld = sh2.filter(bucket < 80)
-      val dupOfOld = MinHash.nearDuplicatesArraysAgainstBands(sh2.filter(bucket >= 80),
-          MinHash.bandRows(MinHash.signaturesFromArray(shOld, "doc_id"), "doc_id"),
-          shOld, "doc_id", threshold = 0.7)
-        .select(col("id_new").as("doc_id")).distinct()
-      mix.join(lp.select(col("doc_id"), col("xent")), "doc_id")
-        .join(dupOfOld, Seq("doc_id"), "left_anti")
-        .crossJoin(broadcast(thr))
+      val g = curationGates(Tables.documents(s, dir))
+      g.scored
+        .join(g.dupOfOld, Seq("doc_id"), "left_anti")
+        .crossJoin(broadcast(g.thr))
         .filter(col("xent") <= col("thr") && col("multiplicity") >= 1)
         .select(col("doc_id"), col("source"), col("n_tokens"), col("xent"),
           col("multiplicity"))
@@ -953,35 +930,17 @@ object TextQueries extends QueryPack {
     //      thresholds — kept == c7 membership ∧ novelty (spec-free by
     //      construction: both derive from the shared CTE chain).
     "c11_curation_provenance" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // ONE tokenize pass (the t28 lesson, r8 wrong #1): the corpus's
-      // heaviest query scanned/split documents once per sub-chain — the
-      // persisted token frame now feeds all FOUR gates (LM, mixture,
-      // 2-gram dup, 8-gram novelty) with hashes unchanged
-      val toksed = docs.select(col("doc_id"), col("source"),
-          TextAnalysis.tokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val lp = TextAnalysis.unigramLogProbFromTokens(toksed, "doc_id", "toks")
-      val mix = TextAnalysis.mixtureWeightsFromCounts(
-        toksed.select(col("doc_id"), col("source"),
-          size(col("toks")).as("n_tokens")), "doc_id", "source")
-      val thr = lp.agg(expr("percentile(xent, 0.9)").as("thr"))
+      // the token frame feeds the 8-gram novelty gate too: the corpus is
+      // scanned and split once for all four gates (the t28 lesson)
+      val g = curationGates(Tables.documents(s, dir))
       val bucket = TextAnalysis.splitBucket(col("doc_id"))
-      val sh2 = MinHash.hashedShingleArrayFromTokens(toksed, "doc_id", "toks", 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val shOld = sh2.filter(bucket < 80)
-      val dupOfOld = MinHash.nearDuplicatesArraysAgainstBands(sh2.filter(bucket >= 80),
-          MinHash.bandRows(MinHash.signaturesFromArray(shOld, "doc_id"), "doc_id"),
-          shOld, "doc_id", threshold = 0.7)
-        .select(col("id_new").as("doc_id")).distinct()
-        .withColumn("__dup", lit(1))
-      val novelty = graft.text.Decontaminate.noveltyScoresFromTokens(toksed,
+      val novelty = graft.text.Decontaminate.noveltyScoresFromTokens(g.toksed,
           "doc_id", "toks", 8, trainPred = bucket < 80, testPred = bucket >= 90)
         .select(col("doc_id"), col("overlap_ppm"))
-      mix.join(lp.select(col("doc_id"), col("xent")), "doc_id")
-        .join(dupOfOld, Seq("doc_id"), "left")
+      g.scored
+        .join(g.dupOfOld.withColumn("__dup", lit(1)), Seq("doc_id"), "left")
         .join(novelty, Seq("doc_id"), "left")
-        .crossJoin(broadcast(thr))
+        .crossJoin(broadcast(g.thr))
         .select(col("doc_id"),
           col("__dup").isNotNull.as("is_dup"),
           (col("xent") > col("thr")).as("hi_xent"),
@@ -1404,6 +1363,42 @@ object TextQueries extends QueryPack {
          |        % 1000000 < ROUND((f.factor - floor(f.factor)) * 1000000, 0)
          |      THEN 1 ELSE 0 END) AS BIGINT) AS multiplicity
          |  FROM perdoc p JOIN f USING (source))""".stripMargin
+
+  /** The gate frames c7 and c11 share, the Spark twin of
+    * [[curationCtes]]. `toksed` is ONE persisted tokenize pass (id,
+    * source, token array) that the LM, mixture and dup gates all read, so
+    * the corpus is scanned and split once (the t28 lesson). `scored` is
+    * (doc_id, source, n_tokens, multiplicity, xent); `thr` the one-row
+    * 90th-percentile xent, exact in-plan over the rounded scores (both
+    * engines interpolate between the same order statistics, and a keep
+    * set {xent <= thr} cannot straddle consecutive order stats, so ulp
+    * drift cannot flip a row); `dupOfOld` the distinct doc_ids of the
+    * split-bucket ≥ 80 docs that near-duplicate a bucket < 80 doc. The
+    * token frame and the persisted 2-gram arrays are the query's own. */
+  private final case class CurationGates(toksed: org.apache.spark.sql.DataFrame,
+                                         scored: org.apache.spark.sql.DataFrame,
+                                         thr: org.apache.spark.sql.DataFrame,
+                                         dupOfOld: org.apache.spark.sql.DataFrame)
+
+  private def curationGates(docs: org.apache.spark.sql.DataFrame): CurationGates = {
+    val toksed = docs.select(col("doc_id"), col("source"),
+        TextAnalysis.tokens(col("text")).as("toks"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lp = TextAnalysis.unigramLogProbFromTokens(toksed, "doc_id", "toks")
+    val mix = TextAnalysis.mixtureWeightsFromCounts(
+      toksed.select(col("doc_id"), col("source"),
+        size(col("toks")).as("n_tokens")), "doc_id", "source")
+    val bucket = TextAnalysis.splitBucket(col("doc_id"))
+    val sh2 = MinHash.hashedShingleArrayFromTokens(toksed, "doc_id", "toks", 2)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shOld = sh2.filter(bucket < 80)
+    val dupOfOld = MinHash.nearDuplicatesArraysAgainstBands(sh2.filter(bucket >= 80),
+        MinHash.bandRows(MinHash.signaturesFromArray(shOld, "doc_id"), "doc_id"),
+        shOld, "doc_id", threshold = 0.7)
+      .select(col("id_new").as("doc_id")).distinct()
+    CurationGates(toksed, mix.join(lp.select(col("doc_id"), col("xent")), "doc_id"),
+      lp.agg(expr("percentile(xent, 0.9)").as("thr")), dupOfOld)
+  }
 
   /** The corpus's exact Jaccard-0.8 pair graph, stored once per
     * (session, dir) by [[GateArtifacts.pairs08Dir]]. */

@@ -9,8 +9,18 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** Embedding similarity search: brute-force cosine top-k as the baseline,
-  * with a partition-pruned (IVF-style) variant as the scale path.
+/** Embedding similarity search. The tiers: brute-force cosine top-k,
+  * IVF cell probes, and the two-stage compressed tiers SQ8 (a byte per
+  * dim), BQ (a bit per dim), Matryoshka prefixes (raw or rotated) and
+  * PQ/IVFADC codes, each in-plan and stored. Every tier is one
+  * filter-and-refine search that differs only in its stage-1 score, and
+  * each shared step has one private body: [[Cosine.rankedCut]] (every
+  * top-n; searches order by score, then id ascending, the tie-break every
+  * DuckDB oracle replays), [[Cosine.nearestCells]] (IVF assignment and
+  * probes), [[Cosine.exactRerank]], [[Cosine.storedRerank]] (shortlist
+  * collected once, its raw vectors read pruned, exact rerank),
+  * [[Cosine.adcCandidates]] and [[Cosine.adcScored]] (PQ), and
+  * [[Cosine.dimMoments]].
   *
   * Dot products are computed with `zip_with` + `aggregate` — a sequential
   * left fold in double precision, fully codegen-compatible, no UDF. Vectors
@@ -50,19 +60,39 @@ object Cosine {
   def cosine(a: Column, b: Column, normSqA: Column, normSqB: Column): Column =
     dot(a, b) / nullif(sqrt(normSqA) * sqrt(normSqB), lit(0.0))
 
+  /** The ONE ranked cut: rows numbered (`rank`, from 1) within each
+    * `part` group in `order`, those past `n` dropped. `n = Int.MaxValue`
+    * numbers every row and drops none. */
+  private def rankedCut(df: DataFrame, part: Column, n: Int)(order: Column*): DataFrame = {
+    val ranked = df.withColumn("rank",
+      row_number().over(Window.partitionBy(part).orderBy(order: _*)))
+    if (n == Int.MaxValue) ranked else ranked.filter(col("rank") <= n)
+  }
+
+  /** The per-query search cut: `score` first, then the neighbor id
+    * ascending. */
+  private def perQueryCut(df: DataFrame, score: Column, n: Int): DataFrame =
+    rankedCut(df, col("query_id"), n)(score, col("neighbor_id").asc)
+
+  /** Stage 1 of every two-stage tier: the `n` best rows per query by
+    * `score` (descending, or ascending for a distance) as (query_id,
+    * neighbor_id, score, qv), the shortlist [[exactRerank]] takes. */
+  private def shortlist(scored: DataFrame, score: String, n: Int,
+                        ascending: Boolean = false): DataFrame =
+    perQueryCut(scored, if (ascending) col(score).asc else col(score).desc, n)
+      .select(col("query_id"), col("neighbor_id"), col(score), col("qv"))
+
   /** Brute-force cosine top-k: for each row of `queries`, the k nearest
     * rows of `corpus` (self-matches excluded). Output: query_id, rank,
     * neighbor_id, sim. */
   def topK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
            k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", normSq(col("qv")))
+    val q = queryVectors(queries, idCol, vecCol).withColumn("qn", normSq(col("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
       .withColumn("cn", normSq(col("cv")))
     val sims = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    perQueryCut(sims, col("sim").desc, k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
   }
 
@@ -105,6 +135,14 @@ object Cosine {
       }
     }
 
+  /** The SRP sign-bucket code of `v`: bit i set iff v · planes(i) > 0 —
+    * the bucket of [[srpPairs]] and [[srpBands]] and the subspace code of
+    * [[pqCodes]]. */
+  private def signBits(v: Column, planes: Seq[Seq[Double]]): Column =
+    planes.zipWithIndex.map { case (h, i) =>
+      when(dot(v, array(h.map(lit): _*)) > 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
   /** Plane count for a TARGET bucket occupancy: ceil(log2(n/target)).
     * A FIXED plane count is the occupancy-control failure mode SCALE.md
     * measured (6.6× time at 10× data): within-bucket pairs grow
@@ -133,11 +171,8 @@ object Cosine {
                threshold: Double, nPlanes: Int, dim: Int): DataFrame = {
     require(dim > 0, s"dim must be the positive embedding width, got $dim")
     val v0 = corpus.select(col(idCol), toDouble(col(vecCol)).as("v"))
-    val planes = hyperplanes(nPlanes, dim)
-    val bucket = planes.zipWithIndex.map { case (h, i) =>
-      when(dot(col("v"), array(h.map(lit): _*)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val v = v0.withColumn("bucket", bucket).withColumn("n", normSq(col("v")))
+    val v = v0.withColumn("bucket", signBits(col("v"), hyperplanes(nPlanes, dim)))
+      .withColumn("n", normSq(col("v")))
     val a = v.select(col("bucket"), col(idCol).as("id_a"), col("v").as("va"), col("n").as("na"))
     val b = v.select(col("bucket"), col(idCol).as("id_b"), col("v").as("vb"), col("n").as("nb"))
     a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
@@ -189,11 +224,8 @@ object Cosine {
     require(dim > 0, s"dim must be the positive embedding width, got $dim")
     require(nPlanes >= 1 && nPlanes <= 62 && nTables >= 1)
     val v0 = df.select(col(idCol), toDouble(col(vecCol)).as("v"))
-    val tableBuckets = array((0 until nTables).map { t =>
-      hyperplanesSeeded(t, nPlanes, dim).zipWithIndex.map { case (h, i) =>
-        when(dot(col("v"), array(h.map(lit): _*)) > 0, lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }: _*)
+    val tableBuckets = array((0 until nTables).map(t =>
+      signBits(col("v"), hyperplanesSeeded(t, nPlanes, dim))): _*)
     v0.select(col(idCol), posexplode(tableBuckets).as(Seq("t", "b")))
   }
 
@@ -306,14 +338,8 @@ object Cosine {
     val q = queries.select(col(cellCol), col(idCol).as("query_id"),
         toDouble(col(vecCol)).as("qv"))
       .withColumn("qn", normSq(col("qv")))
-    val c = corpus.select(col(cellCol), col(idCol).as("neighbor_id"),
-        toDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", normSq(col("cv")))
-    val sims = q.join(c, Seq(cellCol)).filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
+    ivfScore(q, corpus.select(col(cellCol), col(idCol).as("neighbor_id"),
+      toDouble(col(vecCol)).as("nv")), cellCol, k)
   }
 
   /** Multiprobe IVF top-k (the standard IVF recall knob, Jégou et al.
@@ -368,17 +394,8 @@ object Cosine {
                         idCol: String, vecCol: String, cellCol: String,
                         nProbe: Int): DataFrame = {
     require(nProbe >= 1, "need at least one probed cell")
-    val cvec = centroidVectors(centroids, cellCol, "cv")
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", normSq(col("qv")))
-    val d2 = aggregate(
-      zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    q.crossJoin(broadcast(cvec))
-      .withColumn("d2", d2)
-      .withColumn("prn", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("d2").asc, col(cellCol).asc)))
-      .filter(col("prn") <= nProbe)
+    val q = queryVectors(queries, idCol, vecCol).withColumn("qn", normSq(col("qv")))
+    nearestCells(q, col("query_id"), "qv", centroids, cellCol, nProbe)
       .select(col(cellCol), col("query_id"), col("qv"), col("qn"))
   }
 
@@ -391,27 +408,11 @@ object Cosine {
     val sims = probes.join(cands.withColumn("nn", normSq(col("nv"))), Seq(cellCol))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("qv"), col("nv"), col("qn"), col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    perQueryCut(sims, col("sim").desc, k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("sim"), 6).as("sim"))
   }
 
-  /** Persist the IVF serving index: centroids plain (k·dim rows), the
-    * posting LISTS — vectors joined to their cell assignment — written
-    * PARTITIONED by `pcell` (the cell value as a string directory key;
-    * the original cell column rides along as data so reads keep its
-    * exact type). This is the textbook IVF list layout expressed as a
-    * parquet partition tree: a probe reads ONLY its probed cells'
-    * directories ([[ivfSearchStored]]'s literal filters), and directory
-    * count = trained cell count — bounded by the quantizer's k, never by
-    * the corpus. (For k beyond ~10⁴ cells, bucket the key —
-    * `pmod(hash(cell), m)` — the RepIndex layout; at the trained sizes
-    * this engine targets, one directory per cell IS the index.) Edge: an
-    * EMPTY corpus writes the lists unpartitioned (partitionBy writes no
-    * directories for zero rows — the RepIndex.write edge) and
-    * [[ivfSearchStored]] degrades to the unpruned scan. */
   /** Content fingerprint of the WRITTEN centroid parquet over (cell,
     * dim, micro-centroid) — derived from DISK, never from the (possibly
     * expensive or last-ulp-nondeterministic) training lineage, so it
@@ -428,6 +429,20 @@ object Cosine {
   private def ivfChecks(dir: String, cellCol: String): Seq[Artifact.Check] =
     Seq(Artifact.counted("lists", s"$dir/lists"), centroidCheck(dir, cellCol))
 
+  /** Persist the IVF serving index: centroids plain (k·dim rows), the
+    * posting LISTS — vectors joined to their cell assignment — written
+    * PARTITIONED by `pcell` (the cell value as a string directory key;
+    * the original cell column rides along as data so reads keep its
+    * exact type). This is the textbook IVF list layout expressed as a
+    * parquet partition tree: a probe reads ONLY its probed cells'
+    * directories ([[ivfSearchStored]]'s literal filters), and directory
+    * count = trained cell count — bounded by the quantizer's k, never by
+    * the corpus. (For k beyond ~10⁴ cells, bucket the key —
+    * `pmod(hash(cell), m)` — the RepIndex layout; at the trained sizes
+    * this engine targets, one directory per cell IS the index.) Edge: an
+    * EMPTY corpus writes the lists unpartitioned (partitionBy writes no
+    * directories for zero rows — the RepIndex.write edge) and
+    * [[ivfSearchStored]] degrades to the unpruned scan. */
   def writeIvfIndex(vectors: DataFrame, cells: DataFrame,
                     centroids: DataFrame, idCol: String, vecCol: String,
                     cellCol: String, dir: String): Unit = {
@@ -582,20 +597,25 @@ object Cosine {
     * ([[centroidVectors]]), so assignment is a map-side pass over the
     * corpus. */
   def assignToCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                        centroids: DataFrame, cellCol: String): DataFrame = {
-    val cvec = centroidVectors(centroids, cellCol, "cv")
-    val d2 = aggregate(
-      zip_with(col("v"), col("cv"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    corpus.select(col(idCol), toDouble(col(vecCol)).as("v"))
-      .crossJoin(broadcast(cvec))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(Window.partitionBy(col(idCol))
-        .orderBy(col("d2").asc, col(cellCol).asc)))
-      .filter(col("rn") === 1)
+                        centroids: DataFrame, cellCol: String): DataFrame =
+    nearestCells(corpus.select(col(idCol), toDouble(col(vecCol)).as("v")),
+        col(idCol), "v", centroids, cellCol, 1)
       .select(col(idCol), col(cellCol).as("assigned_cell"),
         round(col("d2"), 6).as("dist_sq"))
-  }
+
+  /** The nearest-centroid ranking [[assignToCentroids]] (n = 1 per
+    * vector id) and [[ivfProbes]] (n = nProbe per query) share: `rows`
+    * crossed with the broadcast [[centroidVectors]], squared euclidean
+    * distance `d2` to `vCol`, the `n` nearest cells kept per `key`, ties
+    * to the smaller cell. */
+  private def nearestCells(rows: DataFrame, key: Column, vCol: String,
+                           centroids: DataFrame, cellCol: String,
+                           n: Int): DataFrame =
+    rankedCut(rows.crossJoin(broadcast(centroidVectors(centroids, cellCol, "cv")))
+        .withColumn("d2", aggregate(
+          zip_with(col(vCol), col("cv"), (a, b) => (a - b) * (a - b)),
+          lit(0.0), (acc, x) => acc + x)),
+      key, n)(col("d2").asc, col(cellCol).asc)
 
   /** CLUSTER-BALANCED curation sample — the diversity-preserving
     * subsample step of embedding-space curation pipelines (the selection
@@ -619,13 +639,9 @@ object Cosine {
     val assigned = assignToCentroids(corpus, idCol, vecCol, centroids, cellCol)
     val draw = pmod(graft.plans.Md5Long60Expr.md5Long60(concat(col(idCol).cast("string"),
       lit(":graft-bal-v1"))), lit(1000000L))
-    val part = Window.partitionBy(col("assigned_cell"))
-    assigned
-      .withColumn("draw", draw)
-      .withColumn("rank", row_number().over(
-        part.orderBy(col("draw").asc, col(idCol).asc)))
-      .withColumn("cluster_n", count(lit(1)).over(part))
-      .filter(col("rank") <= m)
+    rankedCut(assigned.withColumn("draw", draw).withColumn("cluster_n",
+        count(lit(1)).over(Window.partitionBy(col("assigned_cell")))),
+      col("assigned_cell"), m)(col("draw").asc, col(idCol).asc)
       .select(col(idCol), col("assigned_cell"), col("rank"), col("cluster_n"))
   }
 
@@ -679,28 +695,33 @@ object Cosine {
     * avg/stddev_pop (bounded state, last-ulp topology drift — the 100 TB
     * configuration), mirroring the [[cellCentroids]] split. */
   def dimStats(corpus: DataFrame, vecCol: String,
-               sorted: Boolean = false): DataFrame = {
-    val exploded = corpus.select(posexplode(toDouble(col(vecCol))).as(Seq("pos", "x")))
-    val base =
-      if (!sorted)
-        exploded.groupBy(col("pos"))
-          .agg(count(lit(1)).as("n"), avg(col("x")).as("mean"),
-            stddev_pop(col("x")).as("sd"), min(col("x")).as("vmin"),
-            max(col("x")).as("vmax"))
-      else
-        exploded.groupBy(col("pos"))
-          .agg(count(lit(1)).as("n"), collect_list(col("x")).as("xs"),
-            min(col("x")).as("vmin"), max(col("x")).as("vmax"))
-          .withColumn("s1", aggregate(sort_array(col("xs")), lit(0.0), _ + _))
-          .withColumn("s2", aggregate(sort_array(col("xs")), lit(0.0),
-            (a, x) => a + x * x))
-          .withColumn("mean", col("s1") / col("n"))
-          .withColumn("sd",
-            sqrt(greatest(col("s2") / col("n") - (col("s1") / col("n")) * (col("s1") / col("n")),
-              lit(0.0))))
-    base.select((col("pos") + 1).cast("long").as("dim"), col("n"),
-      round(col("mean"), 6).as("mean"), round(col("sd"), 6).as("stddev"),
-      round(col("vmin"), 6).as("vmin"), round(col("vmax"), 6).as("vmax"))
+               sorted: Boolean = false): DataFrame =
+    dimMoments(corpus, vecCol, sorted)
+      .select((col("pos") + 1).cast("long").as("dim"), col("n"),
+        round(col("mean"), 6).as("mean"), round(col("sd"), 6).as("stddev"),
+        round(col("vmin"), 6).as("vmin"), round(col("vmax"), 6).as("vmax"))
+
+  /** The per-dimension moments [[dimStats]] and [[whiten]] share:
+    * (pos, n, mean, sd, vmin, vmax) per 0-based position, sd the
+    * population stddev. Unsorted is avg/stddev_pop (bounded state);
+    * `sorted` folds Σx and Σx² over each dim's SORTED values, so an
+    * external engine doing the same fold reproduces them bit-exactly.
+    * Column pruning drops whatever moment a caller does not read. */
+  private def dimMoments(corpus: DataFrame, vecCol: String,
+                         sorted: Boolean): DataFrame = {
+    val byDim = corpus.select(posexplode(toDouble(col(vecCol))).as(Seq("pos", "x")))
+      .groupBy(col("pos"))
+    val (n, vmin, vmax) = (count(lit(1)).as("n"), min(col("x")).as("vmin"),
+      max(col("x")).as("vmax"))
+    def sortedMean(f: Column => Column): Column =
+      aggregate(sort_array(col("xs")), lit(0.0), (a, x) => a + f(x)) / col("n")
+    if (!sorted)
+      byDim.agg(n, avg(col("x")).as("mean"), stddev_pop(col("x")).as("sd"), vmin, vmax)
+    else
+      byDim.agg(n, collect_list(col("x")).as("xs"), vmin, vmax)
+        .withColumn("mean", sortedMean(x => x))
+        .withColumn("sd", sqrt(greatest(
+          sortedMean(x => x * x) - col("mean") * col("mean"), lit(0.0))))
   }
 
   /** Per-dimension standardization (whitening): z_d = (x_d − μ_d)/σ_d —
@@ -718,22 +739,7 @@ object Cosine {
     * the library default is the bounded-state avg/stddev_pop. */
   def whiten(corpus: DataFrame, idCol: String, vecCol: String,
              sorted: Boolean = false): DataFrame = {
-    val exploded = corpus.select(posexplode(toDouble(col(vecCol))).as(Seq("pos", "x")))
-    val per =
-      if (!sorted)
-        exploded.groupBy(col("pos"))
-          .agg(avg(col("x")).as("mean"), stddev_pop(col("x")).as("sd"))
-      else
-        exploded.groupBy(col("pos"))
-          .agg(count(lit(1)).as("n"), collect_list(col("x")).as("xs"))
-          .withColumn("s1", aggregate(sort_array(col("xs")), lit(0.0), _ + _))
-          .withColumn("s2", aggregate(sort_array(col("xs")), lit(0.0),
-            (a, x) => a + x * x))
-          .withColumn("mean", col("s1") / col("n"))
-          .withColumn("sd", sqrt(greatest(
-            col("s2") / col("n") - (col("s1") / col("n")) * (col("s1") / col("n")),
-            lit(0.0))))
-    val packed = per
+    val packed = dimMoments(corpus, vecCol, sorted)
       .select(struct(col("pos"), col("mean"), col("sd")).as("t"))
       .agg(sort_array(collect_list(col("t"))).as("ts"))
       .select(transform(col("ts"), t => t("mean")).as("means"),
@@ -817,19 +823,21 @@ object Cosine {
     * does). Output: (query_id, rank, neighbor_id, sq_sim). */
   def sq8SearchCodes(queries: DataFrame, codes: DataFrame, stats: DataFrame,
                      idCol: String, vecCol: String, dim: Int,
-                     k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"))
-    val sq = codes.select(col(idCol).as("neighbor_id"), col("pcode"))
+                     k: Int): DataFrame =
+    perQueryCut(sq8Scored(queries, codes, stats, idCol, vecCol, dim),
+        col("sq_sim").desc, k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sq_sim"))
+
+  /** SQ8 stage-1 score: broadcast exact queries (query_id, qv) against
+    * each code's reconstruction, `sq_sim` their dot product. */
+  private def sq8Scored(queries: DataFrame, codes: DataFrame, stats: DataFrame,
+                        idCol: String, vecCol: String, dim: Int): DataFrame =
+    codes.select(col(idCol).as("neighbor_id"), col("pcode"))
       .crossJoin(broadcast(stats))
       .withColumn("recon", sq8ReconExpr(sq8Unpack(col("pcode"), dim)))
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .join(broadcast(queryVectors(queries, idCol, vecCol)),
+        col("query_id") =!= col("neighbor_id"))
       .withColumn("sq_sim", round(dot(col("qv"), col("recon")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq_sim").desc, col("neighbor_id").asc)
-    sq.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sq_sim"))
-  }
 
   /** Packs 8 one-byte codes per long, little-endian — the true SQ8
     * serving layout: exactly `dim` BYTES per vector (a 64-dim float
@@ -881,34 +889,48 @@ object Cosine {
               vecCol: String, dim: Int, k: Int, kShort: Int = 20): DataFrame = {
     val stats = sq8Stats(corpus, vecCol)
     val packed = sq8PackedCodes(corpus, stats, idCol, vecCol, dim)
-    val q = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"))
-    val short = sq8SearchCodes(queries, packed, stats, idCol, vecCol,
-        dim, kShort)
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("sq_sim"), col("qv"))
-    sq8Rerank(short,
-      corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv")),
-      k)
+    exactRerank(
+      shortlist(sq8Scored(queries, packed, stats, idCol, vecCol, dim), "sq_sim", kShort),
+      rawVectors(corpus, idCol, vecCol), k, "sq_sim")
   }
 
-  /** The ONE exact-rerank tail every quantized two-stage form rides
-    * ([[sq8TopK]], [[sq8TopKStored]], [[pqTopKStored]]): broadcast
-    * shortlist against the raw (neighbor_id, cv) vectors, exact cosine,
-    * per-query top-k.
-    * `stage1Col` names the quantized-space score the shortlist ranked
-    * on, carried through to the output. */
-  private def sq8Rerank(short: DataFrame, raw: DataFrame, k: Int,
-                        stage1Col: String = "sq_sim"): DataFrame = {
+  /** (neighbor_id, cv) raw vectors: the in-plan rerank side. */
+  private def rawVectors(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
+
+  /** (query_id, qv): the exact query vectors every search scores. */
+  private def queryVectors(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
+
+  /** The ONE exact rerank every two-stage tier rides, in-plan and stored:
+    * the broadcast [[shortlist]] against the raw (neighbor_id, cv)
+    * vectors, exact cosine, per-query top-k. `stage1Col` names the
+    * stage-1 score the shortlist ranked on, carried through to the
+    * output. */
+  private def exactRerank(short: DataFrame, raw: DataFrame, k: Int,
+                          stage1Col: String): DataFrame = {
     val ex = raw.withColumn("cn", normSq(col("cv")))
       .join(broadcast(short), "neighbor_id")
       .withColumn("sim", round(cosine(col("qv"), col("cv"),
         normSq(col("qv")), col("cn")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    ex.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    perQueryCut(ex, col("sim").desc, k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col(stage1Col), col("sim"))
+  }
+
+  /** The ONE stored tail of every two-stage tier ([[sq8TopKStored]],
+    * [[bqTopKStored]], [[prefixTopKStored]], [[pqTopKStored]]): the
+    * shortlist (|q|·kShort rows, a serving-sized collect) materializes
+    * once on the driver, the raw `valueCol` vectors are read pruned to
+    * its neighbor ids ([[prunedRawVectors]]), and [[exactRerank]] keeps
+    * `k`. */
+  private def storedRerank(spark: SparkSession, dir: String, idCol: String,
+                           valueCol: String, buckets: Int, shortDf: DataFrame,
+                           k: Int, stage1Col: String): DataFrame = {
+    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
+    val ids = shortRows.map(_.getAs[Any]("neighbor_id")).distinct.toSeq
+    exactRerank(short, prunedRawVectors(spark, dir, idCol, valueCol, ids, buckets),
+      k, stage1Col)
   }
 
   /** Stored SQ8 serving artifact: the 1-row stats (the PINNED
@@ -943,7 +965,7 @@ object Cosine {
     Artifact.fingerprinted("stats fp", s"$dir/stats", to_json(struct(col("*")))))
 
   /** [[sq8TopK]] over the persisted layout — value-identical (shared
-    * [[sq8Rerank]] tail; sq8Stats is a min/max, so stored stats equal
+    * [[exactRerank]] tail; sq8Stats is a min/max, so stored stats equal
     * the inline derivation bit-for-bit): stage 1 scans the PLAIN code
     * store (every code — the compressed-tier contract), the shortlist
     * materializes on the driver (|q|·kShort rows — a serving-sized
@@ -958,18 +980,10 @@ object Cosine {
                     idCol: String, vecCol: String, k: Int,
                     kShort: Int = 20): DataFrame = {
     val Seq(dim, buckets, _) = Artifact.open(spark, dir, Sq8Config, _ => sq8Checks(dir))
-    val stats = ParquetOpen(spark, s"$dir/stats")
-    val codes = ParquetOpen(spark, s"$dir/codes")
-    val q = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"))
-    val shortDf = sq8SearchCodes(queries, codes, stats, idCol, vecCol,
-        dim, kShort)
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("sq_sim"), col("qv"))
-    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
-    val ids = shortRows.map(_.get(1)).distinct.toSeq
-    sq8Rerank(short,
-      prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets).drop("pbucket"), k)
+    val scored = sq8Scored(queries, ParquetOpen(spark, s"$dir/codes"),
+      ParquetOpen(spark, s"$dir/stats"), idCol, vecCol, dim)
+    storedRerank(spark, dir, idCol, vecCol, buckets,
+      shortlist(scored, "sq_sim", kShort), k, "sq_sim")
   }
 
   // ---- Binary quantization (1 bit/dim) ---------------------------------
@@ -1004,7 +1018,7 @@ object Cosine {
     * bit/dim): stage 1 ranks by HAMMING distance between sign words
     * (ascending — fewest sign disagreements ≈ highest cosine; ties on
     * neighbor id) and shortlists `kShort`; stage 2 re-ranks the
-    * shortlist by exact cosine ([[sq8Rerank]], the one shared tail).
+    * shortlist by exact cosine ([[exactRerank]], the one shared tail).
     * Scale shape: the scored corpus representation is ⌈dim/32⌉ longs
     * per vector — at dim=64 a 100 TB float corpus scans as ~3% of its
     * bytes — and the query side broadcasts. Output: (query_id, rank,
@@ -1013,33 +1027,23 @@ object Cosine {
              vecCol: String, dim: Int, k: Int, kShort: Int = 20): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       bqCodes(toDouble(col(vecCol)), dim).as("bwords"))
-    bqRerank(bqShortlist(queries, c, idCol, vecCol, dim, kShort),
-      corpus.select(col(idCol).as("neighbor_id"),
-        toDouble(col(vecCol)).as("cv")),
-      k)
+    exactRerank(bqShortlist(queries, c, idCol, vecCol, dim, kShort),
+      rawVectors(corpus, idCol, vecCol), k, "hamming")
   }
 
   /** Stage 1 of the BQ search — shared by the inline and stored forms:
     * broadcast queries (with their own sign words) against a (neighbor_id,
-    * bwords) code frame, rank per query by (hamming asc, id asc), keep
-    * `kShort` rows of (query_id, neighbor_id, hamming, qv). */
+    * bwords) code frame, the `kShort` fewest sign disagreements per
+    * query. */
   private def bqShortlist(queries: DataFrame, codes: DataFrame,
                           idCol: String, vecCol: String, dim: Int,
                           kShort: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-        toDouble(col(vecCol)).as("qv"))
+    val q = queryVectors(queries, idCol, vecCol)
       .withColumn("qwords", bqCodes(col("qv"), dim))
-    val sims = codes.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("hamming", bqHamming(col("qwords"), col("bwords")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    sims.withColumn("srank", row_number().over(w)).filter(col("srank") <= kShort)
-      .select(col("query_id"), col("neighbor_id"), col("hamming"), col("qv"))
+    shortlist(codes.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .withColumn("hamming", bqHamming(col("qwords"), col("bwords"))),
+      "hamming", kShort, ascending = true)
   }
-
-  /** [[sq8Rerank]] carrying the Hamming stage-1 score. */
-  private def bqRerank(short: DataFrame, raw: DataFrame, k: Int): DataFrame =
-    sq8Rerank(short, raw, k, stage1Col = "hamming")
 
   /** Stored BQ serving artifact (the [[writeSq8Index]] recipe minus the
     * stats — sign codes are parameter-free): the PLAIN word store (stage
@@ -1068,7 +1072,7 @@ object Cosine {
     Artifact.fingerprinted("fp", s"$dir/codes", to_json(struct(col("*")))))
 
   /** [[bqTopK]] over the persisted layout — value-identical (shared
-    * [[bqShortlist]]/[[sq8Rerank]] bodies; sign words are pure, so the
+    * [[bqShortlist]]/[[storedRerank]] bodies; sign words are pure, so the
     * stored codes ARE the inline derivation parquet-roundtripped):
     * stage 1 scans the plain word store, the shortlist materializes on
     * the driver (|q|·kShort rows — the sq8TopKStored pattern), and the
@@ -1082,11 +1086,8 @@ object Cosine {
     val Seq(dim, buckets, _, _) = Artifact.open(spark, dir, BqConfig, _ => bqChecks(dir))
     val codes = ParquetOpen(spark, s"$dir/codes")
       .select(col(idCol).as("neighbor_id"), col("bwords"))
-    val shortDf = bqShortlist(queries, codes, idCol, vecCol, dim, kShort)
-    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
-    val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val raw = prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets)
-    bqRerank(short, raw.drop("pbucket"), k)
+    storedRerank(spark, dir, idCol, vecCol, buckets,
+      bqShortlist(queries, codes, idCol, vecCol, dim, kShort), k, "hamming")
   }
 
   // ---- Matryoshka prefix search ----------------------------------------
@@ -1099,7 +1100,7 @@ object Cosine {
     * recall while stage 1 touches p/dim of the bytes.
     *
     * Scale shape: identical skeleton to [[sq8TopK]] — broadcast query
-    * side, per-query windows, shortlist-broadcast re-rank. The real win
+    * side, per-query windows, shortlist-broadcast re-rank ([[exactRerank]]). The real win
     * needs the STORED layout ([[writePrefixIndex]]): prefix as its own
     * column so stage 1's scan READS only it (column pruning), full
     * vectors read only for the shortlist (partition-pruned). Output:
@@ -1108,66 +1109,43 @@ object Cosine {
                  vecCol: String, p: Int, k: Int, kShort: Int = 20): DataFrame = {
     val cPref = corpus.select(col(idCol).as("neighbor_id"),
       slice(toDouble(col(vecCol)), 1, p).as("cp"))
-    val full = corpus.select(col(idCol).as("neighbor_id"),
-      toDouble(col(vecCol)).as("cv"))
-    prefixRerank(prefixShortlist(queries, cPref, idCol, vecCol, p, kShort),
-      queries, full, idCol, vecCol, k, None)
+    exactRerank(prefixShortlist(queries, cPref, idCol, vecCol, p, kShort),
+      rawVectors(corpus, idCol, vecCol), k, "psim")
   }
 
-  /** Stage 1 of the prefix search: (query_id, neighbor_id, psim), the
-    * kShort-per-query shortlist ranked by prefix cosine. `cPref`:
-    * (neighbor_id, cp). One body for the inline and stored forms so the
-    * two cannot drift. */
+  /** Stage 1 of the prefix search: the kShort-per-query [[shortlist]]
+    * ranked by prefix cosine `psim`. `cPref`: (neighbor_id, cp). One body
+    * for the inline and stored forms so the two cannot drift. */
   private def prefixShortlist(queries: DataFrame, cPref: DataFrame,
                               idCol: String, vecCol: String, p: Int,
                               kShort: Int,
                               rotation: Option[Seq[Seq[Double]]] = None): DataFrame = {
     // rotated layouts rank stage 1 in the ROTATED basis: the query side
     // must apply the artifact's exact rotation or psim is meaningless
-    val qp = rotation.fold(slice(toDouble(col(vecCol)), 1, p))(r =>
-      rotatedPrefix(toDouble(col(vecCol)), r))
-    val q = queries.select(col(idCol).as("query_id"), qp.as("qp"))
+    val q = queryVectors(queries, idCol, vecCol)
+      .withColumn("qp", rotation.fold(slice(col("qv"), 1, p))(rotatedPrefix(col("qv"), _)))
       .withColumn("qpn", normSq(col("qp")))
-    val stage1 = cPref.withColumn("cpn", normSq(col("cp")))
-      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("psim", round(cosine(col("qp"), col("cp"),
-        col("qpn"), col("cpn")), 6))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("psim").desc, col("neighbor_id").asc)
-    stage1.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= kShort)
-      .select(col("query_id"), col("neighbor_id"), col("psim"))
-  }
-
-  /** Stage 2: exact full-dimension re-rank of the shortlist. `full`:
-    * (neighbor_id, cv) plus pbucket when the stored layout joins on it.
-    * The shortlist (|q|·kShort rows) broadcasts onto the full-vector
-    * side; query vectors re-join from `queries` rather than riding the
-    * shortlist. */
-  private def prefixRerank(short: DataFrame, queries: DataFrame,
-                           full: DataFrame, idCol: String, vecCol: String,
-                           k: Int, joinBuckets: Option[Int]): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"))
-    val s = short.join(q, Seq("query_id"))
-    val keyed = joinBuckets.fold(s)(b => s.withColumn(
-      "pbucket", pmod(col("neighbor_id"), lit(b.toLong)).cast("int")))
-    val joinKeys = joinBuckets
-      .map(_ => Seq("pbucket", "neighbor_id")).getOrElse(Seq("neighbor_id"))
-    val ex = full.withColumn("cn", normSq(col("cv")))
-      .join(broadcast(keyed), joinKeys)
-      .withColumn("sim", round(cosine(col("qv"), col("cv"),
-        normSq(col("qv")), col("cn")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    ex.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("psim"), col("sim"))
+    shortlist(cPref.withColumn("cpn", normSq(col("cp")))
+        .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .withColumn("psim", round(cosine(col("qp"), col("cp"),
+          col("qpn"), col("cpn")), 6)),
+      "psim", kShort)
   }
 
   /** Id-hash partition count of the stored prefix layout; pinned in the
     * artifact's config sidecar like [[graft.dedup.MinHash.ProbeBuckets]]. */
   val PrefixBuckets = 16
+
+  /** The shared id-bucketed vectors-table writer every rerank-capable
+    * artifact rides ([[writePrefixIndex]], [[writeRotatedPrefixIndex]],
+    * [[writeSq8Index]]'s and [[writePqIndex]]'s raw stores, the
+    * streamed publishes): whatever row shape the caller selects,
+    * partitioned by `pbucket = pmod(id, PrefixBuckets)` (zero rows
+    * write flat, [[graft.ops.StoreWrite.partitioned]]). */
+  private[graft] def writePrefixRows(rows: DataFrame, idCol: String,
+                                     dir: String): Unit =
+    graft.ops.StoreWrite.partitioned(rows, s"$dir/vectors",
+      "pbucket" -> pmod(col(idCol), lit(PrefixBuckets.toLong)).cast("int"))
 
   /** Stored Matryoshka layout: ONE parquet table (id, prefix, full),
     * partitioned by pbucket = id mod [[PrefixBuckets]], with (p, buckets)
@@ -1183,17 +1161,6 @@ object Cosine {
     * value-identity spec-pinned. Empty corpus writes unpartitioned
     * (partitionBy writes no dirs for zero rows — the RepIndex.write
     * edge), and [[prefixTopKStored]] degrades to the unpruned join. */
-  /** The shared id-bucketed vectors-table writer every rerank-capable
-    * artifact rides ([[writePrefixIndex]], [[writeRotatedPrefixIndex]],
-    * [[writeSq8Index]]'s and [[writePqIndex]]'s raw stores, the
-    * streamed publishes): whatever row shape the caller selects,
-    * partitioned by `pbucket = pmod(id, PrefixBuckets)` (zero rows
-    * write flat, [[graft.ops.StoreWrite.partitioned]]). */
-  private[graft] def writePrefixRows(rows: DataFrame, idCol: String,
-                                     dir: String): Unit =
-    graft.ops.StoreWrite.partitioned(rows, s"$dir/vectors",
-      "pbucket" -> pmod(col(idCol), lit(PrefixBuckets.toLong)).cast("int"))
-
   def writePrefixIndex(corpus: DataFrame, idCol: String, vecCol: String,
                        p: Int, dir: String): Unit =
     commitPrefix(corpus.sparkSession, p, idCol, dir)(corpus.select(col(idCol),
@@ -1318,7 +1285,7 @@ object Cosine {
 
   /** Inline rotated-prefix two-stage search — [[prefixTopK]] with stage 1
     * ranked in the rotated basis (shared [[prefixShortlist]]/
-    * [[prefixRerank]] tails; stage 2 re-ranks in RAW space, so the exact
+    * [[exactRerank]] tails; stage 2 re-ranks in RAW space, so the exact
     * sims are bit-identical to the unrotated search's). `rotation` comes
     * from [[moment2Rotation]] (or a stored artifact — never recompute it
     * per query batch). */
@@ -1327,12 +1294,10 @@ object Cosine {
                         kShort: Int = 20): DataFrame = {
     val cPref = corpus.select(col(idCol).as("neighbor_id"),
       rotatedPrefix(toDouble(col(vecCol)), rotation).as("cp"))
-    val full = corpus.select(col(idCol).as("neighbor_id"),
-      toDouble(col(vecCol)).as("cv"))
-    prefixRerank(
+    exactRerank(
       prefixShortlist(queries, cPref, idCol, vecCol, rotation.size, kShort,
         Some(rotation)),
-      queries, full, idCol, vecCol, k, None)
+      rawVectors(corpus, idCol, vecCol), k, "psim")
   }
 
   /** The ROTATED stored Matryoshka layout: same vectors table as
@@ -1440,48 +1405,34 @@ object Cosine {
     val (p, buckets) = (cfg(0), cfg(1))
     val cPref = stored.select(col(idCol).as("neighbor_id"),
       toDouble(col("prefix")).as("cp"))
-    val shortDf = prefixShortlist(queries, cPref, idCol, vecCol, p, kShort,
-      rotation)
-    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
-    val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val full = prunedRawVectors(spark, dir, idCol, "full", ids, buckets)
-    prefixRerank(short, queries, full, idCol, vecCol, k,
-      if (partitioned) Some(buckets) else None)
+    storedRerank(spark, dir, idCol, "full", buckets,
+      prefixShortlist(queries, cPref, idCol, vecCol, p, kShort, rotation),
+      k, "psim")
   }
 
-  /** The ONE pruned stage-2 raw-vector frame every stored two-stage
-    * search rides ([[prefixTopKStored]], [[sq8TopKStored]],
-    * [[bqTopKStored]], [[pqTopKStored]] — the sq8Rerank/scoreTail
-    * convention applied to the rerank PRUNING, so the stored forms
-    * cannot drift): reads `$dir/vectors`, projects
-    * (pbucket?, neighbor_id, cv) from `valueCol`, and prunes to the
-    * shortlist `ids` by LITERAL pbucket filters (partition pruning at
-    * listing time) + a pushed In(id) (parquet row-group stats pruning).
-    * Ids keep their ORIGINAL values/types for the In filter (the write
-    * path accepted any numeric id — int ids must not crash the stored
-    * path); the bucket math runs on the widened long, exactly like the
-    * write side's pmod. The pbucket column is retained when the layout
-    * is partitioned ([[prefixRerank]] keys the rerank join on it);
-    * callers that key on neighbor_id alone drop it. The flat
-    * (empty-corpus) layout skips the partition filter. */
+  /** The pruned stage-2 raw-vector frame of [[storedRerank]]: reads
+    * `$dir/vectors`, keeps the shortlist `ids` by LITERAL pbucket filters
+    * (partition pruning at listing time) + a pushed In(id) (parquet
+    * row-group stats pruning), and projects (neighbor_id, cv) from
+    * `valueCol`. Ids keep their ORIGINAL values/types for the In filter
+    * (the write path accepted any numeric id — int ids must not crash
+    * the stored path); the bucket math runs on the widened long, exactly
+    * like the write side's pmod. The flat (empty-corpus) layout skips
+    * the partition filter. */
   private def prunedRawVectors(spark: SparkSession, dir: String,
                                idCol: String, valueCol: String,
                                ids: Seq[Any], buckets: Int): DataFrame = {
     val stored = ParquetOpen(spark, s"$dir/vectors")
-    val partitioned = stored.columns.contains("pbucket")
-    val base =
-      if (partitioned) stored.select(col("pbucket"),
-        col(idCol).as("neighbor_id"), toDouble(col(valueCol)).as("cv"))
-      else stored.select(col(idCol).as("neighbor_id"),
-        toDouble(col(valueCol)).as("cv"))
-    if (ids.isEmpty) base.limit(0)
-    else if (partitioned) base.filter(
-      col("pbucket").isin(   // pmod, matching the written layout
-        ids.map(i => (((i.asInstanceOf[Number].longValue % buckets)
-            + buckets) % buckets).toInt)
-          .distinct: _*)
-        && col("neighbor_id").isin(ids: _*))
-    else base.filter(col("neighbor_id").isin(ids: _*))
+    val byId = col(idCol).isin(ids: _*)
+    val pruned =
+      if (ids.isEmpty) stored.limit(0)
+      else if (stored.columns.contains("pbucket")) stored.filter(
+        col("pbucket").isin(   // pmod, matching the written layout
+          ids.map(i => (((i.asInstanceOf[Number].longValue % buckets)
+              + buckets) % buckets).toInt)
+            .distinct: _*) && byId)
+      else stored.filter(byId)
+    pruned.select(col(idCol).as("neighbor_id"), toDouble(col(valueCol)).as("cv"))
   }
 
   /** Product-quantization CODES (Jégou et al. 2011, "Product Quantization
@@ -1499,12 +1450,7 @@ object Cosine {
               nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4): DataFrame = {
     val planes = hyperplanes(nPlanes, subDim)
     val v = toDouble(col(vecCol))
-    val codes = (0 until nSub).map { j =>
-      val sub = slice(v, j * subDim + 1, subDim)
-      planes.zipWithIndex.map { case (h, i) =>
-        when(dot(sub, array(h.map(lit): _*)) > 0, lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }
+    val codes = (0 until nSub).map(j => signBits(slice(v, j * subDim + 1, subDim), planes))
     corpus.select(col(idCol), array(codes: _*).as("codes"))
   }
 
@@ -1632,18 +1578,6 @@ object Cosine {
     centroidFn(subRows, "cell", "subv")
   }
 
-  /** PQ asymmetric-distance top-k SEARCH (ADC): queries keep their exact
-    * vectors; each corpus vector is REPLACED by its reconstruction from
-    * the codebook (the concatenation of its per-subspace codewords), and
-    * similarity is the exact-query × reconstructed-corpus dot product.
-    * This is the memory side of the ANN trade: the scored corpus
-    * representation is `nSub * nPlanes` bits per vector plus one shared
-    * broadcast codebook, so a 1000-executor scan holds codes in memory
-    * where raw floats would spill.
-    *
-    * Plan shape: codes and reconstruction are map-side (codebook map
-    * broadcast as one row); the query side broadcasts like [[topK]];
-    * ranking is one per-query window. */
   /** One-row broadcastable codebook map (cell → codeword vector) from a
     * (cell, dim, centroid) codebook frame — the ADC forms' shared
     * reshape ([[pqAdcTopK]], [[ivfAdcTopK]], the stored searches). */
@@ -1667,34 +1601,56 @@ object Cosine {
     * and stored forms cannot drift): q = (cellCol, query_id, qv),
     * c = (cellCol, neighbor_id, rv). */
   private def adcScoreCells(q: DataFrame, c: DataFrame, cellCol: String,
-                            k: Int): DataFrame = {
-    val sims = q.join(c, Seq(cellCol))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_sim", round(dot(col("qv"), col("rv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_sim"))
-  }
+                            k: Int): DataFrame =
+    adcTop(adcScored(q, c, Some(cellCol)), k)
 
+  /** The one ADC score: query × candidate pairs, `adc_sim` the exact
+    * query's dot product with the candidate's reconstruction `rv`. With
+    * a `cellCol` the pairs are the cell equi-join; without, every
+    * candidate against the broadcast queries ([[pqAdcTopK]], and
+    * [[pqTopKStored]]'s stage 1). */
+  private def adcScored(q: DataFrame, c: DataFrame,
+                        cellCol: Option[String]): DataFrame =
+    cellCol.fold(c.join(broadcast(q), col("query_id") =!= col("neighbor_id")))(cc =>
+        q.join(c, Seq(cc)).filter(col("query_id") =!= col("neighbor_id")))
+      .withColumn("adc_sim", round(dot(col("qv"), col("rv")), 6))
+
+  /** Per-query top-k of an [[adcScored]] frame by `adc_sim`. */
+  private def adcTop(scored: DataFrame, k: Int): DataFrame =
+    perQueryCut(scored, col("adc_sim").desc, k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_sim"))
+
+  /** The in-plan ADC candidate frame ([[pqAdcTopK]], [[ivfAdcTopK]],
+    * [[ivfAdcTopKMultiprobe]]): the corpus coded by [[pqCodes]] and
+    * reconstructed against the broadcast codebook trained on it, as
+    * (neighbor_id, rv). */
+  private def adcCandidates(corpus: DataFrame, idCol: String, vecCol: String,
+                            nSub: Int, subDim: Int, nPlanes: Int,
+                            centroidFn: (DataFrame, String, String) => DataFrame): DataFrame =
+    pqCodes(corpus, idCol, vecCol, nSub, subDim, nPlanes)
+      .crossJoin(broadcast(codebookToMap(
+        pqCodebook(corpus, idCol, vecCol, nSub, subDim, nPlanes, centroidFn))))
+      .select(col(idCol).as("neighbor_id"), adcRecon(nSub, nPlanes).as("rv"))
+
+  /** PQ asymmetric-distance top-k SEARCH (ADC): queries keep their exact
+    * vectors; each corpus vector is REPLACED by its reconstruction from
+    * the codebook (the concatenation of its per-subspace codewords), and
+    * similarity is the exact-query × reconstructed-corpus dot product.
+    * This is the memory side of the ANN trade: the scored corpus
+    * representation is `nSub * nPlanes` bits per vector plus one shared
+    * broadcast codebook, so a 1000-executor scan holds codes in memory
+    * where raw floats would spill.
+    *
+    * Plan shape: codes and reconstruction are map-side (codebook map
+    * broadcast as one row); the query side broadcasts like [[topK]];
+    * ranking is one per-query window. */
   def pqAdcTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                 vecCol: String, k: Int,
                 nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4,
                 centroidFn: (DataFrame, String, String) => DataFrame =
-                  cellCentroids): DataFrame = {
-    val book = codebookToMap(
-      pqCodebook(corpus, idCol, vecCol, nSub, subDim, nPlanes, centroidFn))
-    val c = pqCodes(corpus, idCol, vecCol, nSub, subDim, nPlanes)
-      .crossJoin(broadcast(book))
-      .select(col(idCol).as("neighbor_id"), adcRecon(nSub, nPlanes).as("rv"))
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
-    val sims = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_sim", round(dot(col("qv"), col("rv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("neighbor_id").asc)
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_sim"))
-  }
+                  cellCentroids): DataFrame =
+    adcTop(adcScored(queryVectors(queries, idCol, vecCol), adcCandidates(corpus,
+      idCol, vecCol, nSub, subDim, nPlanes, centroidFn), None), k)
 
   /** IVFADC search (Jégou et al. 2011 §IV): the composed production ANN
     * shape — IVF cell pruning bounds WHICH vectors are scored (per-query
@@ -1711,16 +1667,12 @@ object Cosine {
                  nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4,
                  centroidFn: (DataFrame, String, String) => DataFrame =
                    cellCentroids): DataFrame = {
-    val book = codebookToMap(
-      pqCodebook(corpus, idCol, vecCol, nSub, subDim, nPlanes, centroidFn))
-    val c = pqCodes(corpus, idCol, vecCol, nSub, subDim, nPlanes)
-      .join(corpus.select(col(idCol), col(cellCol)), idCol)
-      .crossJoin(broadcast(book))
-      .select(col(cellCol), col(idCol).as("neighbor_id"),
-        adcRecon(nSub, nPlanes).as("rv"))
     val q = queries.select(col(cellCol), col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("qv"))
-    adcScoreCells(q, c, cellCol, k)
+    adcScoreCells(q, adcCandidates(corpus, idCol, vecCol, nSub, subDim, nPlanes,
+        centroidFn).join(corpus.select(col(idCol).as("neighbor_id"), col(cellCol)),
+        "neighbor_id"),
+      cellCol, k)
   }
 
   /** Persist the PQ/IVFADC serving tier — the LAST approximate family to
@@ -2117,16 +2069,12 @@ object Cosine {
                            nSub: Int = 8, subDim: Int = 8, nPlanes: Int = 4,
                            centroidFn: (DataFrame, String, String) => DataFrame =
                              cellCentroids): DataFrame = {
-    val book = codebookToMap(
-      pqCodebook(corpus, idCol, vecCol, nSub, subDim, nPlanes, centroidFn))
-    val c = pqCodes(corpus, idCol, vecCol, nSub, subDim, nPlanes)
-      .join(cells.select(col(idCol), col(cellCol)), idCol)
-      .crossJoin(broadcast(book))
-      .select(col(cellCol), col(idCol).as("neighbor_id"),
-        adcRecon(nSub, nPlanes).as("rv"))
     adcScoreCells(
       ivfProbes(queries, centroids, idCol, vecCol, cellCol, nProbe),
-      c, cellCol, k)
+      adcCandidates(corpus, idCol, vecCol, nSub, subDim, nPlanes, centroidFn)
+        .join(cells.select(col(idCol).as("neighbor_id"), col(cellCol)),
+          "neighbor_id"),
+      cellCol, k)
   }
 
   /** MULTIPROBE IVFADC over the persisted tier — the full production ANN
@@ -2171,15 +2119,14 @@ object Cosine {
     * recall is bounded by quantization alone, not probe choice) and
     * shortlists `kShort`; stage 2 re-ranks by exact cosine against the
     * raw vectors, pruned by LITERAL pbucket filters + a pushed In(id)
-    * (shared [[sq8Rerank]] tail). Output: (query_id, rank, neighbor_id,
-    * adc_sim, sim). Point/serving probes only. */
+    * (shared [[adcScored]] stage-1 score and [[storedRerank]] tail).
+    * Output: (query_id, rank, neighbor_id, adc_sim, sim). Point/serving
+    * probes only. */
   def pqTopKStored(spark: SparkSession, queries: DataFrame, dir: String,
                    idCol: String, vecCol: String, k: Int,
                    kShort: Int = 20): DataFrame = {
     val (nSub, _, nPlanes, buckets, _, residual) = openPqIndex(spark, dir)
     val book = codebookToMap(ParquetOpen(spark, s"$dir/codebook"))
-    val q = queries.select(col(idCol).as("query_id"),
-      toDouble(col(vecCol)).as("qv"))
     val coded = ParquetOpen.pinned(spark, s"$dir/codes", "pcell", StringType)
       .crossJoin(broadcast(book))
     val c =
@@ -2202,17 +2149,9 @@ object Cosine {
           .select(col(idCol).as("neighbor_id"),
             zip_with(col("cvec"), adcRecon(nSub, nPlanes), (a, b) => a + b).as("rv"))
       }
-    val sims = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_sim", round(dot(col("qv"), col("rv")), 6))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("neighbor_id").asc)
-    val shortDf = sims.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= kShort)
-      .select(col("query_id"), col("neighbor_id"), col("adc_sim"), col("qv"))
-    val (short, shortRows) = Artifact.collectOnce(spark, shortDf)
-    val ids = shortRows.map(_.get(1)).distinct.toSeq
-    val raw = prunedRawVectors(spark, dir, idCol, vecCol, ids, buckets)
-    sq8Rerank(short, raw.drop("pbucket"), k, stage1Col = "adc_sim")
+    storedRerank(spark, dir, idCol, vecCol, buckets,
+      shortlist(adcScored(queryVectors(queries, idCol, vecCol), c, None),
+        "adc_sim", kShort), k, "adc_sim")
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup by
@@ -2252,24 +2191,21 @@ object Cosine {
                         cellCol: String, pairs: DataFrame,
                         centroidFn: (DataFrame, String, String) => DataFrame =
                           cellCentroids): DataFrame = {
-    val cents = centroidFn(corpus, cellCol, vecCol)
-    val cvec = cents.groupBy(col(cellCol))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("centroid")))),
-        s => s.getField("centroid")).as("cv"))
+    val cvec = centroidVectors(centroidFn(corpus, cellCol, vecCol), cellCol, "cv")
     val v = corpus.select(col(cellCol), col(idCol), toDouble(col(vecCol)).as("v"))
     val withSim = v.join(broadcast(cvec), Seq(cellCol))
       .withColumn("centroid_sim",
         round(cosine(col("v"), col("cv"), normSq(col("v")), normSq(col("cv"))), 6))
       .select(col(idCol), col("centroid_sim"))
     val comps = graft.dedup.Clusters.connectedComponentsAdaptive(pairs)
-    withSim
+    val members = withSim
       .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-      // asc_nulls_last: a zero-norm member's NULL sim must not outrank
-      // real members for the representative slot (Spark asc = NULLS FIRST)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("cluster_id"))
-        .orderBy(col("centroid_sim").asc_nulls_last, col(idCol).asc)))
-      .withColumn("keep", col("rn") === 1)
+    // asc_nulls_last: a zero-norm member's NULL sim must not outrank
+    // real members for the representative slot (Spark asc = NULLS FIRST)
+    rankedCut(members, col("cluster_id"), Int.MaxValue)(
+        col("centroid_sim").asc_nulls_last, col(idCol).asc)
+      .withColumn("keep", col("rank") === 1)
       .select(col(idCol), col("cluster_id"), col("centroid_sim"), col("keep"))
   }
 

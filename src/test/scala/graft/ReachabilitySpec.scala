@@ -53,8 +53,6 @@ object ReachabilitySpec {
     "the Column twin of a registered SQL function, or a hook that a guard spec reads"
   private val StreamingStore =
     "a streaming index store ROADMAP B5 will test, or a batch maintenance def it is pinned to"
-  private val ScaleOp =
-    "a general scale operation with its own spec cases; ROADMAP C4b schedules its removal"
 
   /** Unreached names that stay, each with the one reason it may. An
     * object's entry covers its members. */
@@ -105,10 +103,7 @@ object ReachabilitySpec {
     "Segments.prune" -> StreamingStore,
     "Cosine.sq8DeleteCodes" -> StreamingStore,
     "MinHash.deleteFromSnapshotIndex" -> StreamingStore,
-    "Cosine.writePrefixIndex" -> StreamingStore,
-    "SkewJoin" -> ScaleOp,
-    "Bucketing" -> ScaleOp,
-    "Compact" -> ScaleOp)
+    "Cosine.writePrefixIndex" -> StreamingStore)
 
   private val Bench: Path = Paths.get("perfbench", "src", "main", "scala")
 

@@ -18,6 +18,36 @@ object SourceScan {
   def offenders(pattern: Regex, allowed: String*): List[String] =
     offendersUnder(Seq(Main), pattern, allowed: _*)
 
+  /** `path:line` of each match of `pattern` in the one program file
+    * `file` (relative to `Main`) outside the bodies of the `allowed`
+    * members. A member of the file's object runs from its two-space
+    * indented `def`/`val` line to the next one; comments are skipped, so
+    * a scaladoc may name what the guard confines. */
+  def offendersOutside(file: String, pattern: Regex, allowed: String*): List[String] = {
+    val path = Main.resolve(file)
+    require(Files.isRegularFile(path), s"run from the repository root: no $path")
+    val member = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r.unanchored
+    var inComment = false
+    var owner = ""
+    Files.readAllLines(path).asScala.toList.zipWithIndex.flatMap { case (line, i) =>
+      val outside =
+        if (inComment) {
+          val end = line.indexOf("*/")
+          inComment = end < 0
+          if (inComment) "" else line.substring(end + 2)
+        } else line
+      val open = outside.indexOf("/*")
+      if (open >= 0 && outside.indexOf("*/", open) < 0) inComment = true
+      val code = (if (open >= 0) outside.substring(0, open) else outside).split("//")(0)
+      code match {
+        case member(name) => owner = name
+        case _ =>
+      }
+      if (allowed.contains(owner) || pattern.findFirstIn(code).isEmpty) Nil
+      else List(s"$path:${i + 1} (in $owner)")
+    }
+  }
+
   /** As [[offenders]], over each of `roots`; `allowed` paths are relative
     * to every root. */
   def offendersUnder(roots: Seq[Path], pattern: Regex, allowed: String*): List[String] =

@@ -118,52 +118,6 @@ class IndexRoundTripSpec extends SparkSpec {
     assert(got2 == want2, s"delete+append diverged: $got2 vs $want2")
   }
 
-  test("bucketed snapshot index joins shuffle-free on the index side") {
-    val sp = spark; import sp.implicits._
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SMJ path
-    try {
-      // the 100 TB configuration from snapshotIndex's scaladoc: the
-      // finalized snapshot's band rows live in a table BUCKETED on the
-      // packed band key, so every later batch-dedup join re-shuffles only
-      // the (small) incoming batch — the historical index never moves
-      val old = (1 to 60).map(i =>
-        (i.toLong, s"alpha$i beta$i gamma${i % 7} delta${i % 7} epsilon zeta"))
-        .toDF("doc_id", "text")
-      val bkey = (col("band").cast("long") * 4294967296L) + col("band_hash")
-      val idx = MinHash.snapshotIndex(
-          MinHash.hashedShingleArray(old, "doc_id", "text", 2), "doc_id")
-        .withColumn("bkey", bkey)
-        .select(col("doc_id").as("id_old"), col("bkey"))
-      graft.ops.Bucketing.writeBucketed(idx, "band_idx", "bkey", 8)
-      val batch = (100 to 120).map(i =>
-        (i.toLong, s"alpha${i - 99} beta${i - 99} gamma${(i - 99) % 7} delta${(i - 99) % 7} epsilon zeta"))
-        .toDF("doc_id", "text")
-      val bNew = MinHash.bandRows(MinHash.signaturesFromArray(
-          MinHash.hashedShingleArray(batch, "doc_id", "text", 2), "doc_id"), "doc_id")
-        .withColumn("bkey", bkey)
-        .select(col("doc_id").as("id_new"), col("bkey"))
-      val joined = bNew.join(sp.table("band_idx"), "bkey")
-        .select(col("id_new"), col("id_old"))
-      val pairs = joined.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs.nonEmpty)
-      // truth: the same candidates from the plain (unbucketed) band join
-      val plain = bNew.join(idx, "bkey").select(col("id_new"), col("id_old"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs == plain)
-      // plan: exactly ONE hash-partitioning exchange — the batch side;
-      // the bucketed index side reads pre-partitioned (AQE's toString
-      // repeats stages under "Initial Plan", so examine the final plan)
-      val planFull = joined.queryExecution.executedPlan.toString
-      val plan = planFull.split("== Initial Plan ==").head
-      val exchanges = plan.split("Exchange hashpartitioning").length - 1
-      assert(exchanges == 1, s"expected one exchange (batch side only):\n$plan")
-      assert(plan.contains("Bucketed: true"), plan)
-    } finally {
-      sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      sp.sql("DROP TABLE IF EXISTS band_idx")
-    }
-  }
-
   test("IVF centroid table round-trips through parquet: assignment identical") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val cents = graft.similarity.Cosine.cellCentroidsSorted(emb, "label", "embedding")

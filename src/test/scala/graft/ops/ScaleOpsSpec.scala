@@ -3,31 +3,6 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class BucketingSpec extends SparkSpec {
-
-  test("bucketed join runs without a shuffle exchange") {
-    val sp = spark; import sp.implicits._
-    sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
-      val facts = (1L to 1000L).map(i => (i % 100, s"f$i")).toDF("k", "payload")
-      val dims = (0L to 99L).map(i => (i, s"d$i")).toDF("k", "attr")
-      Bucketing.writeBucketed(facts, "b_facts", "k", 8)
-      Bucketing.writeBucketed(dims, "b_dims", "k", 8)
-      val joined = Bucketing.bucketedJoin(sp, "b_facts", "b_dims", "k")
-      assert(joined.count() == 1000L)
-      assert(!Bucketing.hasShuffle(joined),
-        "bucketed join should not shuffle:\n" + joined.queryExecution.executedPlan)
-      // identical unbucketed join DOES shuffle — the comparison point
-      val unbucketed = facts.join(dims, "k")
-      assert(Bucketing.hasShuffle(unbucketed))
-    } finally {
-      sp.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      sp.sql("DROP TABLE IF EXISTS b_facts")
-      sp.sql("DROP TABLE IF EXISTS b_dims")
-    }
-  }
-}
-
 class TopKPlanSpec extends SparkSpec {
 
   test("o3_global_topk plans as TakeOrderedAndProject, not a global-sort window") {

@@ -37,28 +37,3 @@ class ScdSpec extends SparkSpec {
       Some("2026-03-01 00:00:00.0"), None))
   }
 }
-
-class SkewJoinSpec extends SparkSpec {
-
-  test("salted join produces exactly the plain-join rows on skewed data") {
-    val sp = spark; import sp.implicits._
-    // one hot key holding 90% of the volume
-    val facts = ((1 to 900).map(i => ("hot", i)) ++ (1 to 100).map(i => (s"k$i", i)))
-      .toDF("k", "payload")
-    val dims = (Seq("hot") ++ (1 to 100).map(i => s"k$i")).map(k => (k, s"attr-$k"))
-      .toDF("k", "attr")
-    val plain = facts.join(dims, "k")
-    val salted = SkewJoin.saltedJoin(facts, dims, "k", salts = 8)
-    assert(salted.count() == plain.count())
-    assert(salted.groupBy("k").count().filter(col("k") === "hot")
-      .head().getLong(1) == 900L)
-  }
-
-  test("salted two-phase count equals plain count") {
-    val sp = spark; import sp.implicits._
-    val facts = ((1 to 500).map(_ => "hot") ++ Seq("a", "b", "b")).toDF("k")
-    val out = SkewJoin.saltedCount(facts, "k", salts = 4)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(out == Map("hot" -> 500L, "a" -> 1L, "b" -> 2L))
-  }
-}

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Binary quantization ([[Cosine.bqCodes]] / [[Cosine.bqTopK]] /
@@ -95,5 +95,18 @@ class BqSpec extends SparkSpec {
     val queries = Seq((1L, Seq.fill(64)(0.5))).toDF("vec_id", "embedding")
     assert(Cosine.bqTopKStored(sp, queries, dir,
       "vec_id", "embedding", k = 3).count() == 0)
+  }
+
+  test("every vector tier ranks, collects and prunes through one body each") {
+    // the tie-break (score, then id ascending) and the stored refine are
+    // what every DuckDB oracle replays: a tier with its own copy can drift
+    val file = "graft/similarity/Cosine.scala"
+    val cuts = SourceScan.offendersOutside(file, """row_number\(\)""".r, "rankedCut")
+    assert(cuts.isEmpty, s"a step numbers rows outside Cosine.rankedCut: $cuts")
+    val tails = SourceScan.offendersOutside(file,
+      """prunedRawVectors\(|Artifact\.collectOnce\(""".r,
+      "storedRerank", "collectCells", "prunedRawVectors")
+    assert(tails.isEmpty,
+      s"a stored search collects or prunes outside Cosine.storedRerank: $tails")
   }
 }
